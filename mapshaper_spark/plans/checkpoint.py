@@ -5,41 +5,60 @@ lineage and metrics tables". Iceberg's runtime jar is not in this container,
 so the snapshot layer is pluggable: the default ``ParquetSnapshotStore``
 writes each stage output as an immutable parquet snapshot directory plus a
 JSON manifest (= the Iceberg snapshot metadata role); an Iceberg catalog
-implementation only needs to override ``write``/``read``/``exists`` with
+implementation only needs to override ``write``/``read``/``manifests`` with
 ``df.writeTo(table).createOrReplace()`` and snapshot-id bookkeeping.
 
 Layout:
-    <root>/<stage>/<snapshot_id>/data/*.parquet     immutable snapshot data
-    <root>/<stage>/<snapshot_id>/manifest.json      rows, schema, inputs, wall
-    <root>/_lineage/*.parquet                       per-partition lineage rows
-    <root>/_metrics/*.parquet                       per-stage metrics rows
+    <root>/<stage>/<snapshot_id>/data/**/part-*.parquet   immutable snapshot data
+    <root>/<stage>/<snapshot_id>/manifest.json   rows, lineage, schema, inputs, wall
 
 The reference has no checkpointing (eager single-process pipeline,
 /root/reference/src/cli/mapshaper-commands.js:133); this is the scale-out
 requirement the graft adds: a 100 TB multi-stage job must replan from the
 last complete snapshot instead of recomputing stage 1 on a mid-job failure.
 
-Lineage rows are collected with a zero-extra-pass trick: a
-``spark_partition_id()`` + count aggregate runs on the SAME DataFrame that
-feeds the write, so the scan is shared when the plan is cached, or costs one
-cheap extra action otherwise (row counts only — no data movement).
+A commit runs one Spark job, the stage's parquet write. pyarrow then sums the
+committed files' parquet footers in-process, per write task (``part-<task>-...``):
+that is the manifest's lineage, so ``partition_id`` is the write task id (a
+``partition_by`` task writes one file per key). The manifest goes last, via
+temp file + ``os.replace``; a snapshot without a readable manifest is the
+orphan of a crashed commit, invisible to resume, ``lineage()`` and ``metrics()``.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _schema_fingerprint(df: DataFrame) -> str:
     return hashlib.sha256(df.schema.json().encode()).hexdigest()[:16]
+
+
+def _footer_rows(data_dir: str) -> dict[str, int]:
+    """Rows per write task, summed over the parquet footers of its files."""
+    rows: Counter[int] = Counter()
+    for path in glob.glob(os.path.join(glob.escape(data_dir), "**", "part-*.parquet"),
+                          recursive=True):
+        rows[int(os.path.basename(path).split("-")[1])] += pq.read_metadata(path).num_rows
+    return {str(task): n for task, n in sorted(rows.items())}
+
+
+def _commit_json(path: str, obj: dict) -> None:
+    """Write ``obj`` so that readers see either no file or all of it."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2)
+    os.replace(tmp, path)
 
 
 class ParquetSnapshotStore:
@@ -50,46 +69,35 @@ class ParquetSnapshotStore:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    def _stage_dir(self, stage: str) -> str:
-        return os.path.join(self.root, stage)
+    def manifests(self, stage: str = "*") -> list[dict]:
+        """Committed manifests of one stage (default: of every stage)."""
+        out = []
+        for mpath in glob.glob(os.path.join(glob.escape(self.root), stage, "*", "manifest.json")):
+            try:
+                with open(mpath) as f:
+                    out.append(json.load(f))
+            except (OSError, ValueError):  # torn or unreadable: not committed
+                pass
+        return [m for m in out if m.get("complete")]
 
     def latest_complete(self, stage: str) -> dict | None:
-        """Newest snapshot of a stage whose manifest says 'complete'."""
-        sdir = self._stage_dir(stage)
-        if not os.path.isdir(sdir):
-            return None
-        best = None
-        for snap in os.listdir(sdir):
-            mpath = os.path.join(sdir, snap, "manifest.json")
-            if not os.path.exists(mpath):
-                continue
-            with open(mpath) as f:
-                m = json.load(f)
-            if m.get("complete") and (best is None or m["ts"] > best["ts"]):
-                best = m
-        return best
+        return max(self.manifests(glob.escape(stage)), key=lambda m: m["ts"], default=None)
 
     def write(self, stage: str, df: DataFrame, inputs: Sequence[str],
               partition_by: Sequence[str] = ()) -> dict:
         snap_id = f"s{int(time.time() * 1000):x}"
-        snap_dir = os.path.join(self._stage_dir(stage), snap_id)
+        snap_dir = os.path.join(self.root, stage, snap_id)
         data_dir = os.path.join(snap_dir, "data")
         t0 = time.time()
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data_dir)
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_dir)
         wall = time.time() - t0
-        out = self.spark.read.parquet(data_dir)
-        rows = out.count()
+        lineage = _footer_rows(data_dir)
         manifest = {
             "stage": stage, "snapshot_id": snap_id, "path": data_dir,
-            "rows": rows, "schema": _schema_fingerprint(df),
-            "inputs": list(inputs), "wall_s": round(wall, 3),
-            "ts": time.time(), "complete": True,
+            "rows": sum(lineage.values()), "lineage": lineage, "schema": _schema_fingerprint(df),
+            "inputs": list(inputs), "wall_s": round(wall, 3), "ts": time.time(), "complete": True,
         }
-        with open(os.path.join(snap_dir, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=2)
+        _commit_json(os.path.join(snap_dir, "manifest.json"), manifest)
         return manifest
 
     def read(self, manifest: dict) -> DataFrame:
@@ -115,39 +123,29 @@ class StageRunner:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.store = ParquetSnapshotStore(spark, root)
-        self.root = root
-
-    def _log_lineage(self, stage: str, snap: dict, df: DataFrame):
-        lin = (df.groupBy(F.spark_partition_id().alias("partition_id"))
-               .agg(F.count(F.lit(1)).alias("rows"))
-               .withColumn("stage", F.lit(stage))
-               .withColumn("snapshot_id", F.lit(snap["snapshot_id"])))
-        lin.write.mode("append").parquet(os.path.join(self.root, "_lineage"))
-        met = self.spark.createDataFrame(
-            [(stage, snap["snapshot_id"], snap["rows"], snap["wall_s"], snap["ts"])],
-            "stage string, snapshot_id string, rows long, wall_s double, ts double")
-        met.write.mode("append").parquet(os.path.join(self.root, "_metrics"))
 
     def run(self, stages: Sequence[Stage], force: Sequence[str] = ()) -> dict[str, dict]:
         done: dict[str, dict] = {}
-        outputs: dict[str, DataFrame] = {}
         for st in stages:
             input_snaps = [done[i]["snapshot_id"] for i in st.inputs]
             prior = self.store.latest_complete(st.name)
             if (prior is not None and st.name not in force
                     and prior["inputs"] == input_snaps):
                 done[st.name] = prior
-                outputs[st.name] = self.store.read(prior)
                 continue
-            df = st.fn(self.spark, {i: outputs[i] for i in st.inputs})
-            manifest = self.store.write(st.name, df, input_snaps, st.partition_by)
-            self._log_lineage(st.name, manifest, self.store.read(manifest))
-            done[st.name] = manifest
-            outputs[st.name] = self.store.read(manifest)
+            df = st.fn(self.spark, {i: self.store.read(done[i]) for i in st.inputs})
+            done[st.name] = self.store.write(st.name, df, input_snaps, st.partition_by)
         return done
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_lineage"))
+        """Rows per write task of every committed snapshot that records them."""
+        return self.spark.createDataFrame(
+            [(int(task), n, m["stage"], m["snapshot_id"])
+             for m in self.store.manifests() for task, n in m.get("lineage", {}).items()],
+            "partition_id int, rows long, stage string, snapshot_id string")
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_metrics"))
+        return self.spark.createDataFrame(
+            [(m["stage"], m["snapshot_id"], m["rows"], m["wall_s"], m["ts"])
+             for m in self.store.manifests()],
+            "stage string, snapshot_id string, rows long, wall_s double, ts double")

@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``MS_DRIVER_MEM``, else a quarter of physical RAM (the JVM's own
+    default heap share), at most 48g. The heap must fit the host: a 48g
+    default on a small host lets the one local-mode JVM grow until the
+    kernel kills it instead of collecting."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return os.environ.get("MS_DRIVER_MEM") or f"{min(48 * 1024, ram_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "mapshaper_spark",
     master: str | None = None,
@@ -34,7 +43,7 @@ def get_spark(
         # local mode = one JVM for driver + all executor threads; size the
         # heap for the thread count or allocation-heavy stages GC-thrash
         # (observed: 32 threads in 8g ran 2x SLOWER than 8 threads)
-        .config("spark.driver.memory", os.environ.get("MS_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # GC knob for the local-mode JVM (MS_DRIVER_JAVA_OPTS, e.g.
         # "-XX:+UseParallelGC"): at high thread counts the allocation rate
         # of scan-heavy stages makes collector choice measurable

@@ -1,12 +1,14 @@
 """StageRunner resume semantics: skip complete stages, invalidate on input
-drift, lineage/metrics tables populated."""
+drift, lineage/metrics tables populated, crash-safe one-job commits."""
 
+import os
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from mapshaper_spark.plans import checkpoint as CK
 from mapshaper_spark.plans.checkpoint import Stage, StageRunner
 
 
@@ -77,6 +79,100 @@ def test_lineage_and_metrics_tables(spark, root):
     met = r.metrics()
     assert met.count() == 3
     assert met.filter(F.col("wall_s") <= 0).count() == 0
+
+
+def test_torn_manifest_is_skipped(spark, root):
+    """A half-written manifest (a crash mid-write) is not a snapshot: resume
+    uses the complete one beside it instead of failing the whole run."""
+    CALLS.clear()
+    r = StageRunner(spark, root)
+    done = r.run(_stages())
+    torn = os.path.join(root, "ingest", "sffffffffffff")
+    os.makedirs(torn)
+    with open(os.path.join(torn, "manifest.json"), "w") as f:
+        f.write('{"stage": "stats", "rows": 20')
+    CALLS.clear()
+    r2 = StageRunner(spark, root)
+    assert r2.store.latest_complete("ingest") == done["ingest"]
+    assert r2.run(_stages())["agg"]["snapshot_id"] == done["agg"]["snapshot_id"]
+    assert CALLS == []
+    assert r2.metrics().count() == 3
+
+
+def test_crash_before_manifest_commit_rebuilds_stage(spark, root, monkeypatch):
+    """Data written, manifest commit fails: the orphan snapshot is invisible
+    to resume, lineage and metrics, and the next run rebuilds the stage."""
+    commit = CK._commit_json
+
+    def crash_on_enrich(path, obj):
+        if obj["stage"] == "enrich":
+            raise OSError("crash between data write and manifest commit")
+        commit(path, obj)
+
+    CALLS.clear()
+    monkeypatch.setattr(CK, "_commit_json", crash_on_enrich)
+    with pytest.raises(OSError):
+        StageRunner(spark, root).run(_stages())
+    monkeypatch.undo()
+    (orphan,) = os.listdir(os.path.join(root, "enrich"))
+    assert os.listdir(os.path.join(root, "enrich", orphan)) == ["data"]
+
+    CALLS.clear()
+    r = StageRunner(spark, root)
+    assert r.store.latest_complete("enrich") is None
+    done = r.run(_stages())
+    assert CALLS == ["enrich", "agg"]  # ingest resumed, enrich rebuilt
+    assert done["enrich"]["snapshot_id"] != orphan
+    assert r.store.latest_complete("enrich") == done["enrich"]
+    for table in (r.lineage(), r.metrics()):
+        ids = {row.snapshot_id for row in table.select("snapshot_id").collect()}
+        assert orphan not in ids and done["enrich"]["snapshot_id"] in ids
+
+
+def test_snapshot_commit_runs_only_the_write_job(spark, root):
+    """The stage's parquet write is the only Spark job its commit runs: row
+    counts and lineage come from the parquet footers, not from re-reads."""
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-one-job", "one non-shuffling stage")
+    try:
+        done = StageRunner(spark, root).run(
+            [Stage("ingest", lambda spark, deps: spark.range(1000))])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert done["ingest"]["rows"] == 1000
+    assert len(sc.statusTracker().getJobIdsForGroup("ckpt-one-job")) == 1
+
+
+def test_partitioned_stage_lineage_sums_to_rows(spark, root):
+    """partition_by: each write task writes one file per key, and the
+    lineage rows are per write task, summed over its files."""
+    def keyed(spark, deps):
+        return spark.range(0, 1000, 1, 4).withColumn("k", F.col("id") % 5)
+
+    r = StageRunner(spark, root)
+    done = r.run([Stage("keyed", keyed, partition_by=("k",))])
+    assert done["keyed"]["rows"] == 1000
+    lin = {row.partition_id: row.rows for row in r.lineage().collect()}
+    assert lin == {0: 250, 1: 250, 2: 250, 3: 250}
+
+
+def test_zero_row_stage(spark, root):
+    r = StageRunner(spark, root)
+    done = r.run([Stage("empty", lambda spark, deps: spark.range(0))])
+    assert done["empty"]["rows"] == 0
+    assert r.lineage().agg(F.sum("rows")).collect()[0][0] in (0, None)
+    assert r.metrics().collect()[0].rows == 0
+
+
+def test_lineage_and_metrics_on_empty_root(spark, root):
+    r = StageRunner(spark, root)
+    lin, met = r.lineage(), r.metrics()
+    assert lin.count() == 0 and met.count() == 0
+    assert dict(lin.dtypes) == {"partition_id": "int", "rows": "bigint",
+                                "stage": "string", "snapshot_id": "string"}
+    assert dict(met.dtypes) == {"stage": "string", "snapshot_id": "string",
+                                "rows": "bigint", "wall_s": "double",
+                                "ts": "double"}
 
 
 class TestShapefileWriters:
