@@ -5,20 +5,25 @@ Replaces the reference's in-memory R-tree candidate pruning
 (/root/reference/src/paths/mapshaper-path-index.js:8-34) with a Morton-cell
 equi-join, and its per-candidate ray cast
 (/root/reference/src/commands/mapshaper-spatial-join.js:69-78 ->
-geom.testPointInPolygon) with a vectorized numpy kernel inside an
-Arrow-batched ``mapInPandas``. Small polygon sets ride a SparkContext
-broadcast of {poly_id: rings} so candidate rows stay narrow (point cols +
-poly_id only) — the idiomatic Spark analog of "broadcast the dimension".
+geom.testPointInPolygon) with ``pip_inside_expr``, the same ray cast as a
+JVM higher-order-function filter.
+
+A polygon layer's index (``PolygonIndex``) is its cell cover: one row per
+(polygon, cell) touching the polygon, ``full`` when the cell lies wholly
+inside, otherwise carrying the cell's strip segments for the exact verify.
+Wholly-outside cells are dropped, and points in full cells skip the ray
+cast (the role of the reference's per-polygon PolygonIndex,
+mapshaper-path-index.js:140-150). One kernel builds the cover: on the
+driver for a tiny layer, per Arrow batch in ``mapInPandas`` for a large one.
 
 Scale notes (100 TB posture):
-- the point side never shuffles for the broadcast path: cell key is computed
-  with JVM bitwise ops, the join is a BroadcastHashJoin, and verification is
-  a map-side pandas stage;
-- for large polygon sets the same plan becomes a shuffle hash join on cell
-  with AQE skew splitting; hot cells can additionally be salted upstream;
-- candidate pruning quality = cell resolution; polygons exploded to bbox
-  covers with per-polygon adaptive resolution (cf. the reference's adaptive
-  PolygonIndex threshold, mapshaper-path-index.js:140-150).
+- the point side never shuffles on the broadcast path: its cell key is
+  computed with JVM bitwise ops, the join is a BroadcastHashJoin, and the
+  verify is a whole-stage-codegen filter — no Python on the point side;
+- beyond the broadcast limit the cover is shuffle-joined on cell, with hot
+  cells salted (``salted_cell_join``) and AQE skew splitting for the rest;
+- an index built under a cache token is persisted once and reused, like any
+  broadcast dimension table.
 """
 
 from __future__ import annotations
@@ -92,42 +97,13 @@ def classify_cover_cells(rings, bb, bbox: Sequence[float], res: int):
     return interior, boundary
 
 
-def strip_segments(rings, cell_ix: int, cell_iy: int,
-                   bbox: Sequence[float], res: int):
-    """Per-ring segment lists relevant to an upward vertical ray cast from
-    any point inside boundary cell (cell_ix, cell_iy): segments whose x-range
-    overlaps the cell's (closed) x-range and whose ymax >= the cell's ymin.
-    A segment outside this strip can neither cross nor touch the ray of any
-    point in the cell, so even-odd counts over the subset are exact — the
-    same pruning idea as the reference's x-bucketed PolygonIndex
-    (/root/reference/src/paths/mapshaper-polygon-index.js:6-90), keyed by
-    cell instead of bucket.
-
-    Returns list-of-rings, each a list of (ax, ay, bx, by) tuples (possibly
-    empty — an out-of-strip ring contributes zero crossings on both sides).
-    """
-    wxmin, wymin, wxmax, wymax = bbox
-    n = 1 << res
-    cw = (wxmax - wxmin) / n
-    ch = (wymax - wymin) / n
-    x0 = wxmin + cell_ix * cw
-    x1 = x0 + cw
-    y0 = wymin + cell_iy * ch
-    out = []
-    for rx, ry in rings:
-        ax, ay = rx[:-1], ry[:-1]
-        bx, by = rx[1:], ry[1:]
-        keep = ((np.minimum(ax, bx) <= x1) & (np.maximum(ax, bx) >= x0) &
-                (np.maximum(ay, by) >= y0))
-        out.append(list(zip(ax[keep].tolist(), ay[keep].tolist(),
-                            bx[keep].tolist(), by[keep].tolist())))
-    return out
-
-
 def strip_segments_batch(rings, cell_ixs, cell_iys, bbox: Sequence[float], res: int):
-    """Vectorized strip_segments for MANY boundary cells of one polygon:
-    one (cells x segments) mask per ring instead of a Python call per cell.
-    Returns a list (per cell) of list-of-rings of (ax, ay, bx, by) tuples."""
+    """Per boundary cell (cell_ixs[i], cell_iys[i]), the per-ring segments
+    an upward ray from a point in the cell may cross or touch: x-range
+    overlapping the cell's closed x-range, ymax >= the cell's ymin. Even-odd
+    counts over the subset are exact — the reference's x-bucketed
+    PolygonIndex (mapshaper src/paths/mapshaper-polygon-index.js:6-90),
+    keyed by cell. Segments are {ax, ay, bx, by} dicts."""
     wxmin, wymin, wxmax, wymax = bbox
     n = 1 << res
     cw = (wxmax - wxmin) / n
@@ -150,8 +126,8 @@ def strip_segments_batch(rings, cell_ixs, cell_iys, bbox: Sequence[float], res: 
                 (symax[None, :] >= cy0[:, None]))
         segs = np.stack([ax, ay, bx, by], axis=1)
         for ci in range(m):
-            sel = segs[keep[ci]]
-            out[ci].append([tuple(s) for s in sel.tolist()])
+            out[ci].append([{"ax": a, "ay": b, "bx": c, "by": d}
+                            for a, b, c, d in segs[keep[ci]].tolist()])
     return out
 
 
@@ -197,52 +173,119 @@ def pip_inside_expr(px: F.Column, py: F.Column, segs: F.Column) -> F.Column:
     return F.coalesce(on_any | inside, F.lit(False))
 
 
+def _cover_schema(polys_rings: DataFrame, key: str) -> T.StructType:
+    seg = T.StructType([T.StructField(f, T.DoubleType()) for f in ("ax", "ay", "bx", "by")])
+    return (T.StructType([polys_rings.schema[key]]).add("cell", T.LongType())
+            .add("full", T.BooleanType()).add("segs", T.ArrayType(T.ArrayType(seg))))
+
+
+def _cover_batch(polys: Iterable, bbox: Sequence[float], res: int) -> tuple:
+    """The cover kernel: (key, bbox, rings_x, rings_y) polygons -> the
+    columns (key, cell, full, segs) of their cover rows."""
+    keys, cells, full, segs = cols = ([], [], [], [])
+    for k, bb, rxs, rys in polys:
+        rings = [(np.asarray(rx, dtype=np.float64), np.asarray(ry, dtype=np.float64))
+                 for rx, ry in zip(rxs, rys)]
+        interior, boundary = classify_cover_cells(rings, bb, bbox, res)
+        bx, by = CE.decode_np(np.array(boundary, dtype=np.int64))
+        keys += [k] * (len(interior) + len(boundary))
+        cells += interior + boundary
+        full += [True] * len(interior) + [False] * len(boundary)
+        segs += [None] * len(interior) + strip_segments_batch(rings, bx, by, bbox, res)
+    return cols
+
+
 def polygon_cell_cover(polys_rings: DataFrame, key: str, bbox: Sequence[float],
                        res: int) -> DataFrame:
-    """Explode assembled polygons (rings_x/rings_y + bbox struct) into
-    (key, cell, full) cover rows at ``res``: full=true cells are wholly
-    inside the polygon (no verify needed); full=false cells may touch the
-    boundary (exact ray-cast verify required). Wholly-outside cells are
-    dropped. This is the distributed analog of the reference's adaptive
-    per-polygon PolygonIndex (mapshaper-path-index.js:140-150), tuned so the
-    Python verify stage only sees the O(perimeter) sliver of candidates."""
+    """The (key, cell, full, segs) cover rows of assembled polygons
+    (rings_x/rings_y + bbox struct) at ``res``, built distributed: one
+    _cover_batch call per Arrow batch."""
+    schema = _cover_schema(polys_rings, key)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out_keys: list = []
-            out_cells: list[int] = []
-            out_full: list[bool] = []
-            out_segs: list = []
-            for k, bb, rxs, rys in zip(pdf[key], pdf["bbox"],
-                                       pdf["rings_x"], pdf["rings_y"]):
-                rings = [(np.asarray(rx, dtype=np.float64),
-                          np.asarray(ry, dtype=np.float64))
-                         for rx, ry in zip(rxs, rys)]
-                interior, boundary = classify_cover_cells(rings, bb, bbox, res)
-                out_cells.extend(interior)
-                out_full.extend([True] * len(interior))
-                out_segs.extend([None] * len(interior))
-                out_cells.extend(boundary)
-                out_full.extend([False] * len(boundary))
-                if boundary:
-                    bx, by_ = CE.decode_np(np.array(boundary, dtype=np.int64))
-                    for segs in strip_segments_batch(rings, bx, by_, bbox, res):
-                        out_segs.append([[{"ax": s[0], "ay": s[1],
-                                           "bx": s[2], "by": s[3]}
-                                          for s in ring] for ring in segs])
-                out_keys.extend([k] * (len(interior) + len(boundary)))
-            yield pd.DataFrame({key: out_keys, "cell": out_cells,
-                                "full": out_full, "segs": out_segs})
+            cols = _cover_batch(zip(pdf[key], pdf["bbox"], pdf["rings_x"], pdf["rings_y"]),
+                                bbox, res)
+            yield pd.DataFrame(dict(zip(schema.names, cols)))
 
-    seg_t = T.ArrayType(T.ArrayType(T.StructType([
-        T.StructField("ax", T.DoubleType()), T.StructField("ay", T.DoubleType()),
-        T.StructField("bx", T.DoubleType()), T.StructField("by", T.DoubleType())])))
-    schema = T.StructType([polys_rings.schema[key],
-                           T.StructField("cell", T.LongType()),
-                           T.StructField("full", T.BooleanType()),
-                           T.StructField("segs", seg_t)])
     return (polys_rings.select(key, "bbox", "rings_x", "rings_y")
             .mapInPandas(gen, schema=schema))
+
+
+class PolygonIndex:
+    """The index of one polygon layer at one grid resolution — the
+    distributed counterpart of the reference's PathIndex
+    (mapshaper src/paths/mapshaper-path-index.js:8-34): the layer's
+    facts, ``rows`` and the grid ``bbox`` (as given, else the layer's
+    extent), with its ``cover``. A layer of at most LOCAL_LIMIT rows is
+    covered on the driver, without spawning Python workers; a larger one by
+    polygon_cell_cover. Both run _cover_batch, so the rows are the same.
+    With ``persist`` the cover is persisted and materialized, so every later
+    join reads the cache (a driver-built cover too: kept as a local relation
+    it was measured slower per warm query, the driver re-serializing it into
+    each broadcast); otherwise it stays lazy."""
+
+    LOCAL_LIMIT = 200
+
+    def __init__(self, spark, polys_rings: DataFrame, poly_key: str,
+                 bbox: Sequence[float] | None, res: int, persist: bool):
+        from mapshaper_spark.operators.overlay import _ensure_bbox
+        polys = _ensure_bbox(polys_rings)
+        extent = [] if bbox is not None else [
+            F.min("bbox.xmin"), F.min("bbox.ymin"), F.max("bbox.xmax"), F.max("bbox.ymax")]
+        facts = polys.agg(F.count(F.lit(1)), *extent).collect()[0]
+        self.rows = facts[0]
+        if bbox is None and facts[1] is None:  # empty polygon side: no pairs
+            from mapshaper_spark.layers import DEFAULT_BBOX
+            bbox = DEFAULT_BBOX
+        elif bbox is None:
+            xmin, ymin, xmax, ymax = map(float, facts[1:])
+            bbox = (xmin, ymin, max(xmax, xmin + 1e-9), max(ymax, ymin + 1e-9))
+        self.bbox = tuple(bbox)
+        self.res = res
+        if self.rows <= self.LOCAL_LIMIT:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
+            schema = _cover_schema(polys, poly_key)
+            cols = _cover_batch(polys.select(poly_key, "bbox", "rings_x", "rings_y").collect(),
+                                self.bbox, res)
+            cover = spark.createDataFrame(
+                pa.table(dict(zip(schema.names, cols)), schema=to_arrow_schema(schema)))
+        else:
+            cover = polygon_cell_cover(polys, poly_key, self.bbox, res)
+        if persist:
+            cover = cover.persist()
+            cover.count()  # materialize now so every later join is a read
+        self.cover = cover
+
+    def candidates(self, points: DataFrame, x: str, y: str,
+                   broadcast: bool) -> DataFrame:
+        """The join tail: points keyed by Morton cell, joined to the cover
+        by broadcast or salted shuffle. Adds poly key, ``full``, ``segs``."""
+        pts = points.withColumn("cell", CE.morton_col(F.col(x), F.col(y), self.bbox, self.res))
+        if broadcast:
+            return pts.join(F.broadcast(self.cover), "cell").drop("cell")
+        return salted_cell_join(pts, self.cover).drop("cell")
+
+
+_INDEX_CACHE: dict[tuple, PolygonIndex] = {}
+
+
+def polygon_index(points_spark, polys_rings: DataFrame, poly_key: str,
+                  bbox: Sequence[float] | None, res: int,
+                  cache_token: str | None = None) -> PolygonIndex:
+    """The PolygonIndex of a polygon layer. With a ``cache_token`` it is
+    looked up first, so a hit runs no Spark job, and a miss is built
+    persisted and kept; without one it is built unpersisted."""
+    ck = (id(points_spark.sparkContext), cache_token, poly_key,
+          None if bbox is None else tuple(bbox), res)
+    idx = _INDEX_CACHE.get(ck) if cache_token is not None else None
+    if idx is None:
+        idx = PolygonIndex(points_spark, polys_rings, poly_key, bbox, res,
+                           persist=cache_token is not None)
+        if cache_token is not None:
+            _INDEX_CACHE[ck] = idx
+    return idx
 
 
 def pip_candidates(points: DataFrame, x: str, y: str, polys_rings: DataFrame,
@@ -250,113 +293,8 @@ def pip_candidates(points: DataFrame, x: str, y: str, polys_rings: DataFrame,
                    broadcast_polys: bool = True) -> DataFrame:
     """Candidate (point, polygon) pairs via Morton-cell equi-join; carries a
     ``full`` flag (candidate cell wholly inside the polygon -> no verify)."""
-    pts = points.withColumn("cell", CE.morton_col(F.col(x), F.col(y), bbox, res))
-    cover = polygon_cell_cover(polys_rings, poly_key, bbox, res)
-    if broadcast_polys:
-        cover = F.broadcast(cover)
-    return pts.join(cover, "cell").drop("cell")
-
-
-class PolygonIndex:
-    """Persisted broadcast spatial index over a polygon layer — the
-    distributed counterpart of the reference's PathIndex
-    (/root/reference/src/paths/mapshaper-path-index.js:8-34).
-
-    Built ONCE per (layer, res): the cell cover (interior/boundary
-    classification + per-cell strip segments) is computed DISTRIBUTED by
-    polygon_cell_cover (one Arrow-batched pass over the polygon rows — no
-    driver-side numpy over collected rings, VERDICT r01 #8), then persisted
-    and materialized so every later broadcast join reads the cache.
-    (A collect-to-local-relation variant was measured SLOWER per warm
-    query — the driver re-serializes the local table into each broadcast —
-    so the cover stays an executor-cached DataFrame.) Rebuilding this per
-    query was the dominant cost of the whole flagship job; a static polygon
-    dimension should be indexed once, like any broadcast dim table.
-    """
-
-    def __init__(self, cover: DataFrame, poly_key: str,
-                 bbox: Sequence[float], res: int):
-        self.poly_key = poly_key
-        self.bbox = tuple(bbox)
-        self.res = res
-        self.cover = cover.persist()
-        self.cover.count()  # materialize now so every later join is a read
-
-    def unpersist(self):
-        self.cover.unpersist()
-
-
-_INDEX_CACHE: dict[tuple, PolygonIndex] = {}
-
-
-def _local_cover_df(spark, rows, poly_key, key_type, bbox, res) -> DataFrame:
-    """Driver-numpy cover build for a TINY dimension layer (<= the
-    local_limit rows): identical rows to polygon_cell_cover without
-    spawning Python workers (~3 s cold-start for a 24-row dim)."""
-    import pyarrow as pa
-
-    cover_keys: list = []
-    cover_cells: list[int] = []
-    cover_full: list[bool] = []
-    cover_segs: list = []
-    for r in rows:
-        rings = [(np.asarray(rx, dtype=np.float64), np.asarray(ry, dtype=np.float64))
-                 for rx, ry in zip(r["rings_x"], r["rings_y"])]
-        interior, boundary = classify_cover_cells(rings, r["bbox"], bbox, res)
-        cover_cells.extend(interior)
-        cover_full.extend([True] * len(interior))
-        cover_segs.extend([None] * len(interior))
-        cover_cells.extend(boundary)
-        cover_full.extend([False] * len(boundary))
-        if boundary:
-            bx, by_ = CE.decode_np(np.array(boundary, dtype=np.int64))
-            for segs in strip_segments_batch(rings, bx, by_, bbox, res):
-                cover_segs.append([[{"ax": s[0], "ay": s[1], "bx": s[2], "by": s[3]}
-                                    for s in ring] for ring in segs])
-        cover_keys.extend([r[poly_key]] * (len(interior) + len(boundary)))
-    seg_t = pa.struct([("ax", pa.float64()), ("ay", pa.float64()),
-                       ("bx", pa.float64()), ("by", pa.float64())])
-    table = pa.table({
-        "cell": pa.array(cover_cells, pa.int64()),
-        poly_key: pa.array(cover_keys),
-        "full": pa.array(cover_full, pa.bool_()),
-        "segs": pa.array(cover_segs, pa.list_(pa.list_(seg_t))),
-    })
-    return spark.createDataFrame(table) \
-        .withColumn(poly_key, F.col(poly_key).cast(key_type))
-
-
-def polygon_index(points_spark, polys_rings: DataFrame, poly_key: str,
-                  bbox: Sequence[float], res: int,
-                  cache_token: str | None = None,
-                  local_limit: int = 200) -> PolygonIndex:
-    """Build (or fetch the cached) PolygonIndex for a polygon layer.
-
-    Size-gated build (the broadcast-vs-shuffle pattern applied to index
-    construction): a dimension layer of <= ``local_limit`` rows builds its
-    cover in driver numpy (cheaper than spinning up Python workers for a
-    handful of polygons); anything larger builds DISTRIBUTED via
-    polygon_cell_cover — the driver never holds a large layer's rings."""
-    ck = None
-    if cache_token is not None:
-        ck = (id(points_spark.sparkContext), cache_token, poly_key, tuple(bbox), res)
-        hit = _INDEX_CACHE.get(ck)
-        if hit is not None:
-            return hit
-    if "bbox" not in polys_rings.columns:
-        from mapshaper_spark.operators.overlay import _ensure_bbox
-        polys_rings = _ensure_bbox(polys_rings)
-    key_type = polys_rings.schema[poly_key].dataType
-    n = polys_rings.limit(local_limit + 1).count()
-    if n <= local_limit:
-        rows = polys_rings.select(poly_key, "rings_x", "rings_y", "bbox").collect()
-        cover = _local_cover_df(points_spark, rows, poly_key, key_type, bbox, res)
-    else:
-        cover = polygon_cell_cover(polys_rings, poly_key, bbox, res)
-    idx = PolygonIndex(cover, poly_key, bbox, res)
-    if ck is not None:
-        _INDEX_CACHE[ck] = idx
-    return idx
+    idx = polygon_index(points.sparkSession, polys_rings, poly_key, bbox, res)
+    return idx.candidates(points, x, y, broadcast_polys)
 
 
 def pip_join(points: DataFrame, x: str, y: str, polys_rings: DataFrame,
@@ -367,64 +305,25 @@ def pip_join(points: DataFrame, x: str, y: str, polys_rings: DataFrame,
     """All (point, polygon) pairs where the point is inside or on the
     boundary of the polygon — the semantics of getPointToPolygonsFunction
     (mapshaper-spatial-join.js:69-78): *all* enclosing polygons, boundary
-    counts as inside (testPointInPolygon, shape-geom.js:68-82).
+    counts as inside (testPointInPolygon, shape-geom.js:68-82). "auto"
+    broadcasts a layer of at most ``broadcast_limit`` rows.
 
     Returns the points DataFrame columns + ``poly_key``.
     """
+    idx = polygon_index(points.sparkSession, polys_rings, poly_key, bbox, res,
+                        cache_token=cache_token)
     if bbox is None:
-        # derive the grid extent from the polygon layer: assuming a fixed
-        # world bbox silently loses every cover cell for layers outside it
-        # (both grid sides clamp to edge cells, whose rects then intersect
-        # no segment and classify by an out-of-polygon center). The polygon
-        # extent bounds all possible hits, so points are filtered to it —
-        # that also prevents out-of-extent points from clamping into a
-        # full=true interior cell and passing without the exact verify.
-        if "bbox" not in polys_rings.columns:
-            from mapshaper_spark.operators.overlay import _ensure_bbox
-            polys_rings = _ensure_bbox(polys_rings)
-        pb = polys_rings.agg(F.min("bbox.xmin"), F.min("bbox.ymin"),
-                             F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0]
-        if pb[0] is None:  # empty polygon side: no pairs, typed empty out
-            from mapshaper_spark.layers import DEFAULT_BBOX
-            bbox = DEFAULT_BBOX
-        else:
-            xmin, ymin = float(pb[0]), float(pb[1])
-            bbox = (xmin, ymin, max(float(pb[2]), xmin + 1e-9),
-                    max(float(pb[3]), ymin + 1e-9))
-        points = points.filter((F.col(x) >= F.lit(bbox[0])) &
-                               (F.col(x) <= F.lit(bbox[2])) &
-                               (F.col(y) >= F.lit(bbox[1])) &
-                               (F.col(y) <= F.lit(bbox[3])))
-    spark = points.sparkSession
-
+        # the grid is the polygon extent: it bounds all hits, and points
+        # outside it would clamp into an edge cell, possibly a full=true
+        # one, and pass without the exact verify
+        xmin, ymin, xmax, ymax = idx.bbox
+        points = points.filter(F.col(x).between(xmin, xmax) & F.col(y).between(ymin, ymax))
     if broadcast_polys == "auto":
-        # broadcast while the polygon side is dimension-sized (the analog of
-        # spark.sql.autoBroadcastJoinThreshold, by row count since ring
-        # payloads vary); beyond that, salted shuffle join
-        broadcast_polys = polys_rings.limit(broadcast_limit + 1).count() <= broadcast_limit
-
-    if broadcast_polys:
-        idx = polygon_index(spark, polys_rings, poly_key, bbox, res,
-                            cache_token=cache_token)
-        pts = points.withColumn("cell", CE.morton_col(F.col(x), F.col(y), bbox, res))
-        cand = pts.join(F.broadcast(idx.cover), "cell")
-        # single-pass, fully-JVM verify: interior cells (full=true) pass
-        # outright; boundary cells evaluate the exact ray cast over their
-        # strip segments with higher-order functions — one scan, one
-        # broadcast join, one codegen filter, zero Python in the hot path
-        keep = F.col("full") | pip_inside_expr(F.col(x), F.col(y), F.col("segs"))
-        return cand.filter(keep).drop("cell", "full", "segs")
-
-    # shuffle path (large polygon side): salted equi-join on cell so one hot
-    # cell cannot pin a single reducer (north_rule skew handling); the exact
-    # verify is the SAME whole-stage-codegen strip-segment ray cast as the
-    # broadcast path — per-cell segments ride the cover rows through the
-    # shuffle, so there is no Python here either
-    pts = points.withColumn("cell", CE.morton_col(F.col(x), F.col(y), bbox, res))
-    cover = polygon_cell_cover(polys_rings, poly_key, bbox, res)
-    cand = salted_cell_join(pts, cover)
+        broadcast_polys = idx.rows <= broadcast_limit
+    # interior cells (full=true) pass outright; boundary cells run the exact
+    # ray cast over their strip segments in one codegen filter, no Python
     keep = F.col("full") | pip_inside_expr(F.col(x), F.col(y), F.col("segs"))
-    return cand.filter(keep).drop("cell", "full", "segs")
+    return idx.candidates(points, x, y, broadcast_polys).filter(keep).drop("full", "segs")
 
 
 def spatial_join_point_to_polygon(points: DataFrame, x: str, y: str,
@@ -475,22 +374,6 @@ def polygon_to_points_join(points: DataFrame, x: str, y: str,
     return polys_rings.drop("rings_x", "rings_y").join(agg, poly_key, "left")
 
 
-def _cell_join_auto(lft: DataFrame, rgt_cells: DataFrame,
-                    broadcast_limit: int,
-                    rgt_unexploded: DataFrame | None = None) -> DataFrame:
-    """Equi-join on ``cell`` with the same auto switch as pip_join: broadcast
-    the (already neighbor-exploded) right side while it is dimension-sized;
-    beyond the threshold fall back to a salted shuffle join so a forced
-    broadcast cannot OOM when both sides are large (VERDICT r01 #4).
-    The size probe counts the UNEXPLODED right side when given (9x cheaper
-    than counting the neighbor-disk explode)."""
-    probe = rgt_unexploded if rgt_unexploded is not None else rgt_cells
-    small = probe.limit(broadcast_limit + 1).count() <= broadcast_limit
-    if small:
-        return lft.join(F.broadcast(rgt_cells), "cell")
-    return salted_cell_join(lft, rgt_cells)
-
-
 def nearest_point_join(left: DataFrame, lx: str, ly: str, left_key: str,
                        right: DataFrame, rx: str, ry: str, right_key: str,
                        buffer: float = 1e-3,
@@ -501,71 +384,37 @@ def nearest_point_join(left: DataFrame, lx: str, ly: str, left_key: str,
     (mapshaper-point-index.js:4-25): strict-< scan in point order, so ties go
     to the lowest right id; squared-distance arithmetic matches exactly.
 
-    Plan: pick the finest cell resolution with edge >= buffer, explode the
-    right side into its 3x3 neighbor disk (pure JVM bit ops), equi-join on
-    cell, filter dist^2 <= buffer^2, then min(struct(dist2, right_id)) per
-    left row. No Python anywhere — whole-stage codegen end to end.
+    That is knn_join with k=1 and max_radius=buffer, left-joined back so
+    left rows without a neighbor keep null ``right_key``/``dist_sq``.
     """
-    if bbox is None:
-        from mapshaper_spark.layers import DEFAULT_BBOX
-        bbox = DEFAULT_BBOX
-    res = CE.res_for_radius(buffer, bbox)
-    n = 1 << res
-    xmin, ymin, xmax, ymax = bbox
-
-    ixl = CE.scaled_int_col(F.col(lx), xmin, xmax, res)
-    iyl = CE.scaled_int_col(F.col(ly), ymin, ymax, res)
-    lft = left.withColumn("cell", CE._spread_col(ixl).bitwiseOR(F.shiftleft(CE._spread_col(iyl), 1)))
-
-    ixr = CE.scaled_int_col(F.col(rx), xmin, xmax, res)
-    iyr = CE.scaled_int_col(F.col(ry), ymin, ymax, res)
-    rgt = right.withColumn("__ix", ixr).withColumn("__iy", iyr)
-    neighbor_keys = F.array(*[
-        F.when(((F.col("__ix") + dx).between(0, n - 1)) & ((F.col("__iy") + dy).between(0, n - 1)),
-               CE._spread_col(F.col("__ix") + dx).bitwiseOR(F.shiftleft(CE._spread_col(F.col("__iy") + dy), 1)))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    ])
-    rgt = (rgt.withColumn("cell", F.explode(F.filter(neighbor_keys, lambda c: c.isNotNull())))
-           .drop("__ix", "__iy"))
-
-    cand = _cell_join_auto(lft, rgt.select("cell", right_key, rx, ry),
-                           broadcast_limit, rgt_unexploded=right)
-    dx = F.col(lx) - F.col(rx)
-    dy = F.col(ly) - F.col(ry)
-    d2 = dx * dx + dy * dy
-    cand = cand.withColumn("__d2", d2).filter(F.col("__d2") <= F.lit(buffer * buffer))
-    best = (cand.groupBy(left_key)
-            .agg(F.min(F.struct(F.col("__d2").alias("d2"), F.col(right_key).alias("rk"))).alias("b"))
-            .select(left_key, F.col("b.rk").alias(right_key), F.col("b.d2").alias("dist_sq")))
-    return left.join(best, left_key, "left")
+    best = knn_join(left, lx, ly, left_key, right, rx, ry, right_key, k=1,
+                    max_radius=buffer, bbox=bbox, broadcast_limit=broadcast_limit)
+    return left.join(best.drop("knn_rank"), left_key, "left")
 
 
-def salted_cell_join(points: DataFrame, cover: DataFrame,
-                     cell: str = "cell", n_salts: int | None = None,
-                     hot_threshold: int | None = None) -> DataFrame:
+def salted_cell_join(points: DataFrame, cover: DataFrame) -> DataFrame:
     """Skew-safe equi-join on ``cell`` for the SHUFFLE path (north_rule:
     "salted repartitioning for hot-cell skew").
 
-    Hot cells are detected from a count over the points side (sampled at
-    scale); their point rows get a random-but-deterministic salt in
-    [0, n_salts) appended to the join key, and the cover rows for those
-    cells are replicated across every salt — the standard salted-join
-    rewrite. Cold cells join on salt 0 with no replication, so the extra
-    shuffle volume is bounded by |hot cover| * n_salts.
+    Hot cells are detected from per-cell counts over a deterministic 2%
+    sample of the points side: a cell is hot when its sampled count reaches
+    max(2 x the 99.9th percentile, 16 x the mean, 20). Their point rows get
+    a random-but-deterministic salt in [0, n_salts) appended to the join
+    key, and the cover rows for those cells are replicated across every salt
+    — the standard salted-join rewrite. n_salts is one per shuffle partition
+    (spark.sql.shuffle.partitions), clamped to [8, 128]. Cold cells join on
+    salt 0 with no replication, so the extra shuffle volume is bounded by
+    |hot cover| * n_salts.
 
     (The broadcast path needs no salting — a broadcast hash join has no
     per-key partition to skew. AQE's skew-join handles residual imbalance;
     this handles the pathological single-key case AQE cannot split further
     because all rows share one key.)
     """
-    if n_salts is None:
-        # one salt per reducer: a 50%-hot key spread over only a few
-        # salts under-parallelizes the verify stage (r5 skew-stress
-        # evidence); hot-cover replication stays bounded at
-        # |hot cover| * n_salts rows
-        n_salts = int(points.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32"))
-        n_salts = max(8, min(n_salts, 128))
+    # one salt per reducer: a 50%-hot key spread over only a few salts
+    # under-parallelizes the verify stage (r5 skew-stress evidence)
+    n_salts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_salts = max(8, min(n_salts, 128))
     # hot-cell detection on a DETERMINISTIC 2% SAMPLE (r5): the full
     # points-side count was an extra whole-table scan — at 10^12 rows
     # that pass costs more than the skew it guards against. A key hot
@@ -575,28 +424,26 @@ def salted_cell_join(points: DataFrame, cover: DataFrame,
     # handling. Fixed seed keeps the salting layout (never the join
     # RESULT) deterministic across retries.
     frac = 0.02
-    counts = points.sample(False, frac, seed=42).groupBy(cell).count()
-    if hot_threshold is None:
-        stats = counts.agg(F.expr("percentile(count, 0.999)").alias("p"),
-                           F.avg("count").alias("m")).collect()[0]
-        hot_threshold = max(int((stats.p or 0) * 2),
-                            int((stats.m or 0) * 16),
-                            max(int(1000 * frac), 10))
+    counts = points.sample(False, frac, seed=42).groupBy("cell").count()
+    stats = counts.agg(F.expr("percentile(count, 0.999)").alias("p"),
+                       F.avg("count").alias("m")).collect()[0]
+    hot_threshold = max(int((stats.p or 0) * 2), int((stats.m or 0) * 16),
+                        max(int(1000 * frac), 10))
     hot = counts.filter(F.col("count") >= hot_threshold).select(
-        cell, F.lit(True).alias("__hot"))
+        "cell", F.lit(True).alias("__hot"))
 
-    pts = points.join(F.broadcast(hot), cell, "left")
+    pts = points.join(F.broadcast(hot), "cell", "left")
     # salt derived from stable row content (NOT monotonically_increasing_id:
     # a nondeterministic join key can duplicate/drop pairs when a stage
     # retry recomputes rows after partial shuffle materialization)
-    stable_cols = [c for c in points.columns if c != cell] or [cell]
+    stable_cols = [c for c in points.columns if c != "cell"] or ["cell"]
     pts = pts.withColumn(
         "__salt",
         F.when(F.col("__hot").isNotNull(),
                F.pmod(F.hash(*stable_cols), F.lit(n_salts)))
         .otherwise(F.lit(0)).cast("int")).drop("__hot")
 
-    cov = cover.join(F.broadcast(hot), cell, "left")
+    cov = cover.join(F.broadcast(hot), "cell", "left")
     cov = (cov.withColumn(
         "__salt",
         F.when(F.col("__hot").isNotNull(),
@@ -605,7 +452,7 @@ def salted_cell_join(points: DataFrame, cover: DataFrame,
         .withColumn("__salt", F.explode("__salt"))
         .withColumn("__salt", F.col("__salt").cast("int")).drop("__hot"))
 
-    return pts.join(cov, [cell, "__salt"]).drop("__salt")
+    return pts.join(cov, ["cell", "__salt"]).drop("__salt")
 
 
 def knn_join(left: DataFrame, lx: str, ly: str, left_key: str,
@@ -618,11 +465,12 @@ def knn_join(left: DataFrame, lx: str, ly: str, left_key: str,
     progressive H3 ring expansion").
 
     Plan: choose the resolution whose cell edge ~ max_radius, explode right
-    into rings r=0..R around each cell (pure JVM sequence/explode of the
-    (2R+1)^2 disk), equi-join, rank by distance per left row. Because
-    max_radius bounds the search, the disk is exact (every candidate within
-    max_radius lies in the Chebyshev disk); ties break on lowest right key,
-    matching PointIndex's strict-< first-scan rule
+    into its 3x3 neighbor disk (pure JVM bit ops), equi-join on cell —
+    broadcast while ``right`` has at most ``broadcast_limit`` rows, salted
+    shuffle beyond — and rank by distance per left row. Because max_radius
+    bounds the search, the disk is exact (every candidate within max_radius
+    lies in it); ties break on lowest right key, matching PointIndex's
+    strict-< first-scan rule
     (/root/reference/src/points/mapshaper-point-index.js:4-25).
     """
     if bbox is None:
@@ -631,28 +479,25 @@ def knn_join(left: DataFrame, lx: str, ly: str, left_key: str,
     res = CE.res_for_radius(max_radius, bbox)
     n = 1 << res
     xmin, ymin, xmax, ymax = bbox
-
-    ixl = CE.scaled_int_col(F.col(lx), xmin, xmax, res)
-    iyl = CE.scaled_int_col(F.col(ly), ymin, ymax, res)
-    lft = left.withColumn(
-        "cell", CE._spread_col(ixl).bitwiseOR(F.shiftleft(CE._spread_col(iyl), 1)))
+    lft = left.withColumn("cell", CE.morton_col(F.col(lx), F.col(ly), bbox, res))
 
     ixr = CE.scaled_int_col(F.col(rx), xmin, xmax, res)
     iyr = CE.scaled_int_col(F.col(ry), ymin, ymax, res)
     rgt = right.withColumn("__ix", ixr).withColumn("__iy", iyr)
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     neighbor_keys = F.array(*[
         F.when(((F.col("__ix") + dx).between(0, n - 1)) &
                ((F.col("__iy") + dy).between(0, n - 1)),
                CE._spread_col(F.col("__ix") + dx)
                .bitwiseOR(F.shiftleft(CE._spread_col(F.col("__iy") + dy), 1)))
-        for dx, dy in offs])
-    rgt = (rgt.withColumn("cell", F.explode(F.filter(neighbor_keys,
-                                                     lambda c: c.isNotNull())))
-           .drop("__ix", "__iy"))
+        for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
+    rgt = rgt.select(F.explode(F.filter(neighbor_keys, lambda c: c.isNotNull())).alias("cell"),
+                     right_key, rx, ry)
 
-    cand = _cell_join_auto(lft, rgt.select("cell", right_key, rx, ry),
-                           broadcast_limit, rgt_unexploded=right)
+    # size probe on the UNEXPLODED right side (9x cheaper than the disk)
+    if right.limit(broadcast_limit + 1).count() <= broadcast_limit:
+        cand = lft.join(F.broadcast(rgt), "cell")
+    else:
+        cand = salted_cell_join(lft, rgt)
     dx = F.col(lx) - F.col(rx)
     dy = F.col(ly) - F.col(ry)
     cand = (cand.withColumn("dist_sq", dx * dx + dy * dy)

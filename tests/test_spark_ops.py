@@ -240,6 +240,79 @@ def test_salted_join_matches_broadcast_path(spark):
     assert len(a) >= 1000  # hot points hit both congruent squares
 
 
+def _polys(spark, rings_by_key):
+    """Polygon layer from {rid: (rings_x, rings_y)}, with bbox structs."""
+    rows = [Row(rid=k, rings_x=rx, rings_y=ry,
+                bbox=Row(xmin=min(map(min, rx)), ymin=min(map(min, ry)),
+                         xmax=max(map(max, rx)), ymax=max(map(max, ry))))
+            for k, (rx, ry) in rings_by_key.items()]
+    schema = T.StructType([
+        T.StructField("rid", T.IntegerType()),
+        T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
+        T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
+        T.StructField("bbox", L.BBOX_TYPE),
+    ])
+    return spark.createDataFrame(rows, schema)
+
+
+def _cover_rows(df):
+    return sorted((r.rid, r.cell, r.full,
+                   None if r.segs is None else
+                   tuple(tuple((s.ax, s.ay, s.bx, s.by) for s in ring) for ring in r.segs))
+                  for r in df.collect())
+
+
+def test_driver_cover_matches_distributed_cover(spark):
+    """The driver build of a small layer's cover and polygon_cell_cover
+    give the same (key, cell, full, segs) rows: a polygon with a hole and
+    vertices on cell edges, and a triangle."""
+    bbox = (0.0, 0.0, 16.0, 16.0)  # res 4: 1x1 cells, integer coords on edges
+    polys = _polys(spark, {
+        0: ([[0.5, 0.5, 8.0, 10.5, 10.5, 0.5], [3.0, 6.0, 6.0, 3.0, 3.0]],
+            [[0.5, 10.5, 10.5, 4.0, 0.5, 0.5], [3.0, 3.0, 6.0, 6.0, 3.0]]),
+        1: ([[11.0, 15.5, 13.25, 11.0]], [[11.0, 11.0, 15.0, 11.0]]),
+    })
+    idx = S.polygon_index(spark, polys, "rid", bbox, 4)
+    assert idx.rows == 2 <= S.PolygonIndex.LOCAL_LIMIT  # the driver build
+    driver = _cover_rows(idx.cover)
+    assert driver == _cover_rows(S.polygon_cell_cover(polys, "rid", bbox, 4))
+    assert {full for _, _, full, _ in driver} == {True, False}
+
+
+def test_pip_join_without_token_persists_nothing(spark):
+    """An uncached index leaves no persisted cover behind (each -clip/-erase
+    of a point layer used to leak one)."""
+    jsc = spark.sparkContext._jsc
+    pts = spark.createDataFrame([(1, 0.5, 0.5), (2, 2.5, 0.5)], "pid int, x double, y double")
+    before = jsc.getPersistentRDDs().size()
+    for shift in range(3):
+        x0 = float(shift)
+        polys = _polys(spark, {shift: ([[x0, x0, x0 + 1, x0 + 1, x0]],
+                                       [[0.0, 1.0, 1.0, 0.0, 0.0]])})
+        S.pip_join(pts, "x", "y", polys, "rid", bbox=(0, 0, 4, 4), res=4).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("bbox", [(0.0, 0.0, 4.0, 4.0), None])
+def test_cached_pip_join_runs_no_spark_job(spark, bbox):
+    """On a cache hit pip_join plans the join without running a Spark job:
+    no size, extent or cover probe."""
+    sc = spark.sparkContext
+    polys = _polys(spark, {0: ([[0.0, 0.0, 2.0, 2.0, 0.0]], [[0.0, 2.0, 2.0, 0.0, 0.0]])})
+    pts = spark.createDataFrame([(1, 0.5, 0.5), (2, 3.0, 3.0), (3, -1.0, 1.0)],
+                                "pid int, x double, y double")
+    token = f"cached-pip-join-{bbox}"
+    first = S.pip_join(pts, "x", "y", polys, "rid", bbox=bbox, res=4, cache_token=token)
+    group = f"cached-pip-join-{bbox is None}"
+    sc.setJobGroup(group, "cache-hit pip_join")
+    try:
+        again = S.pip_join(pts, "x", "y", polys, "rid", bbox=bbox, res=4, cache_token=token)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert [r.pid for r in again.collect()] == [r.pid for r in first.collect()] == [1]
+
+
 class TestFastSimplify:
     """fast-simplify (mapshaper-simplify-fast.js:3-66) interval thinning."""
 
