@@ -233,6 +233,10 @@ class Catalog:
     # layer (e.g. after -points x=lat ...), so exports keep them as
     # properties (commands-test.js 'converts csv to geojson points')
     coord_data: dict = field(default_factory=dict)
+    # facts an importer learned for free (GeoJSON: ``bounds``),
+    # keyed by the id of the exact DataFrame they describe and holding it,
+    # so any route that puts another frame in a layer drops them
+    facts: dict = field(default_factory=dict)
 
     def add(self, name: str, df: DataFrame, make_target: bool = True) -> str:
         base, k = name, 2
@@ -253,6 +257,15 @@ class Catalog:
 
     def replace(self, df: DataFrame, name: str | None = None) -> None:
         self.layers[name or self.target] = df
+
+    def set_facts(self, df: DataFrame, **facts) -> None:
+        self.facts[id(df)] = (df, facts)
+
+    def fact(self, key: str):
+        """A fact about the target layer's CURRENT frame, or None."""
+        df = self.layers.get(self.target)
+        known = self.facts.get(id(df))
+        return known[1].get(key) if known and known[0] is df else None
 
 
 def _probably_latlong(df: DataFrame) -> bool:
@@ -402,15 +415,18 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                 topo_paths.add(path)
                 continue
             else:
-                df = _flatten_props(cat.spark, GJ.import_geojson(cat.spark, obj),
+                table = GJ.geojson_table(obj)
+                df = _flatten_props(cat.spark, cat.spark.createDataFrame(table),
                                     obj)
-                auto_fid_paths.add(path)
                 if obj.get("type") == "Feature":
                     feats = [obj]
                 elif obj.get("type") == "FeatureCollection":
                     feats = obj.get("features", [])
                 else:
                     feats = []
+                if not any("fid" in (f.get("properties") or {})
+                           for f in feats):
+                    auto_fid_paths.add(path)
                 gtypes = {(f.get("geometry") or {}).get("type")
                           for f in feats} or \
                     {g.get("type") for g in obj.get("geometries", [])} or \
@@ -470,6 +486,7 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                     kind_hint = "point"
                 elif gtypes and gtypes <= {"Polygon", "MultiPolygon"}:
                     df = df.drop("x", "y")  # point-import artifacts
+                cat.set_facts(df, bounds=GJ.table_bounds(table))
         elif ext == ".shp":
             shp = open(path, "rb").read()
             stem = os.path.splitext(path)[0]
@@ -642,11 +659,27 @@ def _flatten_props(spark: SparkSession, df: DataFrame, obj: dict) -> DataFrame:
     keys = {k for r in records for k in r}
     if not keys:
         return df
+    if "fid" in keys:
+        # a 'fid' property (e.g. from an exported layer) replaces the record
+        # number as the layer's key, as a dbf 'fid' field does on shapefile
+        # import — so it must key every feature once
+        fids = [r.get("fid") for r in records]
+        if not all(isinstance(v, (str, int, float)) for v in fids) or \
+                len(set(fids)) != len(fids):
+            raise ValueError("GeoJSON property 'fid' must be a distinct, "
+                             "non-null scalar on every feature")
     pdf = _pd.DataFrame(records)
-    pdf.insert(0, "fid", range(len(records)))
+    pdf.insert(0, "__rec", range(len(records)))
     from mapshaper_spark.sources.topojson import typed_df
     props = typed_df(spark, pdf)
-    return df.drop("properties").join(props, "fid", "left")
+    # broadcast: the driver holds the properties already, and streaming
+    # the geometry keeps record order
+    out = (df.drop("properties").withColumnRenamed("fid", "__rec")
+           .join(F.broadcast(props), "__rec", "left"))
+    if "fid" not in keys:
+        return out.withColumnRenamed("__rec", "fid")
+    return out.select("fid", *[c for c in out.columns
+                               if c not in ("fid", "__rec")])
 
 
 def _flatten_props_sampled(spark: SparkSession, df: DataFrame,
@@ -1265,19 +1298,20 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
         reference's simplifyPaths order: protection modifies zz BEFORE
         setRetainedPct reads the quantile, mapshaper-simplify.js:57-68).
         Spherical auto-detection: decimal-degree-looking bounds simplify
-        on the 3D sphere unless 'planar' (useSphericalSimplify :51-53)."""
-        b = arcs.agg(F.min(F.array_min("xs")), F.min(F.array_min("ys")),
-                     F.max(F.array_max("xs")),
-                     F.max(F.array_max("ys"))).collect()[0]
-        spherical = (not c.flag("planar") and b[0] is not None and
-                     -181 <= b[0] and -91 <= b[1] and
-                     b[2] <= 181 and b[3] <= 91)
+        on the 3D sphere unless 'planar' (useSphericalSimplify :51-53).
+        The bounds are the layer's import fact when it has one."""
+        b = cat.fact("bounds")
+        if b is None:
+            b = SI.arc_bounds(arcs)
+        latlong = (b is not None and -181 <= b[0] and -91 <= b[1] and
+                   b[2] <= 181 and b[3] <= 91)
+        spherical = latlong and not c.flag("planar")
         with_z = SI.compute_thresholds(arcs, method=method,
                                        spherical=spherical)
         if spherical:
-            with_z = SI.protect_world_edges(with_z)
+            with_z = SI.protect_world_edges(with_z, b)
         if c.flag("lock-box"):
-            with_z = SI.protect_content_edges(with_z)
+            with_z = SI.protect_content_edges(with_z, b)
         if c.opt("interval"):
             # convertSimplifyInterval: '0.5km' -> meters on spherical
             # data; units are an error on unitless latlong-planar
@@ -1288,9 +1322,7 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
                 return with_z, U.convert_distance_param(raw, "wgs84")
             o = U.parse_measure_full(raw)
             if o.get("units"):
-                latlongish = (b[0] is not None and -181 <= b[0] and
-                              -91 <= b[1] and b[2] <= 181 and b[3] <= 91)
-                if latlongish:
+                if latlong:
                     raise ValueError("Parameter does not support distance "
                                      "units with latlong datasets")
                 # projected coordinates: assume meters (the reference's
@@ -1299,10 +1331,10 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
             return with_z, float(o["value"])
         if c.opt("resolution"):
             return with_z, SI.convert_simplify_resolution(
-                str(c.opt("resolution")), (b[0], b[1], b[2], b[3]),
-                spherical)
+                str(c.opt("resolution")), b, spherical)
         p = 1.0 if pct is None else pct
-        with_z = with_z.cache()
+        # materialize once: the quantile probes and the export all read it
+        with_z = with_z.localCheckpoint()
         return with_z, SI.threshold_for_pct(with_z, p)
 
     if _geometry_kind(df) == "path":
@@ -1331,14 +1363,17 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
         with_z = SI.keep_shapes(feats, with_z, fid)
     kept = SI.apply_zlimit(with_z, zlimit)
     rebuilt = _assemble_paths(refs, kept)
-    out = (paths.select("path_id", fid).join(rebuilt, "path_id")
-           .groupBy(F.col(fid).alias(key))
-           .agg(F.collect_list("xs").alias("rings_x"),
-                F.collect_list("ys").alias("rings_y")))
+    rings = (paths.select("path_id", fid).join(rebuilt, "path_id")
+             .groupBy(F.col(fid).alias(key))
+             .agg(F.collect_list("xs").alias("rings_x"),
+                  F.collect_list("ys").alias("rings_y")))
     attrs = df.drop("rings_x", "rings_y", "bbox")
-    if len(attrs.columns) > 1:
-        out = out.join(attrs, key, "left")
-    cat.replace(out)
+    # the join shuffles: tag the record order first, -o emits rows in it
+    # (the reference keeps input order); features without rings stay
+    if _ORDER_COL not in attrs.columns:
+        attrs = attrs.withColumn(_ORDER_COL, F.monotonically_increasing_id())
+    cat.replace(attrs.join(rings, key, "left").select(
+        key, "rings_x", "rings_y", *attrs.columns[1:]))
 
 
 def _assemble_paths(refs: DataFrame, arcs: DataFrame) -> DataFrame:
@@ -1607,15 +1642,28 @@ def _cmd_rename_layers(cat: Catalog, c: Command) -> None:
         _rename_layer(cat, old, new)
 
 
+def _in_record_order(df: DataFrame, one_task: bool = True) -> DataFrame:
+    """The layer's rows in its record order (the -sort / -simplify order
+    column, then dropped), for export. A document assembled on the driver
+    is merged in one task anyway, so it sorts in one partition, which needs
+    no range-sampling job; a distributed sink (``one_task=False``) sorts by
+    range."""
+    if _ORDER_COL not in df.columns:
+        return df
+    if one_task:
+        df = df.repartition(1).sortWithinPartitions(_ORDER_COL)
+    else:
+        df = df.orderBy(_ORDER_COL)
+    return df.drop(_ORDER_COL)
+
+
 def _svg_payload(cat: Catalog, names: list[str], c: Command) -> str:
     """Render one SVG document holding the named layers (the reference's
     exportSVG maps every target layer to a <g> in a single file)."""
     from mapshaper_spark.sources import svg as SVG
     layers = []
     for name in names:
-        df = cat.layers[name]
-        if _ORDER_COL in df.columns:
-            df = df.orderBy(_ORDER_COL).drop(_ORDER_COL)
+        df = _in_record_order(cat.layers[name])
         kind = cat.kinds.get(name, _geometry_kind(df))
         if kind == "point":
             px, py = _point_cols(df)
@@ -1670,9 +1718,7 @@ def _topojson_payload(cat: Catalog, names: list[str], c: Command) -> str:
     try:
         for name in names:
             cat.target = name
-            df = cat.layers[name]
-            if _ORDER_COL in df.columns:
-                df = df.orderBy(_ORDER_COL).drop(_ORDER_COL)
+            df = _in_record_order(cat.layers[name])
             kind = cat.kinds.get(name, _geometry_kind(df))
             if kind == "path":  # arc frames: xs/ys -> single-ring polyline
                 df = (df.withColumn("rings_x", F.array("xs"))
@@ -1838,8 +1884,6 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         cat.target = saved
         return
     df = cat.df()
-    if _ORDER_COL in df.columns:
-        df = df.orderBy(_ORDER_COL).drop(_ORDER_COL)
     kind0 = _geometry_kind(df)
     path = c.values[0] if c.values else None
     fmt = str(c.opt("format", "")) or (
@@ -1848,6 +1892,7 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
                              "csv" if kind0 == "table" else "geojson"))
     if fmt == "shapefile":  # the reference's format name for shp output
         fmt = "shp"
+    df = _in_record_order(df, one_task=fmt not in ("ndjson", "geojson-seq"))
     if fmt == "json" and (str(c.opt("format", "")) == "json"
                           or kind0 == "table"):
         # records-json: an EXPLICIT format=json exports the data table of
@@ -2329,18 +2374,15 @@ def _cmd_polygons(cat: Catalog, c: Command) -> None:
         tol = c.num("gap-tolerance")
     elif "gap-tolerance" in c.values:  # '-polygons gap-tolerance 0.11' form
         tol = float(c.values[c.values.index("gap-tolerance") + 1])
-    # localCheckpoint between phases: each phase references its input
-    # several times (node detect + explode + regroup; cells + joins), so an
-    # unbroken lazy chain of 4+ phases recomputes shared subtrees
-    # multiplicatively — the checkpoint bounds every phase to one execution
+    # each phase is materialized once: build_topology checkpoints its own
+    # occurrence table and the healed arcs are checkpointed here, so an
+    # unbroken lazy chain of 4+ phases never recomputes shared subtrees
     paths = df.select(F.xxhash64("xs", "ys").alias("path_id"), "xs", "ys")
     arcs0, _ = build_topology(paths, "path_id")
-    arcs0 = arcs0.localCheckpoint()
     hits = find_segment_intersections(arcs0)
     arcs_cut = insert_cut_points(arcs0, hits)
     paths2 = arcs_cut.select(F.col("arc_id").alias("path_id"), "xs", "ys")
     arcs, _ = build_topology(paths2, "path_id")
-    arcs = arcs.localCheckpoint()
     if tol:
         # heal undershoots, then re-node (healed endpoints become junctions)
         healed = close_gaps(arcs, tol).localCheckpoint()
@@ -2349,7 +2391,6 @@ def _cmd_polygons(cat: Catalog, c: Command) -> None:
         arcs, _ = build_topology(
             healed.select(F.col("arc_id").alias("path_id"), "xs", "ys"),
             "path_id")
-        arcs = arcs.localCheckpoint()
     faces = polygons_from_lines(arcs)
     out = faces.select(
         F.xxhash64("xs", "ys").alias("fid"),

@@ -491,20 +491,28 @@ def simplify_polygons_fast(features: DataFrame, dist: float) -> DataFrame:
 # simplification extent protection (world edges / lock-box)
 # ---------------------------------------------------------------------------
 
-def limit_simplification_extent(arcs_with_zs: DataFrame, bb, hard_limit: bool
-                                ) -> DataFrame:
+def arc_bounds(arcs: DataFrame):
+    """(xmin, ymin, xmax, ymax) over every vertex of ``arcs``, or None when
+    there is none — one aggregate job. Callers that already know the
+    bounds (a layer fact from import) pass them instead of probing."""
+    b = arcs.agg(F.min(F.array_min("xs")), F.min(F.array_min("ys")),
+                 F.max(F.array_max("xs")), F.max(F.array_max("ys"))).collect()[0]
+    return None if b[0] is None else tuple(b)
+
+
+def limit_simplification_extent(arcs_with_zs: DataFrame, bb, hard_limit: bool,
+                                bounds=None) -> DataFrame:
     """limitSimplificationExtent (mapshaper-simplify.js:123-143): vertices
     at or beyond the ``bb`` edges get their threshold raised — to Infinity
     with ``hard_limit`` (never removed), else to the ARC's max finite
     threshold (never removed before the arc's other vertices). Existing
     Infinity locks are never overridden; a no-op when the content stays
-    strictly inside ``bb`` (containsBounds early exit)."""
+    strictly inside ``bb`` (containsBounds early exit). ``bounds``: the
+    content bounds when known, else probed with ``arc_bounds``."""
     xmin, ymin, xmax, ymax = bb
-    b = arcs_with_zs.agg(F.min(F.array_min("xs")), F.min(F.array_min("ys")),
-                         F.max(F.array_max("xs")),
-                         F.max(F.array_max("ys"))).collect()[0]
-    if b[0] is None or (xmin <= b[0] and ymin <= b[1] and
-                        xmax >= b[2] and ymax >= b[3]):
+    b = arc_bounds(arcs_with_zs) if bounds is None else bounds
+    if b is None or (xmin <= b[0] and ymin <= b[1] and
+                     xmax >= b[2] and ymax >= b[3]):
         return arcs_with_zs
     inf = float("inf")
     if hard_limit:
@@ -524,29 +532,30 @@ def limit_simplification_extent(arcs_with_zs: DataFrame, bb, hard_limit: bool
     return arcs_with_zs.withColumn("zs", new_zs)
 
 
-def protect_world_edges(arcs_with_zs: DataFrame) -> DataFrame:
+def protect_world_edges(arcs_with_zs: DataFrame, bounds=None) -> DataFrame:
     """protectWorldEdges (mapshaper-simplify.js:149-154): on spherical
     simplify, polar / antimeridian coordinates (within 1e-12 of the world
     bounds) are never removed before an arc's other vertices
-    (simplify-test.js #protectWorldEdges goldens)."""
+    (simplify-test.js #protectWorldEdges goldens). ``bounds``: the
+    content bounds when known (see ``limit_simplification_extent``)."""
     e = 1e-12
     return limit_simplification_extent(
-        arcs_with_zs, (-180 + e, -90 + e, 180 - e, 90 - e), hard_limit=False)
+        arcs_with_zs, (-180 + e, -90 + e, 180 - e, 90 - e), hard_limit=False,
+        bounds=bounds)
 
 
-def protect_content_edges(arcs_with_zs: DataFrame) -> DataFrame:
+def protect_content_edges(arcs_with_zs: DataFrame, bounds=None) -> DataFrame:
     """protectContentEdges (-simplify lock-box, mapshaper-simplify.js:
     113-118): vertices on the dataset's own bounding box are never removed
-    (simplify-test.js 'protects a square shape')."""
+    (simplify-test.js 'protects a square shape'). ``bounds``: that box when
+    known, else probed with ``arc_bounds``."""
     e = 1e-14
-    b = arcs_with_zs.agg(F.min(F.array_min("xs")), F.min(F.array_min("ys")),
-                         F.max(F.array_max("xs")),
-                         F.max(F.array_max("ys"))).collect()[0]
-    if b[0] is None:
+    b = arc_bounds(arcs_with_zs) if bounds is None else bounds
+    if b is None:
         return arcs_with_zs
     return limit_simplification_extent(
         arcs_with_zs, (b[0] + e, b[1] + e, b[2] - e, b[3] - e),
-        hard_limit=True)
+        hard_limit=True, bounds=b)
 
 
 # ---------------------------------------------------------------------------

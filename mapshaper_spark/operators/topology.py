@@ -105,12 +105,15 @@ def build_topology(paths: DataFrame, path_id: str):
     append-order arc ids on a deterministic input order.
     refs_df: (path_id, arc_seq, signed) — signed arc refs per path, reversed
     encoded JS-style as -(id+1).
+
+    Both are narrow projections of ONE occurrence table, materialized here
+    with ``localCheckpoint`` (the way the reference's ArcCollection is built
+    once and then read): a caller that reads arcs and refs, then exports,
+    never re-plans node detection, the split UDF or the arc dedup.
     """
-    spark = paths.sparkSession
     nodes = detect_nodes(paths, path_id)
 
     # mark node vertices inside each path: explode, left-join nodes, regroup
-    n = F.size("xs")
     exploded = (paths.select(path_id, F.posexplode(F.arrays_zip(
         F.col("xs").alias("px"), F.col("ys").alias("py"))).alias("seq", "p"))
         .select(path_id, "seq", F.col("p.px").alias("x"), F.col("p.py").alias("y")))
@@ -206,10 +209,10 @@ def build_topology(paths: DataFrame, path_id: str):
     # geometry: ALWAYS the first use's ORIGINAL traversal — the reference's
     # append-order arcs store the first-seen direction (topology-test.js
     # 'two rings, one shared segment' asserts it), and later opposite uses
-    # reference it reversed. Orientation bookkeeping:
-    #   oflip — this occurrence's traversal winds opposite to the key
-    #   gflip — the stored geometry winds opposite to the key
-    # so an occurrence references the stored arc forward iff oflip == gflip.
+    # reference it reversed. Orientation bookkeeping: ``flip`` marks an
+    # occurrence whose traversal winds opposite to the key, so an
+    # occurrence references the stored arc forward iff its flip equals the
+    # first use's.
     is_ring = F.col("key_xs").isNotNull()
     dirn = ((F.element_at("sub_xs", 1) < F.element_at("sub_xs", -1)) |
             ((F.element_at("sub_xs", 1) == F.element_at("sub_xs", -1)) &
@@ -220,39 +223,44 @@ def build_topology(paths: DataFrame, path_id: str):
         path_id, "arc_seq",
         F.when(is_ring, F.col("key_xs")).otherwise(norm_xs).alias("cxs"),
         F.when(is_ring, F.col("key_ys")).otherwise(norm_ys).alias("cys"),
-        F.col("sub_xs").alias("gxs"),
-        F.col("sub_ys").alias("gys"),
-        F.when(is_ring, F.col("pre_flipped")).otherwise(~dirn).alias("gflip"),
-        F.when(is_ring, F.col("pre_flipped")).otherwise(~dirn).alias("oflip"),
+        "sub_xs", "sub_ys",
+        F.when(is_ring, F.col("pre_flipped")).otherwise(~dirn).alias("flip"),
     )
-    # deterministic arc ids: first use order, ranked without a global
-    # single-task window (scale.ranked_ids: range repartition + offsets)
+    # one row per distinct arc carrying its first use (geometry included)
+    # and all its uses, so the occurrence table comes out of the ranking
+    # without joining the segments back. (path_id, arc_seq) is unique per
+    # use — per_path is grouped by path — so the min struct is the first
+    # use. Deterministic arc ids: first use order, ranked without a global
+    # single-task window (scale.ranked_ids: range repartition + offsets).
+    use = [F.col(path_id).alias("pid"), F.col("arc_seq").alias("seq"), "flip"]
     firsts = (canon.groupBy("cxs", "cys")
-              .agg(F.min(F.struct(F.col(path_id).alias("pid"),
-                                  F.col("arc_seq").alias("seq"))).alias("__first"),
-                   F.min_by(F.struct(F.col("gxs").alias("xs"),
-                                     F.col("gys").alias("ys"),
-                                     F.col("gflip").alias("flip")),
-                            F.struct(F.col(path_id), F.col("arc_seq")))
-                   .alias("__geom"))
-              .withColumn("__fpid", F.col("__first.pid"))
-              .withColumn("__fseq", F.col("__first.seq")))
-    arcs_tbl = (ranked_ids(firsts, ["__fpid", "__fseq"], "arc_id")
-                .drop("__fpid", "__fseq"))
-    arcs = arcs_tbl.select(
-        "arc_id",
-        F.col("__geom.xs").alias("xs"), F.col("__geom.ys").alias("ys"),
-        F.size("__geom.xs").alias("n"),
-        F.struct(F.array_min("__geom.xs").alias("xmin"),
-                 F.array_min("__geom.ys").alias("ymin"),
-                 F.array_max("__geom.xs").alias("xmax"),
-                 F.array_max("__geom.ys").alias("ymax")).alias("bbox"))
-    refs = (canon.join(arcs_tbl.select("cxs", "cys", "arc_id",
-                                       F.col("__geom.flip").alias("__sflip")),
-                       ["cxs", "cys"])
-            .select(path_id, "arc_seq",
-                    F.when(F.col("oflip") == F.col("__sflip"), F.col("arc_id"))
-                     .otherwise(-(F.col("arc_id") + 1)).alias("signed")))
+              .agg(F.min(F.struct(*use[:2], F.col("sub_xs").alias("xs"),
+                                  F.col("sub_ys").alias("ys"), "flip"))
+                   .alias("__first"),
+                   F.collect_list(F.struct(*use)).alias("__uses"))
+              .select(F.col("__first.pid").alias("__fpid"),
+                      F.col("__first.seq").alias("__fseq"),
+                      "__first", "__uses"))
+    ids = ranked_ids(firsts, ["__fpid", "__fseq"], "arc_id")
+    u = F.col("__use")
+    first = (u["pid"] == F.col("__fpid")) & (u["seq"] == F.col("__fseq"))
+    occ = (ids.select("arc_id", "__fpid", "__fseq", "__first",
+                      F.explode("__uses").alias("__use"))
+           .select(u["pid"].alias(path_id), u["seq"].alias("arc_seq"),
+                   "arc_id",
+                   F.when(u["flip"] == F.col("__first.flip"), F.col("arc_id"))
+                    .otherwise(-(F.col("arc_id") + 1)).alias("signed"),
+                   first.alias("first"),
+                   F.when(first, F.col("__first.xs")).alias("xs"),
+                   F.when(first, F.col("__first.ys")).alias("ys"))
+           .localCheckpoint())
+    arcs = occ.filter("first").select(
+        "arc_id", "xs", "ys", F.size("xs").alias("n"),
+        F.struct(F.array_min("xs").alias("xmin"),
+                 F.array_min("ys").alias("ymin"),
+                 F.array_max("xs").alias("xmax"),
+                 F.array_max("ys").alias("ymax")).alias("bbox"))
+    refs = occ.select(path_id, "arc_seq", "signed")
     return arcs, refs
 
 

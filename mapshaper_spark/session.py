@@ -23,12 +23,23 @@ def driver_memory() -> str:
     return os.environ.get("MS_DRIVER_MEM") or f"{min(48 * 1024, ram_mb // 4)}m"
 
 
+def local_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on (its
+    CPU affinity, which containers and taskset narrow below the machine's
+    core count; the core count where affinity is not exposed)."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return os.environ["SPARK_GRAFT_CPUS"]
+    if hasattr(os, "sched_getaffinity"):  # Linux only
+        return str(len(os.sched_getaffinity(0)))
+    return str(os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "mapshaper_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get("MS_SHUFFLE_PARTITIONS", cpus))
     builder = (

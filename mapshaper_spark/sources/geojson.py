@@ -96,6 +96,23 @@ def import_geojson(spark: SparkSession, obj: dict | str) -> DataFrame:
     DataFrame: (fid, geometry_type, rings_x, rings_y, x, y, properties(json
     string), bbox). Points fill x/y; path types fill rings_x/rings_y (for
     LineString, one open path; for polygons, closed rings)."""
+    return spark.createDataFrame(geojson_table(obj))
+
+
+def table_bounds(table) -> tuple | None:
+    """Layer bounds (xmin, ymin, xmax, ymax) of a ``geojson_table`` from its
+    per-feature bboxes, or None when no feature has coordinates."""
+    import pyarrow.compute as pc
+    bb = table.column("bbox")
+    b = tuple(agg(pc.struct_field(bb, k)).as_py() for agg, k in
+              ((pc.min, "xmin"), (pc.min, "ymin"),
+               (pc.max, "xmax"), (pc.max, "ymax")))
+    return None if b[0] is None else b
+
+
+def geojson_table(obj: dict | str):
+    """The driver-side parse behind ``import_geojson``, as a pyarrow table
+    with the same columns."""
     import pyarrow as pa
 
     if isinstance(obj, str):
@@ -127,7 +144,7 @@ def import_geojson(spark: SparkSession, obj: dict | str) -> DataFrame:
                        "xmax": max(allx) if allx else None,
                        "ymax": max(ally) if ally else None})
 
-    table = pa.table({
+    return pa.table({
         "fid": pa.array(fids, pa.int64()),
         "geometry_type": pa.array(gtypes, pa.string()),
         "rings_x": pa.array(rxs, pa.list_(pa.list_(pa.float64()))),
@@ -138,7 +155,6 @@ def import_geojson(spark: SparkSession, obj: dict | str) -> DataFrame:
         "bbox": pa.array(bboxes, pa.struct([("xmin", pa.float64()), ("ymin", pa.float64()),
                                             ("xmax", pa.float64()), ("ymax", pa.float64())])),
     })
-    return spark.createDataFrame(table)
 
 
 def import_ndjson(spark: SparkSession, path: str) -> DataFrame:

@@ -13,7 +13,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mapshaper_spark.cli import Catalog, parse_commands, run_commands
+from mapshaper_spark.cli import (Catalog, dispatch_command, parse_commands,
+                                  run_commands)
 
 REF = "/root/reference/test/test_data"
 
@@ -730,3 +731,135 @@ class TestNdjsonSink:
         assert cat.kinds[cat.target] == "point"
         assert sorted((r["n"], r.x, r.y) for r in df.collect()) == \
             [(i, i + 0.5, i + 0.25) for i in range(5)]
+
+
+def _county_grid(path, n=4, v=6, seed=7):
+    """An n x n grid of lon/lat polygons named 'county r-c' in row-major
+    record order; neighbours share jagged borders of ``v`` interior
+    vertices, identical from both sides."""
+    rng = np.random.default_rng(seed)
+    xs = np.linspace(-100.0, -90.0, n + 1)
+    ys = np.linspace(30.0, 40.0, n + 1)
+    t = np.arange(1, v + 1) / (v + 1)
+    w = xs[1] - xs[0]
+
+    def jag(outer):
+        return np.zeros(v) if outer else rng.uniform(-0.15, 0.15, v) * w
+    horiz = {(r, c): list(zip(xs[c] + t * w, ys[r] + jag(r in (0, n))))
+             for r in range(n + 1) for c in range(n)}
+    vert = {(r, c): list(zip(xs[c] + jag(c in (0, n)), ys[r] + t * w))
+            for r in range(n) for c in range(n + 1)}
+    feats = []
+    for r in range(n):
+        for c in range(n):
+            ring = ([(xs[c], ys[r])] + horiz[r, c] + [(xs[c + 1], ys[r])]
+                    + vert[r, c + 1] + [(xs[c + 1], ys[r + 1])]
+                    + horiz[r + 1, c][::-1] + [(xs[c], ys[r + 1])]
+                    + vert[r, c][::-1] + [(xs[c], ys[r])])
+            feats.append({"type": "Feature",
+                          "properties": {"name": f"county {r}-{c}"},
+                          "geometry": {"type": "Polygon", "coordinates": [
+                              [[float(x), float(y)] for x, y in ring]]}})
+    with open(path, "w") as f:
+        json.dump({"type": "FeatureCollection", "features": feats}, f)
+    return [f["properties"]["name"] for f in feats]
+
+
+def _features(path):
+    with open(path) as f:
+        return json.load(f)["features"]
+
+
+class TestSimplifyRequest:
+    """A GeoJSON simplify request builds its shared-arc topology once and
+    reads the layer's bounds from its import facts."""
+
+    def test_simplify_keeps_record_order(self, spark, tmp_path):
+        names = _county_grid(tmp_path / "a.json")
+        for opts in ("no-repair", ""):
+            out = tmp_path / f"out{opts}.json"
+            run_commands(spark, f"-i {tmp_path / 'a.json'} -simplify 10% "
+                                f"{opts} -o {out}")
+            assert [f["properties"]["name"]
+                    for f in _features(out)] == names
+
+    def test_warm_request_job_budget(self, spark, tmp_path):
+        _county_grid(tmp_path / "a.json")
+        sc = spark.sparkContext
+        cmds = f"-i {tmp_path / 'a.json'} -simplify 10% no-repair -o {{}}"
+        for rep in ("cold", "warm"):
+            cat = Catalog(spark)
+            jobs = {}
+            try:
+                for cmd in parse_commands(cmds.format(tmp_path / f"{rep}.json")):
+                    group = f"budget-{rep}-{cmd.name}"
+                    sc.setJobGroup(group, group)
+                    dispatch_command(cat, cmd)
+                    jobs[cmd.name] = len(
+                        sc.statusTracker().getJobIdsForGroup(group))
+            finally:
+                sc.setJobGroup("", "")
+        assert sum(jobs.values()) <= 24, jobs
+        assert jobs["o"] <= 10, jobs
+
+    def test_affine_then_simplify_drops_import_bounds(self, spark, tmp_path):
+        """-affine replaces the layer, so its import bounds (lon/lat, which
+        select spherical simplify) must not outlive it: the shifted layer
+        simplifies like a file that was shifted beforehand."""
+        _county_grid(tmp_path / "a.json")
+        shifted = tmp_path / "shifted.json"
+        run_commands(spark, f"-i {tmp_path / 'a.json'} "
+                            f"-affine shift=5000,0 -o {shifted}")
+        want, got = tmp_path / "want.json", tmp_path / "got.json"
+        run_commands(spark, f"-i {shifted} -simplify 10% -o {want}")
+        run_commands(spark, f"-i {tmp_path / 'a.json'} -affine shift=5000,0 "
+                            f"-simplify 10% -o {got}")
+        assert _features(got) == _features(want)
+
+
+def test_geojson_fid_property_is_a_data_field(spark, tmp_path):
+    """A 'fid' property (the repo's own states.json has one) imports as
+    a data field and survives export, rather than colliding with the
+    import's record number."""
+    src = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "states.json")
+    out = tmp_path / "states.json"
+    run_commands(spark, f"-i {src} -o {out}")
+    with open(src) as f:
+        want = [f_["properties"] for f_ in json.load(f)["features"]]
+    assert [f_["properties"] for f_ in _features(out)] == want
+
+
+@pytest.mark.parametrize("fids", [[0, 1, None, 3], [0, 1, 1, 3]],
+                         ids=["partial", "duplicate"])
+def test_geojson_fid_property_that_cannot_key_is_an_error(spark, tmp_path,
+                                                          fids):
+    """A 'fid' property keys the layer only when it names every feature
+    once; otherwise import stops instead of dropping or merging features
+    further down (e.g. in -simplify's join back onto the attributes)."""
+    src = tmp_path / "a.json"
+    _county_grid(src, n=2)
+    with open(src) as f:
+        doc = json.load(f)
+    for feat, fid in zip(doc["features"], fids):
+        if fid is not None:
+            feat["properties"]["fid"] = fid
+    with open(src, "w") as f:
+        json.dump(doc, f)
+    with pytest.raises(ValueError, match="'fid' must be a distinct"):
+        run_commands(spark, f"-i {src} -simplify 10% -o {tmp_path / 'o.json'}")
+
+
+def test_simplify_keeps_features_without_geometry(spark, tmp_path):
+    src = tmp_path / "a.json"
+    names = _county_grid(src, n=2)
+    with open(src) as f:
+        doc = json.load(f)
+    doc["features"][1]["geometry"] = None
+    with open(src, "w") as f:
+        json.dump(doc, f)
+    out = tmp_path / "o.json"
+    run_commands(spark, f"-i {src} -simplify 10% -o {out}")
+    feats = _features(out)
+    assert [f["properties"]["name"] for f in feats] == names
+    assert not (feats[1]["geometry"] or {}).get("coordinates")

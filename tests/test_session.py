@@ -16,3 +16,19 @@ def test_driver_memory_default_fits_physical_ram(monkeypatch):
 def test_driver_memory_env_wins(monkeypatch):
     monkeypatch.setenv("MS_DRIVER_MEM", "512m")
     assert session.driver_memory() == "512m"
+
+
+def test_local_cpus_default_is_usable_cores(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.local_cpus() == str(len(os.sched_getaffinity(0)))
+
+
+def test_local_cpus_env_wins(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.local_cpus() == "3"
+
+
+def test_local_cpus_without_affinity_uses_core_count(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delattr(os, "sched_getaffinity", raising=False)
+    assert session.local_cpus() == str(os.cpu_count())
