@@ -1773,6 +1773,24 @@ def _data_fields(cat: Catalog, df: DataFrame) -> list[str]:
     return [col for col in df.columns if col not in skip]
 
 
+def _prj_text(cat: Catalog, df: DataFrame) -> str | None:
+    """The .prj sidecar of a shapefile export: the imported WKT untouched
+    (shp-export.js:21); a fresh WKT for a -proj'd layer's new CRS (Issue
+    #193: -proj wgs84 -o emits a WGS84 .prj); WGS84 for unprojected input
+    with decimal-degree bounds (shapefile-test.js 'WGS84 prj is generated
+    if input is unprojected GeoJSON'). None: no sidecar, including a CRS
+    family without a WKT spelling."""
+    from mapshaper_spark.sources.prj import proj4_to_wkt
+    if cat.target in cat.prj_text:
+        return cat.prj_text[cat.target]
+    if cat.target in cat.crs:
+        try:
+            return proj4_to_wkt(cat.crs[cat.target])
+        except ValueError:
+            return None
+    return proj4_to_wkt("wgs84") if _probably_latlong(df) else None
+
+
 def _delim_out(cat: Catalog, c: Command, df: DataFrame, fmt: str,
                path: str | None) -> None:
     """-o csv/tsv: the export delimiter follows delimiter= > the .tsv
@@ -1812,7 +1830,6 @@ def _delim_out(cat: Catalog, c: Command, df: DataFrame, fmt: str,
 
 
 def _cmd_o(cat: Catalog, c: Command) -> None:
-    from mapshaper_spark.sources import delim as DL
     from mapshaper_spark.sources import geojson as GJ
     from mapshaper_spark.sources import shapefile as SH
     # target= selects which layer(s) to write; '*' = every layer, each to
@@ -1823,14 +1840,23 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
     path0 = c.values[0] if c.values else None
     fmt0 = str(c.opt("format", "")) or (
         os.path.splitext(path0)[1].lstrip(".").lower() if path0 else "")
-    if tgt and fmt0 == "svg":
+    if tgt:
         names = list(cat.order) if str(tgt) == "*" \
             else [s.strip() for s in str(tgt).split(",")]
+        if not names:
+            raise ValueError("-o: no layers to output")
         for name in names:
             if name not in cat.layers:
                 raise ValueError(f"-o: no layer '{name}' (have {cat.order})")
-        payload = _svg_payload(cat, names, c)
-        key = path0 or f"{names[0]}.svg"
+    if tgt and (fmt0 == "svg" or
+                (fmt0 == "topojson" and not c.flag("singles"))):
+        # all target layers in ONE document: svg <g> groups, or one
+        # Topology (exportTopoJSON groups a dataset's layers as named
+        # objects over one shared arc table); -o singles falls through to
+        # the per-layer loop below
+        svg = fmt0 == "svg"
+        payload = (_svg_payload if svg else _topojson_payload)(cat, names, c)
+        key = path0 or f"{names[0]}." + ("svg" if svg else "json")
         if path0:
             with open(path0, "w") as f:
                 f.write(payload)
@@ -1844,31 +1870,9 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
                       options={**c.options, "target": "*"})
         _cmd_o(cat, sub)
         return
-    if tgt and fmt0 == "topojson" and not c.flag("singles"):
-        # all target layers in ONE Topology (exportTopoJSON groups a
-        # dataset's layers as named objects over one shared arc table);
-        # -o singles falls through to the per-layer loop below
-        names = list(cat.order) if str(tgt) == "*" \
-            else [s.strip() for s in str(tgt).split(",")]
-        for name in names:
-            if name not in cat.layers:
-                raise ValueError(f"-o: no layer '{name}' (have {cat.order})")
-        payload = _topojson_payload(cat, names, c)
-        key = path0 or f"{names[0]}.json"
-        if path0:
-            with open(path0, "w") as f:
-                f.write(payload)
-        cat.outputs[key] = payload
-        return
     if tgt:
-        names = list(cat.order) if str(tgt) == "*" \
-            else [s.strip() for s in str(tgt).split(",")]
-        if not names:
-            raise ValueError("-o: no layers to output")
         saved = cat.target
         for i, name in enumerate(names):
-            if name not in cat.layers:
-                raise ValueError(f"-o: no layer '{name}' (have {cat.order})")
             cat.target = name
             # with a positional path and multiple layers, version the file
             # name per layer like the reference (assignUniqueFileNames /
@@ -1911,19 +1915,8 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         _delim_out(cat, c, df, fmt, None)
         return
     if fmt in ("json", "geojson", "ndjson", "geojson-seq"):
-        geom_cols = {"rings_x", "rings_y", "bbox", "xs", "ys", "n",
-                     # import/assembly artifacts are not data fields (the
-                     # reference exports only the layer's data table; #174)
-                     "geometry_type", "properties", "shp_type", "parts"}
-        if cat.target in cat.auto_fid:
-            geom_cols.add("fid")
         kind = cat.kinds.get(cat.target, _geometry_kind(df))
-        coord_skip = (set(_point_cols(df)) | {"lon", "lat", "x", "y"}) \
-            - cat.coord_data.get(cat.target, set())
-        props = [col for col in df.columns if col not in geom_cols
-                 and col not in coord_skip] \
-            if kind == "point" else \
-            [col for col in df.columns if col not in geom_cols]
+        props = _data_fields(cat, df)
         kwargs = {"property_cols": props}
         if kind == "point":
             px, py = _point_cols(df)
@@ -1965,58 +1958,28 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         _delim_out(cat, c, df, fmt, path)
         return
     elif fmt == "shp":
-        shp, shx, dbf = SH.export_shapefile(df)
+        files = dict(zip((".shp", ".shx", ".dbf"), SH.export_shapefile(
+            df, fields=_data_fields(cat, df))))
+        prj = _prj_text(cat, df)
+        if prj is not None:
+            files[".prj"] = prj
         if path:
             base = os.path.splitext(path)[0]
-            for ext, blob in ((".shp", shp), (".shx", shx), (".dbf", dbf)):
-                with open(base + ext, "wb") as f:
+            for ext, blob in files.items():
+                with open(base + ext, "w" if ext == ".prj" else "wb") as f:
                     f.write(blob)
-            if cat.target in cat.prj_text:
-                # pass the imported WKT through untouched (shp-export.js:21)
-                with open(base + ".prj", "w") as f:
-                    f.write(cat.prj_text[cat.target])
-            elif cat.target in cat.crs:
-                # a -proj'd layer writes a fresh .prj for its new CRS
-                # (Issue #193: -proj wgs84 -o emits a WGS84 .prj)
-                from mapshaper_spark.sources.prj import proj4_to_wkt
-                try:
-                    with open(base + ".prj", "w") as f:
-                        f.write(proj4_to_wkt(cat.crs[cat.target]))
-                except ValueError:
-                    pass  # family without a WKT spelling: skip the sidecar
-            elif _probably_latlong(df):
-                from mapshaper_spark.sources.prj import proj4_to_wkt
-                with open(base + ".prj", "w") as f:
-                    f.write(proj4_to_wkt("wgs84"))
-            cat.outputs[path] = shp
+            cat.outputs[path] = files[".shp"]
         else:
             # pathless: derived '<layer>.shp' (+ sidecars) like the
             # reference's output-file naming (target-test.js:14-21)
-            cat.outputs[f"{cat.target}.shp"] = shp
-            cat.outputs[f"{cat.target}.shx"] = shx
-            cat.outputs[f"{cat.target}.dbf"] = dbf
-            if cat.target in cat.prj_text:
-                cat.outputs[f"{cat.target}.prj"] = cat.prj_text[cat.target]
-            elif cat.target in cat.crs:
-                # a -proj'd layer emits a fresh .prj here too (Issue #193)
-                from mapshaper_spark.sources.prj import proj4_to_wkt
-                try:
-                    cat.outputs[f"{cat.target}.prj"] = \
-                        proj4_to_wkt(cat.crs[cat.target])
-                except ValueError:
-                    pass  # family without a WKT spelling: skip the sidecar
-            elif _probably_latlong(df):
-                # unprojected input with decimal-degree bounds gets a
-                # WGS84 .prj (shapefile-test.js 'WGS84 prj is generated
-                # if input is unprojected GeoJSON')
-                from mapshaper_spark.sources.prj import proj4_to_wkt
-                cat.outputs[f"{cat.target}.prj"] = proj4_to_wkt("wgs84")
+            for ext, blob in files.items():
+                cat.outputs[cat.target + ext] = blob
         return
     elif fmt == "dbf":
         # attribute table only (the reference's -o format=dbf path,
         # io/mapshaper-file-types.js:47-48)
-        geom_cols = {"rings_x", "rings_y", "bbox", "xs", "ys"}
-        recs = [{k: v for k, v in r.asDict().items() if k not in geom_cols}
+        keep = set(_data_fields(cat, df))
+        recs = [{k: v for k, v in r.asDict().items() if k in keep}
                 for r in df.collect()]
         blob = SH.write_dbf(recs)
         if path:

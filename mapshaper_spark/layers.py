@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapshaper_spark.plans.scale import maybe_broadcast
 
 DEFAULT_BBOX = (-120.0, 25.0, -60.0, 49.0)
 
@@ -156,7 +155,7 @@ def assemble_rings(features: DataFrame, arcs: DataFrame, key: str = "rid") -> Da
         .withColumn("aid", absolute_arc_id_col(F.col("signed")).cast("long"))
         .withColumn("rev", F.col("signed") < 0)
     )
-    joined = exploded.join(maybe_broadcast(arcs.select("arc_id", "xs", "ys")),
+    joined = exploded.join(arcs.select("arc_id", "xs", "ys"),
                            exploded.aid == arcs.arc_id, "left")
 
     def _concat(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapshaper_spark.layers import absolute_arc_id_col
-from mapshaper_spark.plans.scale import maybe_broadcast
 
 
 def arc_length_col() -> F.Column:
@@ -44,7 +43,7 @@ def neighbor_weights(features: DataFrame, arcs: DataFrame, key: str) -> DataFram
              .select("aid", F.array_min("ks").alias("key_a"),
                      F.array_max("ks").alias("key_b")))
     lengths = arcs.select(F.col("arc_id").alias("aid"), arc_length_col().alias("len"))
-    pairs = sides.join(maybe_broadcast(lengths), "aid")
+    pairs = sides.join(lengths, "aid")
     return pairs.groupBy("key_a", "key_b").agg(F.sum("len").alias("weight"))
 
 
@@ -55,7 +54,8 @@ def data_fill(features: DataFrame, arcs: DataFrame, key: str, field: str,
     w = neighbor_weights(features, arcs, key)
     sym = w.select("key_a", "key_b", "weight").unionByName(
         w.select(F.col("key_b").alias("key_a"), F.col("key_a").alias("key_b"), "weight"))
-    sym = maybe_broadcast(sym)
+    # every fill pass reads it: materialize once (GC-reclaimable)
+    sym = sym.localCheckpoint()
 
     cur = features
     for _ in range(max_passes):

@@ -29,7 +29,6 @@ from pyspark.sql import types as T
 
 from mapshaper_spark.layers import absolute_arc_id_col
 from mapshaper_spark.operators.attributes import calc_exprs
-from mapshaper_spark.plans.scale import maybe_broadcast
 
 
 def dissolve_attributes(df: DataFrame, fields: Sequence[str],
@@ -115,7 +114,7 @@ def dissolve_polygons(features: DataFrame, arcs: DataFrame, group: str) -> DataF
         F.element_at("xs", 1).alias("x0"), F.element_at("ys", 1).alias("y0"),
         F.element_at("xs", -1).alias("x1"), F.element_at("ys", -1).alias("y1"),
     )
-    b = boundary.join(maybe_broadcast(ends), boundary.aid == ends.arc_id).drop("arc_id")
+    b = boundary.join(ends, boundary.aid == ends.arc_id).drop("arc_id")
 
     out_schema = T.StructType([b.schema[group]] + _RING_SCHEMA_FIELDS)
 

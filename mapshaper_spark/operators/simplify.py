@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapshaper_spark.geom import kernels as K
-from mapshaper_spark.plans.scale import maybe_broadcast
 
 METHODS = ("visvalingam", "weighted_visvalingam", "dp")
 
@@ -156,8 +155,8 @@ def keep_shapes(features: DataFrame, arcs_with_zs: DataFrame,
     exploded = (features.select(key, F.posexplode("parts").alias("ring_idx", "refs"))
                 .select(key, "ring_idx", F.posexplode("refs").alias("seq", "signed"))
                 .withColumn("aid", absolute_arc_id_col(F.col("signed")).cast("long")))
-    joined = exploded.join(maybe_broadcast(arcs_with_zs.select(
-        F.col("arc_id").alias("aid"), "xs", "ys", "zs")), "aid")
+    joined = exploded.join(arcs_with_zs.select(
+        F.col("arc_id").alias("aid"), "xs", "ys", "zs"), "aid")
 
     # connected components over "shapes sharing an arc"
     sa = exploded.select(key, "aid").distinct()
@@ -207,10 +206,8 @@ def keep_shapes(features: DataFrame, arcs_with_zs: DataFrame,
 def threshold_for_pct(arcs_with_zs: DataFrame, pct: float) -> float:
     """Exact distributed setRetainedPct: rank-th smallest removable z.
 
-    Two cheap jobs: a count, then an orderBy+limit(rank) pruned to the tail —
-    at 100 TB this is the standard exact-quantile-by-rank plan; an
-    approx-quantile fast path (percentile_approx) is available when exact
-    fixture parity is not required.
+    Two jobs: a count, then an orderBy+limit(rank) pruned to the tail (the
+    standard exact-quantile-by-rank plan).
     """
     if pct >= 1:
         return 0.0
@@ -226,12 +223,6 @@ def threshold_for_pct(arcs_with_zs: DataFrame, pct: float) -> float:
         return math.inf
     rows = zz.orderBy("z").limit(rank).orderBy(F.desc("z")).limit(1).collect()
     return float(rows[0][0])
-
-
-def threshold_for_pct_approx(arcs_with_zs: DataFrame, pct: float) -> float:
-    zz = (arcs_with_zs.select(F.explode("zs").alias("z"))
-          .filter(F.col("z") != float("inf")))
-    return zz.approxQuantile("z", [1.0 - pct], 0.001)[0]
 
 
 def apply_zlimit(arcs_with_zs: DataFrame, zlimit: float) -> DataFrame:
@@ -253,21 +244,16 @@ def apply_zlimit(arcs_with_zs: DataFrame, zlimit: float) -> DataFrame:
 
 def simplify(arcs: DataFrame, method: str = "weighted_visvalingam",
              pct: float = 1.0, interval: float | None = None,
-             weighting: float = 0.7, exact_rank: bool = True,
-             spherical: bool = False):
+             weighting: float = 0.7, spherical: bool = False):
     """Full -simplify: thresholds + retained interval. Returns
     (arcs_with_zs, zlimit); call apply_zlimit to materialize."""
     with_z = compute_thresholds(arcs, method=method, weighting=weighting,
                                 spherical=spherical)
     if interval is not None:
-        zlimit = float(interval)
-    elif exact_rank:
-        with_z = with_z.cache()
-        zlimit = threshold_for_pct(with_z, pct)
-    else:
-        with_z = with_z.cache()
-        zlimit = threshold_for_pct_approx(with_z, pct)
-    return with_z, zlimit
+        return with_z, float(interval)
+    # materialize once: the quantile probes and the export all read it
+    with_z = with_z.localCheckpoint()
+    return with_z, threshold_for_pct(with_z, pct)
 
 
 def apply_zlimit_with_index(arcs_with_zs: DataFrame, zlimit: float) -> DataFrame:

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapshaper_spark.plans.scale import maybe_broadcast, ranked_ids
+from mapshaper_spark.plans.scale import ranked_ids
 
 
 # ---------------------------------------------------------------------------
@@ -117,9 +117,9 @@ def build_topology(paths: DataFrame, path_id: str):
     exploded = (paths.select(path_id, F.posexplode(F.arrays_zip(
         F.col("xs").alias("px"), F.col("ys").alias("py"))).alias("seq", "p"))
         .select(path_id, "seq", F.col("p.px").alias("x"), F.col("p.py").alias("y")))
-    # node table scales with shared-boundary vertices: broadcast only while
-    # dimension-sized, shuffle-join beyond (scale.maybe_broadcast)
-    flagged = exploded.join(maybe_broadcast(nodes.withColumn("__isnode", F.lit(True))),
+    # Spark (or AQE, from the node stage's measured size) picks the
+    # broadcast; the node table scales with shared-boundary vertices
+    flagged = exploded.join(nodes.withColumn("__isnode", F.lit(True)),
                             ["x", "y"], "left")
     per_path = (flagged.groupBy(path_id)
                 .agg(F.sort_array(F.collect_list(F.struct(
@@ -423,7 +423,7 @@ def dissolve_polylines(features: DataFrame, arcs: DataFrame, group: str) -> Data
                 .withColumn("aid", absolute_arc_id_col(F.col("signed")))
                 .select(group, "aid").distinct())
     ends = arcs.select("arc_id", "xs", "ys")
-    b = exploded.join(maybe_broadcast(ends), exploded.aid == ends.arc_id).drop("arc_id")
+    b = exploded.join(ends, exploded.aid == ends.arc_id).drop("arc_id")
 
     out_schema = T.StructType([
         b.schema[group],

@@ -1,20 +1,18 @@
-"""Scale-safety primitives: distributed dense ranking and size-gated
-broadcasts.
+"""Scale-safe distributed dense ranking.
 
-Two patterns that are fine at fixture scale are 100x-scale killers:
+``Window.orderBy(...)`` (no partitionBy) + ``row_number()`` plans an
+``Exchange SinglePartition`` + single-task sort over the WHOLE table, which
+is fine at fixture scale and a 100x-scale killer. ``ranked_ids`` produces
+the identical dense 0-based ranking with a range repartition, per-partition
+local ranks, and cumulative partition-count offsets — every stage parallel,
+no single-partition exchange in the plan (assertable via
+``"SinglePartition" not in df._jdf.queryExecution()...``; see
+tests/test_paths_topology.py plan-shape tests).
 
-- ``Window.orderBy(...)`` (no partitionBy) + ``row_number()`` plans an
-  ``Exchange SinglePartition`` + single-task sort over the WHOLE table.
-  ``ranked_ids`` produces the identical dense 0-based ranking with a range
-  repartition, per-partition local ranks, and cumulative partition-count
-  offsets — every stage parallel, no single-partition exchange in the plan
-  (assertable via ``"SinglePartition" not in df._jdf.queryExecution()...``;
-  see tests/test_paths_topology.py plan-shape tests).
-
-- ``F.broadcast(df)`` on a table that scales with the data OOMs the driver
-  at 100x. ``maybe_broadcast`` gates on a row bound — the same auto switch
-  ``pip_join`` uses (operators/spatial.py:376-383) — and falls back to a
-  plain shuffle join above it.
+Join strategies are not chosen here: Spark broadcasts a side that is small
+at plan time, and Adaptive Query Execution (on in ``session.get_spark``)
+switches a shuffle join to a broadcast from the measured size of the
+finished shuffle stage.
 """
 from __future__ import annotations
 
@@ -81,25 +79,3 @@ def ranked_ids(df: DataFrame, sort_cols: list[str], id_name: str,
                        (F.col("__ofs") + F.col("__rn") - 1).cast("long"))
            .drop("__pid", "__rn", "__ofs"))
     return out
-
-
-def maybe_broadcast(df: DataFrame, limit: int = 100_000) -> DataFrame:
-    """Broadcast ``df`` iff it has at most ``limit`` rows (checked with a
-    LIMIT-bounded count so the probe never scans past limit+1 rows);
-    otherwise return it unhinted so Spark plans a shuffle join.
-
-    Row count is the gate (not bytes) because geometry payloads vary wildly
-    per row; limits at call sites are sized so limit rows of that table fit
-    comfortably in executor/driver memory.
-
-    The probed frame is persisted first: call sites pass DERIVED tables
-    (node/endpoint aggregations), and a LIMIT above a global aggregate
-    still executes the whole upstream — without the persist, the probe
-    would compute that subtree once and the consuming join a second time.
-    MEMORY_AND_DISK, LRU-evictable, lineage kept (same policy as
-    ranked_ids above).
-    """
-    df = df.persist()
-    if df.limit(limit + 1).count() <= limit:
-        return F.broadcast(df)
-    return df

@@ -601,13 +601,16 @@ def write_shp(geoms) -> tuple[bytes, bytes]:
     return shp, shx
 
 
-def export_shapefile(df, geometry: str = "auto"):
+def export_shapefile(df, geometry: str = "auto", fields=None):
     """Features DataFrame (rings_x/rings_y or x/y + attribute columns) ->
-    (.shp, .shx, .dbf) bytes. Fixture-scale sink: collects to the driver
-    (like the GeoJSON/TopoJSON sinks — a shapefile is one file)."""
+    (.shp, .shx, .dbf) bytes. ``fields``: the dbf's columns (default: every
+    non-geometry column). Fixture-scale sink: collects to the driver (like
+    the GeoJSON/TopoJSON sinks — a shapefile is one file)."""
     rows = [r.asDict() for r in df.collect()]
     geom_cols = {"rings_x", "rings_y", "rings_z", "x", "y", "z",
                  "shp_type", "bbox"}
+    if fields is None:
+        fields = [k for k in df.columns if k not in geom_cols]
     geoms = []
     records = []
     for r in rows:
@@ -628,7 +631,7 @@ def export_shapefile(df, geometry: str = "auto"):
             if t in Z_TYPES and r.get("rings_z"):
                 g["parts_z"] = [list(pz) for pz in r["rings_z"]]
             geoms.append(g)
-        records.append({k: v for k, v in r.items() if k not in geom_cols})
+        records.append({k: r[k] for k in fields})
     shp, shx = write_shp(geoms)
     dbf = write_dbf(records)
     return shp, shx, dbf

@@ -619,6 +619,25 @@ class TestDbfOutput:
         assert set(recs[0]) == {"fid", "state", "pop"}  # geometry dropped
         assert sorted(r["pop"] for r in recs) == [10, 20, 30, 40]
 
+    def test_shp_and_dbf_write_only_data_fields(self, spark, tmp_path):
+        """The dbf of -o .shp and of -o format=dbf holds the layer's data
+        fields alone, like the GeoJSON/TopoJSON/CSV sinks: no import fid,
+        geometry type or point coordinates."""
+        from mapshaper_spark.sources.shapefile import read_dbf
+        poly = tmp_path / "poly.json"
+        _county_grid(poly, n=2)
+        run_commands(spark, f"-i {poly} -o {tmp_path / 'out.shp'}")
+        recs = read_dbf((tmp_path / "out.dbf").read_bytes())
+        assert [list(r) for r in recs] == [["name"]] * 4
+        pts = tmp_path / "pts.json"
+        pts.write_text(json.dumps({"type": "FeatureCollection", "features": [
+            {"type": "Feature", "properties": {"name": n},
+             "geometry": {"type": "Point", "coordinates": [x, 1.0]}}
+            for n, x in (("a", 0.0), ("b", 2.0))]}))
+        cat = run_commands(spark, f"-i {pts} -o format=dbf")
+        recs = read_dbf(cat.outputs["pts.dbf"])
+        assert recs == [{"name": "a"}, {"name": "b"}]
+
 
 class TestOptionListParsing:
     """option-parser-test.js + chunker-test.js splitTokens transcriptions."""
@@ -770,6 +789,38 @@ def _features(path):
         return json.load(f)["features"]
 
 
+def _warm_request_jobs(spark, cmds):
+    """Spark jobs per command of the second of two runs of the request
+    ``cmds`` (a format string for the output path), one job group per
+    command; the first run is cold (persisted relations, JIT). Group
+    names are unique per call: the tracker keeps every group's jobs."""
+    import uuid
+    sc = spark.sparkContext
+    token = uuid.uuid4().hex
+    for rep in ("cold", "warm"):
+        cat = Catalog(spark)
+        jobs = {}
+        try:
+            for cmd in parse_commands(cmds.format(rep)):
+                group = f"budget-{token}-{rep}-{cmd.name}"
+                sc.setJobGroup(group, group)
+                dispatch_command(cat, cmd)
+                jobs[cmd.name] = len(
+                    sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("", "")
+    return jobs
+
+
+def _persistent_rdds(spark):
+    """Persisted RDDs the JVM still holds once unreachable ones (dropped
+    local checkpoints) are garbage-collected."""
+    import gc
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 class TestSimplifyRequest:
     """A GeoJSON simplify request builds its shared-arc topology once and
     reads the layer's bounds from its import facts."""
@@ -785,22 +836,24 @@ class TestSimplifyRequest:
 
     def test_warm_request_job_budget(self, spark, tmp_path):
         _county_grid(tmp_path / "a.json")
-        sc = spark.sparkContext
-        cmds = f"-i {tmp_path / 'a.json'} -simplify 10% no-repair -o {{}}"
-        for rep in ("cold", "warm"):
-            cat = Catalog(spark)
-            jobs = {}
-            try:
-                for cmd in parse_commands(cmds.format(tmp_path / f"{rep}.json")):
-                    group = f"budget-{rep}-{cmd.name}"
-                    sc.setJobGroup(group, group)
-                    dispatch_command(cat, cmd)
-                    jobs[cmd.name] = len(
-                        sc.statusTracker().getJobIdsForGroup(group))
-            finally:
-                sc.setJobGroup("", "")
+        jobs = _warm_request_jobs(
+            spark, f"-i {tmp_path / 'a.json'} -simplify 10% no-repair "
+                   f"-o {tmp_path}/{{}}.json")
         assert sum(jobs.values()) <= 24, jobs
         assert jobs["o"] <= 10, jobs
+
+    def test_distinct_inputs_persist_at_most_one_rdd_each(self, spark,
+                                                          tmp_path):
+        """A request on a new input may leave one persisted relation
+        (the arc ranking's, which a repeated request reuses) and no more:
+        join strategies are left to Spark, not pinned by persisted probes."""
+        before = _persistent_rdds(spark)
+        for seed in (21, 22, 23):
+            src = tmp_path / f"a{seed}.json"
+            _county_grid(src, seed=seed)
+            run_commands(spark, f"-i {src} -simplify 10% no-repair "
+                                f"-o {tmp_path / f'o{seed}.json'}")
+        assert _persistent_rdds(spark) - before <= 3
 
     def test_affine_then_simplify_drops_import_bounds(self, spark, tmp_path):
         """-affine replaces the layer, so its import bounds (lon/lat, which
@@ -815,6 +868,49 @@ class TestSimplifyRequest:
         run_commands(spark, f"-i {tmp_path / 'a.json'} -affine shift=5000,0 "
                             f"-simplify 10% -o {got}")
         assert _features(got) == _features(want)
+
+
+class TestDissolveRequest:
+    def test_warm_request_job_budget(self, spark, tmp_path):
+        _county_grid(tmp_path / "a.json")
+        jobs = _warm_request_jobs(
+            spark, f"-i {tmp_path / 'a.json'} -dissolve -o {tmp_path}/{{}}.json")
+        assert sum(jobs.values()) <= 18, jobs
+
+    def test_shuffle_joins_give_the_same_output(self, spark, tmp_path):
+        """Join strategies are Spark's choice: with every broadcast
+        disabled, the shared-arc topology and -dissolve come out as they
+        do under the default (adaptive) plans."""
+        from mapshaper_spark.cli import _rings_to_paths
+        from mapshaper_spark.operators.topology import build_topology
+        src = tmp_path / "a.json"
+        _county_grid(src, n=3)
+
+        def run(tag):
+            df = run_commands(spark, f"-i {src}").df()
+            paths, _ = _rings_to_paths(df, df.columns[0])
+            arcs, refs = build_topology(paths, "path_id")
+            out = tmp_path / f"{tag}.json"
+            run_commands(spark, f"-i {src} -dissolve -o {out}")
+            return (sorted(map(tuple, arcs.select("arc_id", "xs", "ys")
+                               .collect())),
+                    sorted(map(tuple, refs.collect())), out.read_bytes())
+
+        want = run("default")
+        keys = ("spark.sql.autoBroadcastJoinThreshold",
+                "spark.sql.adaptive.autoBroadcastJoinThreshold")
+        saved = {k: spark.conf.get(k, None) for k in keys}
+        try:
+            for k in keys:
+                spark.conf.set(k, "-1")
+            got = run("shuffle")
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        assert got == want
 
 
 def test_geojson_fid_property_is_a_data_field(spark, tmp_path):

@@ -726,9 +726,9 @@ class TestAnchorPoint:
 
 
 class TestScalePrimitives:
-    """scale.ranked_ids + maybe_broadcast (VERDICT r03 #1-#3): two-phase
-    deterministic ids must equal the global-window ranking AND plan with no
-    single-partition Exchange; data-sized broadcasts must be row-gated."""
+    """scale.ranked_ids (VERDICT r03 #1-#3): two-phase deterministic ids
+    must equal the global-window ranking AND plan with no single-partition
+    Exchange."""
 
     def test_ranked_ids_matches_global_window(self, spark):
         import random
@@ -758,28 +758,3 @@ class TestScalePrimitives:
         for d in (arcs, refs):
             plan = d._jdf.queryExecution().executedPlan().toString()
             assert "SinglePartition" not in plan
-
-    def test_maybe_broadcast_paths_agree(self, spark):
-        """Equality across the gate: forcing the shuffle path (limit=0)
-        must give the same node flags as the broadcast path."""
-        from mapshaper_spark.plans.scale import maybe_broadcast
-        dim = spark.createDataFrame([(i, i * 2) for i in range(50)],
-                                    "k int, val int")
-        fact = spark.range(500).select((F.col("id") % 50).cast("int").alias("k"))
-        a = fact.join(maybe_broadcast(dim, limit=1000), "k").groupBy("k") \
-            .agg(F.sum("val").alias("s"))
-        # above the gate no hint is emitted; kill Spark's own stats-based
-        # auto-broadcast so the shuffle path is actually planned
-        saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            b = fact.join(maybe_broadcast(dim, limit=0), "k").groupBy("k") \
-                .agg(F.sum("val").alias("s"))
-            rows_b = sorted(map(tuple, b.collect()))
-            pb = b._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        assert sorted(map(tuple, a.collect())) == rows_b
-        pa = a._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in pa
-        assert "BroadcastHashJoin" not in pb
