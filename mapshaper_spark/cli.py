@@ -335,6 +335,31 @@ def _sql(expr: str, env: dict[str, object] | None = None) -> str:
 # command implementations (each: (catalog, command) -> None)
 # ---------------------------------------------------------------------------
 
+_GEOJSON_KINDS = {"Point": "point", "MultiPoint": "point",
+                  "LineString": "polyline", "MultiLineString": "polyline",
+                  "Polygon": "polygon", "MultiPolygon": "polygon"}
+
+
+def _kind_layer(df: DataFrame, gtypes: set) -> tuple[DataFrame, str | None]:
+    """A GeoJSON-imported layer whose geometry types (null geometries
+    left out) are ``gtypes`` -> (the layer without the import's columns
+    for other kinds, its kind hint). No types: a data-only table (no x/y
+    artifact columns, commands-test.js 'converts geojson to tsv'); types
+    of several kinds: the layer as it is, no hint."""
+    kinds = {_GEOJSON_KINDS[t] for t in gtypes}
+    if not kinds:
+        return df.drop("x", "y", "rings_x", "rings_y", "geometry_type"), \
+            "table"
+    if len(kinds) > 1:
+        return df, None
+    kind = kinds.pop()
+    if kind != "point":
+        return df.drop("x", "y"), kind
+    # MultiPoint coordinates live in the rings arrays; keep them
+    return (df if "MultiPoint" in gtypes
+            else df.drop("rings_x", "rings_y")), kind
+
+
 def _cmd_i(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.sources import delim as DL
     from mapshaper_spark.sources import geojson as GJ
@@ -356,31 +381,13 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                 (not ext and os.path.isdir(path)):
             # distributed newline-delimited GeoJSON import (engine
             # extension, r5 — read counterpart of -o format=ndjson):
-            # splittable text scan + Arrow-batched feature parse;
-            # property columns typed from a driver-side sample, the
-            # whole-data extraction stays JVM-side (get_json_object)
-            df = GJ.import_ndjson(cat.spark, path)
-            df = _flatten_props_sampled(cat.spark, df)
+            # splittable text scan + Arrow-batched feature parse; the
+            # property columns are extracted JVM-side (get_json_object)
+            df = _flatten_props_sampled(GJ.import_ndjson(cat.spark, path))
             auto_fid_paths.add(path)
-            gts = {r[0] for r in
-                   df.select("geometry_type").distinct().collect()}
-            gts.discard("null")
-            gts.discard(None)
-            if gts and gts <= {"Point"}:
-                kind_hint = "point"
-                df = df.drop("rings_x", "rings_y")
-            elif gts and gts <= {"Point", "MultiPoint"}:
-                kind_hint = "point"
-            elif gts and gts <= {"LineString", "MultiLineString"}:
-                kind_hint = "polyline"
-                df = df.drop("x", "y")
-            elif gts and gts <= {"Polygon", "MultiPolygon"}:
-                kind_hint = "polygon"
-                df = df.drop("x", "y")
-            elif not gts:
-                kind_hint = "table"
-                df = df.drop("x", "y", "rings_x", "rings_y",
-                             "geometry_type")
+            gtypes = {r[0] for r in
+                      df.select("geometry_type").distinct().collect()}
+            df, kind_hint = _kind_layer(df, gtypes - {"null"})
             dfs.append((path, df, kind_hint, None))
             continue
         if ext in (".json", ".geojson", ".topojson"):
@@ -415,77 +422,30 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                 topo_paths.add(path)
                 continue
             else:
-                table = GJ.geojson_table(obj)
-                df = _flatten_props(cat.spark, cat.spark.createDataFrame(table),
-                                    obj)
-                if obj.get("type") == "Feature":
-                    feats = [obj]
-                elif obj.get("type") == "FeatureCollection":
-                    feats = obj.get("features", [])
-                else:
-                    feats = []
-                if not any("fid" in (f.get("properties") or {})
-                           for f in feats):
+                table, fid_is_data = GJ.geojson_table(obj)
+                if not fid_is_data:
                     auto_fid_paths.add(path)
-                gtypes = {(f.get("geometry") or {}).get("type")
-                          for f in feats} or \
-                    {g.get("type") for g in obj.get("geometries", [])} or \
-                    ({obj.get("type")} if obj.get("type") not in
-                     ("Feature", "FeatureCollection", "Topology", None)
-                     else set())
-                gtypes.discard(None)  # null geometries don't pick the kind
-                _K = {"Point": "point", "MultiPoint": "point",
-                      "LineString": "polyline",
-                      "MultiLineString": "polyline",
-                      "Polygon": "polygon", "MultiPolygon": "polygon"}
-                kinds_present = {_K[t] for t in gtypes if t in _K}
-                if len(kinds_present) > 1:
+                df = cat.spark.createDataFrame(table)
+                gtypes = set(table.column("geometry_type").unique()
+                             .to_pylist())
+                kinds = {_GEOJSON_KINDS[t] for t in gtypes - {"null"}}
+                if len(kinds) > 1:
                     # mixed-type collection: one layer per geometry kind
                     # (the reference's divideFeaturesByType,
-                    # src/geojson/geojson-import.js; target-test.js:57-73)
-                    for kname in ("point", "polyline", "polygon"):
-                        if kname not in kinds_present:
-                            continue
-                        types = [t for t, k in _K.items() if k == kname]
-                        sub = df.filter(F.col("geometry_type").isin(types))
-                        if kname == "point" and gtypes & {"Point"} and \
-                                not gtypes & {"MultiPoint"}:
-                            sub = sub.drop("rings_x", "rings_y")
-                        elif kname != "point":
-                            sub = sub.drop("x", "y")
-                        dfs.append((path, sub, kname, None))
-                    # null-geometry features form their own data-only layer
-                    # (divideFeaturesByType keeps geoType=null records with
-                    # no shapes, mapshaper-dataset-utils.js:7-27); isin()
-                    # above is NULL for them, so without this they vanish
-                    if any((f.get("geometry") or {}).get("type") is None
-                           for f in feats):
-                        # import_geojson stores the 'null' sentinel string
-                        nsub = df.filter(
-                            F.col("geometry_type").isNull() |
-                            (F.col("geometry_type") == "null"))
-                        nsub = nsub.drop("x", "y", "rings_x", "rings_y",
-                                         "geometry_type")
-                        dfs.append((path, nsub, "table", None))
+                    # src/geojson/geojson-import.js; target-test.js:57-73);
+                    # null-geometry features form their own data-only
+                    # layer (divideFeaturesByType keeps geoType=null
+                    # records with no shapes, mapshaper-dataset-utils.js)
+                    for kname in ("point", "polyline", "polygon", None):
+                        types = {t for t in gtypes
+                                 if _GEOJSON_KINDS.get(t) == kname}
+                        if types:
+                            sub = df.filter(
+                                F.col("geometry_type").isin(*types))
+                            dfs.append((path, *_kind_layer(
+                                sub, types - {"null"}), None))
                     continue
-                if not gtypes:
-                    # every feature has null geometry -> a data-only table
-                    # (commands-test.js 'converts geojson to tsv': no x/y
-                    # artifact columns in the output)
-                    kind_hint = "table"
-                    df = df.drop("x", "y", "rings_x", "rings_y",
-                                 "geometry_type")
-                elif gtypes and gtypes <= {"LineString", "MultiLineString"}:
-                    kind_hint = "polyline"
-                    df = df.drop("x", "y")  # point-import artifacts
-                elif gtypes and gtypes <= {"Point"}:
-                    kind_hint = "point"
-                    df = df.drop("rings_x", "rings_y")
-                elif gtypes and gtypes <= {"Point", "MultiPoint"}:
-                    # MultiPoint coords live in the rings arrays; keep them
-                    kind_hint = "point"
-                elif gtypes and gtypes <= {"Polygon", "MultiPolygon"}:
-                    df = df.drop("x", "y")  # point-import artifacts
+                df, kind_hint = _kind_layer(df, gtypes - {"null"})
                 cat.set_facts(df, bounds=GJ.table_bounds(table))
         elif ext == ".shp":
             shp = open(path, "rb").read()
@@ -645,63 +605,27 @@ def _round_layer_coords(df: DataFrame, precision: float) -> DataFrame:
     return df
 
 
-def _flatten_props(spark: SparkSession, df: DataFrame, obj: dict) -> DataFrame:
-    """GeoJSON properties (a JSON-string column from import_geojson) ->
-    top-level typed columns, the way the reference exposes fields to
-    expressions. Typed via pandas inference on the parsed features."""
+def _flatten_props_sampled(df: DataFrame) -> DataFrame:
+    """Distributed property flattening for the ndjson importer. The key
+    set comes from every row in one Catalyst aggregate (json_object_keys),
+    in first-seen order; column types come from the pandas inference of
+    the driver-side tables (``topojson._infer_schema``) over a 500-row
+    sample, and a key the sample never saw comes out as a string. The
+    extraction is pure Catalyst get_json_object + cast — no Python over
+    the whole table."""
     import pandas as _pd
-    feats = obj.get("features") if isinstance(obj, dict) else None
-    if not feats and isinstance(obj, dict) and obj.get("type") == "Feature":
-        feats = [obj]  # single-Feature documents flatten too (Issue #171)
-    if not feats:
-        return df
-    records = [f.get("properties") or {} for f in feats]
-    keys = {k for r in records for k in r}
+
+    from mapshaper_spark.sources.topojson import _infer_schema
+    first = (df.select("fid", F.posexplode(F.json_object_keys("properties")))
+             .groupBy("col").agg(F.min(F.struct("fid", "pos")).alias("at"))
+             .collect())
+    keys = [r["col"] for r in sorted(first, key=lambda r: tuple(r["at"]))]
     if not keys:
         return df
-    if "fid" in keys:
-        # a 'fid' property (e.g. from an exported layer) replaces the record
-        # number as the layer's key, as a dbf 'fid' field does on shapefile
-        # import — so it must key every feature once
-        fids = [r.get("fid") for r in records]
-        if not all(isinstance(v, (str, int, float)) for v in fids) or \
-                len(set(fids)) != len(fids):
-            raise ValueError("GeoJSON property 'fid' must be a distinct, "
-                             "non-null scalar on every feature")
-    pdf = _pd.DataFrame(records)
-    pdf.insert(0, "__rec", range(len(records)))
-    from mapshaper_spark.sources.topojson import typed_df
-    props = typed_df(spark, pdf)
-    # broadcast: the driver holds the properties already, and streaming
-    # the geometry keeps record order
-    out = (df.drop("properties").withColumnRenamed("fid", "__rec")
-           .join(F.broadcast(props), "__rec", "left"))
-    if "fid" not in keys:
-        return out.withColumnRenamed("__rec", "fid")
-    return out.select("fid", *[c for c in out.columns
-                               if c not in ("fid", "__rec")])
-
-
-def _flatten_props_sampled(spark: SparkSession, df: DataFrame,
-                           sample_rows: int = 500) -> DataFrame:
-    """Distributed property flattening for the ndjson importer: key set +
-    column types come from a driver-side SAMPLE (typed with the same
-    pandas inference as _flatten_props), then the full-data extraction is
-    pure Catalyst get_json_object + cast — no Python over the whole
-    table. Keys appearing only past the sample stay inside the
-    `properties` JSON (documented sampling bound)."""
-    import json as _json
-
-    import pandas as _pd
-    sample = [r[0] for r in
-              df.select("properties").limit(sample_rows).collect()]
-    records = [_json.loads(s) if s else {} for s in sample]
-    keys = list(dict.fromkeys(k for r in records for k in r))
-    if not keys:
-        return df
-    from mapshaper_spark.sources.topojson import typed_df
-    pdf = _pd.DataFrame(records)
-    types = {f.name: f.dataType for f in typed_df(spark, pdf).schema.fields}
+    sample = [json.loads(r[0]) for r in
+              df.select("properties").limit(500).collect()]
+    types = {f.name: f.dataType for f in
+             _infer_schema(_pd.DataFrame(sample)).fields}
     # a property named like an engine column (e.g. an exported 'fid')
     # replaces it — same winner as the reference's record fields
     cols = [df[c] for c in df.columns
@@ -2222,8 +2146,11 @@ def _cmd_data_fill(cat: Catalog, c: Command) -> None:
              .withColumnRenamed(fid, "__dfk")
              .join(df.select("__dfk", field_name), "__dfk"))
     filled = DF_.data_fill(feats, arcs, "__dfk", field_name)
-    cat.replace(df.drop(field_name)
-                .join(filled.select("__dfk", field_name), "__dfk", "left")
+    # the join shuffles: tag the record order first, -o emits rows in it
+    attrs = df.drop(field_name)
+    if _ORDER_COL not in attrs.columns:
+        attrs = attrs.withColumn(_ORDER_COL, F.monotonically_increasing_id())
+    cat.replace(attrs.join(filled.select("__dfk", field_name), "__dfk", "left")
                 .drop("__dfk"))
 
 

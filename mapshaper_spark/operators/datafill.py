@@ -10,7 +10,9 @@ falls to first-encountered arc order, which is input-order dependent).
 
 Plan shape: the neighbor-pair weight table is built ONCE (explode arcs ->
 groupBy arc -> pair -> sum arc length); each pass is one broadcast-join +
-groupBy(argmax) — no Python.
+groupBy(argmax), materialized with ``localCheckpoint`` so the next pass
+plans against the filled table, not against one join per earlier pass —
+no Python.
 """
 
 from __future__ import annotations
@@ -58,8 +60,8 @@ def data_fill(features: DataFrame, arcs: DataFrame, key: str, field: str,
     sym = sym.localCheckpoint()
 
     cur = features
+    n_empty = cur.filter(F.col(field).isNull()).count()
     for _ in range(max_passes):
-        n_empty = cur.filter(F.col(field).isNull()).count()
         if n_empty == 0:
             break
         vals = cur.select(F.col(key).alias("key_b"), F.col(field).alias("__nbr_val"))
@@ -71,8 +73,9 @@ def data_fill(features: DataFrame, arcs: DataFrame, key: str, field: str,
                 .select(F.col("key_a").alias(key), F.col("best.v").alias("__fill")))
         cur = (cur.join(cand, key, "left")
                .withColumn(field, F.coalesce(F.col(field), F.col("__fill")))
-               .drop("__fill"))
+               .drop("__fill")).localCheckpoint()
         still = cur.filter(F.col(field).isNull()).count()
         if still == n_empty:  # nothing changed (isolated empties)
             break
+        n_empty = still
     return cur

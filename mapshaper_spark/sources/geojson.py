@@ -1,23 +1,29 @@
 """GeoJSON source/sink.
 
 Import dispatch mirrors the reference's pathImporters table
-(/root/reference/src/geojson/geojson-import.js:79-96: Point, MultiPoint,
-LineString, MultiLineString, Polygon, MultiPolygon); export mirrors
-exportLayerAsGeoJSON (/root/reference/src/geojson/geojson-export.js) with
-the RFC 7946 default precision of 1e-6 available via ``precision``.
+(src/geojson/geojson-import.js:79-96: Point, MultiPoint, LineString,
+MultiLineString, Polygon, MultiPolygon); export mirrors
+exportLayerAsGeoJSON (src/geojson/geojson-export.js) with the RFC 7946
+default precision of 1e-6 available via ``precision``.
 
-Two paths:
-- fixture-scale: ``import_geojson`` parses driver-side (like the reference,
-  which holds the whole document in memory) and builds an Arrow-backed
-  DataFrame;
-- at-scale sink: ``to_geojson_features`` renders one Feature JSON string per
-  row with pure Catalyst ``to_json`` — suitable for newline-delimited
-  GeoJSON (.ndjson / GeoJSONSeq) written with ``df.write.text``.
+Both importers parse each feature once, through ``_geometry_row``:
+- ``geojson_table`` (behind ``import_geojson`` and ``-i``) parses a whole
+  document on the driver, as the reference holds it in memory, into the
+  layer's final table: ``fid``, the geometry columns and one typed column
+  per property key, built as one Arrow table for one ``createDataFrame``;
+- ``import_ndjson`` parses newline-delimited GeoJSON in Arrow batches on
+  the executors and keeps each feature's properties as one JSON string,
+  ``properties``, which the CLI flattens in Catalyst.
+
+At-scale sink: ``to_geojson_features`` renders one Feature JSON string per
+row with pure Catalyst ``to_json``, for newline-delimited GeoJSON
+(.ndjson / GeoJSONSeq) written with ``df.write.text``.
 """
 
 from __future__ import annotations
 
 import json
+import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,9 +59,24 @@ def _rewind_ring(xs, ys, is_hole):
     return xs, ys
 
 
-def _parse_geometry(g: dict):
-    """One GeoJSON geometry -> (type, rings_x, rings_y, px, py) in the
-    catalog's layout (shared by the driver-side and ndjson importers)."""
+_BBOX_FIELDS = ("xmin", "ymin", "xmax", "ymax")
+
+
+def _geometry_fields() -> list:
+    """(name, Arrow type) of the geometry columns of ``_geometry_row``."""
+    import pyarrow as pa
+    rings = pa.list_(pa.list_(pa.float64()))
+    return [("geometry_type", pa.string()), ("rings_x", rings),
+            ("rings_y", rings), ("x", pa.float64()), ("y", pa.float64()),
+            ("bbox", pa.struct([(k, pa.float64()) for k in _BBOX_FIELDS]))]
+
+
+def _geometry_row(g: dict) -> tuple:
+    """One GeoJSON geometry -> its row of the geometry columns
+    (geometry_type, rings_x, rings_y, x, y, bbox), shared by the
+    driver-side and ndjson importers. Points fill x/y; path types fill
+    rings_x/rings_y (for LineString, one open path; for polygons, closed
+    rings); a missing geometry has type 'null' and no coordinates."""
     t = g.get("type")
     c = g.get("coordinates")
     rx: list = []
@@ -84,19 +105,20 @@ def _parse_geometry(g: dict):
                 xs, ys = _rewind_ring(*_ring_to_xy(ring), is_hole=k > 0)
                 rx.append(xs)
                 ry.append(ys)
-    elif t is None:
-        pass  # null geometry feature
-    else:
+    elif t is not None:
         raise ValueError(f"unsupported GeoJSON type {t}")
-    return t, rx, ry, px, py
+    allx = [v for r in rx for v in r] + ([px] if px is not None else [])
+    ally = [v for r in ry for v in r] + ([py] if py is not None else [])
+    bbox = dict(zip(_BBOX_FIELDS, (min(allx), min(ally), max(allx),
+                                   max(ally)))) if allx \
+        else dict.fromkeys(_BBOX_FIELDS)
+    return t or "null", rx, ry, px, py, bbox
 
 
 def import_geojson(spark: SparkSession, obj: dict | str) -> DataFrame:
-    """FeatureCollection / GeometryCollection / single feature -> features
-    DataFrame: (fid, geometry_type, rings_x, rings_y, x, y, properties(json
-    string), bbox). Points fill x/y; path types fill rings_x/rings_y (for
-    LineString, one open path; for polygons, closed rings)."""
-    return spark.createDataFrame(geojson_table(obj))
+    """FeatureCollection / GeometryCollection / single feature / bare
+    geometry -> the layer's DataFrame, the table of ``geojson_table``."""
+    return spark.createDataFrame(geojson_table(obj)[0])
 
 
 def table_bounds(table) -> tuple | None:
@@ -110,9 +132,42 @@ def table_bounds(table) -> tuple | None:
     return None if b[0] is None else b
 
 
+def _property_arrays(records: list[dict]) -> dict:
+    """Feature properties -> one Arrow array per key, in first-seen key
+    order, typed like the other driver-assembled attribute tables
+    (``topojson._infer_schema``: a column's first non-null value once
+    pandas has unified its numbers, so an integer key that some feature
+    lacks is a double)."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StringType
+
+    from mapshaper_spark.sources.topojson import _infer_schema
+    pdf = pd.DataFrame(records)
+    schema = _infer_schema(pdf)
+    pdf = pdf.astype(object).where(pdf.notna(), None)
+    out = {}
+    for f in schema.fields:
+        vals = pdf[f.name].tolist()
+        if isinstance(f.dataType, StringType):
+            # a string field's later non-string values become strings,
+            # as Spark coerces them (a bool as 'true'/'false')
+            vals = [v if v is None or isinstance(v, str) else
+                    str(v).lower() if isinstance(v, bool) else str(v)
+                    for v in vals]
+        out[f.name] = pa.array(vals, to_arrow_type(f.dataType))
+    return out
+
+
 def geojson_table(obj: dict | str):
-    """The driver-side parse behind ``import_geojson``, as a pyarrow table
-    with the same columns."""
+    """The driver-side parse of a GeoJSON document into its layer's table:
+    ``fid``, the geometry columns of ``_geometry_row``, then one typed
+    column per property key (``_property_arrays``), as one pyarrow table.
+    ``fid`` is the record number unless the features carry a ``fid``
+    property, which then keys the layer in its place (as a dbf ``fid``
+    does) and must be a distinct, non-null scalar on every feature.
+    Returns ``(table, fid_is_data)``."""
     import pyarrow as pa
 
     if isinstance(obj, str):
@@ -120,73 +175,57 @@ def geojson_table(obj: dict | str):
     if obj.get("type") == "FeatureCollection":
         feats = obj["features"]
     elif obj.get("type") == "GeometryCollection":
-        feats = [{"type": "Feature", "properties": {}, "geometry": g}
-                 for g in obj["geometries"]]
+        feats = [{"geometry": g} for g in obj["geometries"]]
     elif obj.get("type") == "Feature":
         feats = [obj]
     else:  # bare geometry
-        feats = [{"type": "Feature", "properties": {}, "geometry": obj}]
+        feats = [{"geometry": obj}]
 
-    fids, gtypes, rxs, rys, pxs, pys, props, bboxes = [], [], [], [], [], [], [], []
-    for i, f in enumerate(feats):
-        t, rx, ry, px, py = _parse_geometry(f.get("geometry") or {})
-        allx = [v for r in rx for v in r] + ([px] if px is not None else [])
-        ally = [v for r in ry for v in r] + ([py] if py is not None else [])
-        fids.append(i)
-        gtypes.append(t or "null")
-        rxs.append(rx)
-        rys.append(ry)
-        pxs.append(px)
-        pys.append(py)
-        props.append(json.dumps(f.get("properties") or {}, sort_keys=True))
-        bboxes.append({"xmin": min(allx) if allx else None,
-                       "ymin": min(ally) if ally else None,
-                       "xmax": max(allx) if allx else None,
-                       "ymax": max(ally) if ally else None})
-
-    return pa.table({
-        "fid": pa.array(fids, pa.int64()),
-        "geometry_type": pa.array(gtypes, pa.string()),
-        "rings_x": pa.array(rxs, pa.list_(pa.list_(pa.float64()))),
-        "rings_y": pa.array(rys, pa.list_(pa.list_(pa.float64()))),
-        "x": pa.array(pxs, pa.float64()),
-        "y": pa.array(pys, pa.float64()),
-        "properties": pa.array(props, pa.string()),
-        "bbox": pa.array(bboxes, pa.struct([("xmin", pa.float64()), ("ymin", pa.float64()),
-                                            ("xmax", pa.float64()), ("ymax", pa.float64())])),
-    })
+    records = [f.get("properties") or {} for f in feats]
+    props = _property_arrays(records)
+    fid_is_data = "fid" in props
+    if fid_is_data:
+        fids = [r.get("fid") for r in records]
+        if not all(isinstance(v, (str, int, float)) for v in fids) or \
+                len(set(fids)) != len(fids):
+            raise ValueError("GeoJSON property 'fid' must be a distinct, "
+                             "non-null scalar on every feature")
+        fid = props.pop("fid")
+    else:
+        fid = pa.array(range(len(feats)), pa.int64())
+    fields = _geometry_fields()
+    cols = list(zip(*(_geometry_row(f.get("geometry") or {})
+                      for f in feats))) or [()] * len(fields)
+    geometry = [pa.array(col, t) for col, (_, t) in zip(cols, fields)]
+    table = pa.Table.from_arrays(
+        [fid, *geometry, *props.values()],
+        names=["fid", *(n for n, _ in fields), *props])
+    return table, fid_is_data
 
 
 def import_ndjson(spark: SparkSession, path: str) -> DataFrame:
     """Distributed newline-delimited GeoJSON importer — the read-side
     counterpart of ``export_ndjson`` (engine extension): one Feature (or
     bare geometry) JSON per line via ``spark.read.text`` (splittable) +
-    an Arrow-batched parse into the catalog schema. Property columns
-    stay inside the ``properties`` JSON string exactly like
-    ``import_geojson``, so the CLI's property flattening applies
-    identically; fid = line order (ranked, no global window)."""
+    an Arrow-batched parse through the same ``_geometry_row`` as
+    ``geojson_table``. Properties stay one JSON string column,
+    ``properties``, for the CLI to flatten in Catalyst; fid = line order
+    (ranked, no global window). A directory whose data files are not
+    JSON text (e.g. a parquet output) is a ``ValueError``."""
     import pandas as pd
-    from pyspark.sql import types as T
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     from mapshaper_spark.plans.scale import ranked_ids
 
+    if os.path.isdir(path):
+        _check_ndjson_dir(path)
     lines = (spark.read.text(path)
              .filter(F.trim(F.col("value")) != "")
              .withColumn("__ms_pos", F.monotonically_increasing_id()))
-    schema = T.StructType([
-        T.StructField("__ms_pos", T.LongType()),
-        T.StructField("geometry_type", T.StringType()),
-        T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("x", T.DoubleType()),
-        T.StructField("y", T.DoubleType()),
-        T.StructField("properties", T.StringType()),
-        T.StructField("bbox", T.StructType([
-            T.StructField("xmin", T.DoubleType()),
-            T.StructField("ymin", T.DoubleType()),
-            T.StructField("xmax", T.DoubleType()),
-            T.StructField("ymax", T.DoubleType())])),
-    ])
+    schema = from_arrow_schema(pa.schema(
+        [("__ms_pos", pa.int64()), *_geometry_fields(),
+         ("properties", pa.string())]))
 
     def gen(it):
         for pdf in it:
@@ -194,28 +233,35 @@ def import_ndjson(spark: SparkSession, path: str) -> DataFrame:
             for pos, line in zip(pdf["__ms_pos"], pdf["value"]):
                 f = json.loads(line)
                 if f.get("type") != "Feature":
-                    f = {"type": "Feature", "properties": {},
-                         "geometry": f}
-                t, rx, ry, px, py = _parse_geometry(
-                    f.get("geometry") or {})
-                allx = [v for r in rx for v in r] + \
-                    ([px] if px is not None else [])
-                ally = [v for r in ry for v in r] + \
-                    ([py] if py is not None else [])
-                rows.append((
-                    int(pos), t or "null", rx, ry, px, py,
-                    json.dumps(f.get("properties") or {}, sort_keys=True),
-                    {"xmin": min(allx) if allx else None,
-                     "ymin": min(ally) if ally else None,
-                     "xmax": max(allx) if allx else None,
-                     "ymax": max(ally) if ally else None}))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+                    f = {"geometry": f}
+                rows.append((int(pos), *_geometry_row(f.get("geometry") or {}),
+                             json.dumps(f.get("properties") or {},
+                                        sort_keys=True)))
+            yield pd.DataFrame(rows, columns=schema.names)
 
     parsed = lines.mapInPandas(gen, schema=schema)
     return (ranked_ids(parsed, ["__ms_pos"], "fid")
             .drop("__ms_pos")
             .select("fid", "geometry_type", "rings_x", "rings_y",
                     "x", "y", "properties", "bbox"))
+
+
+def _check_ndjson_dir(path: str) -> None:
+    """Raise ``ValueError`` naming the directory and its format unless its
+    first non-empty data file (Spark's ``_``/``.`` bookkeeping files
+    skipped) starts with a JSON object or is compressed text."""
+    for root, dirs, names in os.walk(path):
+        dirs.sort()
+        for name in sorted(n for n in names if not n.startswith(("_", "."))):
+            with open(os.path.join(root, name), "rb") as f:
+                head = f.read(64).lstrip()
+            if not head:
+                continue
+            if head[:1] == b"{" or head.startswith((b"\x1f\x8b", b"BZh")):
+                return
+            fmt = "parquet" if head.startswith(b"PAR1") else "non-JSON"
+            raise ValueError(f"-i: {path} holds {fmt} data, not "
+                             "newline-delimited GeoJSON")
 
 
 def to_geojson_features(df: DataFrame, geometry_type: str = "Polygon",

@@ -167,9 +167,7 @@ class TestCombineFiles:
         fc["features"][0]["properties"]["name"] = "p2"
         b.write_text(json.dumps(fc))
         out = import_files(spark, [str(a), str(b)])
-        # properties ride as a JSON string column
-        rows = out.select(
-            "source",
-            F.get_json_object("properties", "$.name").alias("n")).collect()
+        # properties import as typed columns
+        rows = out.select("source", F.col("name").alias("n")).collect()
         assert sorted((r.source, r.n) for r in rows) == \
             [("a", "p1"), ("b", "p2")]
