@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapshaper_spark.sources.geojson import GEOMETRY_COLUMNS as _IMPORT_GEOMETRY
+
 # boolean flag words per command (reference option definitions,
 # src/cli/mapshaper-options.js)
 _FLAG_WORDS = {
@@ -340,24 +342,60 @@ _GEOJSON_KINDS = {"Point": "point", "MultiPoint": "point",
                   "Polygon": "polygon", "MultiPolygon": "polygon"}
 
 
-def _kind_layer(df: DataFrame, gtypes: set) -> tuple[DataFrame, str | None]:
+# the columns a layer of each kind carries for its geometry: a GeoJSON
+# import keeps only its kind's of the importer's geometry columns
+# (_IMPORT_GEOMETRY), and none of a layer's is ever a data field
+_GEOMETRY_COLUMNS = {
+    "point": ("x", "y", "rings_x", "rings_y", "geometry_type", "bbox",
+              "shp_type"),
+    "polyline": ("rings_x", "rings_y", "geometry_type", "bbox", "shp_type",
+                 "parts"),
+    "polygon": ("rings_x", "rings_y", "geometry_type", "bbox", "shp_type",
+                "parts"),
+    "table": (),
+}
+# a layer of no known kind (derived frames, mixed kinds) skips them all
+_ANY_GEOMETRY = ("rings_x", "rings_y", "bbox", "xs", "ys", "n",
+                 "geometry_type", "properties", "shp_type", "parts")
+
+
+def _kind_columns(gtypes: set) -> set:
+    """The import geometry columns a layer of GeoJSON geometry types
+    ``gtypes`` (null left out) uses: its kinds' (all of them for several
+    kinds); a Point layer without MultiPoint uses no rings."""
+    kinds = {_GEOJSON_KINDS[t] for t in gtypes} or {"table"}
+    used = set().union(*(_GEOMETRY_COLUMNS[k] for k in kinds))
+    if kinds == {"point"} and "MultiPoint" not in gtypes:
+        used -= {"rings_x", "rings_y"}
+    return used & set(_IMPORT_GEOMETRY)
+
+
+def _property_artifacts(keys, gtypes: set) -> set:
+    """Property keys named like an import geometry column. One the layer's
+    geometry uses stops the import; the others name artifact columns of
+    other kinds, and the property wins over them."""
+    clash = set(keys) & set(_IMPORT_GEOMETRY)
+    used = sorted(clash & _kind_columns(gtypes))
+    if used:
+        raise ValueError(f"-i: GeoJSON property '{used[0]}' is named like "
+                         "a geometry column of its layer")
+    return clash
+
+
+def _kind_layer(df: DataFrame, gtypes: set,
+                props: set = frozenset()) -> tuple[DataFrame, str | None]:
     """A GeoJSON-imported layer whose geometry types (null geometries
-    left out) are ``gtypes`` -> (the layer without the import's columns
-    for other kinds, its kind hint). No types: a data-only table (no x/y
-    artifact columns, commands-test.js 'converts geojson to tsv'); types
-    of several kinds: the layer as it is, no hint."""
+    left out) are ``gtypes`` -> (the layer without the import's geometry
+    columns its kind does not use, its kind hint). ``props``: property
+    columns named like such a column, which stay. No types: a data-only
+    table (no x/y artifact columns, commands-test.js 'converts geojson to
+    tsv'); types of several kinds: all geometry columns, no hint."""
     kinds = {_GEOJSON_KINDS[t] for t in gtypes}
-    if not kinds:
-        return df.drop("x", "y", "rings_x", "rings_y", "geometry_type"), \
-            "table"
-    if len(kinds) > 1:
-        return df, None
-    kind = kinds.pop()
-    if kind != "point":
-        return df.drop("x", "y"), kind
-    # MultiPoint coordinates live in the rings arrays; keep them
-    return (df if "MultiPoint" in gtypes
-            else df.drop("rings_x", "rings_y")), kind
+    used = _kind_columns(gtypes)
+    drop = [c for c in _IMPORT_GEOMETRY
+            if c in df.columns and c not in used and c not in props]
+    hint = "table" if not kinds else kinds.pop() if len(kinds) == 1 else None
+    return df.drop(*drop), hint
 
 
 def _cmd_i(cat: Catalog, c: Command) -> None:
@@ -383,11 +421,13 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
             # extension, r5 — read counterpart of -o format=ndjson):
             # splittable text scan + Arrow-batched feature parse; the
             # property columns are extracted JVM-side (get_json_object)
-            df = _flatten_props_sampled(GJ.import_ndjson(cat.spark, path))
+            df = GJ.import_ndjson(cat.spark, path)
             auto_fid_paths.add(path)
-            gtypes = {r[0] for r in
-                      df.select("geometry_type").distinct().collect()}
-            df, kind_hint = _kind_layer(df, gtypes - {"null"})
+            gtypes = {r[0] for r in df.select("geometry_type")
+                      .distinct().collect()} - {"null"}
+            df, keys = _flatten_props_sampled(df)
+            df, kind_hint = _kind_layer(df, gtypes,
+                                        _property_artifacts(keys, gtypes))
             dfs.append((path, df, kind_hint, None))
             continue
         if ext in (".json", ".geojson", ".topojson"):
@@ -425,9 +465,15 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                 table, fid_is_data = GJ.geojson_table(obj)
                 if not fid_is_data:
                     auto_fid_paths.add(path)
-                df = cat.spark.createDataFrame(table)
                 gtypes = set(table.column("geometry_type").unique()
                              .to_pylist())
+                props = _property_artifacts(
+                    table.column_names[1 + len(_IMPORT_GEOMETRY):],
+                    gtypes - {"null"})
+                for name in props:  # the geometry column comes first
+                    table = table.remove_column(
+                        table.column_names.index(name))
+                df = cat.spark.createDataFrame(table)
                 kinds = {_GEOJSON_KINDS[t] for t in gtypes - {"null"}}
                 if len(kinds) > 1:
                     # mixed-type collection: one layer per geometry kind
@@ -443,10 +489,11 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                             sub = df.filter(
                                 F.col("geometry_type").isin(*types))
                             dfs.append((path, *_kind_layer(
-                                sub, types - {"null"}), None))
+                                sub, types - {"null"}, props), None))
                     continue
-                df, kind_hint = _kind_layer(df, gtypes - {"null"})
-                cat.set_facts(df, bounds=GJ.table_bounds(table))
+                df, kind_hint = _kind_layer(df, gtypes - {"null"}, props)
+                if "bbox" not in props:
+                    cat.set_facts(df, bounds=GJ.table_bounds(table))
         elif ext == ".shp":
             shp = open(path, "rb").read()
             stem = os.path.splitext(path)[0]
@@ -605,8 +652,9 @@ def _round_layer_coords(df: DataFrame, precision: float) -> DataFrame:
     return df
 
 
-def _flatten_props_sampled(df: DataFrame) -> DataFrame:
-    """Distributed property flattening for the ndjson importer. The key
+def _flatten_props_sampled(df: DataFrame) -> tuple[DataFrame, list]:
+    """Distributed property flattening for the ndjson importer, returning
+    the flattened frame and its property keys. The key
     set comes from every row in one Catalyst aggregate (json_object_keys),
     in first-seen order; column types come from the pandas inference of
     the driver-side tables (``topojson._infer_schema``) over a 500-row
@@ -621,7 +669,7 @@ def _flatten_props_sampled(df: DataFrame) -> DataFrame:
              .collect())
     keys = [r["col"] for r in sorted(first, key=lambda r: tuple(r["at"]))]
     if not keys:
-        return df
+        return df.drop("properties"), keys
     sample = [json.loads(r[0]) for r in
               df.select("properties").limit(500).collect()]
     types = {f.name: f.dataType for f in
@@ -634,7 +682,7 @@ def _flatten_props_sampled(df: DataFrame) -> DataFrame:
         path = "$['" + k.replace("'", "\\'") + "']"
         cols.append(F.get_json_object("properties", path)
                     .cast(types.get(k, "string")).alias(k))
-    return df.select(*cols)
+    return df.select(*cols), keys
 
 
 def _cmd_filter(cat: Catalog, c: Command) -> None:
@@ -1687,11 +1735,13 @@ def _data_fields(cat: Catalog, df: DataFrame) -> list[str]:
     artifacts are not data fields (the reference keeps geometry separate
     from the table; Issue #174), nor are synthetic point coordinates or a
     fid this importer minted."""
-    skip = {"rings_x", "rings_y", "bbox", "xs", "ys", "n",
-            "geometry_type", "properties", "shp_type", "parts"}
+    skip = set(_GEOMETRY_COLUMNS.get(cat.kinds.get(cat.target),
+                                     _ANY_GEOMETRY))
+    if {"xs", "ys"} <= set(df.columns):  # an arc frame's geometry
+        skip |= {"xs", "ys", "n", "bbox"}
     if cat.kinds.get(cat.target, _geometry_kind(df)) == "point":
-        skip |= (set(_point_cols(df)) | {"lon", "lat", "x", "y"}) \
-            - cat.coord_data.get(cat.target, set())
+        skip |= {"lon", "lat", "x", "y"}
+    skip -= cat.coord_data.get(cat.target, set())
     if cat.target in cat.auto_fid:
         skip.add("fid")
     return [col for col in df.columns if col not in skip]

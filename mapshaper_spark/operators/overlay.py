@@ -1,7 +1,7 @@
-"""Polygon overlay: general polygon-by-polygon clip (intersection) and
-erase (difference).
+"""Polygon overlay: -clip / -erase / -slice (intersection, difference,
+per-polygon cut) and the overlap-safe -dissolve2 / -clean / -mosaic.
 
-Architecture mirrors the reference's clip pipeline
+Ring kernel (``overlay_rings``) mirrors the reference's clip pipeline
 (/root/reference/src/commands/mapshaper-clip-erase.js:13,39-93 ->
 addIntersectionCuts -> pathfinding,
 /root/reference/src/clipping/mapshaper-polygon-clipping.js:10-99):
@@ -22,16 +22,30 @@ Tangency parity: congruent / adjacent / shared-edge / corner-touch /
 spike / self-intersection figures all match the reference
 (tests/test_clip_erase_goldens.py transcribes its clip-erase suite).
 
-Distribution: small clip layers broadcast with a per-target bbox
-prefilter; large clip layers pair with targets via a cell-keyed
-bbox-cover equi-join (no driver collect); each pair's overlay runs as one
-vectorized-numpy task inside an Arrow-batched pandas UDF — bounded by the
-pair's vertex count, exactly like the reference's per-shape pathfinder.
+Distribution has two plans, each written once:
+
+- clip plan (filter, then refine per record): ``_cell_pairs`` is the one
+  candidate-pairing step (bbox covers on a shared grid, cell equi-join,
+  distinct) behind -clip, -erase and -slice. ``_clip_layer`` is the one
+  -clip/-erase driver: a clip layer of at most ``broadcast_limit`` rows is
+  broadcast, a larger one is cell-paired; ``_clip_record`` gives every
+  target its candidate rings (bbox prefilter, deterministic order,
+  duplicates collapsed, erase pass-through) and calls the per-record
+  kernel, ``_overlay_record`` for polygons or ``_polyline_record``.
+- mosaic plan (build the arrangement, assign its faces): a feature layer
+  clusters by bbox-cover overlap and each cluster runs one kernel task.
+  Clusters over ``max_task_features`` take the two-level skeleton shared
+  by -dissolve2/-clean (``_dissolve2_cells``) and -mosaic
+  (``_mosaic_cells``): ``_grid_pieces`` cuts features into per-cell
+  pieces, a cell kernel runs on ``_seam_subdivide``d pieces,
+  ``_edge_cancel`` merges pieces across cells and ``_stitch_cleaned``
+  rebuilds the merged rings; each engine keeps only its cell kernel and
+  its post-stitch step.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -444,45 +458,84 @@ def _bbox_cells_col(bbox, res):
                               lambda c: r * F.lit(n) + c))))
 
 
-def _overlay_one(rec, clip_feats, op, out_has_cid=False):
-    """Run the overlay kernel for one target record against its candidate
-    clip features (list of (rings, bbox) tuples), prefiltered by bbox."""
-    tb = rec["bbox"]
-    cands = []
-    for rings, cb in clip_feats:
-        if (cb[0] <= tb["xmax"] and cb[2] >= tb["xmin"] and
-                cb[1] <= tb["ymax"] and cb[3] >= tb["ymin"]):
-            cands.append((rings, cb))
+def _np_rings(rings_x, rings_y) -> list:
+    """A feature's rings as float64 numpy (xs, ys) pairs."""
+    return [(np.asarray(rx, dtype=np.float64), np.asarray(ry, dtype=np.float64))
+            for rx, ry in zip(rings_x, rings_y)]
+
+
+def _clip_feature(rings_x, rings_y, bbox):
+    """One clip feature as the per-record kernels read it: (its rings as
+    float64 numpy pairs, its (xmin, ymin, xmax, ymax))."""
+    return (_np_rings(rings_x, rings_y),
+            (bbox["xmin"], bbox["ymin"], bbox["xmax"], bbox["ymax"]))
+
+
+def _candidate_rings(tb, clip_feats):
+    """The clip rings a target of bbox ``tb`` can meet: the rings of the
+    features whose bbox touches ``tb`` (of all of them when ``tb`` is
+    unknown), in a deterministic order, exact duplicates collapsed."""
+    if tb is not None and tb.get("xmax") is not None:
+        clip_feats = [(rings, cb) for rings, cb in clip_feats
+                      if cb[0] <= tb["xmax"] and cb[2] >= tb["xmin"] and
+                      cb[1] <= tb["ymax"] and cb[3] >= tb["ymin"]]
     # deterministic ring order regardless of collect/collect_list order:
     # stitch/dedup of coincident shared edges is order-sensitive, and
     # collect_list order varies across runs and stage retries
-    cands.sort(key=lambda rc: (rc[1],
-                               rc[0][0][0][0] if rc[0] else 0.0,
-                               rc[0][0][1][0] if rc[0] else 0.0))
+    cands = sorted(clip_feats, key=lambda rc: (
+        rc[1], rc[0][0][0][0] if rc[0] else 0.0,
+        rc[0][0][1][0] if rc[0] else 0.0))
     # EXACT-duplicate clip rings (same ring twice, either direction) must
     # collapse: the reference dissolves the whole clip layer before
     # clipping (clipPolygons, mapshaper-polygon-clipping.js:22-23), while
-    # the kernel's even-odd test counts a duplicated ring's crossings
+    # the kernels' even-odd test counts a duplicated ring's crossings
     # twice and would classify the inside as outside
     rings_c = []
     seen_c = set()
     for rings, _cb in cands:
         for rx, ry in rings:
-            ax = np.asarray(rx, dtype=np.float64)
-            ay = np.asarray(ry, dtype=np.float64)
-            k1 = (ax.tobytes(), ay.tobytes())
-            k2 = (ax[::-1].tobytes(), ay[::-1].tobytes())
+            k1 = (rx.tobytes(), ry.tobytes())
+            k2 = (rx[::-1].tobytes(), ry[::-1].tobytes())
             if k1 in seen_c or k2 in seen_c:
                 continue
             seen_c.add(k1)
             rings_c.append((rx, ry))
+    return rings_c
+
+
+def _clip_record(rec, clip_feats, kernel, erase: bool):
+    """One target record against its candidate clip features: with no
+    candidate ring, erase passes the record through and clip drops it;
+    otherwise ``kernel(rec, rings_c, erase)`` gives the output record, or
+    None for an empty result."""
+    rings_c = _candidate_rings(rec["bbox"], clip_feats)
     if not rings_c:
-        # no candidate clip geometry: erase passes through, clip drops
-        return dict(rec) if op == "erase" else None
-    rings_t = [(np.asarray(rx, dtype=np.float64),
-                np.asarray(ry, dtype=np.float64))
-               for rx, ry in zip(rec["rings_x"], rec["rings_y"])]
-    rings = overlay_rings(rings_t, rings_c, op=op)
+        return dict(rec) if erase else None
+    return kernel(rec, rings_c, erase)
+
+
+def _overlay_record(rec, rings_c, erase: bool):
+    """Polygon kernel of -clip/-erase/-slice: the record's rings overlaid
+    with ``rings_c`` (``overlay_rings``), its bbox re-derived."""
+    rings_t = _np_rings(rec["rings_x"], rec["rings_y"])
+    return _with_rings(rec, overlay_rings(rings_t, rings_c,
+                                          op="erase" if erase else "clip"))
+
+
+def _polyline_record(rec, rings_c, erase: bool):
+    """Polyline kernel of -clip/-erase: the record's open paths cut by
+    ``rings_c`` (``clip_polylines_rings``), its bbox re-derived."""
+    if rec.get("rings_x") is None or rec.get("rings_y") is None:
+        # null geometry: nothing to clip or keep (Issue #192 — the
+        # reference drops null shapes from clip output)
+        return None
+    return _with_rings(rec, clip_polylines_rings(
+        list(zip(rec["rings_x"], rec["rings_y"])), rings_c, erase=erase))
+
+
+def _with_rings(rec, rings):
+    """The record with the kernel's output ``rings`` [(xs, ys)] and their
+    bbox, or None when no ring is left."""
     if not rings:
         return None
     rec = dict(rec)
@@ -495,125 +548,102 @@ def _overlay_one(rec, clip_feats, op, out_has_cid=False):
     return rec
 
 
-def clip_polygons(target: DataFrame, clip: DataFrame, clip_key: str = None,
-                  erase: bool = False, key: str | None = None,
-                  res: int = 6, broadcast_limit: int = 10_000) -> DataFrame:
-    """-clip / -erase on polygon feature layers (rings_x/rings_y + bbox),
-    mirroring the reference clip pipeline
-    (/root/reference/src/clipping/mapshaper-polygon-clipping.js:10-99) with
-    two physical plans:
+def _cell_pairs(left: DataFrame, lkey: str, right: DataFrame, rkey: str,
+                res: int) -> DataFrame:
+    """The filter step of every overlay: candidate ``(lkey, rkey)`` pairs
+    of two layers with bbox columns. Each side's bbox cover is exploded
+    on their union grid (2^res cells per axis), the covers equi-join on
+    the cell, and a pair sharing several cells appears once."""
+    gb = _union_bbox(left, right)
 
-    - clip layer dimension-sized (<= broadcast_limit rows): broadcast the
-      clip features; the pandas kernel prefilters candidates per target by
-      bbox, so work is O(local overlap), not O(|clip|) per feature;
-    - large clip layer: cell-keyed (target, clip) candidate pairs over a
-      shared grid (bbox cover explode + equi-join + distinct), candidate
-      clip rings grouped per target key, then the same per-row kernel —
-      no driver collect, no broadcast of the big side.
+    def cover(df, k):
+        return df.select(k, _bbox_cells_col(gb, res).alias("__cell"))
+    return (cover(left, lkey).join(cover(right, rkey), "__cell")
+            .select(lkey, rkey).distinct())
 
-    ``key``: unique target row key for the distributed path (defaults to
-    the first target column)."""
-    spark = target.sparkSession
-    op = "erase" if erase else "clip"
-    if key is None:
-        key = target.columns[0]
-    # both sides need bbox: the broadcast path filters on target bbox and
-    # the distributed kernel reads rec['bbox'] (clip_polylines derives it
-    # the same way); a bbox we synthesized is dropped again on output
+
+def _clip_layer(target: DataFrame, clip: DataFrame, kernel, erase: bool,
+                key: str, res: int, broadcast_limit: int) -> DataFrame:
+    """The -clip/-erase driver behind clip_polygons and clip_polylines;
+    ``kernel`` is the per-record step of ``_clip_record``. One collect of
+    at most ``broadcast_limit + 1`` clip rows picks the plan, and those
+    rows are the broadcast payload:
+
+    - a dimension-sized clip layer (<= broadcast_limit rows) is broadcast;
+      targets outside its joint bbox skip the kernel;
+    - a larger one pairs with the targets through ``_cell_pairs`` (no
+      driver collect of the big side); each target gets its candidate
+      clip features as one list, grouped by ``key``.
+
+    Targets without a candidate pass through on erase and drop on clip.
+    Both sides get a bbox where they lack one; one synthesized on the
+    target is dropped again on output."""
     had_bbox = "bbox" in target.columns
     target = _ensure_bbox(target)
-    clip = _ensure_bbox(clip)
-    out_cols = [f.name for f in target.schema.fields]
-    fin = (lambda df: df) if had_bbox else (lambda df: df.drop("bbox"))
-
-    n_clip = clip.limit(broadcast_limit + 1).count()
-    if n_clip == 0:
+    clip = _ensure_bbox(clip).select("rings_x", "rings_y", "bbox")
+    out_cols = target.columns
+    rows = clip.limit(broadcast_limit + 1).collect()
+    if not rows:
         # empty clip source: erase returns the target unchanged; clip
         # returns nothing (the reference errors on a missing clip layer —
         # we take the set-semantics result and leave erroring to callers)
-        return fin(target if erase else target.limit(0))
+        out = target if erase else target.limit(0)
+        return out if had_bbox else out.drop("bbox")
 
-    if n_clip <= broadcast_limit:
-        clip_rows = clip.select("rings_x", "rings_y", "bbox").collect()
-        clip_feats = [
-            ([(np.asarray(rx, dtype=np.float64), np.asarray(ry, dtype=np.float64))
-              for rx, ry in zip(r.rings_x, r.rings_y)],
-             (r.bbox["xmin"], r.bbox["ymin"], r.bbox["xmax"], r.bbox["ymax"]))
-            for r in clip_rows]
-        cxmin = min(f[1][0] for f in clip_feats)
-        cymin = min(f[1][1] for f in clip_feats)
-        cxmax = max(f[1][2] for f in clip_feats)
-        cymax = max(f[1][3] for f in clip_feats)
-        bc = spark.sparkContext.broadcast(clip_feats)
-
+    if len(rows) <= broadcast_limit:
+        feats = [_clip_feature(*r) for r in rows]
+        bc = target.sparkSession.sparkContext.broadcast(feats)
         b = F.col("bbox")
-        touches = ((b["xmin"] <= cxmax) & (b["xmax"] >= cxmin) &
-                   (b["ymin"] <= cymax) & (b["ymax"] >= cymin))
-        pass_through = target.filter(~touches) if erase else None
-        cand = target.filter(touches)
+        hit = ((b["xmin"] <= max(f[1][2] for f in feats)) &
+               (b["xmax"] >= min(f[1][0] for f in feats)) &
+               (b["ymin"] <= max(f[1][3] for f in feats)) &
+               (b["ymax"] >= min(f[1][1] for f in feats)))
+        cand = target
 
-        def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            feats = bc.value
-            for pdf in it:
-                rows = []
-                for rec in pdf.to_dict("records"):
-                    out = _overlay_one(rec, feats, op)
-                    if out is not None:
-                        rows.append(out)
-                if rows:
-                    yield pd.DataFrame(rows, columns=out_cols)
-
-        out = cand.mapInPandas(gen, schema=target.schema)
-        if pass_through is not None:
-            out = out.unionByName(pass_through)
-        return fin(out)
-
-    # ---- distributed path: cell-keyed candidate pairs, no driver collect
-    gb = _union_bbox(target, clip)
-    clip2 = (clip.select("rings_x", "rings_y", "bbox")
-             .withColumn("__cid", F.xxhash64("rings_x", "rings_y")))
-    t_cells = (target.select(key, "bbox")
-               .withColumn("__cell", _bbox_cells_col(gb, res))
-               .select(key, "__cell"))
-    c_cells = (clip2.select("__cid", "bbox")
-               .withColumn("__cell", _bbox_cells_col(gb, res))
-               .select("__cid", "__cell"))
-    pairs = t_cells.join(c_cells, "__cell").select(key, "__cid").distinct()
-    clip_sets = (pairs.join(clip2, "__cid")
-                 .groupBy(key)
-                 .agg(F.collect_list(F.struct(
-                     F.col("rings_x").alias("crx"), F.col("rings_y").alias("cry"),
-                     F.col("bbox").alias("cbb"))).alias("__clips")))
-    joined = target.join(clip_sets, key, "left")
-    pass_through = None
-    if erase:
-        pass_through = joined.filter(F.col("__clips").isNull()).drop("__clips")
-        cand = joined.filter(F.col("__clips").isNotNull())
+        def feats_of(rec):
+            return bc.value
     else:
-        cand = joined.filter(F.col("__clips").isNotNull())
+        clip = clip.withColumn("__cid", F.xxhash64("rings_x", "rings_y"))
+        clip_sets = (_cell_pairs(target, key, clip, "__cid", res)
+                     .join(clip, "__cid")
+                     .groupBy(key)
+                     .agg(F.collect_list(F.struct(
+                         F.col("rings_x").alias("crx"),
+                         F.col("rings_y").alias("cry"),
+                         F.col("bbox").alias("cbb"))).alias("__clips")))
+        cand = target.join(clip_sets, key, "left")
+        hit = F.col("__clips").isNotNull()
 
-    def gen2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def feats_of(rec):
+            return [_clip_feature(c["crx"], c["cry"], c["cbb"])
+                    for c in rec.pop("__clips")]
+
+    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = []
+            recs = []
             for rec in pdf.to_dict("records"):
-                feats = [
-                    ([(np.asarray(rx, dtype=np.float64),
-                       np.asarray(ry, dtype=np.float64))
-                      for rx, ry in zip(cf["crx"], cf["cry"])],
-                     (cf["cbb"]["xmin"], cf["cbb"]["ymin"],
-                      cf["cbb"]["xmax"], cf["cbb"]["ymax"]))
-                    for cf in rec["__clips"]]
-                rec = {k: v for k, v in rec.items() if k != "__clips"}
-                out = _overlay_one(rec, feats, op)
+                out = _clip_record(rec, feats_of(rec), kernel, erase)
                 if out is not None:
-                    rows.append(out)
-            if rows:
-                yield pd.DataFrame(rows, columns=out_cols)
+                    recs.append(out)
+            if recs:
+                yield pd.DataFrame(recs, columns=out_cols)
 
-    out = cand.mapInPandas(gen2, schema=target.schema)
-    if pass_through is not None:
-        out = out.unionByName(pass_through)
-    return fin(out)
+    out = cand.filter(hit).mapInPandas(gen, schema=target.schema)
+    if erase:
+        out = out.unionByName(cand.filter(~hit).select(*out_cols))
+    return out if had_bbox else out.drop("bbox")
+
+
+def clip_polygons(target: DataFrame, clip: DataFrame, clip_key: str = None,
+                  erase: bool = False, key: str | None = None,
+                  res: int = 6, broadcast_limit: int = 10_000) -> DataFrame:
+    """-clip / -erase on polygon feature layers (rings_x/rings_y [+ bbox]),
+    mirroring the reference clip pipeline
+    (/root/reference/src/clipping/mapshaper-polygon-clipping.js:10-99):
+    ``_clip_layer`` with the ring-overlay kernel. ``key``: unique target
+    row key for the cell-paired plan (defaults to the first column)."""
+    return _clip_layer(target, clip, _overlay_record, erase,
+                       key or target.columns[0], res, broadcast_limit)
 
 
 def _ensure_bbox(df: DataFrame) -> DataFrame:
@@ -972,18 +1002,7 @@ def dissolve2(features: DataFrame, group: str,
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         g = pdf[group].iloc[0]
         cl = pdf["__cluster"].iloc[0]
-        # canonical feature order: shuffle row order varies run to run and
-        # near-coincident-border gap assignment is order-sensitive at the
-        # 1e-9 sliver level
-        pdf = pdf.assign(__ord=[
-            (rxs[0][0] if len(rxs) and len(rxs[0]) else 0.0,
-             rys[0][0] if len(rys) and len(rys[0]) else 0.0)
-            for rxs, rys in zip(pdf["rings_x"], pdf["rings_y"])])
-        pdf = pdf.sort_values("__ord").drop(columns="__ord")
-        ring_sets = [[(np.asarray(rx, dtype=np.float64),
-                       np.asarray(ry, dtype=np.float64))
-                      for rx, ry in zip(r.rings_x, r.rings_y)]
-                     for r in pdf.itertuples()]
+        ring_sets = _ring_sets(_canonical_order(pdf))
         merged = dissolve2_rings(ring_sets, [g] * len(ring_sets),
                                  gap_threshold=gap_threshold).get(g, [])
         area = sum(K.planar_path_area(np.asarray(rx), np.asarray(ry))
@@ -1136,58 +1155,51 @@ def _unit_edges(df: DataFrame, extra_cols: list):
     return seg.select(*extra_cols, key.alias("__edge"))
 
 
-def _dissolve2_cells(labeled: DataFrame, group: str,
-                     gap_threshold: float | None,
-                     target_per_cell: int = 64) -> DataFrame:
-    """Two-level mosaic for OVERSIZED overlap clusters (VERDICT r02 item 2):
-    instead of one applyInPandas task holding a whole transitively-connected
-    cluster (a continental dissolve2 is ONE cluster), the cluster decomposes
-    over a per-cluster grid:
+_RINGS = T.ArrayType(T.ArrayType(T.DoubleType()))
 
-    1. every feature pre-cuts its rings at the grid lines (crossings
-       computed from original segments -> bit-identical on both sides) and
-       emits one clipped piece per overlapped cell;
-    2. each (cluster, cell) runs the SAME mosaic kernel on its bounded
-       piece set — face assignment uses the features' GLOBAL areas, so
-       chooseShape weights match the single-task result;
-    3. gap faces are NOT filled locally: pieces of one global gap face
-       reconnect across cell borders (shared-edge equi-join between pieces
-       of different cells + label propagation), total area decides the fill,
-       the highest-weight edge-neighbor (found by a plain edge join against
-       assigned faces — local and cross-cell alike) receives them;
-    4. per (cluster, group) the face pieces merge by distributed edge
-       canceling (count==1 edges survive — cell-border seams and interior
-       same-group face edges vanish) and only the PERIMETER edges reach the
-       final stitch task.
 
-    DOCUMENTED DEVIATIONS vs the single-task kernel (both only matter for
-    adversarial inputs): gap->gap fill cascades do not cross cell borders,
-    and assignment ties between equal-weight covering features resolve by
-    piece order within the cell rather than global feature order.
+def _canonical_order(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Feature rows sorted by their first vertex: shuffle row order varies
+    run to run, and face assembly and near-coincident-border gap
+    assignment are order-sensitive at the 1e-9 sliver level."""
+    pdf = pdf.assign(__ord=[
+        (rxs[0][0] if len(rxs) and len(rxs[0]) else 0.0,
+         rys[0][0] if len(rys) and len(rys[0]) else 0.0)
+        for rxs, rys in zip(pdf["rings_x"], pdf["rings_y"])])
+    return pdf.sort_values("__ord").drop(columns="__ord")
 
-    Expects columns (group, __cluster, rings_x, rings_y, bbox); returns
-    (group, __cluster, rings_x, rings_y, area)."""
-    spark = labeled.sparkSession
-    meta = _cluster_grids(labeled, target_per_cell)
-    bc_meta = spark.sparkContext.broadcast(meta)
-    gtype = labeled.schema[group].dataType
 
-    piece_schema = T.StructType([
+def _ring_sets(pdf: pd.DataFrame) -> list:
+    """Each row's rings as float64 numpy (xs, ys) pairs."""
+    return [_np_rings(rxs, rys)
+            for rxs, rys in zip(pdf["rings_x"], pdf["rings_y"])]
+
+
+def _grid_pieces(labeled: DataFrame, key: str, target_per_cell: int):
+    """Step 1 of both two-level engines: every feature pre-cuts its rings
+    at its cluster's grid lines (crossings computed from the original
+    segments, so bit-identical on both sides of a line) and emits one
+    clipped piece per overlapped cell, with the feature's global area
+    ``__garea``. Expects (key, __cluster, rings_x, rings_y, bbox); returns
+    (pieces, broadcast grid meta) with pieces (__cluster, __cell, key,
+    __garea, rings_x, rings_y)."""
+    bc_meta = labeled.sparkSession.sparkContext.broadcast(
+        _cluster_grids(labeled, target_per_cell))
+    schema = T.StructType([
         T.StructField("__cluster", labeled.schema["__cluster"].dataType),
         T.StructField("__cell", T.LongType()),
-        T.StructField(group, gtype),
+        T.StructField(key, labeled.schema[key].dataType),
         T.StructField("__garea", T.DoubleType()),
-        T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
+        T.StructField("rings_x", _RINGS),
+        T.StructField("rings_y", _RINGS),
     ])
 
-    def gen_pieces(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         grids = bc_meta.value
         for pdf in it:
             rows = []
             for rec in pdf.to_dict("records"):
-                grid = grids[rec["__cluster"]]
-                x0, y0, w, h, nx, ny = grid
+                x0, y0, w, h, nx, ny = grids[rec["__cluster"]]
                 garea = abs(sum(
                     K.planar_path_area(np.asarray(rx_, dtype=np.float64),
                                        np.asarray(ry_, dtype=np.float64))
@@ -1212,72 +1224,153 @@ def _dissolve2_cells(labeled: DataFrame, group: str,
                                 nxs.append(sx)
                                 nys.append(sy)
                         if nxs:
-                            rows.append({
-                                "__cluster": rec["__cluster"],
-                                "__cell": rr * nx + cc,
-                                group: rec[group],
-                                "__garea": garea,
-                                "rings_x": nxs, "rings_y": nys,
-                            })
+                            rows.append({"__cluster": rec["__cluster"],
+                                         "__cell": rr * nx + cc,
+                                         key: rec[key], "__garea": garea,
+                                         "rings_x": nxs, "rings_y": nys})
             if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in piece_schema.fields])
+                yield pd.DataFrame(rows, columns=schema.names)
 
-    pieces = (labeled.select("__cluster", group, "rings_x", "rings_y", "bbox")
-              .mapInPandas(gen_pieces, schema=piece_schema))
+    pieces = (labeled.select("__cluster", key, "rings_x", "rings_y", "bbox")
+              .mapInPandas(gen, schema=schema))
+    return pieces, bc_meta
+
+
+def _seam_subdivide(ring_sets: list, grid: tuple, cell) -> list:
+    """Subdivide the border-line runs of one cell's pieces by the UNION of
+    their on-line vertices: every feature crossing a shared line exists in
+    BOTH adjacent cells, so each side inserts the same crossing set and
+    unit edges along the seam match exactly (-> clean edge cancel)."""
+    gx0, gy0, gw, gh, gnx, _gny = grid
+    rr, cc = divmod(int(cell), gnx)
+    border_x = (gx0 + cc * gw, gx0 + (cc + 1) * gw)
+    border_y = (gy0 + rr * gh, gy0 + (rr + 1) * gh)
+    xl: dict = {}
+    yl: dict = {}
+    for rs in ring_sets:
+        for rx_, ry_ in rs:
+            for lx in border_x:
+                m = rx_ == lx
+                if m.any():
+                    xl.setdefault(lx, set()).update(ry_[m].tolist())
+            for ly in border_y:
+                m = ry_ == ly
+                if m.any():
+                    yl.setdefault(ly, set()).update(rx_[m].tolist())
+    if not (xl or yl):
+        return ring_sets
+    return [[_subdivide_on_lines(rx_, ry_, xl, yl) for rx_, ry_ in rs]
+            for rs in ring_sets]
+
+
+def _edge_cancel(faces: DataFrame, cols: list) -> DataFrame:
+    """Distributed edge cancel of face pieces merging per ``cols``: an edge
+    seen twice (a cell-border seam, an interior edge between two pieces
+    of one merge) vanishes, the count==1 edges survive as (cols..., x1,
+    y1, x2, y2) rows for the stitch."""
+    return (_unit_edges(faces, cols)
+            .groupBy(*cols, "__edge")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .filter(F.col("c") == 1)
+            .select(*cols,
+                    F.col("__edge.x1").alias("x1"), F.col("__edge.y1").alias("y1"),
+                    F.col("__edge.x2").alias("x2"), F.col("__edge.y2").alias("y2")))
+
+
+def _stitch_cleaned(pdf: pd.DataFrame, grid: tuple) -> list:
+    """One merge's surviving edges -> its closed rings as [(xs, ys, area)],
+    rings of zero area left out. The collinear vertices the grid pre-cut
+    introduced go: a vertex must sit exactly on a grid line AND be
+    (numerically) on the segment joining its neighbors."""
+    x0, y0, w, h, nx, ny = grid
+    xline = {x0 + k * w for k in range(nx + 1)}
+    yline = {y0 + k * h for k in range(ny + 1)}
+    pdf = pdf.sort_values(["x1", "y1", "x2", "y2"])
+    arcs = [(np.array([ax, bx_]), np.array([ay, by2]))
+            for ax, ay, bx_, by2 in zip(pdf["x1"], pdf["y1"],
+                                        pdf["x2"], pdf["y2"])]
+    out = []
+    for rx_, ry_ in _normalize_winding(_stitch(arcs)):
+        keep_x, keep_y = [], []
+        n = len(rx_) - 1  # closed ring: last == first
+        for i in range(n):
+            vx, vy = rx_[i], ry_[i]
+            px, py = (rx_[i - 1], ry_[i - 1]) if i else (rx_[n - 1], ry_[n - 1])
+            qx, qy = rx_[i + 1], ry_[i + 1]
+            if vx in xline or vy in yline:
+                cross = (vx - px) * (qy - py) - (vy - py) * (qx - px)
+                scale = max(abs(qx - px), abs(qy - py), 1e-300) ** 2
+                between = (min(px, qx) <= vx <= max(px, qx) and
+                           min(py, qy) <= vy <= max(py, qy))
+                if abs(cross) <= 1e-12 * scale and between:
+                    continue
+            keep_x.append(vx)
+            keep_y.append(vy)
+        if len(keep_x) >= 3:
+            keep_x.append(keep_x[0])
+            keep_y.append(keep_y[0])
+            ra = K.planar_path_area(np.asarray(keep_x), np.asarray(keep_y))
+            if ra != 0.0:
+                out.append((keep_x, keep_y, ra))
+    return out
+
+
+def _empty_frame(schema: T.StructType) -> pd.DataFrame:
+    return pd.DataFrame({c: pd.Series([], dtype=object) for c in schema.names})
+
+
+def _dissolve2_cells(labeled: DataFrame, group: str,
+                     gap_threshold: float | None,
+                     target_per_cell: int = 64) -> DataFrame:
+    """Two-level mosaic for OVERSIZED overlap clusters (VERDICT r02 item 2):
+    instead of one applyInPandas task holding a whole transitively-connected
+    cluster (a continental dissolve2 is ONE cluster), the cluster decomposes
+    over a per-cluster grid:
+
+    1. ``_grid_pieces``: one clipped piece per (feature, overlapped cell);
+    2. each (cluster, cell) runs the SAME mosaic kernel on its bounded
+       piece set (``_seam_subdivide`` first) — face assignment uses the
+       features' GLOBAL areas, so chooseShape weights match the
+       single-task result;
+    3. gap faces are NOT filled locally: pieces of one global gap face
+       reconnect across cell borders (shared-edge equi-join between pieces
+       of different cells + label propagation), total area decides the fill,
+       the highest-weight edge-neighbor (found by a plain edge join against
+       assigned faces — local and cross-cell alike) receives them;
+    4. per (cluster, group) the face pieces merge by ``_edge_cancel`` and
+       only the PERIMETER edges reach the final stitch task
+       (``_stitch_cleaned``), which drops sub-threshold holes.
+
+    DOCUMENTED DEVIATIONS vs the single-task kernel (both only matter for
+    adversarial inputs): gap->gap fill cascades do not cross cell borders,
+    and assignment ties between equal-weight covering features resolve by
+    piece order within the cell rather than global feature order.
+
+    Expects columns (group, __cluster, rings_x, rings_y, bbox); returns
+    (group, __cluster, rings_x, rings_y, area)."""
+    pieces, bc_meta = _grid_pieces(labeled, group, target_per_cell)
+    gtype = labeled.schema[group].dataType
+    cl_type = labeled.schema["__cluster"].dataType
 
     cell_schema = T.StructType([
-        T.StructField("__cluster", labeled.schema["__cluster"].dataType),
+        T.StructField("__cluster", cl_type),
         T.StructField("__cell", T.LongType()),
         T.StructField("kind", T.StringType()),
         T.StructField(group, gtype),
         T.StructField("fweight", T.DoubleType()),
-        T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
+        T.StructField("rings_x", _RINGS),
+        T.StructField("rings_y", _RINGS),
         T.StructField("area", T.DoubleType()),
     ])
 
     def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         cl = pdf["__cluster"].iloc[0]
         cell = pdf["__cell"].iloc[0]
-        grids = bc_meta.value
-        gx0, gy0, gw, gh, gnx, _gny = grids[cl]
-        rr, cc = divmod(int(cell), gnx)
-        border_x = (gx0 + cc * gw, gx0 + (cc + 1) * gw)
-        border_y = (gy0 + rr * gh, gy0 + (rr + 1) * gh)
-        pdf = pdf.assign(__ord=[
-            (rxs[0][0] if len(rxs) and len(rxs[0]) else 0.0,
-             rys[0][0] if len(rys) and len(rys[0]) else 0.0)
-            for rxs, rys in zip(pdf["rings_x"], pdf["rings_y"])])
-        pdf = pdf.sort_values("__ord").drop(columns="__ord")
-        ring_sets, groups, weights = [], [], []
-        for r in pdf.to_dict("records"):
-            ring_sets.append([(np.asarray(rx_, dtype=np.float64),
-                               np.asarray(ry_, dtype=np.float64))
-                              for rx_, ry_ in zip(r["rings_x"], r["rings_y"])])
-            groups.append(r[group])
-            weights.append(r["__garea"])
-        # subdivide border-line runs by the UNION of this cell's on-line
-        # vertices: every feature crossing a shared line exists in BOTH
-        # adjacent cells, so each side inserts the same crossing set and
-        # unit edges along the seam match exactly (-> clean edge cancel)
-        xl: dict = {}
-        yl: dict = {}
-        for rs in ring_sets:
-            for rx_, ry_ in rs:
-                for lx in border_x:
-                    m = rx_ == lx
-                    if m.any():
-                        xl.setdefault(lx, set()).update(ry_[m].tolist())
-                for ly in border_y:
-                    m = ry_ == ly
-                    if m.any():
-                        yl.setdefault(ly, set()).update(rx_[m].tolist())
-        if xl or yl:
-            ring_sets = [[_subdivide_on_lines(rx_, ry_, xl, yl)
-                          for rx_, ry_ in rs] for rs in ring_sets]
-        faces = mosaic_rings(ring_sets)
+        pdf = _canonical_order(pdf)
+        groups, weights = pdf[group].tolist(), pdf["__garea"].tolist()
+        ring_sets = _seam_subdivide(_ring_sets(pdf), bc_meta.value[cl], cell)
         rows = []
-        for rings, area, member in faces:
+        for rings, area, member in mosaic_rings(ring_sets):
             best = None
             for i, m in enumerate(member):
                 if m and (best is None or weights[i] > weights[best]):
@@ -1293,10 +1386,9 @@ def _dissolve2_cells(labeled: DataFrame, group: str,
                 rec.update(kind="face", fweight=float(weights[best]))
                 rec[group] = groups[best]
             rows.append(rec)
-        cols = [f.name for f in cell_schema.fields]
         if not rows:
-            return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
-        return pd.DataFrame(rows, columns=cols)
+            return _empty_frame(cell_schema)
+        return pd.DataFrame(rows, columns=cell_schema.names)
 
     cellout = (pieces.groupBy("__cluster", "__cell")
                .applyInPandas(cell_kernel, schema=cell_schema)
@@ -1346,83 +1438,38 @@ def _dissolve2_cells(labeled: DataFrame, group: str,
         all_faces = all_faces.unionByName(
             filled.select("__cluster", group, "rings_x", "rings_y", "area"))
 
-    # distributed edge cancel: seams (cell borders between same-group
-    # pieces) and interior same-group face edges appear twice -> vanish
-    edges = _unit_edges(all_faces, ["__cluster", group])
-    surv = (edges.groupBy("__cluster", group, "__edge")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") == 1)
-            .select("__cluster", group,
-                    F.col("__edge.x1").alias("x1"), F.col("__edge.y1").alias("y1"),
-                    F.col("__edge.x2").alias("x2"), F.col("__edge.y2").alias("y2")))
-
     out_schema = T.StructType([
         T.StructField(group, gtype),
-        T.StructField("__cluster", labeled.schema["__cluster"].dataType),
-        T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
+        T.StructField("__cluster", cl_type),
+        T.StructField("rings_x", _RINGS),
+        T.StructField("rings_y", _RINGS),
         T.StructField("area", T.DoubleType()),
     ])
 
     def stitch_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         g = pdf[group].iloc[0]
         cl = pdf["__cluster"].iloc[0]
-        grids = bc_meta.value
-        x0, y0, w, h, nx, ny = grids[cl]
-        xline = {x0 + k * w for k in range(nx + 1)}
-        yline = {y0 + k * h for k in range(ny + 1)}
-        pdf = pdf.sort_values(["x1", "y1", "x2", "y2"])
-        arcs = [(np.array([ax, bx_]), np.array([ay, by2]))
-                for ax, ay, bx_, by2 in zip(pdf["x1"], pdf["y1"],
-                                            pdf["x2"], pdf["y2"])]
-        rings = _normalize_winding(_stitch(arcs))
-        clean_rings = []
-        for rx_, ry_ in rings:
-            # drop collinear vertices introduced by the grid pre-cut: the
-            # vertex must sit exactly on a grid line AND be (numerically)
-            # on the segment joining its neighbors
-            keep_x, keep_y = [], []
-            n = len(rx_) - 1  # closed ring: last == first
-            for i in range(n):
-                vx, vy = rx_[i], ry_[i]
-                px, py = rx_[i - 1] if i else rx_[n - 1], ry_[i - 1] if i else ry_[n - 1]
-                qx, qy = rx_[i + 1], ry_[i + 1]
-                on_line = vx in xline or vy in yline
-                if on_line:
-                    cross = (vx - px) * (qy - py) - (vy - py) * (qx - px)
-                    scale = max(abs(qx - px), abs(qy - py), 1e-300) ** 2
-                    between = (min(px, qx) <= vx <= max(px, qx) and
-                               min(py, qy) <= vy <= max(py, qy))
-                    if abs(cross) <= 1e-12 * scale and between:
-                        continue
-                keep_x.append(vx)
-                keep_y.append(vy)
-            if len(keep_x) >= 3:
-                keep_x.append(keep_x[0])
-                keep_y.append(keep_y[0])
-                ra = K.planar_path_area(np.asarray(keep_x), np.asarray(keep_y))
-                # sub-threshold HOLES fill at the merged level: degenerate
-                # (zero-area) mosaic cycles are dropped by the face walk, so
-                # hairline slivers between near-coincident borders surface
-                # here as negative rings below the gap threshold — absorbing
-                # them into the surrounding group is exactly what
-                # assignRemainingTile does for their non-degenerate kin
-                if ra == 0.0:
-                    continue
-                if ra < 0 and gap_threshold is not None and -ra <= gap_threshold:
-                    continue
-                clean_rings.append((keep_x, keep_y))
-        area = sum(K.planar_path_area(np.asarray(rx_), np.asarray(ry_))
-                   for rx_, ry_ in clean_rings)
+        # sub-threshold HOLES fill at the merged level: degenerate
+        # (zero-area) mosaic cycles are dropped by the face walk, so
+        # hairline slivers between near-coincident borders surface here
+        # as negative rings below the gap threshold — absorbing them into
+        # the surrounding group is exactly what assignRemainingTile does
+        # for their non-degenerate kin
+        rings = [(rx_, ry_, ra)
+                 for rx_, ry_, ra in _stitch_cleaned(pdf, bc_meta.value[cl])
+                 if not (ra < 0 and gap_threshold is not None and
+                         -ra <= gap_threshold)]
         return pd.DataFrame({
             group: pd.Series([g], dtype=object),
             "__cluster": pd.Series([cl]),
-            "rings_x": pd.Series([[r[0] for r in clean_rings]], dtype=object),
-            "rings_y": pd.Series([[r[1] for r in clean_rings]], dtype=object),
-            "area": pd.Series([float(area)], dtype="float64"),
+            "rings_x": pd.Series([[r[0] for r in rings]], dtype=object),
+            "rings_y": pd.Series([[r[1] for r in rings]], dtype=object),
+            "area": pd.Series([float(sum(r[2] for r in rings))],
+                              dtype="float64"),
         })
 
-    return (surv.groupBy("__cluster", group)
+    return (_edge_cancel(all_faces, ["__cluster", group])
+            .groupBy("__cluster", group)
             .applyInPandas(stitch_kernel, schema=out_schema)
             .select(group, "__cluster", "rings_x", "rings_y", "area"))
 
@@ -1510,120 +1557,12 @@ def clip_polylines(lines: DataFrame, clip: DataFrame,
                    erase: bool = False, key: str | None = None,
                    res: int = 6, broadcast_limit: int = 10_000) -> DataFrame:
     """-clip/-erase on a polyline feature layer (rings_x/rings_y hold open
-    paths) against a polygon clip layer. Same two physical plans as
-    clip_polygons: broadcast (+ per-feature bbox prefilter) for a
-    dimension-sized clip layer, cell-keyed candidate pairing for a large
-    one. Lines with no candidate clip geometry pass through on erase and
-    drop on clip (a line outside every clip bbox cannot be inside any
-    clip polygon)."""
-    spark = lines.sparkSession
-    out_cols = [f.name for f in lines.schema.fields]
-    if key is None:
-        key = lines.columns[0]
-    has_bbox = "bbox" in lines.columns
-    clip = _ensure_bbox(clip)
-
-    def _kernel(rec, clip_feats):
-        if rec.get("rings_x") is None or rec.get("rings_y") is None:
-            # null geometry: nothing to clip or keep (Issue #192 — the
-            # reference drops null shapes from clip output)
-            return None
-        if has_bbox:
-            tb = rec["bbox"]
-            if tb is None or tb.get("xmax") is None:
-                cands = list(clip_feats)
-            else:
-                cands = [(rings, cb) for rings, cb in clip_feats
-                         if (cb[0] <= tb["xmax"] and cb[2] >= tb["xmin"] and
-                             cb[1] <= tb["ymax"] and cb[3] >= tb["ymin"])]
-        else:
-            cands = list(clip_feats)
-        cands.sort(key=lambda rc: (rc[1],
-                                   rc[0][0][0][0] if rc[0] else 0.0,
-                                   rc[0][0][1][0] if rc[0] else 0.0))
-        rings_c = [r for rings, _cb in cands for r in rings]
-        if not rings_c:
-            return dict(rec) if erase else None
-        paths = list(zip(rec["rings_x"], rec["rings_y"]))
-        kept = clip_polylines_rings(paths, rings_c, erase=erase)
-        if not kept:
-            return None
-        rec = dict(rec)
-        rec["rings_x"] = [p[0] for p in kept]
-        rec["rings_y"] = [p[1] for p in kept]
-        return rec
-
-    n_clip = clip.limit(broadcast_limit + 1).count()
-    if n_clip == 0:
-        return lines if erase else lines.limit(0)
-
-    if n_clip <= broadcast_limit:
-        clip_rows = clip.select("rings_x", "rings_y", "bbox").collect()
-        clip_feats = [
-            ([(np.asarray(rx, dtype=np.float64), np.asarray(ry, dtype=np.float64))
-              for rx, ry in zip(r.rings_x, r.rings_y)],
-             (r.bbox["xmin"], r.bbox["ymin"], r.bbox["xmax"], r.bbox["ymax"]))
-            for r in clip_rows]
-        bc = spark.sparkContext.broadcast(clip_feats)
-
-        def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            feats = bc.value
-            for pdf in it:
-                rows = []
-                for rec in pdf.to_dict("records"):
-                    out = _kernel(rec, feats)
-                    if out is not None:
-                        rows.append(out)
-                if rows:
-                    yield pd.DataFrame(rows, columns=out_cols)
-
-        return lines.mapInPandas(gen, schema=lines.schema)
-
-    if not has_bbox:
-        raise ValueError("distributed clip_polylines needs a bbox column on "
-                         "the line layer for candidate pairing")
-    gb = _union_bbox(lines, clip)
-    clip2 = (clip.select("rings_x", "rings_y", "bbox")
-             .withColumn("__cid", F.xxhash64("rings_x", "rings_y")))
-    t_cells = (lines.select(key, "bbox")
-               .withColumn("__cell", _bbox_cells_col(gb, res))
-               .select(key, "__cell"))
-    c_cells = (clip2.select("__cid", "bbox")
-               .withColumn("__cell", _bbox_cells_col(gb, res))
-               .select("__cid", "__cell"))
-    pairs = t_cells.join(c_cells, "__cell").select(key, "__cid").distinct()
-    clip_sets = (pairs.join(clip2, "__cid")
-                 .groupBy(key)
-                 .agg(F.collect_list(F.struct(
-                     F.col("rings_x").alias("crx"), F.col("rings_y").alias("cry"),
-                     F.col("bbox").alias("cbb"))).alias("__clips")))
-    joined = lines.join(clip_sets, key, "left")
-    pass_through = joined.filter(F.col("__clips").isNull()).drop("__clips") \
-        if erase else None
-    cand = joined.filter(F.col("__clips").isNotNull())
-
-    def gen2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                feats = [
-                    ([(np.asarray(rx, dtype=np.float64),
-                       np.asarray(ry, dtype=np.float64))
-                      for rx, ry in zip(cf["crx"], cf["cry"])],
-                     (cf["cbb"]["xmin"], cf["cbb"]["ymin"],
-                      cf["cbb"]["xmax"], cf["cbb"]["ymax"]))
-                    for cf in rec["__clips"]]
-                rec = {k: v for k, v in rec.items() if k != "__clips"}
-                out = _kernel(rec, feats)
-                if out is not None:
-                    rows.append(out)
-            if rows:
-                yield pd.DataFrame(rows, columns=out_cols)
-
-    out = cand.mapInPandas(gen2, schema=lines.schema)
-    if pass_through is not None:
-        out = out.unionByName(pass_through)
-    return out
+    paths) against a polygon clip layer: ``_clip_layer`` with the polyline
+    kernel, so the same two plans as clip_polygons. A line outside every
+    clip bbox cannot be inside any clip polygon: it passes through on
+    erase and drops on clip."""
+    return _clip_layer(lines, clip, _polyline_record, erase,
+                       key or lines.columns[0], res, broadcast_limit)
 
 
 def _connected_feature_clusters(df: DataFrame, key: str, res: int = 6,
@@ -1720,6 +1659,18 @@ def _connected_feature_clusters(df: DataFrame, key: str, res: int = 6,
     return labels.select(F.col("id").alias(key), F.col("comp").alias("__cluster"))
 
 
+def _sized_clusters(features: DataFrame, key: str, res: int) -> DataFrame:
+    """-clean's and -mosaic's feature layer labeled with its overlap
+    cluster (``__cluster``) and that cluster's size (``__csz``),
+    materialized: the singleton, kernel and two-level routes (and the
+    two-level route's isEmpty probe) would each recompute the clustering
+    join otherwise."""
+    labeled = features.join(_connected_feature_clusters(features, key, res=res),
+                            key)
+    sizes = labeled.groupBy("__cluster").agg(F.count(F.lit(1)).alias("__csz"))
+    return labeled.join(sizes, "__cluster").localCheckpoint()
+
+
 def clean(features: DataFrame, key: str, gap_fill: bool = True,
           min_gap_area: float | None = None, res: int = 6,
           max_task_features: int = 4096,
@@ -1746,12 +1697,7 @@ def clean(features: DataFrame, key: str, gap_fill: bool = True,
         gap_threshold = (min_gap_area if min_gap_area is not None
                          else mean_segment_len_sq(features))
 
-    clusters = _connected_feature_clusters(features, key, res=res)
-    labeled = features.join(clusters, key)
-    sizes = labeled.groupBy("__cluster").agg(F.count(F.lit(1)).alias("__csz"))
-    # four consumers (pass-through, multi, big, big.isEmpty) would each
-    # recompute the clustering join otherwise
-    labeled = labeled.join(sizes, "__cluster").localCheckpoint()
+    labeled = _sized_clusters(features, key, res)
     pass_through = labeled.filter(F.col("__csz") == 1) \
         .drop("__cluster", "__csz")
     multi = labeled.filter((F.col("__csz") > 1) &
@@ -1768,19 +1714,10 @@ def clean(features: DataFrame, key: str, gap_fill: bool = True,
     ])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.assign(__ord=[
-            (rxs[0][0] if len(rxs) and len(rxs[0]) else 0.0,
-             rys[0][0] if len(rys) and len(rys[0]) else 0.0)
-            for rxs, rys in zip(pdf["rings_x"], pdf["rings_y"])])
-        pdf = pdf.sort_values("__ord").drop(columns="__ord")
-        ring_sets = []
-        keys = []
-        for r in pdf.to_dict("records"):
-            ring_sets.append([(np.asarray(rx, dtype=np.float64),
-                               np.asarray(ry, dtype=np.float64))
-                              for rx, ry in zip(r["rings_x"], r["rings_y"])])
-            keys.append(r[key])
-        cleaned = dissolve2_rings(ring_sets, keys, gap_threshold=gap_threshold)
+        pdf = _canonical_order(pdf)
+        keys = pdf[key].tolist()
+        cleaned = dissolve2_rings(_ring_sets(pdf), keys,
+                                  gap_threshold=gap_threshold)
         rows = []
         for k in keys:
             rings = cleaned.get(k, [])
@@ -1827,18 +1764,16 @@ def _mosaic_cells(labeled: DataFrame, key: str,
     mosaic): a transitively-connected continent would otherwise serialize
     into ONE kernel task holding every ring.
 
-    1. every feature pre-cuts its rings at a per-cluster grid and emits one
-       clipped piece per overlapped cell (bit-identical cut points on both
-       sides of a line — `_cut_ring_at_gridlines`);
-    2. each (cluster, cell) runs `mosaic_rings` on its bounded piece set;
-       every face piece is keyed by its covering-feature SIGNATURE (hash of
-       the sorted global feature ids). Two adjacent arrangement faces
-       always differ in at least one member, so pieces of the same
-       signature sharing an edge belong to the same global face — and
-       cell-border seams between them appear exactly twice;
-    3. distributed edge cancel per (cluster, signature): count==1 edges
-       survive (seams and duplicated interior edges vanish), the final
-       stitch task sees only one signature's PERIMETER edges;
+    1. ``_grid_pieces``: one clipped piece per (feature, overlapped cell);
+    2. each (cluster, cell) runs `mosaic_rings` on its bounded piece set
+       (``_seam_subdivide`` first); every face piece is keyed by its
+       covering-feature SIGNATURE (the sorted feature ids as strings). Two
+       adjacent arrangement faces always differ in at least one member,
+       so pieces of the same signature sharing an edge belong to the same
+       global face — and cell-border seams between them appear exactly
+       twice;
+    3. ``_edge_cancel`` per (cluster, signature): the final stitch task
+       sees only one signature's PERIMETER edges;
     4. the stitch splits the merged rings back into faces: each positive
        cycle is a face outer, negative cycles nest into the smallest
        containing positive (mosaic_rings' own hole rule), so two disjoint
@@ -1846,95 +1781,23 @@ def _mosaic_cells(labeled: DataFrame, key: str,
 
     Expects (key, __cluster, rings_x, rings_y, bbox); returns
     (rings_x, rings_y, area, n_members)."""
-    spark = labeled.sparkSession
-    meta = _cluster_grids(labeled, target_per_cell)
-    bc_meta = spark.sparkContext.broadcast(meta)
-
-    piece_schema = T.StructType([
-        T.StructField("__cluster", labeled.schema["__cluster"].dataType),
-        T.StructField("__cell", T.LongType()),
-        T.StructField("__fid", T.StringType()),
-        T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
-    ])
-
-    def gen_pieces(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        grids = bc_meta.value
-        for pdf in it:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                x0, y0, w, h, nx, ny = grids[rec["__cluster"]]
-                b = rec["bbox"]
-                c0 = max(0, min(nx - 1, int((b["xmin"] - x0) / w)))
-                c1 = max(0, min(nx - 1, int((b["xmax"] - x0) / w)))
-                r0 = max(0, min(ny - 1, int((b["ymin"] - y0) / h)))
-                r1 = max(0, min(ny - 1, int((b["ymax"] - y0) / h)))
-                xlines = [x0 + k * w for k in range(c0, c1 + 2)]
-                ylines = [y0 + k * h for k in range(r0, r1 + 2)]
-                cut = [_cut_ring_at_gridlines(rx_, ry_, xlines, ylines)
-                       for rx_, ry_ in zip(rec["rings_x"], rec["rings_y"])]
-                for rr in range(r0, r1 + 1):
-                    for cc in range(c0, c1 + 1):
-                        rect = (x0 + cc * w, y0 + rr * h,
-                                x0 + (cc + 1) * w, y0 + (rr + 1) * h)
-                        nxs, nys = [], []
-                        for cx_, cy_ in cut:
-                            sx, sy = _sutherland_hodgman_exact(cx_, cy_, rect)
-                            if sx:
-                                nxs.append(sx)
-                                nys.append(sy)
-                        if nxs:
-                            rows.append({"__cluster": rec["__cluster"],
-                                         "__cell": rr * nx + cc,
-                                         "__fid": str(rec[key]),
-                                         "rings_x": nxs, "rings_y": nys})
-            if rows:
-                yield pd.DataFrame(rows,
-                                   columns=[f.name for f in piece_schema.fields])
-
-    pieces = (labeled.select("__cluster", key, "rings_x", "rings_y", "bbox")
-              .mapInPandas(gen_pieces, schema=piece_schema))
+    pieces, bc_meta = _grid_pieces(labeled, key, target_per_cell)
 
     face_schema = T.StructType([
         T.StructField("__cluster", labeled.schema["__cluster"].dataType),
         T.StructField("__sig", T.StringType()),
         T.StructField("n_members", T.IntegerType()),
-        T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
+        T.StructField("rings_x", _RINGS),
+        T.StructField("rings_y", _RINGS),
     ])
 
     def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         cl = pdf["__cluster"].iloc[0]
         cell = pdf["__cell"].iloc[0]
-        grids = bc_meta.value
-        gx0, gy0, gw, gh, gnx, _gny = grids[cl]
-        rr, cc = divmod(int(cell), gnx)
-        border_x = (gx0 + cc * gw, gx0 + (cc + 1) * gw)
-        border_y = (gy0 + rr * gh, gy0 + (rr + 1) * gh)
-        pdf = pdf.sort_values("__fid")
-        ring_sets, fids = [], []
-        for r in pdf.to_dict("records"):
-            ring_sets.append([(np.asarray(rx_, dtype=np.float64),
-                               np.asarray(ry_, dtype=np.float64))
-                              for rx_, ry_ in zip(r["rings_x"], r["rings_y"])])
-            fids.append(r["__fid"])
-        # seam consistency: subdivide border-line runs by the union of this
-        # cell's on-line vertices (same trick as _dissolve2_cells)
-        xl: dict = {}
-        yl: dict = {}
-        for rs in ring_sets:
-            for rx_, ry_ in rs:
-                for lx in border_x:
-                    m = rx_ == lx
-                    if m.any():
-                        xl.setdefault(lx, set()).update(ry_[m].tolist())
-                for ly in border_y:
-                    m = ry_ == ly
-                    if m.any():
-                        yl.setdefault(ly, set()).update(rx_[m].tolist())
-        if xl or yl:
-            ring_sets = [[_subdivide_on_lines(rx_, ry_, xl, yl)
-                          for rx_, ry_ in rs] for rs in ring_sets]
+        pdf = pdf.assign(__fid=[str(v) for v in pdf[key].tolist()]) \
+            .sort_values("__fid")
+        fids = pdf["__fid"].tolist()
+        ring_sets = _seam_subdivide(_ring_sets(pdf), bc_meta.value[cl], cell)
         rows = []
         for rings, _area, member in mosaic_rings(ring_sets):
             sig = ";".join(f for f, m in zip(fids, member) if m)
@@ -1947,65 +1810,24 @@ def _mosaic_cells(labeled: DataFrame, key: str,
                          "n_members": int(sum(member)),
                          "rings_x": [list(fx) for fx, _fy in rings],
                          "rings_y": [list(fy) for _fx, fy in rings]})
-        cols = [f.name for f in face_schema.fields]
         if not rows:
-            return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
-        return pd.DataFrame(rows, columns=cols)
+            return _empty_frame(face_schema)
+        return pd.DataFrame(rows, columns=face_schema.names)
 
     cellout = (pieces.groupBy("__cluster", "__cell")
                .applyInPandas(cell_kernel, schema=face_schema)
                .localCheckpoint())
 
-    edges = _unit_edges(cellout, ["__cluster", "__sig", "n_members"])
-    surv = (edges.groupBy("__cluster", "__sig", "n_members", "__edge")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") == 1)
-            .select("__cluster", "__sig", "n_members",
-                    F.col("__edge.x1").alias("x1"), F.col("__edge.y1").alias("y1"),
-                    F.col("__edge.x2").alias("x2"), F.col("__edge.y2").alias("y2")))
-
     out_schema = T.StructType([
-        T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
+        T.StructField("rings_x", _RINGS),
+        T.StructField("rings_y", _RINGS),
         T.StructField("area", T.DoubleType()),
         T.StructField("n_members", T.IntegerType()),
     ])
 
     def stitch_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         nm = int(pdf["n_members"].iloc[0])
-        cl = pdf["__cluster"].iloc[0]
-        grids = bc_meta.value
-        x0, y0, w, h, nx, ny = grids[cl]
-        xline = {x0 + k * w for k in range(nx + 1)}
-        yline = {y0 + k * h for k in range(ny + 1)}
-        pdf = pdf.sort_values(["x1", "y1", "x2", "y2"])
-        arcs = [(np.array([ax, bx_]), np.array([ay, by2]))
-                for ax, ay, bx_, by2 in zip(pdf["x1"], pdf["y1"],
-                                            pdf["x2"], pdf["y2"])]
-        rings = _normalize_winding(_stitch(arcs))
-        cleaned = []
-        for rx_, ry_ in rings:
-            keep_x, keep_y = [], []
-            n = len(rx_) - 1
-            for i in range(n):
-                vx, vy = rx_[i], ry_[i]
-                px, py = (rx_[i - 1], ry_[i - 1]) if i else (rx_[n - 1], ry_[n - 1])
-                qx, qy = rx_[i + 1], ry_[i + 1]
-                if vx in xline or vy in yline:
-                    cross = (vx - px) * (qy - py) - (vy - py) * (qx - px)
-                    scale = max(abs(qx - px), abs(qy - py), 1e-300) ** 2
-                    between = (min(px, qx) <= vx <= max(px, qx) and
-                               min(py, qy) <= vy <= max(py, qy))
-                    if abs(cross) <= 1e-12 * scale and between:
-                        continue
-                keep_x.append(vx)
-                keep_y.append(vy)
-            if len(keep_x) >= 3:
-                keep_x.append(keep_x[0])
-                keep_y.append(keep_y[0])
-                ra = K.planar_path_area(np.asarray(keep_x), np.asarray(keep_y))
-                if ra != 0.0:
-                    cleaned.append((keep_x, keep_y, ra))
+        cleaned = _stitch_cleaned(pdf, bc_meta.value[pdf["__cluster"].iloc[0]])
         # split into faces: positive cycles are outers; negative cycles
         # nest into the smallest containing positive (mosaic_rings rule)
         outers = [{"rings": [(cx, cy)], "outer_area": ra, "area": ra}
@@ -2029,12 +1851,12 @@ def _mosaic_cells(labeled: DataFrame, key: str,
                  "rings_y": [list(r[1]) for r in f["rings"]],
                  "area": float(f["area"]), "n_members": nm}
                 for f in outers]
-        cols = [f.name for f in out_schema.fields]
         if not rows:
-            return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
-        return pd.DataFrame(rows, columns=cols)
+            return _empty_frame(out_schema)
+        return pd.DataFrame(rows, columns=out_schema.names)
 
-    return (surv.groupBy("__cluster", "__sig")
+    return (_edge_cancel(cellout, ["__cluster", "__sig", "n_members"])
+            .groupBy("__cluster", "__sig")
             .applyInPandas(stitch_kernel, schema=out_schema))
 
 
@@ -2073,10 +1895,7 @@ def mosaic(features: DataFrame, key: str = None, res: int = 6,
     features = _ensure_bbox(features)
     features = features.filter(F.col("rings_x").isNotNull() &
                                (F.size("rings_x") > 0))
-    clusters = _connected_feature_clusters(features, key, res=res)
-    labeled = features.join(clusters, key)
-    sizes = labeled.groupBy("__cluster").agg(F.count(F.lit(1)).alias("__csz"))
-    labeled = labeled.join(sizes, "__cluster").localCheckpoint()
+    labeled = _sized_clusters(features, key, res)
 
     out_schema = T.StructType([
         T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
@@ -2086,19 +1905,9 @@ def mosaic(features: DataFrame, key: str = None, res: int = 6,
     ])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # canonical feature order (see dissolve2.merge): face assembly is
-        # deterministic regardless of shuffle row order
-        pdf = pdf.assign(__ord=[
-            (rxs[0][0] if len(rxs) and len(rxs[0]) else 0.0,
-             rys[0][0] if len(rys) and len(rys[0]) else 0.0)
-            for rxs, rys in zip(pdf["rings_x"], pdf["rings_y"])])
-        pdf = pdf.sort_values("__ord").drop(columns="__ord")
-        ring_sets = [[(np.asarray(rx, dtype=np.float64),
-                       np.asarray(ry, dtype=np.float64))
-                      for rx, ry in zip(r["rings_x"], r["rings_y"])]
-                     for r in pdf.to_dict("records")]
         rows = []
-        for rings, area, member in mosaic_rings(ring_sets):
+        for rings, area, member in mosaic_rings(
+                _ring_sets(_canonical_order(pdf))):
             rows.append({"rings_x": [fx.tolist() if hasattr(fx, "tolist") else list(fx)
                                      for fx, _fy in rings],
                          "rings_y": [fy.tolist() if hasattr(fy, "tolist") else list(fy)
@@ -2168,21 +1977,14 @@ def slice_polygons(target: DataFrame, source: DataFrame,
     key = key or target.columns[0]
     id_field = id_field or source.columns[0]
     target = _ensure_bbox(target)
-    source = _ensure_bbox(source)
-    gb = _union_bbox(target, source)
-
-    src = source.select(F.col(id_field).cast("string").alias("__sid"),
-                        F.col("rings_x").alias("__srx"),
-                        F.col("rings_y").alias("__sry"),
-                        F.col("bbox").alias("__sbb"))
-    t_cells = (target.select(key, "bbox")
-               .withColumn("__cell", _bbox_cells_col(gb, res))
-               .select(key, "__cell"))
-    s_cells = (src.select("__sid", F.col("__sbb").alias("bbox"))
-               .withColumn("__cell", _bbox_cells_col(gb, res))
-               .select("__sid", "__cell"))
-    pairs = t_cells.join(s_cells, "__cell").select(key, "__sid").distinct()
-    cand = pairs.join(target, key).join(src, "__sid")
+    src = _ensure_bbox(source).select(
+        F.col(id_field).cast("string").alias("__sid"),
+        "rings_x", "rings_y", "bbox")
+    pairs = _cell_pairs(target, key, src, "__sid", res)
+    cand = pairs.join(target, key).join(
+        src.select("__sid", *(F.col(c).alias(f"__s{c}")
+                              for c in ("rings_x", "rings_y", "bbox"))),
+        "__sid")
 
     out_cols = [f.name for f in target.schema.fields] + [out_field]
     out_schema = T.StructType(list(target.schema.fields) +
@@ -2192,15 +1994,10 @@ def slice_polygons(target: DataFrame, source: DataFrame,
         for pdf in it:
             rows = []
             for rec in pdf.to_dict("records"):
-                feat = ([(np.asarray(rx, dtype=np.float64),
-                          np.asarray(ry, dtype=np.float64))
-                         for rx, ry in zip(rec["__srx"], rec["__sry"])],
-                        (rec["__sbb"]["xmin"], rec["__sbb"]["ymin"],
-                         rec["__sbb"]["xmax"], rec["__sbb"]["ymax"]))
-                sid = rec["__sid"]
-                rec = {k: v for k, v in rec.items()
-                       if k not in ("__sid", "__srx", "__sry", "__sbb")}
-                out = _overlay_one(rec, [feat], "clip")
+                feat = _clip_feature(rec.pop("__srings_x"),
+                                     rec.pop("__srings_y"), rec.pop("__sbbox"))
+                sid = rec.pop("__sid")
+                out = _clip_record(rec, [feat], _overlay_record, False)
                 if out is not None:
                     out[out_field] = sid
                     rows.append(out)

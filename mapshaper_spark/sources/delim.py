@@ -124,10 +124,10 @@ def _read_delim_exact(spark: SparkSession, path: str, delimiter: str,
     (-> null) -- delim-import-test.js 'handle empty fields' vs 'missing
     fields are filled out with nulls'. The field count strips quoted
     sections first, so delimiters inside quotes (including RFC4180 doubled
-    quote escapes) don't inflate it. Corners narrowed vs the reference: a
-    data line byte-identical to the header is dropped (line-oriented
-    header skip), and multiline quoted fields are unsupported (as with
-    Spark's default multiLine=false csv reader)."""
+    quote escapes) don't inflate it. Only the file's first line is the
+    header: a later line equal to it is data. Corner narrowed vs the
+    reference: multiline quoted fields are unsupported (as with Spark's
+    default multiLine=false csv reader)."""
     # column naming via Spark's csv header normalization (dedup/_cN),
     # consistent with the non-UTF8 path; header-only driver read
     names = (spark.read.option("header", True)
@@ -136,10 +136,12 @@ def _read_delim_exact(spark: SparkSession, path: str, delimiter: str,
     ddl = ", ".join("`%s` STRING" % n.replace("`", "``") for n in names)
     line = F.regexp_replace(
         F.regexp_replace(F.col("value"), "^\ufeff", ""), "\r$", "")
+    # the file's first line is row 0 of the scan's first partition (one
+    # file: its splits are read in offset order), so id 0 is the header
     lines = (spark.read.text(path)
-             .select(line.alias("__ms_line"))
-             .filter((F.col("__ms_line") != header) &
-                     (F.col("__ms_line") != "")))
+             .select(line.alias("__ms_line"),
+                     F.monotonically_increasing_id().alias("__ms_pos"))
+             .filter((F.col("__ms_pos") != 0) & (F.col("__ms_line") != "")))
     nf = F.size(F.split(
         F.regexp_replace("__ms_line", '"[^"]*"', ""),
         _re.escape(delimiter), -1))

@@ -60,15 +60,17 @@ def _rewind_ring(xs, ys, is_hole):
 
 
 _BBOX_FIELDS = ("xmin", "ymin", "xmax", "ymax")
+# the geometry columns of ``_geometry_row``, in its order
+GEOMETRY_COLUMNS = ("geometry_type", "rings_x", "rings_y", "x", "y", "bbox")
 
 
 def _geometry_fields() -> list:
     """(name, Arrow type) of the geometry columns of ``_geometry_row``."""
     import pyarrow as pa
     rings = pa.list_(pa.list_(pa.float64()))
-    return [("geometry_type", pa.string()), ("rings_x", rings),
-            ("rings_y", rings), ("x", pa.float64()), ("y", pa.float64()),
-            ("bbox", pa.struct([(k, pa.float64()) for k in _BBOX_FIELDS]))]
+    return list(zip(GEOMETRY_COLUMNS, (
+        pa.string(), rings, rings, pa.float64(), pa.float64(),
+        pa.struct([(k, pa.float64()) for k in _BBOX_FIELDS]))))
 
 
 def _geometry_row(g: dict) -> tuple:

@@ -1025,6 +1025,32 @@ class TestGeoJSONImport:
             run_commands(spark, f"-i {out}")
 
 
+class TestEngineNamedProperties:
+    def test_property_named_like_an_artifact_column(self, spark, tmp_path):
+        src, out = tmp_path / "a.json", tmp_path / "o.json"
+        _county_grid(src, n=1)
+        _with_properties(src, [{"name": "a", "x": 7}])
+        run_commands(spark, f"-i {src} -o {out}")
+        assert _features(out)[0]["properties"] == {"name": "a", "x": 7}
+
+    def test_polygon_layer_with_only_an_n_property(self, spark, tmp_path):
+        src, out = tmp_path / "a.json", tmp_path / "o.json"
+        _county_grid(src, n=1)
+        doc = json.load(open(src))
+        doc["features"][0]["properties"] = {"n": 3}
+        src.write_text(json.dumps(doc))
+        run_commands(spark, f"-i {src} -o {out}")
+        assert _features(out)[0]["properties"] == {"n": 3}
+
+    def test_property_named_like_a_used_geometry_column(self, spark,
+                                                        tmp_path):
+        src = tmp_path / "a.json"
+        _county_grid(src, n=1)
+        _with_properties(src, [{"rings_x": 1}])
+        with pytest.raises(ValueError, match="rings_x"):
+            run_commands(spark, f"-i {src}")
+
+
 class TestDataFill:
     def test_passes_do_not_stack_joins(self, spark, tmp_path, monkeypatch):
         """A fill from one corner of a 3x3 grid takes 4 passes; each pass is

@@ -415,6 +415,25 @@ class TestDistributedClip:
         d = clip_polylines(line, clip, broadcast_limit=0).collect()
         assert len(b) == len(d) == 1
         assert sorted(map(tuple, b[0].rings_x)) == sorted(map(tuple, d[0].rings_x))
+        for r in (b[0], d[0]):  # the bbox follows the clipped parts
+            assert (r.bbox.xmin, r.bbox.xmax) == (
+                min(map(min, r.rings_x)), max(map(max, r.rings_x)))
+
+    def test_distributed_polyline_clip_without_bbox(self, spark):
+        """A line layer without a bbox column takes the cell-paired plan
+        like one with it (the bbox is derived, then dropped on output)."""
+        from mapshaper_spark.operators.overlay import clip_polylines
+        _polys, clip = self._layers(spark)
+        lines = spark.createDataFrame(
+            [(1, [[-120.0, -60.0]], [[37.0, 37.0]]),
+             (2, [[-110.0, -70.0, -80.0]], [[30.0, 45.0, 20.0]])],
+            "fid int, rings_x array<array<double>>, "
+            "rings_y array<array<double>>")
+        for erase in (False, True):
+            b = clip_polylines(lines, clip, erase=erase)
+            d = clip_polylines(lines, clip, erase=erase, broadcast_limit=0)
+            assert d.columns == lines.columns
+            assert sorted(d.collect()) == sorted(b.collect())
 
     def test_empty_clip_guard(self, spark):
         polys, clip = self._layers(spark)

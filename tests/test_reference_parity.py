@@ -525,6 +525,12 @@ class TestDelimImportParity:
         assert [(r.ID, r.STATE, r.VALUE) for r in rows] == \
             [(1.0, None, None), (2.0, "WA", 300.0), (3.0, "", None)]
 
+    def test_data_line_equal_to_the_header_is_data(self, spark, tmp_path):
+        # only the file's first line is the header
+        df, rows = self._imp(spark, tmp_path, "a,b\n1,2\na,b\n3,4\n")
+        assert [(r.a, r.b) for r in rows] == \
+            [("1", "2"), ("a", "b"), ("3", "4")]
+
     def test_extra_fields_dropped(self, spark, tmp_path):
         # delim-import-test.js 'extra fields are dropped'
         df, rows = self._imp(spark, tmp_path, "ID,STATE\nx,OR,3000\ny,WA\n")
