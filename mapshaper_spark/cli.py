@@ -906,13 +906,11 @@ def _cmd_dissolve(cat: Catalog, c: Command) -> None:
         df_o, fields, sum_fields=c.csv("sum-fields"),
         copy_fields=c.csv("copy-fields"), calc=calc, order_col=order_o)
     if kind == "polygon":
-        from mapshaper_spark.operators.topology import build_topology
+        from mapshaper_spark.operators.topology import ring_topology
         field = fields[0]
-        paths, fid = _rings_to_paths(df, field)
-        arcs, refs = build_topology(paths, "path_id")
-        feats = _features_with_parts(refs, paths, fid)
-        out = DS.dissolve_polygons(feats, arcs, fid).withColumnRenamed(
-            fid, field)
+        topo = ring_topology(df, field)
+        out = DS.dissolve_polygons(topo.features, topo.arcs,
+                                   topo.fid).withColumnRenamed(topo.fid, field)
         if set(attrs.columns) - set(fields):
             out = out.join(attrs, field, "left")
     elif kind == "point":
@@ -936,34 +934,6 @@ def _cmd_dissolve(cat: Catalog, c: Command) -> None:
             cat.kinds[name] = src_kind
     else:
         cat.replace(out)
-
-
-def _rings_to_paths(df: DataFrame, key: str):
-    """(key, rings_x, rings_y) -> paths(path_id, fid, xs, ys). path_id
-    hashes (key, ring index, coords) — deterministic and unique up to
-    bit-identical duplicate rings of the same feature key."""
-    fid = "__fid"
-    exploded = (df.select(F.col(key).alias(fid),
-                          F.posexplode(F.arrays_zip(
-                              F.col("rings_x").alias("xs"),
-                              F.col("rings_y").alias("ys"))).alias("ri", "r"))
-                .select(fid, "ri", F.col("r.xs").alias("xs"),
-                        F.col("r.ys").alias("ys")))
-    paths = exploded.select(
-        F.xxhash64(F.col(fid).cast("string"), "ri", "xs", "ys").alias("path_id"),
-        fid, "xs", "ys")
-    return paths, fid
-
-
-def _features_with_parts(refs: DataFrame, paths: DataFrame, fid: str):
-    """refs(path_id, arc_seq, signed) -> (fid, parts) where parts is the
-    array-of-rings-of-signed-arc-ids shape dissolve_polygons/keep_shapes
-    expect."""
-    ring_refs = refs.groupBy("path_id").agg(F.expr(
-        "transform(sort_array(collect_list(struct(arc_seq, signed))),"
-        " s -> s.signed)").alias("__ring"))
-    return (ring_refs.join(paths.select("path_id", fid), "path_id")
-            .groupBy(fid).agg(F.collect_list("__ring").alias("parts")))
 
 
 def _min_gap_area(cat: Catalog, c: Command) -> float | None:
@@ -1114,21 +1084,19 @@ def _cmd_filter_slivers(cat: Catalog, c: Command) -> None:
 
 def _cmd_lines(cat: Catalog, c: Command, inner_only: bool = False) -> None:
     from mapshaper_spark.operators import dissolve as DS
-    from mapshaper_spark.operators.topology import build_topology
+    from mapshaper_spark.operators.topology import ring_topology
     df = cat.df()
     group = c.values[0] if c.values else df.columns[0]
     if "parts" in df.columns:  # already in arc-topology form
         cat.replace(DS.innerlines(df, group) if inner_only
                     else DS.lines(df, group))
         return
-    paths, fid = _rings_to_paths(df.withColumnRenamed(group, "__grp"), "__grp")
-    arcs, refs = build_topology(paths, "path_id")
-    feats = _features_with_parts(refs, paths, fid).withColumnRenamed(
-        fid, group)
+    topo = ring_topology(df, group)
+    feats = topo.features.withColumnRenamed(topo.fid, group)
     classified = (DS.innerlines(feats, group) if inner_only
                   else DS.lines(feats, group))
     cat.replace(classified.join(
-        arcs.select(F.col("arc_id").alias("aid"), "xs", "ys"), "aid"))
+        topo.arcs.select(F.col("arc_id").alias("aid"), "xs", "ys"), "aid"))
 
 
 def _cmd_points(cat: Catalog, c: Command) -> None:
@@ -1249,8 +1217,9 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
     """-simplify N% [dp|visvalingam [weighted]] [interval=] [keep-shapes]
     over a polygon layer: build shared-arc topology, threshold, reassemble
     (the reference pipeline: mapshaper-simplify.js -> arc dataset)."""
+    from mapshaper_spark.layers import concat_arcs
     from mapshaper_spark.operators import simplify as SI
-    from mapshaper_spark.operators.topology import build_topology
+    from mapshaper_spark.operators.topology import ring_topology
     df = cat.df()
     method = "dp" if "dp" in c.values else (
         "visvalingam" if "visvalingam" in c.values and "weighted" not in c.values
@@ -1320,10 +1289,9 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
     if _geometry_kind(df) != "polygon":
         raise ValueError("-simplify needs a polygon or polyline layer")
     key = df.columns[0]
-    paths, fid = _rings_to_paths(df, key)
-    arcs, refs = build_topology(paths, "path_id")
+    topo = ring_topology(df, key)
     # compute_thresholds fills zs in place (schema = input schema)
-    arcs = arcs.withColumn(
+    arcs = topo.arcs.withColumn(
         "zs", F.expr("array_repeat(CAST(0.0 AS DOUBLE), size(xs))"))
     with_z, zlimit = _threshold(arcs)
     if not c.flag("no-repair") and zlimit > 0:
@@ -1331,43 +1299,18 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
         # DEFAULT (mapshaper-simplify.js:34-36); no-repair opts out
         with_z = SI.post_simplify_repair(with_z, zlimit)
     if c.flag("keep-shapes"):
-        feats = _features_with_parts(refs, paths, fid)
-        with_z = SI.keep_shapes(feats, with_z, fid)
+        with_z = SI.keep_shapes(topo.features, with_z, topo.fid)
     kept = SI.apply_zlimit(with_z, zlimit)
-    rebuilt = _assemble_paths(refs, kept)
-    rings = (paths.select("path_id", fid).join(rebuilt, "path_id")
-             .groupBy(F.col(fid).alias(key))
+    rebuilt = concat_arcs(topo.refs, kept, ["path_id"])
+    rings = (topo.paths.select("path_id", topo.fid).join(rebuilt, "path_id")
+             .groupBy(F.col(topo.fid).alias(key))
              .agg(F.collect_list("xs").alias("rings_x"),
                   F.collect_list("ys").alias("rings_y")))
-    attrs = df.drop("rings_x", "rings_y", "bbox")
     # the join shuffles: tag the record order first, -o emits rows in it
     # (the reference keeps input order); features without rings stay
-    if _ORDER_COL not in attrs.columns:
-        attrs = attrs.withColumn(_ORDER_COL, F.monotonically_increasing_id())
+    attrs = _order_tagged(df.drop("rings_x", "rings_y", "bbox"))
     cat.replace(attrs.join(rings, key, "left").select(
         key, "rings_x", "rings_y", *attrs.columns[1:]))
-
-
-def _assemble_paths(refs: DataFrame, arcs: DataFrame) -> DataFrame:
-    """refs(path_id, arc_seq, signed) + arcs(arc_id, xs, ys) -> per-path
-    concatenated coordinates (drop the duplicated junction vertex between
-    consecutive arcs) — all JVM higher-order functions."""
-    from mapshaper_spark.layers import absolute_arc_id_col
-    oriented = (refs.join(
-        arcs.select(F.col("arc_id").alias("__aid"), "xs", "ys"),
-        absolute_arc_id_col(F.col("signed")) == F.col("__aid"))
-        .select("path_id", "arc_seq",
-                F.when(F.col("signed") < 0, F.reverse("xs")).otherwise(F.col("xs")).alias("xs"),
-                F.when(F.col("signed") < 0, F.reverse("ys")).otherwise(F.col("ys")).alias("ys")))
-    grouped = (oriented.groupBy("path_id")
-               .agg(F.sort_array(F.collect_list(
-                   F.struct("arc_seq", "xs", "ys"))).alias("parts")))
-    concat = ("flatten(transform(parts, (p, i) -> IF(i = 0, p.{c}, "
-              "slice(p.{c}, 2, size(p.{c}) - 1))))")
-    return grouped.select(
-        "path_id",
-        F.expr(concat.format(c="xs")).alias("xs"),
-        F.expr(concat.format(c="ys")).alias("ys"))
 
 
 def _cmd_affine(cat: Catalog, c: Command) -> None:
@@ -1612,6 +1555,15 @@ def _cmd_rename_layers(cat: Catalog, c: Command) -> None:
                       for i in range(n_layers - len(new_names))]
     for old, new in zip(list(cat.order), new_names):
         _rename_layer(cat, old, new)
+
+
+def _order_tagged(df: DataFrame) -> DataFrame:
+    """The layer with its record order as a column (the -sort order column
+    when it has one), for a command whose joins shuffle the rows:
+    ``_in_record_order`` restores it on export."""
+    if _ORDER_COL in df.columns:
+        return df
+    return df.withColumn(_ORDER_COL, F.monotonically_increasing_id())
 
 
 def _in_record_order(df: DataFrame, one_task: bool = True) -> DataFrame:
@@ -2178,7 +2130,7 @@ def _cmd_cluster(cat: Catalog, c: Command) -> None:
 
 def _cmd_data_fill(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators import datafill as DF_
-    from mapshaper_spark.operators.topology import build_topology
+    from mapshaper_spark.operators.topology import ring_topology
     field_name = str(c.opt("field"))
     df0 = cat.df()
     # the reference's isEmptyValue treats '' like null (data-fill-test.js
@@ -2190,16 +2142,12 @@ def _cmd_data_fill(cat: Catalog, c: Command) -> None:
     # orders by key value, which needs a numeric key (string feature ids
     # get a stable hash; ties then break by hash order — same contract)
     df = df0.withColumn("__dfk", F.xxhash64(F.col(df0.columns[0]).cast("string")))
-    paths, fid = _rings_to_paths(df, "__dfk")
-    arcs, refs = build_topology(paths, "path_id")
-    feats = (_features_with_parts(refs, paths, fid)
-             .withColumnRenamed(fid, "__dfk")
+    topo = ring_topology(df, "__dfk")
+    feats = (topo.features.withColumnRenamed(topo.fid, "__dfk")
              .join(df.select("__dfk", field_name), "__dfk"))
-    filled = DF_.data_fill(feats, arcs, "__dfk", field_name)
+    filled = DF_.data_fill(feats, topo.arcs, "__dfk", field_name)
     # the join shuffles: tag the record order first, -o emits rows in it
-    attrs = df.drop(field_name)
-    if _ORDER_COL not in attrs.columns:
-        attrs = attrs.withColumn(_ORDER_COL, F.monotonically_increasing_id())
+    attrs = _order_tagged(df.drop(field_name))
     cat.replace(attrs.join(filled.select("__dfk", field_name), "__dfk", "left")
                 .drop("__dfk"))
 
@@ -2348,7 +2296,8 @@ def _cmd_slice(cat: Catalog, c: Command) -> None:
                              else str(c.opt("source")))
     if _geometry_kind(source) != "polygon":
         raise ValueError("-slice source must be a polygon layer")
-    df = _ensure_bbox(cat.df())
+    # the pair join shuffles: tag the record order first, -o emits rows in it
+    df = _order_tagged(_ensure_bbox(cat.df()))
     id_field = c.opt("id-field")
     cat.replace(slice_polygons(df, source,
                                id_field=str(id_field) if id_field else None))

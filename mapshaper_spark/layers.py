@@ -10,6 +10,19 @@ Mirrors the reference's two-table model (SURVEY.md §1):
   optional ``zs`` simplification thresholds, ``bbox``
   (/root/reference/src/paths/mapshaper-arcs.js:11-16).
 
+The shared-arc helpers are the one place each conversion between the two
+tables and ring coordinates is written, and every operator calls them:
+
+- ``absolute_arc_id_col``: the abs id of a signed reference;
+- ``arc_refs``: the one ``parts`` explode, one row per signed reference
+  (key, ring_idx, seq, signed, aid);
+- ``concat_arcs``: the one arc-to-ring concat (JVM higher-order functions),
+  grouped by any path key;
+- ``assemble_rings``: features + arcs -> ``rings_x``/``rings_y``.
+
+The way back, a ring layer to shared-arc topology, is
+``operators.topology.ring_topology``.
+
 The synthetic region mosaic reproduces FIXTURES.md §2: an R x C grid of
 rectangular "counties" over a bbox, with *shared* borders (each interior
 edge is a single arc referenced +id by one cell and ~id by its neighbor) —
@@ -21,8 +34,6 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -134,64 +145,53 @@ def region_mosaic(spark: SparkSession, cols: int = 6, rows: int = 4,
     return features_df, arcs_df
 
 
-RINGS_TYPE = T.StructType([
-    T.StructField("rings_x", T.ArrayType(T.ArrayType(T.DoubleType()))),
-    T.StructField("rings_y", T.ArrayType(T.ArrayType(T.DoubleType()))),
-])
+def arc_refs(features: DataFrame, key: str) -> DataFrame:
+    """One row per signed arc reference of ``features``' ``parts``:
+    (key, ring_idx, seq, signed, aid) — the ring's index in the feature,
+    the reference's position in the ring, the signed id and its absolute
+    arc id (long)."""
+    return (features.select(key, F.posexplode("parts").alias("ring_idx", "refs"))
+            .select(key, "ring_idx", F.posexplode("refs").alias("seq", "signed"))
+            .withColumn("aid", absolute_arc_id_col(F.col("signed")).cast("long")))
+
+
+def concat_arcs(refs: DataFrame, arcs: DataFrame, path: Sequence[str],
+                seq: str = "arc_seq") -> DataFrame:
+    """refs(*path, seq, signed) + arcs(arc_id, xs, ys) -> (*path, xs, ys):
+    each path's arcs in ``seq`` order, reversed where referenced ~id,
+    concatenated without the junction vertex consecutive arcs share — all
+    JVM higher-order functions."""
+    oriented = (refs.join(
+        arcs.select(F.col("arc_id").alias("__aid"), "xs", "ys"),
+        absolute_arc_id_col(F.col("signed")) == F.col("__aid"))
+        .select(*path, seq,
+                F.when(F.col("signed") < 0, F.reverse("xs")).otherwise(F.col("xs")).alias("xs"),
+                F.when(F.col("signed") < 0, F.reverse("ys")).otherwise(F.col("ys")).alias("ys")))
+    grouped = (oriented.groupBy(*path)
+               .agg(F.sort_array(F.collect_list(
+                   F.struct(seq, "xs", "ys"))).alias("parts")))
+    concat = ("flatten(transform(parts, (p, i) -> IF(i = 0, p.{c}, "
+              "slice(p.{c}, 2, size(p.{c}) - 1))))")
+    return grouped.select(
+        *path,
+        F.expr(concat.format(c="xs")).alias("xs"),
+        F.expr(concat.format(c="ys")).alias("ys"))
 
 
 def assemble_rings(features: DataFrame, arcs: DataFrame, key: str = "rid") -> DataFrame:
     """Join features' signed arc-id parts with the arcs table and concatenate
     per-ring coordinate arrays (reversing arcs referenced with ~id).
 
-    Distributed plan: posexplode parts -> posexplode arc refs -> equi-join on
-    abs(arc_id) (the arcs side is typically broadcast) -> groupBy feature +
-    applyInPandas concat. Scales with #features; each ring must fit in a row
-    (same envelope as the reference, which holds whole arcs in memory).
+    Distributed plan: ``arc_refs`` -> ``concat_arcs`` per (feature, ring)
+    -> regroup per feature in ring order. Scales with #features; each ring
+    must fit in a row (same envelope as the reference, which holds whole
+    arcs in memory).
     """
-    exploded = (
-        features.select(key, F.posexplode("parts").alias("part_idx", "refs"))
-        .select(key, "part_idx", F.posexplode("refs").alias("seq", "signed"))
-        .withColumn("aid", absolute_arc_id_col(F.col("signed")).cast("long"))
-        .withColumn("rev", F.col("signed") < 0)
-    )
-    joined = exploded.join(arcs.select("arc_id", "xs", "ys"),
-                           exploded.aid == arcs.arc_id, "left")
-
-    def _concat(pdf: pd.DataFrame) -> pd.DataFrame:
-        kv = pdf[["k", "part_idx"]].iloc[0]
-        pdf = pdf.sort_values("seq")
-        xs_out: list[float] = []
-        ys_out: list[float] = []
-        for xs, ys, rev in zip(pdf["xs"], pdf["ys"], pdf["rev"]):
-            xa = np.asarray(xs, dtype=np.float64)
-            ya = np.asarray(ys, dtype=np.float64)
-            if rev:
-                xa, ya = xa[::-1], ya[::-1]
-            if xs_out and xs_out[-1] == xa[0] and ys_out[-1] == ya[0]:
-                xa, ya = xa[1:], ya[1:]
-            xs_out.extend(xa.tolist())
-            ys_out.extend(ya.tolist())
-        return pd.DataFrame({"k": [kv.iloc[0]], "part_idx": [kv.iloc[1]],
-                             "ring_x": [xs_out], "ring_y": [ys_out]})
-
-    ring_schema = T.StructType([
-        T.StructField("k", joined.schema[key].dataType),
-        T.StructField("part_idx", T.IntegerType()),
-        T.StructField("ring_x", T.ArrayType(T.DoubleType())),
-        T.StructField("ring_y", T.ArrayType(T.DoubleType())),
-    ])
-    rings = (
-        joined.withColumnRenamed(key, "k")
-        .groupBy("k", "part_idx")
-        .applyInPandas(_concat, schema=ring_schema)
-    )
+    rings = concat_arcs(arc_refs(features, key), arcs, [key, "ring_idx"], "seq")
     per_feature = (
-        rings.groupBy("k")
-        .agg(F.sort_array(F.collect_list(F.struct("part_idx", "ring_x", "ring_y"))).alias("rs"))
-        .select(F.col("k").alias(key),
-                F.col("rs.ring_x").alias("rings_x"),
-                F.col("rs.ring_y").alias("rings_y"))
+        rings.groupBy(key)
+        .agg(F.sort_array(F.collect_list(F.struct("ring_idx", "xs", "ys"))).alias("rs"))
+        .select(key, F.col("rs.xs").alias("rings_x"), F.col("rs.ys").alias("rings_y"))
     )
     return features.join(per_feature, key)
 

@@ -8,9 +8,9 @@ final island-smoothing pass is not reproduced.) Tie-break here: lowest
 neighbor key (deterministic under parallel evaluation; the reference's tie
 falls to first-encountered arc order, which is input-order dependent).
 
-Plan shape: the neighbor-pair weight table is built ONCE (explode arcs ->
-groupBy arc -> pair -> sum arc length); each pass is one broadcast-join +
-groupBy(argmax), materialized with ``localCheckpoint`` so the next pass
+Plan shape: the neighbor-pair weight table is built ONCE (the shared arcs
+of ``dissolve.innerlines`` -> sum arc length per pair); each pass is one
+broadcast-join + groupBy(argmax), materialized with ``localCheckpoint`` so the next pass
 plans against the filled table, not against one join per earlier pass —
 no Python.
 """
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapshaper_spark.layers import absolute_arc_id_col
+from mapshaper_spark.operators.dissolve import innerlines
 
 
 def arc_length_col() -> F.Column:
@@ -36,14 +36,7 @@ def arc_length_col() -> F.Column:
 def neighbor_weights(features: DataFrame, arcs: DataFrame, key: str) -> DataFrame:
     """(key_a, key_b, weight) for every adjacent feature pair; weight = total
     shared border length (sum over shared arcs)."""
-    exploded = (features.select(key, F.explode("parts").alias("refs"))
-                .select(key, F.explode("refs").alias("signed"))
-                .withColumn("aid", absolute_arc_id_col(F.col("signed")).cast("long")))
-    sides = (exploded.groupBy("aid")
-             .agg(F.collect_set(key).alias("ks"), F.count(F.lit(1)).alias("n_refs"))
-             .filter((F.size("ks") == 2) & (F.col("n_refs") == 2))
-             .select("aid", F.array_min("ks").alias("key_a"),
-                     F.array_max("ks").alias("key_b")))
+    sides = innerlines(features, key)
     lengths = arcs.select(F.col("arc_id").alias("aid"), arc_length_col().alias("len"))
     pairs = sides.join(lengths, "aid")
     return pairs.groupBy("key_a", "key_b").agg(F.sum("len").alias("weight"))

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapshaper_spark.layers import absolute_arc_id_col
+from mapshaper_spark.layers import arc_refs
 from mapshaper_spark.operators.attributes import calc_exprs
 
 
@@ -98,12 +98,8 @@ def dissolve_polygons(features: DataFrame, arcs: DataFrame, group: str) -> DataF
       -> keep unpaired arcs, join arc endpoints (broadcast)      (map-side)
       -> groupBy(group) ring-walk pandas UDF                     (shuffle 2)
     """
-    exploded = (
-        features.select(group, F.explode("parts").alias("refs"))
-        .select(group, F.explode("refs").alias("signed"))
-        .withColumn("aid", absolute_arc_id_col(F.col("signed")))
-        .withColumn("fwd", (F.col("signed") >= 0).cast("int"))
-    )
+    exploded = arc_refs(features, group).withColumn(
+        "fwd", (F.col("signed") >= 0).cast("int"))
     counts = (exploded.groupBy(group, "aid")
               .agg(F.sum("fwd").alias("nf"), F.sum(1 - F.col("fwd")).alias("nr")))
     boundary = (counts.filter(F.col("nf") != F.col("nr"))
@@ -171,21 +167,11 @@ def dissolve_polygons(features: DataFrame, arcs: DataFrame, group: str) -> DataF
 def innerlines(features: DataFrame, group_key: str) -> DataFrame:
     """-innerlines (mapshaper-innerlines.js:3-34 via getArcClassifier,
     mapshaper-arc-classifier.js:4-46): arcs flanked by two different features
-    (or feature groups). Returns (aid, left key, right key) for shared arcs.
-
-    Pure DataFrame: explode shape->arc pairs, groupBy(abs arc), collect the
-    (<=2) flanking features."""
-    exploded = (
-        features.select(group_key, F.explode("parts").alias("refs"))
-        .select(group_key, F.explode("refs").alias("signed"))
-        .withColumn("aid", absolute_arc_id_col(F.col("signed")))
-    )
-    sides = (exploded.groupBy("aid")
-             .agg(F.collect_set(group_key).alias("ks"), F.count(F.lit(1)).alias("n_refs")))
-    return (sides.filter((F.size("ks") == 2) & (F.col("n_refs") == 2))
-            .select("aid",
-                    F.array_min("ks").alias("key_a"),
-                    F.array_max("ks").alias("key_b")))
+    (or feature groups). Returns (aid, left key, right key) for shared arcs:
+    the two-reference rows of ``lines`` whose keys differ."""
+    return (lines(features, group_key)
+            .filter(F.col("key_a") != F.col("key_b"))
+            .select("aid", "key_a", "key_b"))
 
 
 def polygon_neighbors(features: DataFrame, key: str) -> DataFrame:
@@ -200,12 +186,7 @@ def lines(features: DataFrame, group_key: str) -> DataFrame:
     feature), '<field>' boundary (two features with different group values),
     or 'inner' (two features, same group value). Returns
     (aid, line_type, key_a, key_b)."""
-    exploded = (
-        features.select(group_key, F.explode("parts").alias("refs"))
-        .select(group_key, F.explode("refs").alias("signed"))
-        .withColumn("aid", absolute_arc_id_col(F.col("signed")))
-    )
-    sides = (exploded.groupBy("aid")
+    sides = (arc_refs(features, group_key).groupBy("aid")
              .agg(F.collect_list(group_key).alias("ks"),
                   F.count(F.lit(1)).alias("n_refs")))
     two = F.col("n_refs") == 2

@@ -1002,7 +1002,7 @@ def dissolve2(features: DataFrame, group: str,
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         g = pdf[group].iloc[0]
         cl = pdf["__cluster"].iloc[0]
-        ring_sets = _ring_sets(_canonical_order(pdf))
+        ring_sets = _ring_sets(_canonical_order(pdf, group))
         merged = dissolve2_rings(ring_sets, [g] * len(ring_sets),
                                  gap_threshold=gap_threshold).get(g, [])
         area = sum(K.planar_path_area(np.asarray(rx), np.asarray(ry))
@@ -1158,15 +1158,19 @@ def _unit_edges(df: DataFrame, extra_cols: list):
 _RINGS = T.ArrayType(T.ArrayType(T.DoubleType()))
 
 
-def _canonical_order(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Feature rows sorted by their first vertex: shuffle row order varies
-    run to run, and face assembly and near-coincident-border gap
-    assignment are order-sensitive at the 1e-9 sliver level."""
-    pdf = pdf.assign(__ord=[
-        (rxs[0][0] if len(rxs) and len(rxs[0]) else 0.0,
-         rys[0][0] if len(rys) and len(rys[0]) else 0.0)
-        for rxs, rys in zip(pdf["rings_x"], pdf["rings_y"])])
-    return pdf.sort_values("__ord").drop(columns="__ord")
+def _canonical_order(pdf: pd.DataFrame, key: str) -> pd.DataFrame:
+    """Feature rows sorted by their first vertex, ties by the ``key`` value,
+    then by the ring coordinates: shuffle row order varies with the
+    partitioning, and face assembly, equal-weight face assignment and
+    near-coincident-border gap assignment are order-sensitive."""
+    def rank(i: int):
+        rxs, rys = pdf["rings_x"].iat[i], pdf["rings_y"].iat[i]
+        k = pdf[key].iat[i]
+        first = ((rxs[0][0], rys[0][0]) if len(rxs) and len(rxs[0])
+                 else (0.0, 0.0))
+        return (first, k is None, k,
+                [tuple(r) for r in rxs], [tuple(r) for r in rys])
+    return pdf.iloc[sorted(range(len(pdf)), key=rank)]
 
 
 def _ring_sets(pdf: pd.DataFrame) -> list:
@@ -1366,7 +1370,7 @@ def _dissolve2_cells(labeled: DataFrame, group: str,
     def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         cl = pdf["__cluster"].iloc[0]
         cell = pdf["__cell"].iloc[0]
-        pdf = _canonical_order(pdf)
+        pdf = _canonical_order(pdf, group)
         groups, weights = pdf[group].tolist(), pdf["__garea"].tolist()
         ring_sets = _seam_subdivide(_ring_sets(pdf), bc_meta.value[cl], cell)
         rows = []
@@ -1714,7 +1718,7 @@ def clean(features: DataFrame, key: str, gap_fill: bool = True,
     ])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = _canonical_order(pdf)
+        pdf = _canonical_order(pdf, key)
         keys = pdf[key].tolist()
         cleaned = dissolve2_rings(_ring_sets(pdf), keys,
                                   gap_threshold=gap_threshold)
@@ -1907,7 +1911,7 @@ def mosaic(features: DataFrame, key: str = None, res: int = 6,
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         for rings, area, member in mosaic_rings(
-                _ring_sets(_canonical_order(pdf))):
+                _ring_sets(_canonical_order(pdf, key))):
             rows.append({"rings_x": [fx.tolist() if hasattr(fx, "tolist") else list(fx)
                                      for fx, _fy in rings],
                          "rings_y": [fy.tolist() if hasattr(fy, "tolist") else list(fy)
@@ -1943,7 +1947,7 @@ def mosaic(features: DataFrame, key: str = None, res: int = 6,
                              lambda pdf: kernel(pdf), schema=out_schema))
     multi = (labeled.filter((F.col("__csz") > 1) &
                             (F.col("__csz") <= max_task_features))
-             .select("__cluster", "rings_x", "rings_y")
+             .select(key, "__cluster", "rings_x", "rings_y")
              .groupBy("__cluster").applyInPandas(
                  lambda pdf: kernel(pdf), schema=out_schema))
     out = singles.select(*[f.name for f in out_schema.fields]) \

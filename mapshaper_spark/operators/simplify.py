@@ -70,16 +70,16 @@ def compute_thresholds(arcs: DataFrame, method: str = "weighted_visvalingam",
 def _protect_shape_serial(shape_rows: list, arc_zz: dict,
                           out_aid: list, out_vidx: list) -> None:
     """protectShape for ONE shape against the LIVE zz state (keep-shapes.js
-    :22-94): pick the largest ring by bbox area, then iteratively lock the
-    highest-threshold removable vertices (every occurrence of the target z
-    within the winning arc) until the ring's area at
-    retained-interval=Infinity exceeds 1e-10. Mutates ``arc_zz`` in place
-    like the reference's shared zz array."""
+    :22-94): pick the largest ring by bbox area (the first in ring order
+    on a tie), then iteratively lock the highest-threshold removable
+    vertices (every occurrence of the target z within the winning arc)
+    until the ring's area at retained-interval=Infinity exceeds 1e-10.
+    Mutates ``arc_zz`` in place like the reference's shared zz array."""
     by_ring: dict = {}
     for r in shape_rows:
         by_ring.setdefault(r["ring_idx"], []).append(r)
     best_ring, best_area = None, -1.0
-    for ring_idx, rows in by_ring.items():
+    for ring_idx, rows in sorted(by_ring.items()):
         xa = np.concatenate([np.asarray(r["xs"]) for r in rows])
         ya = np.concatenate([np.asarray(r["ys"]) for r in rows])
         area = float((xa.max() - xa.min()) * (ya.max() - ya.min()))
@@ -149,12 +149,10 @@ def keep_shapes(features: DataFrame, arcs_with_zs: DataFrame,
     continent-sized mesh through one task.
 
     Returns a new arcs DataFrame with the protected zs."""
-    from mapshaper_spark.layers import absolute_arc_id_col
+    from mapshaper_spark.layers import arc_refs
     from mapshaper_spark.operators.dedup import dup_clusters
 
-    exploded = (features.select(key, F.posexplode("parts").alias("ring_idx", "refs"))
-                .select(key, "ring_idx", F.posexplode("refs").alias("seq", "signed"))
-                .withColumn("aid", absolute_arc_id_col(F.col("signed")).cast("long")))
+    exploded = arc_refs(features, key)
     joined = exploded.join(arcs_with_zs.select(
         F.col("arc_id").alias("aid"), "xs", "ys", "zs"), "aid")
 

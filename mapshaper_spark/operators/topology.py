@@ -33,7 +33,7 @@
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mapshaper_spark.layers import absolute_arc_id_col, arc_refs, concat_arcs
 from mapshaper_spark.plans.scale import ranked_ids
 
 
@@ -264,6 +265,54 @@ def build_topology(paths: DataFrame, path_id: str):
     return arcs, refs
 
 
+def rings_to_paths(df: DataFrame, key: str):
+    """(key, rings_x, rings_y) -> (paths(path_id, fid, ri, xs, ys), fid):
+    one row per ring, ``ri`` its index in the feature. path_id hashes
+    (key, ring index, coords) — deterministic and unique per ring."""
+    fid = "__fid"
+    exploded = (df.select(F.col(key).alias(fid),
+                          F.posexplode(F.arrays_zip(
+                              F.col("rings_x").alias("xs"),
+                              F.col("rings_y").alias("ys"))).alias("ri", "r"))
+                .select(fid, "ri", F.col("r.xs").alias("xs"),
+                        F.col("r.ys").alias("ys")))
+    paths = exploded.select(
+        F.xxhash64(F.col(fid).cast("string"), "ri", "xs", "ys").alias("path_id"),
+        fid, "ri", "xs", "ys")
+    return paths, fid
+
+
+class RingTopology(NamedTuple):
+    """A ring layer's shared-arc topology (``paths_topology``)."""
+    features: DataFrame  # (fid, parts): signed arc ids per ring, ring order
+    arcs: DataFrame      # build_topology's arcs
+    refs: DataFrame      # (path_id, arc_seq, signed)
+    paths: DataFrame     # (path_id, fid, ri, xs, ys): one row per ring
+    fid: str             # the feature-key column of features and paths
+
+
+def ring_topology(df: DataFrame, key: str) -> RingTopology:
+    """The one entry from a ring layer (key, rings_x, rings_y) to shared
+    arcs: rings_to_paths -> paths_topology."""
+    return paths_topology(*rings_to_paths(df, key))
+
+
+def paths_topology(paths: DataFrame, fid: str) -> RingTopology:
+    """paths(path_id, fid, ri, xs, ys), one row per ring -> build_topology
+    plus each feature's ``parts``, its rings in ring-index order (the shape
+    dissolve_polygons, keep_shapes and the arc classifiers read). Arc ids
+    follow first use in path_id order."""
+    arcs, refs = build_topology(paths.select("path_id", "xs", "ys"), "path_id")
+    ring_refs = refs.groupBy("path_id").agg(F.expr(
+        "transform(sort_array(collect_list(struct(arc_seq, signed))),"
+        " s -> s.signed)").alias("__ring"))
+    features = (ring_refs.join(paths.select("path_id", fid, "ri"), "path_id")
+                .groupBy(fid).agg(F.expr(
+                    "transform(sort_array(collect_list(struct(ri, __ring))),"
+                    " r -> r.__ring)").alias("parts")))
+    return RingTopology(features, arcs, refs, paths, fid)
+
+
 # ---------------------------------------------------------------------------
 # segment intersection search (stripe-partitioned)
 # ---------------------------------------------------------------------------
@@ -416,12 +465,7 @@ def dissolve_polylines(features: DataFrame, arcs: DataFrame, group: str) -> Data
     """-dissolve on a polyline layer: concatenate each group's arcs into
     maximal connected chains (polyline-dissolve.js:7-76 — greedy walk from
     unvisited arc ends through degree-matching nodes)."""
-    from mapshaper_spark.layers import absolute_arc_id_col
-
-    exploded = (features.select(group, F.explode("parts").alias("refs"))
-                .select(group, F.explode("refs").alias("signed"))
-                .withColumn("aid", absolute_arc_id_col(F.col("signed")))
-                .select(group, "aid").distinct())
+    exploded = arc_refs(features, group).select(group, "aid").distinct()
     ends = arcs.select("arc_id", "xs", "ys")
     b = exploded.join(ends, exploded.aid == ends.arc_id).drop("arc_id")
 
@@ -871,11 +915,7 @@ def dissolve_arcs(features: DataFrame, arcs: DataFrame, key: str):
     per-arc mergeable-endpoint flag join, then a per-feature ring rewrite in
     applyInPandas over (refs ⋈ arcs), then arc re-id by first use — the
     same shuffle shape as build_topology. Returns (new_features, new_arcs)."""
-    from mapshaper_spark.layers import absolute_arc_id_col
-
-    refs = (features.select(key, F.posexplode("parts").alias("ring_idx", "ring"))
-            .select(key, "ring_idx", F.posexplode("ring").alias("pos", "signed"))
-            .withColumn("aid", absolute_arc_id_col(F.col("signed")).cast("long")))
+    refs = arc_refs(features, key)
     used = refs.groupBy("aid").agg(F.count(F.lit(1)).alias("n_uses"))
     live_arcs = arcs.join(used, arcs.arc_id == used.aid).drop("aid")
 
@@ -895,8 +935,8 @@ def dissolve_arcs(features: DataFrame, arcs: DataFrame, key: str):
     # 'issue #140' cases): a path's first/last node is a topological
     # boundary even when only two arc-ends meet there
     bounds = (refs.groupBy(key, "ring_idx")
-              .agg(F.min_by(F.col("signed"), F.col("pos")).alias("s0"),
-                   F.max_by(F.col("signed"), F.col("pos")).alias("s1"))
+              .agg(F.min_by(F.col("signed"), F.col("seq")).alias("s0"),
+                   F.max_by(F.col("signed"), F.col("seq")).alias("s1"))
               .withColumn("a0", absolute_arc_id_col(F.col("s0")).cast("long"))
               .withColumn("a1", absolute_arc_id_col(F.col("s1")).cast("long")))
     geom = live_arcs.select(F.col("arc_id").alias("gid"),
@@ -938,7 +978,7 @@ def dissolve_arcs(features: DataFrame, arcs: DataFrame, key: str):
     payload = (refs.join(live_arcs.select(F.col("arc_id").alias("aid"), "xs", "ys")
                          .join(flags, F.col("aid") == flags.arc_id).drop("arc_id"),
                          "aid")
-               .select(key, "ring_idx", "pos", "signed", "xs", "ys", "m0", "m1"))
+               .select(key, "ring_idx", "seq", "signed", "xs", "ys", "m0", "m1"))
 
     out_schema = T.StructType([
         features.schema[key],
@@ -955,7 +995,7 @@ def dissolve_arcs(features: DataFrame, arcs: DataFrame, key: str):
     def rewrite(pdf: pd.DataFrame) -> pd.DataFrame:
         k = pdf[iter_key].iloc[0]
         new_parts = []
-        pdf = pdf.sort_values(["ring_idx", "pos"])
+        pdf = pdf.sort_values(["ring_idx", "seq"])
         for _ri, ring in pdf.groupby("ring_idx", sort=True):
             chains = []
             first_start_mergeable = None
@@ -1436,57 +1476,16 @@ def add_intersection_cuts(features: DataFrame, arcs: DataFrame, key: str,
     hits = find_segment_intersections(arcs, same_arc=same_arc)
     arcs_cut = insert_cut_points(arcs, hits)
 
-    # expand features to per-ring coordinate paths over the cut arcs, then
-    # rebuild topology (build_topology splits at the now-shared cut points)
-    from mapshaper_spark.layers import absolute_arc_id_col
-    exploded = (features.select(key, F.posexplode("parts").alias("ring_idx", "refs"))
-                .select(key, "ring_idx", F.posexplode("refs").alias("seq", "signed"))
-                .withColumn("aid", absolute_arc_id_col(F.col("signed")).cast("long"))
-                .withColumn("rev", F.col("signed") < 0))
-    joined = exploded.join(arcs_cut.select(F.col("arc_id").alias("aid"), "xs", "ys"),
-                           "aid")
-
-    path_schema = T.StructType([
-        T.StructField("path_id", T.StringType()),
-        T.StructField("xs", T.ArrayType(T.DoubleType())),
-        T.StructField("ys", T.ArrayType(T.DoubleType())),
-    ])
-
-    def concat(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("seq")
-        k = pdf[key].iloc[0]
-        ri = pdf["ring_idx"].iloc[0]
-        xs_out: list[float] = []
-        ys_out: list[float] = []
-        for xs, ys, rev in zip(pdf["xs"], pdf["ys"], pdf["rev"]):
-            xa = np.asarray(xs, dtype=np.float64)
-            ya = np.asarray(ys, dtype=np.float64)
-            if rev:
-                xa, ya = xa[::-1], ya[::-1]
-            if xs_out and xs_out[-1] == xa[0] and ys_out[-1] == ya[0]:
-                xa, ya = xa[1:], ya[1:]
-            xs_out.extend(xa.tolist())
-            ys_out.extend(ya.tolist())
-        return pd.DataFrame({"path_id": [f"{k}#{ri}"],
-                             "xs": [xs_out], "ys": [ys_out]})
-
-    paths = joined.groupBy(key, "ring_idx").applyInPandas(concat, path_schema)
-    new_arcs, refs = build_topology(paths, "path_id")
-
-    parts = (refs
-             .withColumn("__k", F.substring_index("path_id", "#", 1))
-             .withColumn("__ri", F.substring_index("path_id", "#", -1).cast("int"))
-             .groupBy("__k", "__ri")
-             .agg(F.transform(F.sort_array(F.collect_list(
-                 F.struct("arc_seq", F.col("signed").alias("s")))),
-                 lambda st: st["s"].cast("int")).alias("ring"))
-             .groupBy("__k")
-             .agg(F.transform(F.sort_array(F.collect_list(
-                 F.struct("__ri", F.col("ring").alias("r")))),
-                 lambda st: st["r"]).alias("parts")))
-    key_type = features.schema[key].dataType
-    new_features = parts.select(F.col("__k").cast(key_type).alias(key), "parts")
-    return new_features, new_arcs
+    # concat each ring over the cut arcs, then rebuild topology
+    # (build_topology splits at the now-shared cut points); the "key#ring"
+    # path ids number the new arcs in feature order
+    rings = concat_arcs(arc_refs(features, key), arcs_cut, [key, "ring_idx"],
+                        "seq")
+    topo = paths_topology(rings.select(
+        F.concat_ws("#", F.col(key).cast("string"), "ring_idx").alias("path_id"),
+        F.col(key).alias("__fid"), F.col("ring_idx").alias("ri"), "xs", "ys"),
+        "__fid")
+    return topo.features.withColumnRenamed(topo.fid, key), topo.arcs
 
 
 # ---------------------------------------------------------------------------
@@ -1565,10 +1564,7 @@ def repair_self_intersections(features: DataFrame, arcs: DataFrame, key: str,
         F.element_at("xs", 1).alias("x0"), F.element_at("ys", 1).alias("y0"),
         F.element_at("xs", -1).alias("x1"), F.element_at("ys", -1).alias("y1"),
         contrib.alias("C"))
-    ex = (features.select(key, F.explode(F.flatten("parts")).alias("signed"))
-          .select(key, F.when(F.col("signed") >= 0, F.col("signed"))
-                  .otherwise(-F.col("signed") - 1).cast("long").alias("aid"))
-          .distinct())
+    ex = arc_refs(features, key).select(key, "aid").distinct()
     ainfo = (ex.join(info, "aid")
              .groupBy(key)
              .agg(F.collect_list(F.struct("aid", "x0", "y0", "x1", "y1", "C"))

@@ -870,6 +870,65 @@ class TestSimplifyRequest:
         assert _features(got) == _features(want)
 
 
+def _with_shuffle_partitions(spark, n, fn):
+    """fn() with exactly n shuffle partitions (adaptive coalescing off, so
+    small inputs do not collapse to one), then the settings restored."""
+    confs = {"spark.sql.shuffle.partitions": str(n),
+             "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        return fn()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_keep_shapes_protects_the_first_of_equal_rings(spark, tmp_path):
+    """keep-shapes protects a feature's largest ring, the first in ring
+    order on a bbox-area tie: of eight equal squares the first survives
+    1%, whatever the shuffle partitioning."""
+    squares = [[[[x, 0.0], [x, 1.0], [x + 1.0, 1.0], [x + 1.0, 0.0],
+                 [x, 0.0]]] for x in range(0, 16, 2)]
+    src = tmp_path / "a.json"
+    src.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"name": "a"},
+         "geometry": {"type": "MultiPolygon", "coordinates": squares}}]}))
+
+    def kept(n):
+        out = tmp_path / f"o{n}.json"
+        _with_shuffle_partitions(spark, n, lambda: run_commands(
+            spark, f"-i {src} -simplify 1% keep-shapes -o {out}"))
+        rings = _features(out)[0]["geometry"]["coordinates"]
+        return sorted(r for r in rings if len(r) > 2)
+
+    assert kept(1) == kept(4) == squares[0]
+
+
+def test_slice_writes_target_record_order(spark, tmp_path):
+    """-slice's pair join shuffles; -o writes the target's record order,
+    the same bytes whatever the shuffle partitioning."""
+    src, clip = tmp_path / "a.json", tmp_path / "clip.json"
+    _county_grid(src, n=4, v=8)
+    diamond = [[-95.0, 31.0], [-91.0, 35.0], [-95.0, 39.0], [-99.0, 35.0],
+               [-95.0, 31.0]]
+    clip.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"zone": "d"},
+         "geometry": {"type": "Polygon", "coordinates": [diamond]}}]}))
+
+    def sliced(n):
+        out = tmp_path / f"o{n}.json"
+        _with_shuffle_partitions(spark, n, lambda: run_commands(
+            spark, f"-i {src} -slice {clip} -o {out}"))
+        return out.read_bytes()
+
+    got = sliced(2)
+    assert got == sliced(4)
+    names = [f["properties"]["name"] for f in json.loads(got)["features"]]
+    assert names == sorted(names) and len(names) > 1
+
+
 class TestDissolveRequest:
     def test_warm_request_job_budget(self, spark, tmp_path):
         _county_grid(tmp_path / "a.json")
@@ -881,14 +940,14 @@ class TestDissolveRequest:
         """Join strategies are Spark's choice: with every broadcast
         disabled, the shared-arc topology and -dissolve come out as they
         do under the default (adaptive) plans."""
-        from mapshaper_spark.cli import _rings_to_paths
-        from mapshaper_spark.operators.topology import build_topology
+        from mapshaper_spark.operators.topology import (build_topology,
+                                                        rings_to_paths)
         src = tmp_path / "a.json"
         _county_grid(src, n=3)
 
         def run(tag):
             df = run_commands(spark, f"-i {src}").df()
-            paths, _ = _rings_to_paths(df, df.columns[0])
+            paths, _ = rings_to_paths(df, df.columns[0])
             arcs, refs = build_topology(paths, "path_id")
             out = tmp_path / f"{tag}.json"
             run_commands(spark, f"-i {src} -dissolve -o {out}")

@@ -526,6 +526,28 @@ class TestClean:
         assert all(r.rings_x == df.filter(F.col("fid") == r.fid)
                    .collect()[0].rings_x for r in out)
 
+    def test_two_level_clean_ignores_input_partitioning(self, spark):
+        """Equal-weight overlaps in a forced two-level clean fall to the
+        lowest feature key, not to the shuffle's row order: 36 overlapping
+        equal squares clean to one result from 1, 2, 4 and 7 partitions."""
+        from mapshaper_spark.operators.overlay import clean
+        df = spark.createDataFrame(
+            [(i * 6 + j, [[float(i), float(i), i + 1.2, i + 1.2, float(i)]],
+              [[float(j), j + 1.2, j + 1.2, float(j), float(j)]])
+             for i in range(6) for j in range(6)],
+            "fid long, rings_x array<array<double>>, rings_y array<array<double>>")
+
+        def cleaned(n):
+            out = clean(df.repartition(n), "fid", max_task_features=1,
+                        target_per_cell=4)
+            return sorted(map(tuple, out.select("fid", "rings_x", "rings_y")
+                              .collect()))
+
+        want = cleaned(1)
+        assert len(want) == 36
+        for n in (2, 4, 7):
+            assert cleaned(n) == want, n
+
 
 class TestDissolve2TwoLevel:
     """Two-level mosaic (hot-cluster decomposition): per-cell kernels +

@@ -562,6 +562,31 @@ class TestAddIntersectionCuts:
         assert asm[20] == {(1.0, 1.0), (1.0, 3.0), (3.0, 3.0), (3.0, 1.0),
                            (1.0, 2.0), (2.0, 1.0)}
 
+    def test_ring_rebuild_runs_no_python(self, spark):
+        """assemble_rings and add_intersection_cuts' ring rebuild concat
+        arcs with JVM functions: they add no grouped-pandas or Arrow UDF
+        node to the plans of their inputs."""
+        def py_nodes(df):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            return (plan.count("FlatMapGroupsInPandas") +
+                    plan.count("ArrowEvalPython"))
+
+        feats, arcs = L.region_mosaic(spark, 3, 2)
+        assert py_nodes(L.assemble_rings(feats, arcs)) == 0
+        arcs = spark.createDataFrame(
+            [(0, [0.0, 0.0, 2.0, 2.0, 0.0], [0.0, 2.0, 2.0, 0.0, 0.0], 5,
+              {"xmin": 0.0, "ymin": 0.0, "xmax": 2.0, "ymax": 2.0}),
+             (1, [1.0, 1.0, 3.0, 3.0, 1.0], [1.0, 3.0, 3.0, 1.0, 1.0], 5,
+              {"xmin": 1.0, "ymin": 1.0, "xmax": 3.0, "ymax": 3.0})],
+            "arc_id long, xs array<double>, ys array<double>, n int, "
+            "bbox struct<xmin:double,ymin:double,xmax:double,ymax:double>")
+        feats = spark.createDataFrame([(10, [[0]]), (20, [[1]])],
+                                      "fid int, parts array<array<int>>")
+        f2, _ = TP.add_intersection_cuts(feats, arcs, "fid")
+        # the cut step's own segment sweep is a grouped-pandas kernel
+        cut = TP.insert_cut_points(arcs, TP.find_segment_intersections(arcs))
+        assert py_nodes(f2) == py_nodes(cut) > 0
+
     def test_no_intersections_is_identity_shape(self, spark):
         arcs = spark.createDataFrame(
             [(0, [0.0, 0.0, 1.0, 1.0, 0.0], [0.0, 1.0, 1.0, 0.0, 0.0], 5,
