@@ -31,6 +31,7 @@ Layer geometry is carried the engine's way: polygons/paths as
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
@@ -213,61 +214,97 @@ def parse_commands(command_str: str) -> list[Command]:
     return cmds
 
 
+@dataclass(frozen=True, eq=False)
+class Layer:
+    """One named layer: its frame plus what the program knows about it
+    (the reference's layer record with its dataset's info,
+    src/dataset/mapshaper-dataset-utils.js). A command never edits one: it
+    puts a whole new value in the catalog (``Catalog.replace``), derives
+    one from its source (``with_df``), or merges several
+    (``_merged_layer``)."""
+    df: DataFrame
+    hint: str | None = None  # the kind an importer or command declared
+    format: str | None = None  # input format, which a pathless -o mirrors
+    delim: str | None = None  # sniffed input delimiter (input_delimiter)
+    crs: str | None = None  # proj4
+    prj: str | None = None  # the imported .prj WKT, re-exported untouched
+    json_crs: object = None  # an imported TopoJSON crs object
+    auto_fid: bool = False  # the fid column is the import's, not data
+    # coordinate-named columns (x/y/lon/lat) that are REAL data fields
+    # (e.g. after -points x=lat ...), so exports keep them as properties
+    # (commands-test.js 'converts csv to geojson points')
+    coord_data: frozenset = frozenset()
+    # what an importer learned for free about THIS frame (GeoJSON:
+    # ``bounds``); a value holding another frame starts without them
+    facts: dict = field(default_factory=dict)
+
+    @property
+    def kind(self) -> str:
+        """The declared kind, else the one the frame's columns show."""
+        return self.hint or _geometry_kind(self.df)
+
+    def with_df(self, df: DataFrame, **changes) -> Layer:
+        """This layer holding ``df``: the facts about the old frame go,
+        and so does a ring-kind hint the new frame has no rings for
+        (-lines turns a polygon layer into arcs)."""
+        hint = changes.pop("hint", self.hint)
+        if hint in ("polygon", "polyline") and "rings_x" not in df.columns:
+            hint = None
+        return dataclasses.replace(self, df=df, hint=hint, facts={},
+                                   **changes)
+
+
 @dataclass
 class Catalog:
     """Named layers + current target, mirroring internal.Catalog."""
     spark: SparkSession
-    layers: dict[str, DataFrame] = field(default_factory=dict)
+    layers: dict[str, Layer] = field(default_factory=dict)
     order: list[str] = field(default_factory=list)
     target: str | None = None
     outputs: dict[str, str | bytes | dict] = field(default_factory=dict)
     info: list[dict] = field(default_factory=list)
     calc_env: dict[str, object] = field(default_factory=dict)
-    kinds: dict[str, str] = field(default_factory=dict)  # layer kind hints
-    formats: dict[str, str] = field(default_factory=dict)  # input format per layer
-    delims: dict[str, str] = field(default_factory=dict)  # input_delimiter per layer
-    crs: dict[str, str] = field(default_factory=dict)  # proj4 per layer (.prj)
-    prj_text: dict[str, str] = field(default_factory=dict)  # original .prj WKT
-    json_crs: dict[str, object] = field(default_factory=dict)  # *JSON crs obj
     flags: set = field(default_factory=set)  # -quiet/-verbose/-debug
-    auto_fid: set = field(default_factory=set)  # layers whose fid is ours
-    # coordinate-named columns (x/y/lon/lat) that are REAL data fields of a
-    # layer (e.g. after -points x=lat ...), so exports keep them as
-    # properties (commands-test.js 'converts csv to geojson points')
-    coord_data: dict = field(default_factory=dict)
-    # facts an importer learned for free (GeoJSON: ``bounds``),
-    # keyed by the id of the exact DataFrame they describe and holding it,
-    # so any route that puts another frame in a layer drops them
-    facts: dict = field(default_factory=dict)
 
-    def add(self, name: str, df: DataFrame, make_target: bool = True) -> str:
+    def add(self, name: str, layer: Layer | DataFrame,
+            make_target: bool = True) -> str:
         base, k = name, 2
         while name in self.layers:
             name = f"{base}{k}"
             k += 1
-        self.layers[name] = df
+        self.layers[name] = layer if isinstance(layer, Layer) \
+            else Layer(layer)
         self.order.append(name)
         if make_target:
             self.target = name
         return name
 
-    def df(self, name: str | None = None) -> DataFrame:
+    def layer(self, name: str | None = None) -> Layer:
         name = name or self.target
         if name is None or name not in self.layers:
             raise ValueError(f"no target layer (have: {self.order})")
         return self.layers[name]
 
-    def replace(self, df: DataFrame, name: str | None = None) -> None:
-        self.layers[name or self.target] = df
+    def df(self, name: str | None = None) -> DataFrame:
+        return self.layer(name).df
 
-    def set_facts(self, df: DataFrame, **facts) -> None:
-        self.facts[id(df)] = (df, facts)
+    def replace(self, df: DataFrame, **changes) -> None:
+        """Put ``df`` in the target layer, with the metadata ``changes``
+        (Layer fields)."""
+        self.layers[self.target] = self.layer().with_df(df, **changes)
 
-    def fact(self, key: str):
-        """A fact about the target layer's CURRENT frame, or None."""
-        df = self.layers.get(self.target)
-        known = self.facts.get(id(df))
-        return known[1].get(key) if known and known[0] is df else None
+    def rename(self, names: dict[str, str]) -> None:
+        """Rename layers (old -> new) in one pass, so a swap keeps both."""
+        order = [names.get(n, n) for n in self.order]
+        if len(set(order)) < len(order):
+            raise ValueError(f"layer names must be unique: {order}")
+        self.layers = {names.get(n, n): v for n, v in self.layers.items()}
+        self.order = order
+        self.target = names.get(self.target, self.target)
+
+    def drop(self, name: str) -> None:
+        del self.layers[name]
+        self.order.remove(name)
 
 
 def _probably_latlong(df: DataFrame) -> bool:
@@ -398,23 +435,30 @@ def _kind_layer(df: DataFrame, gtypes: set,
     return df.drop(*drop), hint
 
 
+def _input_format(path: str, hint: str | None) -> str | None:
+    """The format a pathless -o mirrors (the reference derives the output
+    format from the imported file): geojson CONTENT in a .json file
+    round-trips as geojson; only a JSON array of records is format=json."""
+    ext = os.path.splitext(path)[1].lstrip(".").lower()
+    if ext == "json" and hint != "table":
+        ext = "geojson"
+    return ext if ext in ("json", "geojson", "csv", "tsv", "shp",
+                          "topojson") else None
+
+
 def _cmd_i(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.sources import delim as DL
     from mapshaper_spark.sources import geojson as GJ
     from mapshaper_spark.sources import shapefile as SH
     from mapshaper_spark.sources import topojson as TJ
 
-    dfs = []
-    prj_pending: dict[str, tuple] = {}
-    delim_pending: dict[str, str] = {}  # sniffed input_delimiter per path
-    auto_fid_paths: set[str] = set()
-    topo_paths: set[str] = set()  # inputs whose content was a Topology
+    found: list[tuple[str, Layer]] = []  # (layer name, layer) per input layer
     paths = list(c.values)
     if c.opt("files"):  # '-i files=a.json,b.json' (options-test.js)
         paths += parse_string_list(str(c.opt("files")))
     for path in paths:
         ext = os.path.splitext(path)[1].lower()
-        kind_hint = None
+        name = _layer_name(path)
         if ext in (".ndjson", ".geojsonl") or \
                 (not ext and os.path.isdir(path)):
             # distributed newline-delimited GeoJSON import (engine
@@ -422,15 +466,13 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
             # splittable text scan + Arrow-batched feature parse; the
             # property columns are extracted JVM-side (get_json_object)
             df = GJ.import_ndjson(cat.spark, path)
-            auto_fid_paths.add(path)
             gtypes = {r[0] for r in df.select("geometry_type")
                       .distinct().collect()} - {"null"}
             df, keys = _flatten_props_sampled(df)
-            df, kind_hint = _kind_layer(df, gtypes,
-                                        _property_artifacts(keys, gtypes))
-            dfs.append((path, df, kind_hint, None))
-            continue
-        if ext in (".json", ".geojson", ".topojson"):
+            df, hint = _kind_layer(df, gtypes,
+                                   _property_artifacts(keys, gtypes))
+            found.append((name, Layer(df, hint=hint, auto_fid=True)))
+        elif ext in (".json", ".geojson", ".topojson"):
             # utf-8-sig: the reference's readFile trims a BOM before
             # parsing (test/encodings-test.js 'trims BOM')
             with open(path, encoding="utf-8-sig") as f:
@@ -438,15 +480,17 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
             if isinstance(obj, list):  # JSON array of records = table
                 import pandas as _pd
                 pdf_ = _pd.DataFrame(obj)
-                if pdf_.shape[1] == 0:
+                no_fields = pdf_.shape[1] == 0
+                if no_fields:
                     # records with no fields are still features
                     # (include-test.js 'values cover existing fields'
                     # runs -each over [{}]); carry our import id so the
                     # frame has a column — exports skip auto fids
                     pdf_.insert(0, "fid", range(len(pdf_)))
-                    auto_fid_paths.add(path)
-                df = cat.spark.createDataFrame(pdf_)
-                kind_hint = "table"
+                found.append((name, Layer(
+                    cat.spark.createDataFrame(pdf_), hint="table",
+                    format=_input_format(path, "table"),
+                    auto_fid=no_fields)))
             elif obj.get("type") == "Topology" or "objects" in obj:
                 # a TopoJSON doc is recognized by its objects/arcs keys even
                 # without "type": "Topology" (identifyJSONString,
@@ -455,45 +499,43 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                 # feature ids land in FID; crs rides along for re-export
                 for obj_name, tdf, tkind, _ids in \
                         TJ.import_topojson_layers(cat.spark, obj):
-                    dfs.append((path, tdf, tkind, obj_name))
-                    if "crs" in obj:
-                        cat.json_crs[obj_name] = obj["crs"]
-                auto_fid_paths.add(path)
-                topo_paths.add(path)
-                continue
+                    found.append((obj_name, Layer(
+                        tdf, hint=tkind, format="topojson",
+                        json_crs=obj.get("crs"), auto_fid=True)))
             else:
                 table, fid_is_data = GJ.geojson_table(obj)
-                if not fid_is_data:
-                    auto_fid_paths.add(path)
                 gtypes = set(table.column("geometry_type").unique()
                              .to_pylist())
                 props = _property_artifacts(
                     table.column_names[1 + len(_IMPORT_GEOMETRY):],
                     gtypes - {"null"})
-                for name in props:  # the geometry column comes first
+                for prop in props:  # the geometry column comes first
                     table = table.remove_column(
-                        table.column_names.index(name))
+                        table.column_names.index(prop))
                 df = cat.spark.createDataFrame(table)
                 kinds = {_GEOJSON_KINDS[t] for t in gtypes - {"null"}}
-                if len(kinds) > 1:
+                if len(kinds) < 2:
+                    parts = [(df, gtypes - {"null"})]
+                else:
                     # mixed-type collection: one layer per geometry kind
                     # (the reference's divideFeaturesByType,
                     # src/geojson/geojson-import.js; target-test.js:57-73);
                     # null-geometry features form their own data-only
                     # layer (divideFeaturesByType keeps geoType=null
                     # records with no shapes, mapshaper-dataset-utils.js)
-                    for kname in ("point", "polyline", "polygon", None):
-                        types = {t for t in gtypes
-                                 if _GEOJSON_KINDS.get(t) == kname}
-                        if types:
-                            sub = df.filter(
-                                F.col("geometry_type").isin(*types))
-                            dfs.append((path, *_kind_layer(
-                                sub, types - {"null"}, props), None))
-                    continue
-                df, kind_hint = _kind_layer(df, gtypes - {"null"}, props)
-                if "bbox" not in props:
-                    cat.set_facts(df, bounds=GJ.table_bounds(table))
+                    groups = ({t for t in gtypes
+                               if _GEOJSON_KINDS.get(t) == kname}
+                              for kname in ("point", "polyline", "polygon",
+                                            None))
+                    parts = [(df.filter(F.col("geometry_type").isin(*types)),
+                              types - {"null"}) for types in groups if types]
+                for sub, types in parts:
+                    sub, hint = _kind_layer(sub, types, props)
+                    facts = {"bounds": GJ.table_bounds(table)} \
+                        if len(parts) == 1 and "bbox" not in props else {}
+                    found.append((name, Layer(
+                        sub, hint=hint, format=_input_format(path, hint),
+                        auto_fid=not fid_is_data, facts=facts)))
         elif ext == ".shp":
             shp = open(path, "rb").read()
             stem = os.path.splitext(path)[0]
@@ -508,24 +550,29 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
             df = SH.import_shapefile(cat.spark, shp, dbf, encoding=enc)
             import struct as _struct
             base_type = SH.BASE_TYPE.get(_struct.unpack("<i", shp[32:36])[0])
+            hint = None
             if base_type == SH.SHP_POINT:
                 df = df.drop("rings_x", "rings_y")
-                kind_hint = "point"
+                hint = "point"
             else:
                 if base_type == SH.SHP_POLYLINE:
-                    kind_hint = "polyline"
+                    hint = "polyline"
                 df = df.drop(*[col for col in ("x", "y")
                                if col in df.columns])
-            if dbf is None or "fid" not in SH.dbf_field_names(dbf):
-                auto_fid_paths.add(path)  # record number, not a dbf field
+            wkt = p4 = None
             prj_path = stem + ".prj"
             if os.path.exists(prj_path):
                 from mapshaper_spark.sources import prj as PJ
                 wkt = open(prj_path).read().strip()
                 try:
-                    prj_pending[path] = (wkt, PJ.wkt_to_proj4(wkt))
+                    p4 = PJ.wkt_to_proj4(wkt)
                 except ValueError:
-                    prj_pending[path] = (wkt, None)  # keep for re-export
+                    pass  # keep the WKT for re-export
+            # a record number, not a dbf field, is our own fid
+            found.append((name, Layer(
+                df, hint=hint, format="shp", prj=wkt, crs=p4,
+                auto_fid=dbf is None or
+                "fid" not in SH.dbf_field_names(dbf))))
         elif ext in (".csv", ".tsv", ".txt"):
             # .txt = delimited text with a sniffed delimiter
             # (guessInputType, file-types-test.js 'input.txt' -> 'text')
@@ -552,34 +599,28 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
             df = DL.import_delim(cat.spark, path, delimiter=delim,
                                  encoding=enc, string_fields=sfields,
                                  field_types=ftypes)
-            delim_pending[path] = delim
+            found.append((name, Layer(df, format=_input_format(path, None),
+                                      delim=delim)))
         elif ext == ".parquet":
-            df = cat.spark.read.parquet(path)
+            found.append((name, Layer(cat.spark.read.parquet(path))))
         else:
             raise ValueError(f"-i: unsupported input format '{ext}'")
-        dfs.append((path, df, kind_hint, None))
     # -i snap / auto-snap / snap-interval= (path-import.js:16-22): snap
     # path vertices on import, then dedup the consecutive duplicates
     if c.flag("snap") or c.flag("auto-snap") or \
             c.opt("snap-interval") is not None:
         from mapshaper_spark.operators.topology import snap_paths
         si = c.opt("snap-interval")
-        dfs = [(p, snap_paths(d, float(si) if si is not None else None),
-                k, nm) for p, d, k, nm in dfs]
+        found = [(n, lyr.with_df(snap_paths(
+            lyr.df, float(si) if si is not None else None)))
+            for n, lyr in found]
     # a projected and an unprojected file cannot combine into one dataset
     # (merge-files-test.js 'importing a projected and an unprojected
-    # polygon file throws')
-    if len({p for p, _d, _k, _nm in dfs}) > 1:
-        seen_crs = set()
-        for path in {p for p, _d, _k, _nm in dfs}:
-            p4 = prj_pending.get(path, (None, None))[1]
-            if not p4:
-                continue  # unknown CRS combines with anything (issue #166)
-            seen_crs.add("latlong" if "+proj=longlat" in p4
-                         else "projected")
-        if len(seen_crs) > 1:
-            raise ValueError(
-                "Unable to combine projected and unprojected datasets")
+    # polygon file throws'); an unknown CRS combines with anything
+    # (issue #166)
+    if len({"latlong" if "+proj=longlat" in lyr.crs else "projected"
+            for _n, lyr in found if lyr.crs}) > 1:
+        raise ValueError("Unable to combine projected and unprojected datasets")
     # reference semantics (mapshaper-file-import.js:22-28): merge-files
     # unions everything into ONE layer; combine-files imports each file as
     # its own layer of one dataset — which is this catalog's default
@@ -588,49 +629,17 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
         # mapshaper-rounding.js:10-15; commands-test.js 'import GeoJSON
         # points with rounding on import')
         _prec = c.num("precision")
-        dfs = [(p, _round_layer_coords(d, _prec), k, nm)
-               for p, d, k, nm in dfs]
+        found = [(n, lyr.with_df(_round_layer_coords(lyr.df, _prec)))
+                 for n, lyr in found]
     # multi-file behavior
-    if c.flag("merge-files") and len(dfs) > 1:
+    if c.flag("merge-files") and len(found) > 1:
         from mapshaper_spark.operators.attributes import merge_layers
-        merged = merge_layers([d for _, d, _k, _nm in dfs], force=True)
-        name = cat.add(str(c.opt("name", _layer_name(dfs[0][0]))), merged)
-        for path, _df, _k, _nm in dfs:  # first input .prj rides along (#166)
-            if path in prj_pending:
-                wkt, p4 = prj_pending[path]
-                cat.prj_text[name] = wkt
-                if p4:
-                    cat.crs[name] = p4
-                break
+        sources = [lyr for _n, lyr in found]
+        cat.add(str(c.opt("name", found[0][0])), _merged_layer(
+            sources, merge_layers([s.df for s in sources], force=True)))
     else:
-        for path, df, kind_hint, obj_name in dfs:
-            name = cat.add(str(c.opt("name", obj_name or _layer_name(path))),
-                           df)
-            if obj_name is not None and obj_name in cat.json_crs and \
-                    name != obj_name:
-                cat.json_crs[name] = cat.json_crs.pop(obj_name)
-            if path in delim_pending:
-                cat.delims[name] = delim_pending[path]
-            if path in prj_pending:
-                wkt, p4 = prj_pending[path]
-                cat.prj_text[name] = wkt
-                if p4:
-                    cat.crs[name] = p4
-            if kind_hint:
-                cat.kinds[name] = kind_hint
-            # pathless -o mirrors the INPUT format (the reference derives
-            # output format from the imported file)
-            ext2 = os.path.splitext(path)[1].lstrip(".").lower()
-            if path in topo_paths:
-                ext2 = "topojson"  # Topology content round-trips as topojson
-            elif ext2 == "json" and kind_hint != "table":
-                # geojson CONTENT in a .json file round-trips as
-                # geojson; only a JSON array of records is format=json
-                ext2 = "geojson"
-            if ext2 in ("json", "geojson", "csv", "tsv", "shp", "topojson"):
-                cat.formats[name] = ext2
-            if path in auto_fid_paths:
-                cat.auto_fid.add(name)  # our import id, not a data field
+        for name, lyr in found:
+            cat.add(str(c.opt("name", name)), lyr)
 
 
 def _round_layer_coords(df: DataFrame, precision: float) -> DataFrame:
@@ -700,10 +709,7 @@ def _cmd_filter(cat: Catalog, c: Command) -> None:
     if c.flag("remove-empty"):
         df = AT.filter_remove_empty(df)
     if plus:
-        src_kind = cat.kinds.get(cat.target)
-        name = cat.add(str(c.opt("name", "filter")), df)
-        if src_kind:
-            cat.kinds[name] = src_kind
+        cat.add(str(c.opt("name", "filter")), cat.layer().with_df(df))
     else:
         cat.replace(df)
 
@@ -800,9 +806,9 @@ def _resolve_source(cat: Catalog, token: str) -> DataFrame:
     """A command's source operand: an existing layer name, or a file path
     to auto-import (the reference imports -join/-clip file sources)."""
     if token in cat.layers:
-        return cat.layers[token]
+        return cat.df(token)
     if _layer_name(token) in cat.layers:
-        return cat.layers[_layer_name(token)]
+        return cat.df(_layer_name(token))
     if os.path.exists(token):
         saved = cat.target
         _cmd_i(cat, Command("i", values=[token]))
@@ -928,10 +934,7 @@ def _cmd_dissolve(cat: Catalog, c: Command) -> None:
     if "__all__" in out.columns:  # synthetic whole-layer key, not a field
         out = out.drop("__all__")
     if plus:
-        src_kind = cat.kinds.get(cat.target, kind)
-        name = cat.add(str(c.opt("name", "dissolve")), out)
-        if kind != "table":
-            cat.kinds[name] = src_kind
+        cat.add(str(c.opt("name", "dissolve")), cat.layer().with_df(out))
     else:
         cat.replace(out)
 
@@ -943,7 +946,7 @@ def _min_gap_area(cat: Catalog, c: Command) -> float | None:
     if v is None:
         return None
     from mapshaper_spark.geom.units import convert_area_param
-    return convert_area_param(str(v), cat.crs.get(cat.target))
+    return convert_area_param(str(v), cat.layer().crs)
 
 
 def _cmd_dissolve2(cat: Catalog, c: Command) -> None:
@@ -975,7 +978,7 @@ def _cmd_dissolve2(cat: Catalog, c: Command) -> None:
     else:
         cat.replace(out)
         if c.opt("name"):
-            _rename_layer(cat, cat.target, str(c.opt("name")))
+            cat.rename({cat.target: str(c.opt("name"))})
 
 
 def _cmd_clean(cat: Catalog, c: Command) -> None:
@@ -998,7 +1001,7 @@ def _cmd_clip(cat: Catalog, c: Command, erase: bool = False) -> None:
             raise ValueError(f"-clip: invalid bbox {bbox}")
         if erase:
             raise ValueError("-erase bbox= not supported; use a clip layer")
-        kind = cat.kinds.get(cat.target, kind)
+        kind = cat.layer().kind
         if kind == "point":
             x, y = _point_cols(df)
             cat.replace(P.clip_bbox_points(df, x, y, bbox))
@@ -1026,7 +1029,7 @@ def _cmd_clip(cat: Catalog, c: Command, erase: bool = False) -> None:
         x, y = _point_cols(df)
         cat.replace(P.clip_points(df, x, y, clip_layer,
                                   clip_layer.columns[0], erase=erase))
-    elif kind == "path" or cat.kinds.get(cat.target) == "polyline":
+    elif kind == "path" or cat.layer().kind == "polyline":
         # a rings-frame flagged polyline clips with midpoint-enclosure
         # semantics, not ring overlay (Issue #192)
         cat.replace(clip_polylines(df, clip_layer, erase=erase))
@@ -1042,8 +1045,7 @@ def _cmd_explode(cat: Catalog, c: Command) -> None:
     part grouping in paths.explode."""
     from mapshaper_spark.operators.paths import explode
     df = cat.df()
-    kind = cat.kinds.get(cat.target, _geometry_kind(df))
-    if kind == "point" and "rings_x" in df.columns:
+    if cat.layer().kind == "point" and "rings_x" in df.columns:
         # multipoint coords ride in the rings arrays; single points may mix
         # in as scalar x/y rows — normalize both to one row per coordinate
         has_rings = F.col("rings_x").isNotNull() & (F.size("rings_x") > 0)
@@ -1103,12 +1105,12 @@ def _cmd_points(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators import paths as P
     df = cat.df()
     xy = None  # operator-specific coordinate column names
-    keepers = None  # coordinate-named columns that remain data fields
+    keepers = frozenset()  # coordinate-named columns that stay data fields
     if c.opt("x") and c.opt("y"):
         out = P.points_from_columns(df, str(c.opt("x")), str(c.opt("y")))
         # the named source columns stay DATA fields (the reference's
         # -points x= y= reads coordinates without consuming the fields)
-        keepers = {str(c.opt("x")), str(c.opt("y"))}
+        keepers = frozenset({str(c.opt("x")), str(c.opt("y"))})
     elif c.flag("vertices"):
         out = P.points_vertices(df, df.columns[0])
     elif c.flag("endpoints"):
@@ -1131,19 +1133,12 @@ def _cmd_points(cat: Catalog, c: Command) -> None:
         out = out.drop(*drop)
     if "+" in c.values:
         # '+': add as a NEW layer (keep the source), reference no_replace
-        name = cat.add(str(c.opt("name")) if c.opt("name") else "points", out)
-        cat.kinds[name] = "point"
-        if keepers:
-            cat.coord_data[name] = keepers
+        cat.add(str(c.opt("name")) if c.opt("name") else "points",
+                cat.layer().with_df(out, hint="point", coord_data=keepers))
     else:
-        cat.replace(out)
-        cat.kinds[cat.target] = "point"
-        if keepers:
-            cat.coord_data[cat.target] = keepers
-        elif cat.target in cat.coord_data:
-            del cat.coord_data[cat.target]
+        cat.replace(out, hint="point", coord_data=keepers)
         if c.opt("name"):
-            _rename_layer(cat, cat.target, str(c.opt("name")))
+            cat.rename({cat.target: str(c.opt("name"))})
 
 
 def _cmd_proj(cat: Catalog, c: Command) -> None:
@@ -1158,8 +1153,8 @@ def _cmd_proj(cat: Catalog, c: Command) -> None:
         order for -proj from=/match= (proj-test.js)."""
         from mapshaper_spark.sources.prj import wkt_to_proj4
         if value in cat.layers:
-            return (cat.crs.get(value, "wgs84"),
-                    cat.prj_text.get(value))
+            known = cat.layers[value]
+            return known.crs or "wgs84", known.prj
         if value.endswith(".prj") or os.path.exists(value):
             wkt = open(value).read().strip()
             return wkt_to_proj4(wkt), wkt
@@ -1173,20 +1168,19 @@ def _cmd_proj(cat: Catalog, c: Command) -> None:
     # an imported .prj sets the SOURCE crs (the reference projects from the
     # dataset CRS); a from= option (proj4, layer, or .prj path) overrides it
     src = _resolve_crs_arg(str(c.opt("from")))[0] if c.opt("from") else \
-        cat.crs.get(cat.target or "", "wgs84")
+        cat.layer().crs or "wgs84"
     if not crs:
         # '-proj from=X' alone assigns the CRS without reprojecting
         # (proj-test.js 'from= sets CRS if no dest CRS is given')
-        if c.opt("from") and cat.target:
-            cat.prj_text.pop(cat.target, None)
-            cat.crs[cat.target] = src
+        if c.opt("from"):
+            cat.replace(df, crs=src, prj=None)
         return
-    kind = cat.kinds.get(cat.target, _geometry_kind(df))
+    kind = cat.layer().kind
     if kind == "point":
         x, y = _point_cols(df)
-        cat.replace(PR.project_points(df, x, y, crs=crs, src=src))
+        out = PR.project_points(df, x, y, crs=crs, src=src)
     elif kind == "path":
-        cat.replace(PR.project_arcs(df, crs=crs, src=src))
+        out = PR.project_arcs(df, crs=crs, src=src)
     else:
         # ring layers: explode rings -> per-path projection (project_arcs,
         # adaptive densify included) -> regroup in ring order
@@ -1198,19 +1192,14 @@ def _cmd_proj(cat: Catalog, c: Command) -> None:
             .select(*other, "__ri", F.col("__r.xs").alias("xs"),
                     F.col("__r.ys").alias("ys")))
         projected = PR.project_arcs(exploded, crs=crs, src=src)
-        regrouped = (projected.groupBy(*other).agg(
+        out = projected.groupBy(*other).agg(
             F.expr("transform(sort_array(collect_list("
                    "struct(__ri, xs, ys))), s -> s.xs)").alias("rings_x"),
             F.expr("transform(sort_array(collect_list("
-                   "struct(__ri, xs, ys))), s -> s.ys)").alias("rings_y")))
-        cat.replace(regrouped)
-    if cat.target:
-        cat.prj_text.pop(cat.target, None)
-        cat.crs[cat.target] = crs
-        if match_prj is not None:
-            # output copies the .prj text from the match= source verbatim
-            # (proj-test.js 'output copies .prj string from match= source')
-            cat.prj_text[cat.target] = match_prj
+                   "struct(__ri, xs, ys))), s -> s.ys)").alias("rings_y"))
+    # output copies the .prj text from a match= source verbatim
+    # (proj-test.js 'output copies .prj string from match= source')
+    cat.replace(out, crs=crs, prj=match_prj)
 
 
 def _cmd_simplify(cat: Catalog, c: Command) -> None:
@@ -1241,7 +1230,7 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
         Spherical auto-detection: decimal-degree-looking bounds simplify
         on the 3D sphere unless 'planar' (useSphericalSimplify :51-53).
         The bounds are the layer's import fact when it has one."""
-        b = cat.fact("bounds")
+        b = cat.layer().facts.get("bounds")
         if b is None:
             b = SI.arc_bounds(arcs)
         latlong = (b is not None and -181 <= b[0] and -91 <= b[1] and
@@ -1322,7 +1311,7 @@ def _cmd_affine(cat: Catalog, c: Command) -> None:
     df = cat.df()
     # the import hint beats the column heuristic: a point layer with
     # MultiPoint rows carries rings columns and would read as "polygon"
-    kind = cat.kinds.get(cat.target) or _geometry_kind(df)
+    kind = cat.layer().kind
     shift = [float(v) for v in c.csv("shift")] or [0.0, 0.0]
     where = None
     if c.opt("where"):
@@ -1382,24 +1371,22 @@ def _cmd_merge_layers(cat: Catalog, c: Command) -> None:
     missing = [n for n in names if n not in cat.layers]
     if missing:
         raise ValueError(f"-merge-layers: no layer {missing} (have {cat.order})")
-    merged = merge_layers([cat.layers[n] for n in names],
-                          force=c.flag("force"))
-    # the merged layer keeps the first source CRS (Issue #166: .prj
-    # preserved through combine-files + -merge-layers, whichever input
-    # carried it); mixing projected with unprojected inputs is an error
-    # like the reference's
-    crss = {cat.crs[n] for n in names if n in cat.crs}
+    sources = [cat.layers[n] for n in names]
+    merged = merge_layers([s.df for s in sources], force=c.flag("force"))
+    # mixing projected with unprojected inputs is an error like the
+    # reference's
+    crss = {s.crs for s in sources if s.crs}
     if len(crss) > 1:
         raise ValueError(f"-merge-layers: layers have different CRS: {crss}")
-    if any(n not in cat.crs for n in names):
+    if not all(s.crs for s in sources):
         # some sources carry no declared CRS: fall back to the reference's
         # bounds heuristic (probablyDecimalDegreeBounds, mapshaper-common.js:
         # 184-188 via mergeDatasets, mapshaper-merging.js:48-56) — a layer
         # whose bbox fits [-181,-91,181,91] reads as lat-lng; mixing
         # lat-lng with projected sources is an error
         is_ll = set()
-        for n in names:
-            ldf = cat.layers[n]
+        for s in sources:
+            ldf = s.df
             if not ({"x", "rings_x", "xs"} & set(ldf.columns)):
                 continue  # data-only layer: no bounds, no vote
             try:
@@ -1411,40 +1398,32 @@ def _cmd_merge_layers(cat: Catalog, c: Command) -> None:
         if len(is_ll) > 1:
             raise ValueError("-merge-layers: unable to combine projected "
                              "and unprojected layers")
-    prj = next(((cat.prj_text[n], cat.crs.get(n)) for n in names
-                if n in cat.prj_text), None)
-    kinds = {cat.kinds[n] for n in names if n in cat.kinds}
-    fmts = {cat.formats[n] for n in names if n in cat.formats}
-    dlms = {cat.delims[n] for n in names if n in cat.delims}
-    all_auto = all(n in cat.auto_fid for n in names)
     pos = cat.order.index(names[0])
     for n in names:  # sources are consumed by the merge
-        del cat.layers[n]
-        cat.order.remove(n)
-        for meta in (cat.kinds, cat.formats, cat.crs, cat.prj_text,
-                     cat.delims):
-            meta.pop(n, None)
-        cat.auto_fid.discard(n)
-    new = str(c.opt("name") or c.opt("target-name") or names[0])
-    base, k = new, 2
-    while new in cat.layers:
-        new = f"{base}{k}"
-        k += 1
-    cat.layers[new] = merged
-    cat.order.insert(pos, new)
-    cat.target = new
-    if len(kinds) == 1:
-        cat.kinds[new] = kinds.pop()
-    if len(fmts) == 1:
-        cat.formats[new] = fmts.pop()
-    if len(dlms) == 1:
-        cat.delims[new] = dlms.pop()
-    if all_auto:
-        cat.auto_fid.add(new)
-    if prj:
-        cat.prj_text[new] = prj[0]
-        if prj[1]:
-            cat.crs[new] = prj[1]
+        cat.drop(n)
+    cat.add(str(c.opt("name") or c.opt("target-name") or names[0]),
+            _merged_layer(sources, merged))
+    cat.order.insert(pos, cat.order.pop())
+
+
+def _merged_layer(sources: list[Layer], df: DataFrame) -> Layer:
+    """The value of the layer ``df`` merged from ``sources``: the kind,
+    format, delimiter, CRS and TopoJSON crs that the sources declaring one
+    agree on; the first source .prj (Issue #166: preserved through
+    combine-files + -merge-layers, whichever input carried it); a fid that
+    is the import's only when it is every source's."""
+    def agreed(values):
+        declared = {v for v in values if v is not None}
+        return declared.pop() if len(declared) == 1 else None
+    with_prj = [s for s in sources if s.prj is not None]
+    return Layer(df, hint=agreed(s.hint for s in sources),
+                 format=agreed(s.format for s in sources),
+                 delim=agreed(s.delim for s in sources),
+                 crs=agreed(s.crs for s in sources),
+                 prj=with_prj[0].prj if with_prj else None,
+                 json_crs=next((s.json_crs for s in sources
+                                if s.json_crs is not None), None),
+                 auto_fid=all(s.auto_fid for s in sources))
 
 
 def _cmd_split(cat: Catalog, c: Command) -> None:
@@ -1456,27 +1435,16 @@ def _cmd_split(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators.grid import split_by_field
     field_name = c.values[0]
     src = cat.target
-    src_kind = cat.kinds.get(src)
+    source = cat.layer()
     # the reference only prefixes when the layer has a user-visible name;
     # our catalog always names layers, so prefix unless it's the default
     prefix = "" if src in (None, "layer1") else f"{src}-"
     first = None
-    for val, df in split_by_field(cat.df(), field_name).items():
-        name = cat.add(f"{prefix}{val}", df, make_target=False)
-        if src_kind:
-            cat.kinds[name] = src_kind
-        if src in cat.formats:
-            cat.formats[name] = cat.formats[src]
-        if src in cat.delims:
-            cat.delims[name] = cat.delims[src]
-        if src in cat.auto_fid:
-            cat.auto_fid.add(name)
+    for val, df in split_by_field(source.df, field_name).items():
+        name = cat.add(f"{prefix}{val}", source.with_df(df),
+                       make_target=False)
         first = first or name
-    del cat.layers[src]
-    cat.order.remove(src)
-    for meta in (cat.kinds, cat.formats, cat.crs, cat.prj_text, cat.delims):
-        meta.pop(src, None)
-    cat.auto_fid.discard(src)
+    cat.drop(src)
     cat.target = first
 
 
@@ -1491,23 +1459,6 @@ def _cmd_split_on_grid(cat: Catalog, c: Command) -> None:
         cat.replace(split_on_grid(df, cols, rows))
 
 
-def _rename_layer(cat: Catalog, old: str, new: str) -> None:
-    """Rename a layer and migrate its per-layer metadata."""
-    if new == old:
-        return
-    cat.layers[new] = cat.layers.pop(old)
-    cat.order[cat.order.index(old)] = new
-    if cat.target == old:
-        cat.target = new
-    for meta in (cat.kinds, cat.formats, cat.crs, cat.prj_text,
-                 cat.coord_data):
-        if old in meta:
-            meta[new] = meta.pop(old)
-    if old in cat.auto_fid:
-        cat.auto_fid.discard(old)
-        cat.auto_fid.add(new)
-
-
 def _cmd_target(cat: Catalog, c: Command) -> None:
     """-target (src/commands/mapshaper-target.js): select by layer name,
     1-based layer number, or type=point|polyline|polygon (reference
@@ -1518,7 +1469,7 @@ def _cmd_target(cat: Catalog, c: Command) -> None:
     cands = list(cat.order)
     if want:
         def _kind(n):
-            k = cat.kinds.get(n) or _geometry_kind(cat.layers[n])
+            k = cat.layers[n].kind
             return "polyline" if k == "path" else k
         cands = [n for n in cands if _kind(n) == want]
     if val is not None:
@@ -1537,7 +1488,7 @@ def _cmd_target(cat: Catalog, c: Command) -> None:
         raise ValueError(f"-target: multiple layers matched: {cands}")
     cat.target = cands[0]
     if c.opt("name"):
-        _rename_layer(cat, cat.target, str(c.opt("name")))
+        cat.rename({cat.target: str(c.opt("name"))})
 
 
 def _cmd_rename_layers(cat: Catalog, c: Command) -> None:
@@ -1553,8 +1504,7 @@ def _cmd_rename_layers(cat: Catalog, c: Command) -> None:
         stem = new_names.pop()
         new_names += [f"{stem}{i + 1}"
                       for i in range(n_layers - len(new_names))]
-    for old, new in zip(list(cat.order), new_names):
-        _rename_layer(cat, old, new)
+    cat.rename(dict(zip(cat.order, new_names)))
 
 
 def _order_tagged(df: DataFrame) -> DataFrame:
@@ -1587,8 +1537,8 @@ def _svg_payload(cat: Catalog, names: list[str], c: Command) -> str:
     from mapshaper_spark.sources import svg as SVG
     layers = []
     for name in names:
-        df = _in_record_order(cat.layers[name])
-        kind = cat.kinds.get(name, _geometry_kind(df))
+        df = _in_record_order(cat.df(name))
+        kind = cat.layers[name].kind
         if kind == "point":
             px, py = _point_cols(df)
             if "rings_x" in df.columns:
@@ -1610,7 +1560,7 @@ def _svg_payload(cat: Catalog, names: list[str], c: Command) -> str:
                     .withColumn("rings_y", F.array("ys")))
             gt = "polyline"
         else:
-            gt = "polyline" if cat.kinds.get(name) == "polyline" else "polygon"
+            gt = "polyline" if kind == "polyline" else "polygon"
         layers.append((name, df, gt))
     opts = {}
     if c.opt("width"):
@@ -1638,21 +1588,16 @@ def _topojson_payload(cat: Catalog, names: list[str], c: Command) -> str:
     Topology with one named object per layer and ONE shared arc table)."""
     from mapshaper_spark.sources import topojson as TJ
     layers = []
-    saved = cat.target
-    try:
-        for name in names:
-            cat.target = name
-            df = _in_record_order(cat.layers[name])
-            kind = cat.kinds.get(name, _geometry_kind(df))
-            if kind == "path":  # arc frames: xs/ys -> single-ring polyline
-                df = (df.withColumn("rings_x", F.array("xs"))
-                        .withColumn("rings_y", F.array("ys")))
-                kind = "polyline"
-            props = _data_fields(cat, df)
-            layers.append({"name": name, "df": df, "kind": kind,
-                           "props": props})
-    finally:
-        cat.target = saved
+    for name in names:
+        layer = cat.layers[name]
+        df = _in_record_order(layer.df)
+        kind = layer.kind
+        if kind == "path":  # arc frames: xs/ys -> single-ring polyline
+            df = (df.withColumn("rings_x", F.array("xs"))
+                    .withColumn("rings_y", F.array("ys")))
+            kind = "polyline"
+        layers.append({"name": name, "df": df, "kind": kind,
+                       "props": _data_fields(layer, df)})
     opts: dict = {}
     if c.opt("quantization") is not None:
         opts["quantization"] = int(c.num("quantization"))
@@ -1675,31 +1620,30 @@ def _topojson_payload(cat: Catalog, names: list[str], c: Command) -> str:
             opts[k] = c.num(k)
     if c.opt("margin") is not None:  # raw: parse_margin_option handles it
         opts["margin"] = c.opt("margin")
-    for name in names:  # imported *JSON crs rides through to re-export
-        if name in cat.json_crs:
-            opts["crs"] = cat.json_crs[name]
-            break
+    # imported *JSON crs rides through to re-export
+    opts["crs"] = next((cat.layers[n].json_crs for n in names
+                        if cat.layers[n].json_crs is not None), None)
     return json.dumps(TJ.export_topology_doc(layers, opts))
 
 
-def _data_fields(cat: Catalog, df: DataFrame) -> list[str]:
-    """The layer's DATA TABLE columns: geometry carriers and import
-    artifacts are not data fields (the reference keeps geometry separate
-    from the table; Issue #174), nor are synthetic point coordinates or a
-    fid this importer minted."""
-    skip = set(_GEOMETRY_COLUMNS.get(cat.kinds.get(cat.target),
-                                     _ANY_GEOMETRY))
+def _data_fields(layer: Layer, df: DataFrame) -> list[str]:
+    """The DATA TABLE columns of ``df``, the frame ``layer`` exports:
+    geometry carriers and import artifacts are not data fields (the
+    reference keeps geometry separate from the table; Issue #174), nor are
+    synthetic point coordinates or a fid this importer minted. A layer of
+    no declared kind skips every geometry column name."""
+    skip = set(_GEOMETRY_COLUMNS.get(layer.hint, _ANY_GEOMETRY))
     if {"xs", "ys"} <= set(df.columns):  # an arc frame's geometry
         skip |= {"xs", "ys", "n", "bbox"}
-    if cat.kinds.get(cat.target, _geometry_kind(df)) == "point":
+    if layer.kind == "point":
         skip |= {"lon", "lat", "x", "y"}
-    skip -= cat.coord_data.get(cat.target, set())
-    if cat.target in cat.auto_fid:
+    skip -= layer.coord_data
+    if layer.auto_fid:
         skip.add("fid")
     return [col for col in df.columns if col not in skip]
 
 
-def _prj_text(cat: Catalog, df: DataFrame) -> str | None:
+def _prj_text(layer: Layer) -> str | None:
     """The .prj sidecar of a shapefile export: the imported WKT untouched
     (shp-export.js:21); a fresh WKT for a -proj'd layer's new CRS (Issue
     #193: -proj wgs84 -o emits a WGS84 .prj); WGS84 for unprojected input
@@ -1707,14 +1651,14 @@ def _prj_text(cat: Catalog, df: DataFrame) -> str | None:
     if input is unprojected GeoJSON'). None: no sidecar, including a CRS
     family without a WKT spelling."""
     from mapshaper_spark.sources.prj import proj4_to_wkt
-    if cat.target in cat.prj_text:
-        return cat.prj_text[cat.target]
-    if cat.target in cat.crs:
+    if layer.prj is not None:
+        return layer.prj
+    if layer.crs:
         try:
-            return proj4_to_wkt(cat.crs[cat.target])
+            return proj4_to_wkt(layer.crs)
         except ValueError:
             return None
-    return proj4_to_wkt("wgs84") if _probably_latlong(df) else None
+    return proj4_to_wkt("wgs84") if _probably_latlong(layer.df) else None
 
 
 def _delim_out(cat: Catalog, c: Command, df: DataFrame, fmt: str,
@@ -1726,7 +1670,7 @@ def _delim_out(cat: Catalog, c: Command, df: DataFrame, fmt: str,
     re-encodes the payload with '?' replacement like the reference's
     iconv-lite output (delim-export-test.js encoding cases)."""
     from mapshaper_spark.sources.delim import delim_payload
-    keep = _data_fields(cat, df)
+    keep = _data_fields(cat.layer(), df)
     if keep != df.columns:
         # (no-op when nothing is dropped: selecting by name would be
         # ambiguous on case-duplicate fields like id/ID after a force merge)
@@ -1734,7 +1678,7 @@ def _delim_out(cat: Catalog, c: Command, df: DataFrame, fmt: str,
     if c.opt("field-order") == "ascending":
         df = df.select(*sorted(df.columns, key=lambda s: (s.lower(), s)))
     delim = str(c.opt("delimiter")) if c.opt("delimiter") else (
-        "\t" if fmt == "tsv" else cat.delims.get(cat.target, ","))
+        "\t" if fmt == "tsv" else cat.layer().delim or ",")
     payload = delim_payload(df, delim)
     enc = str(c.opt("encoding")) if c.opt("encoding") else None
     if path is not None:
@@ -1813,13 +1757,13 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
             _cmd_o(cat, sub)
         cat.target = saved
         return
-    df = cat.df()
+    layer = cat.layer()
+    df = layer.df
     kind0 = _geometry_kind(df)
     path = c.values[0] if c.values else None
     fmt = str(c.opt("format", "")) or (
         os.path.splitext(path)[1].lstrip(".").lower() if path
-        else cat.formats.get(cat.target,
-                             "csv" if kind0 == "table" else "geojson"))
+        else layer.format or ("csv" if kind0 == "table" else "geojson"))
     if fmt == "shapefile":  # the reference's format name for shp output
         fmt = "shp"
     df = _in_record_order(df, one_task=fmt not in ("ndjson", "geojson-seq"))
@@ -1830,7 +1774,7 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         # 28-50 exports a point layer's records without coordinates); a
         # bare .json path extension on a geometry layer means geojson.
         from mapshaper_spark.operators.attributes import to_json_records
-        payload = to_json_records(df.select(*_data_fields(cat, df)))
+        payload = to_json_records(df.select(*_data_fields(layer, df)))
         key = path or f"{cat.target}.json"
         if path:
             with open(path, "w") as f:
@@ -1841,14 +1785,14 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         _delim_out(cat, c, df, fmt, None)
         return
     if fmt in ("json", "geojson", "ndjson", "geojson-seq"):
-        kind = cat.kinds.get(cat.target, _geometry_kind(df))
-        props = _data_fields(cat, df)
+        kind = layer.kind
+        props = _data_fields(layer, df)
         kwargs = {"property_cols": props}
         if kind == "point":
             px, py = _point_cols(df)
             gt = "MultiPoint" if "rings_x" in df.columns else "Point"
             kwargs.update(geometry_type=gt, x=px, y=py)
-        elif cat.kinds.get(cat.target) == "polyline":
+        elif kind == "polyline":
             kwargs.update(geometry_type="LineString")
         elif kind == "path":
             # arc frames carry xs/ys; LineString rendering reads ring arrays
@@ -1885,8 +1829,8 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         return
     elif fmt == "shp":
         files = dict(zip((".shp", ".shx", ".dbf"), SH.export_shapefile(
-            df, fields=_data_fields(cat, df))))
-        prj = _prj_text(cat, df)
+            df, fields=_data_fields(layer, df))))
+        prj = _prj_text(layer)
         if prj is not None:
             files[".prj"] = prj
         if path:
@@ -1904,7 +1848,7 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
     elif fmt == "dbf":
         # attribute table only (the reference's -o format=dbf path,
         # io/mapshaper-file-types.js:47-48)
-        keep = set(_data_fields(cat, df))
+        keep = set(_data_fields(layer, df))
         recs = [{k: v for k, v in r.asDict().items() if k in keep}
                 for r in df.collect()]
         blob = SH.write_dbf(recs)
@@ -2036,15 +1980,12 @@ def _cmd_graticule(cat: Catalog, c: Command) -> None:
     # a graticule added to a projected dataset is reprojected to match it
     # (graticule-test.js 'reproject to match dataset with known
     # projection')
-    crs = cat.crs.get(cat.target) if cat.target else None
+    crs = cat.layer().crs if cat.target else None
     if crs and crs not in ("wgs84", "latlong") and \
             "+proj=longlat" not in crs:
         from mapshaper_spark.operators import proj as PR
         g = PR.project_arcs(g, crs=crs, src="wgs84")
-    name = cat.add("graticule", g)
-    cat.kinds[name] = "polyline"
-    if crs:
-        cat.crs[name] = crs
+    cat.add("graticule", Layer(g, crs=crs))
 
 
 def _cmd_rectangle(cat: Catalog, c: Command) -> None:
@@ -2060,8 +2001,9 @@ def _cmd_rectangle(cat: Catalog, c: Command) -> None:
     if c.opt("offset"):
         off = c.num("offset")
         bbox = [bbox[0] - off, bbox[1] - off, bbox[2] + off, bbox[3] + off]
-    name = cat.add(str(c.opt("name", "rectangle")), rectangle(cat.spark, bbox))
-    cat.auto_fid.add(name)  # synthetic id, not a data field
+    # the rectangle's id is synthetic, not a data field
+    cat.add(str(c.opt("name", "rectangle")),
+            Layer(rectangle(cat.spark, bbox), auto_fid=True))
 
 
 def _cmd_shape(cat: Catalog, c: Command) -> None:
@@ -2070,9 +2012,9 @@ def _cmd_shape(cat: Catalog, c: Command) -> None:
     offsets = [float(v) for v in c.csv("offsets")]
     out = shape(cat.spark, coords, offsets, closed=c.flag("closed"),
                 name=str(c.opt("name", "shape")))
-    name = cat.add(str(c.opt("name", "shape")), out)
-    if out.limit(1).collect()[0]["geometry_type"] == "polyline":
-        cat.kinds[name] = "polyline"
+    polyline = out.limit(1).collect()[0]["geometry_type"] == "polyline"
+    cat.add(str(c.opt("name", "shape")),
+            Layer(out, hint="polyline" if polyline else None))
 
 
 def _cmd_subdivide(cat: Catalog, c: Command) -> None:
@@ -2183,8 +2125,7 @@ def _cmd_drop(cat: Catalog, c: Command) -> None:
     for name in names:
         if name not in cat.layers:
             raise ValueError(f"-drop: no layer '{name}' (have {cat.order})")
-        del cat.layers[name]
-        cat.order.remove(name)
+        cat.drop(name)
     if cat.target not in cat.layers:
         cat.target = cat.order[-1] if cat.order else None
 
@@ -2284,10 +2225,8 @@ def _cmd_polygons(cat: Catalog, c: Command) -> None:
         F.xxhash64("xs", "ys").alias("fid"),
         F.array("xs").alias("rings_x"), F.array("ys").alias("rings_y"),
         "area")
-    cat.replace(out)
-    if cat.target:
-        cat.kinds.pop(cat.target, None)  # the layer is polygons now
-        cat.auto_fid.add(cat.target)  # face ids are synthetic too
+    # the layer is polygons now, and its face ids are synthetic too
+    cat.replace(out, hint=None, auto_fid=True)
 
 
 def _cmd_slice(cat: Catalog, c: Command) -> None:
@@ -2397,7 +2336,7 @@ def _cmd_inspect(cat: Catalog, c: Command) -> None:
         return
     row = rows[0].asDict()
     geom_cols = {"rings_x", "rings_y", "xs", "ys", "bbox", "ring_areas"}
-    kind = cat.kinds.get(cat.target, _geometry_kind(df))
+    kind = cat.layer().kind
     geo: dict[str, object] = {"type": kind}
     if row.get("rings_x") is not None:
         # getPolygonInfo parity: cw/ccw ring counts + planar area

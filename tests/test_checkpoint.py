@@ -468,7 +468,7 @@ class TestPrjSidecar:
         assert (tmp_path / "out.prj").exists()
         assert (tmp_path / "out.prj").read_text() == \
             open("/root/reference/test/test_data/two_states.prj").read().strip()
-        assert cat.crs  # proj4 recorded for the layer
+        assert cat.layer().crs  # proj4 recorded for the layer
 
     def test_cli_proj_uses_prj_as_source(self, spark, tmp_path):
         """A layer imported with a projected .prj inverse-projects through

@@ -731,7 +731,7 @@ class TestNdjsonSink:
         assert {"state", "pop", "rings_x", "rings_y"} <= set(df.columns)
         rows = sorted((r["state"], r["pop"]) for r in df.collect())
         assert rows == [("A", 10), ("A", 20), ("B", 30), ("B", 40)]
-        assert cat.kinds[cat.target] == "polygon"
+        assert cat.layer().kind == "polygon"
         # geometry round-trips: total ring vertex count preserved
         n = df.select(F.sum(F.aggregate(
             F.transform("rings_x", F.size), F.lit(0),
@@ -747,7 +747,7 @@ class TestNdjsonSink:
         p.write_text("\n".join(lines) + "\n")
         cat = run_commands(spark, f"-i {p}")
         df = cat.df()
-        assert cat.kinds[cat.target] == "point"
+        assert cat.layer().kind == "point"
         assert sorted((r["n"], r.x, r.y) for r in df.collect()) == \
             [(i, i + 0.5, i + 0.25) for i in range(5)]
 
@@ -813,12 +813,37 @@ def _warm_request_jobs(spark, cmds):
 
 
 def _persistent_rdds(spark):
-    """Persisted RDDs the JVM still holds once unreachable ones (dropped
-    local checkpoints) are garbage-collected."""
+    """Ids of the RDDs the JVM holds persisted. The map of them and its key
+    view hold every RDD, so both are detached at once: left to py4j's
+    finalizer thread, they could keep the RDDs alive past the next look."""
+    sc = spark.sparkContext
+    rdds = sc._jsc.getPersistentRDDs()
+    keys = rdds.keySet()
+    try:
+        return set(json.loads(keys.toString()))
+    finally:
+        sc._gateway.detach(keys)
+        sc._gateway.detach(rdds)
+
+
+def _rdds_left_since(spark, before, most, timeout_s=30.0):
+    """Ids of the persisted RDDs that ``before`` lacks, once unreachable
+    ones (dropped local checkpoints) are released. Release is
+    asynchronous: a dropped frame's JVM objects stay bound until py4j's
+    finalizer thread detaches them, and only a JVM collection after that
+    lets the context cleaner unpersist them. So poll until at most
+    ``most`` are left or time is up. Ids, not counts: the cleaner may
+    release an earlier test's RDDs meanwhile."""
     import gc
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+    import time
+    deadline = time.monotonic() + timeout_s
+    while True:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        left = _persistent_rdds(spark) - before
+        if len(left) <= most or time.monotonic() > deadline:
+            return left
+        time.sleep(0.5)
 
 
 class TestSimplifyRequest:
@@ -853,13 +878,27 @@ class TestSimplifyRequest:
             _county_grid(src, seed=seed)
             run_commands(spark, f"-i {src} -simplify 10% no-repair "
                                 f"-o {tmp_path / f'o{seed}.json'}")
-        assert _persistent_rdds(spark) - before <= 3
+        assert len(_rdds_left_since(spark, before, 3)) <= 3
 
-    def test_affine_then_simplify_drops_import_bounds(self, spark, tmp_path):
-        """-affine replaces the layer, so its import bounds (lon/lat, which
-        select spherical simplify) must not outlive it: the shifted layer
-        simplifies like a file that was shifted beforehand."""
+    def test_affine_then_simplify_drops_import_bounds(self, spark, tmp_path,
+                                                      monkeypatch):
+        """A GeoJSON import's bounds (lon/lat, which select spherical
+        simplify) last until a command puts another frame in the layer:
+        -simplify reads them without probing the arcs, while -i precision=
+        and -affine drop them, so the shifted layer simplifies like a file
+        that was shifted beforehand."""
+        from mapshaper_spark.operators import simplify as SI
         _county_grid(tmp_path / "a.json")
+        probes = []
+        arc_bounds = SI.arc_bounds
+        monkeypatch.setattr(SI, "arc_bounds",
+                            lambda arcs: probes.append(1) or arc_bounds(arcs))
+        for opts, probed in (("", 0), ("precision=0.000001", 1),
+                             ("-affine shift=5000,0", 1)):
+            probes.clear()
+            run_commands(spark, f"-i {tmp_path / 'a.json'} {opts} "
+                                f"-simplify 10% -o {tmp_path / 'o.json'}")
+            assert len(probes) == probed, opts
         shifted = tmp_path / "shifted.json"
         run_commands(spark, f"-i {tmp_path / 'a.json'} "
                             f"-affine shift=5000,0 -o {shifted}")
@@ -868,6 +907,66 @@ class TestSimplifyRequest:
         run_commands(spark, f"-i {tmp_path / 'a.json'} -affine shift=5000,0 "
                             f"-simplify 10% -o {got}")
         assert _features(got) == _features(want)
+
+
+class TestLayerRecord:
+    """Each catalog layer is one value: commands that derive, rename, drop
+    or replace a layer carry or discard its metadata with its frame."""
+
+    @pytest.mark.parametrize("cmd", ["lines", "innerlines"])
+    def test_lines_export_line_features(self, spark, tmp_path, cmd):
+        src, out = tmp_path / "a.json", tmp_path / "out.json"
+        _county_grid(src, n=4, v=8)
+        run_commands(spark, f"-i {src} -{cmd} -o {out}")
+        feats = _features(out)
+        assert len(feats) == (24 if cmd == "innerlines" else 36)
+        assert {f["geometry"]["type"] for f in feats} == {"LineString"}
+
+    def test_rename_layers_keeps_input_delimiter(self, spark, tmp_path):
+        src, out = tmp_path / "t.txt", tmp_path / "out.txt"
+        src.write_text("a\tb\n1\t2\n")
+        run_commands(spark, f"-i {src} -rename-layers b -o {out}")
+        assert out.read_text() == "a\tb\n1\t2"
+
+    def test_rename_layers_swaps_names(self, spark):
+        a = spark.createDataFrame([(1,)], "v int")
+        b = spark.createDataFrame([(2,)], "v int")
+        cat = run_commands(spark, "-rename-layers b,a",
+                           layers={"a": a, "b": b})
+        assert cat.order == ["b", "a"]
+        assert [r.v for r in cat.df("b").collect()] == [1]
+        assert [r.v for r in cat.df("a").collect()] == [2]
+
+    @pytest.mark.parametrize("cmd", ["-split name", "-filter 'true' +",
+                                     "-points +"])
+    def test_derived_layer_keeps_crs(self, spark, tmp_path, cmd):
+        src = tmp_path / "a.json"
+        _county_grid(src, n=2)
+        run_commands(spark, f"-i {src} -proj +proj=merc -o {tmp_path}/want.shp")
+        run_commands(spark, f"-i {src} -proj +proj=merc {cmd} "
+                            f"-o {tmp_path}/got.shp")
+        want = (tmp_path / "want.prj").read_text()
+        assert "Mercator" in want
+        assert (tmp_path / "got.prj").read_text() == want
+
+    def test_graticule_exports_lines(self, spark, tmp_path):
+        """The graticule's frame is paths (xs/ys), so it carries no ring
+        kind hint, which -o would read as rings."""
+        run_commands(spark, f"-graticule -o {tmp_path}/g.json")
+        feats = _features(tmp_path / "g.json")
+        assert feats and {f["geometry"]["type"]
+                          for f in feats} == {"LineString"}
+
+    def test_dropped_layer_leaves_no_metadata(self, spark, tmp_path):
+        src = tmp_path / "a.json"
+        _county_grid(src, n=2)
+        rect = "-rectangle bbox=0,0,1,1 name=a"
+        run_commands(spark, f"{rect} -o {tmp_path}/want.shp")
+        run_commands(spark, f"-i {src} -proj +proj=merc -drop {rect} "
+                            f"-o {tmp_path}/got.shp")
+        want = (tmp_path / "want.prj").read_text()
+        assert "WGS" in want
+        assert (tmp_path / "got.prj").read_text() == want
 
 
 def _with_shuffle_partitions(spark, n, fn):

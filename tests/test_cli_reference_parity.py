@@ -1551,7 +1551,7 @@ class TestGraticuleParity:
         b = g.agg(FF.max(FF.array_max("xs"))).collect()[0][0]
         # projected Robinson coordinates are meters-scale, not degrees
         assert b > 1e6
-        assert cat.crs["graticule"] == "+proj=robin"
+        assert cat.layers["graticule"].crs == "+proj=robin"
 
 
 class TestCalcModeParity:

@@ -36,14 +36,14 @@ class TestMixedImportNullGeometry:
         p.write_text(json.dumps(fc))
         cat = run_commands(spark, f"-i {p}")
         names = {r["name"] for lyr in cat.layers.values()
-                 for r in lyr.select("name").collect()}
+                 for r in lyr.df.select("name").collect()}
         assert "nogeom" in names
         # and it landed in a data-only layer, not a geometry one
         holders = [n for n, lyr in cat.layers.items()
                    if "nogeom" in {r["name"]
-                                   for r in lyr.select("name").collect()}]
-        assert all("rings_x" not in cat.layers[h].columns and
-                   "x" not in cat.layers[h].columns for h in holders)
+                                   for r in lyr.df.select("name").collect()}]
+        assert all("rings_x" not in cat.layers[h].df.columns and
+                   "x" not in cat.layers[h].df.columns for h in holders)
 
 
 class TestRenameFieldsCollision:
