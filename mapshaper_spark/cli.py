@@ -599,7 +599,10 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
             df = DL.import_delim(cat.spark, path, delimiter=delim,
                                  encoding=enc, string_fields=sfields,
                                  field_types=ftypes)
-            found.append((name, Layer(df, format=_input_format(path, None),
+            # a delimited file is a data table whatever its column
+            # names: an `n` or `xs` field is data, not geometry
+            found.append((name, Layer(df, hint="table",
+                                      format=_input_format(path, None),
                                       delim=delim)))
         elif ext == ".parquet":
             found.append((name, Layer(cat.spark.read.parquet(path))))
@@ -1633,7 +1636,8 @@ def _data_fields(layer: Layer, df: DataFrame) -> list[str]:
     synthetic point coordinates or a fid this importer minted. A layer of
     no declared kind skips every geometry column name."""
     skip = set(_GEOMETRY_COLUMNS.get(layer.hint, _ANY_GEOMETRY))
-    if {"xs", "ys"} <= set(df.columns):  # an arc frame's geometry
+    if layer.hint != "table" and {"xs", "ys"} <= set(df.columns):
+        # an arc frame's geometry
         skip |= {"xs", "ys", "n", "bbox"}
     if layer.kind == "point":
         skip |= {"lon", "lat", "x", "y"}

@@ -268,24 +268,23 @@ class PolygonIndex:
         return salted_cell_join(pts, self.cover).drop("cell")
 
 
-_INDEX_CACHE: dict[tuple, PolygonIndex] = {}
-
-
 def polygon_index(points_spark, polys_rings: DataFrame, poly_key: str,
                   bbox: Sequence[float] | None, res: int,
                   cache_token: str | None = None) -> PolygonIndex:
     """The PolygonIndex of a polygon layer. With a ``cache_token`` it is
     looked up first, so a hit runs no Spark job, and a miss is built
-    persisted and kept; without one it is built unpersisted."""
-    ck = (id(points_spark.sparkContext), cache_token, poly_key,
-          None if bbox is None else tuple(bbox), res)
-    idx = _INDEX_CACHE.get(ck) if cache_token is not None else None
-    if idx is None:
-        idx = PolygonIndex(points_spark, polys_rings, poly_key, bbox, res,
-                           persist=cache_token is not None)
-        if cache_token is not None:
-            _INDEX_CACHE[ck] = idx
-    return idx
+    persisted and kept; without one it is built unpersisted. The cache is
+    held on the SparkContext object and goes with it, so a later context
+    never gets an index whose persisted frames belong to a stopped one."""
+    if cache_token is None:
+        return PolygonIndex(points_spark, polys_rings, poly_key, bbox, res,
+                            persist=False)
+    cache = vars(points_spark.sparkContext).setdefault("_polygon_indexes", {})
+    ck = (cache_token, poly_key, None if bbox is None else tuple(bbox), res)
+    if ck not in cache:
+        cache[ck] = PolygonIndex(points_spark, polys_rings, poly_key, bbox,
+                                 res, persist=True)
+    return cache[ck]
 
 
 def pip_candidates(points: DataFrame, x: str, y: str, polys_rings: DataFrame,

@@ -38,10 +38,11 @@ from typing import Callable, Sequence
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
-def _schema_fingerprint(df: DataFrame) -> str:
-    return hashlib.sha256(df.schema.json().encode()).hexdigest()[:16]
+def _schema_fingerprint(schema: StructType) -> str:
+    return hashlib.sha256(schema.json().encode()).hexdigest()[:16]
 
 
 def _footer_rows(data_dir: str) -> dict[str, int]:
@@ -92,16 +93,28 @@ class ParquetSnapshotStore:
         df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_dir)
         wall = time.time() - t0
         lineage = _footer_rows(data_dir)
+        schema = df.schema
+        # as a read gives it back: partition columns last
+        read_schema = StructType([f for f in schema if f.name not in partition_by] +
+                                 [schema[c] for c in partition_by])
         manifest = {
             "stage": stage, "snapshot_id": snap_id, "path": data_dir,
-            "rows": sum(lineage.values()), "lineage": lineage, "schema": _schema_fingerprint(df),
+            "rows": sum(lineage.values()), "lineage": lineage, "schema": _schema_fingerprint(schema),
+            "schema_json": read_schema.jsonValue(),
             "inputs": list(inputs), "wall_s": round(wall, 3), "ts": time.time(), "complete": True,
         }
         _commit_json(os.path.join(snap_dir, "manifest.json"), manifest)
         return manifest
 
     def read(self, manifest: dict) -> DataFrame:
-        return self.spark.read.parquet(manifest["path"])
+        """The snapshot with the schema stored at its commit: no inference
+        job, a zero-row ``partition_by`` snapshot (no files to infer from)
+        reads, and a partition column keeps its written type. A manifest
+        written before the schema was stored falls back to inference."""
+        reader = self.spark.read
+        if "schema_json" in manifest:
+            reader = reader.schema(StructType.fromJson(manifest["schema_json"]))
+        return reader.parquet(manifest["path"])
 
 
 @dataclass

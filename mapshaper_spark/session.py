@@ -23,6 +23,38 @@ def driver_memory() -> str:
     return os.environ.get("MS_DRIVER_MEM") or f"{min(48 * 1024, ram_mb // 4)}m"
 
 
+# C2 (tier-4) compile thresholds, ten times HotSpot's defaults (5000, 600,
+# 15000, 40000). A CLI request spends most of its CPU in Catalyst analysis,
+# optimization and planning: code that runs a few thousand times per plan
+# and then stops, which C2 compiles anyway at the defaults. Measured from
+# the JVM's per-thread ticks on a 4-vCPU host (cli_edit's simplify request
+# on a 16-county grid, 512m heap), the compiler threads took 6.6 of the
+# first warm request's 9.6 s of JVM CPU, and C2 alone 24 of the cold
+# request's 48 s. Tenfold keeps planner code in C1 while per-row loops,
+# which run millions of times, still reach C2. Over ten benchmark pairs a
+# warm request's CPU fell from 7.5 to 5.5 s and a cold one's from 43 to
+# 33 s; a warm 5M-row tile-count scan kept its CPU (15.9 -> 15.4 s). The
+# cost is latency: the driver thread runs C1 code where C2 code would
+# have been ready, and compiling used to overlap it on idle cores, so a
+# warm request's wall time rose about 12%. C1 only
+# (-XX:TieredStopAtLevel=1) doubled the scan's CPU;
+# -XX:CompileThresholdScaling=10 also delays C1 and was slower per request.
+# Java floating point is strict since JDK 17 (JEP 306): the tier a method
+# runs in cannot change a result.
+_JIT_THRESHOLDS = ("-XX:Tier4InvocationThreshold=50000 "
+                   "-XX:Tier4MinInvocationThreshold=6000 "
+                   "-XX:Tier4CompileThreshold=150000 "
+                   "-XX:Tier4BackEdgeThreshold=400000")
+
+
+def driver_java_opts() -> str:
+    """The local-mode JVM's options: the JIT thresholds above, then
+    ``MS_DRIVER_JAVA_OPTS`` (e.g. a GC flag). The JVM keeps the last value
+    of a repeated ``-XX`` flag, so the variable overrides any threshold."""
+    extra = os.environ.get("MS_DRIVER_JAVA_OPTS", "").strip()
+    return f"{_JIT_THRESHOLDS} {extra}" if extra else _JIT_THRESHOLDS
+
+
 def local_cpus() -> str:
     """``SPARK_GRAFT_CPUS``, else the cores this process may run on (its
     CPU affinity, which containers and taskset narrow below the machine's
@@ -55,11 +87,7 @@ def get_spark(
         # heap for the thread count or allocation-heavy stages GC-thrash
         # (observed: 32 threads in 8g ran 2x SLOWER than 8 threads)
         .config("spark.driver.memory", driver_memory())
-        # GC knob for the local-mode JVM (MS_DRIVER_JAVA_OPTS, e.g.
-        # "-XX:+UseParallelGC"): at high thread counts the allocation rate
-        # of scan-heavy stages makes collector choice measurable
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("MS_DRIVER_JAVA_OPTS", ""))
+        .config("spark.driver.extraJavaOptions", driver_java_opts())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -290,9 +290,18 @@ def import_shapefile(spark, shp_bytes: bytes, dbf_bytes: bytes | None = None,
         rows.append(row)
     if dbf_bytes is not None:
         enc = normalize_encoding(encoding) if encoding else None
-        for row, rec in zip(rows, read_dbf(dbf_bytes, encoding=enc)):
+        records = read_dbf(dbf_bytes, encoding=enc)
+        for row, rec in zip(rows, records):
             for k, v in rec.items():
                 row[k] = v
+        if records and "fid" in records[0]:
+            # a dbf fid replaces the record number as the feature key: a
+            # null (a blank dbf value) or a repeat would merge features
+            fids = [row["fid"] for row in rows]
+            if not all(isinstance(v, (str, int, float)) and v != ""
+                       for v in fids) or len(set(fids)) != len(fids):
+                raise ValueError("dbf field 'fid' must be a distinct, "
+                                 "non-null scalar on every record")
     pdf = pd.DataFrame(rows)
     # polyline/polygon files carry no point coords: an all-None object
     # column breaks Spark's type inference — pin x/y(/z) to float64

@@ -164,6 +164,49 @@ def test_zero_row_stage(spark, root):
     assert r.metrics().collect()[0].rows == 0
 
 
+def test_zero_row_partitioned_stage_feeds_a_dependent_stage(spark, root):
+    """A zero-row partition_by snapshot has no files to infer a schema
+    from: the dependent stage reads it with the schema in its manifest."""
+    stages = [
+        Stage("empty", lambda spark, deps: spark.range(0).select(
+            (F.col("id") % 3).alias("k"), "id"), partition_by=("k",)),
+        Stage("after", lambda spark, deps: deps["empty"].groupBy("k").count(),
+              inputs=("empty",)),
+    ]
+    r = StageRunner(spark, root)
+    done = r.run(stages)
+    assert done["empty"]["rows"] == 0 and done["after"]["rows"] == 0
+    # partition columns last, as in a snapshot with rows
+    assert r.store.read(done["empty"]).columns == ["id", "k"]
+
+
+def test_snapshot_read_keeps_written_types_and_runs_no_job(spark, root):
+    """A partition column keeps the type it was written with (inference
+    would read string keys "01", "02" back as integers), and reading a
+    snapshot runs no schema-inference job."""
+    def keyed(spark, deps):
+        return spark.createDataFrame([(1, "01"), (2, "02")], "v int, k string")
+
+    r = StageRunner(spark, root)
+    done = r.run([Stage("keyed", keyed, partition_by=("k",))])
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-read", "snapshot read")
+    try:
+        back = r.store.read(done["keyed"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ckpt-read")) == 0
+    assert back.dtypes == [("v", "int"), ("k", "string")]
+    assert sorted(back.collect()) == [(1, "01"), (2, "02")]
+
+
+def test_manifest_without_schema_reads_by_inference(spark, root):
+    r = StageRunner(spark, root)
+    done = r.run([Stage("ingest", lambda spark, deps: spark.range(3))])
+    old = {k: v for k, v in done["ingest"].items() if k != "schema_json"}
+    assert sorted(row.id for row in r.store.read(old).collect()) == [0, 1, 2]
+
+
 def test_lineage_and_metrics_on_empty_root(spark, root):
     r = StageRunner(spark, root)
     lin, met = r.lineage(), r.metrics()
@@ -256,6 +299,31 @@ class TestShapefileWriters:
         assert len(geoms) == 2 and geoms[0]["type"] == SH.SHP_POLYGON
         assert [r["fid"] for r in recs] == [1, 2]
         assert [r["name"] for r in recs] == ["A", "B"]
+
+
+class TestShapefileImportFid:
+    """A dbf ``fid`` field is the feature key, so it must be distinct and
+    non-null, like a GeoJSON ``fid`` property."""
+
+    SQUARES = [{"type": 5, "parts": [[(x, 0.0), (x, 1.0), (x + 1.0, 1.0),
+                                      (x + 1.0, 0.0), (x, 0.0)]]}
+               for x in (0.0, 2.0)]
+
+    @pytest.mark.parametrize("fids", [[7, 7], [7, None], ["a", ""]])
+    def test_repeated_or_null_fid_raises(self, spark, fids):
+        from mapshaper_spark.sources import shapefile as SH
+        shp, _ = SH.write_shp(self.SQUARES)
+        dbf = SH.write_dbf([{"fid": f, "name": n}
+                            for f, n in zip(fids, "ab")])
+        with pytest.raises(ValueError, match="fid"):
+            SH.import_shapefile(spark, shp, dbf)
+
+    def test_distinct_fids_are_kept(self, spark):
+        from mapshaper_spark.sources import shapefile as SH
+        shp, _ = SH.write_shp(self.SQUARES)
+        dbf = SH.write_dbf([{"fid": 7, "name": "a"}, {"fid": 3, "name": "b"}])
+        df = SH.import_shapefile(spark, shp, dbf)
+        assert [(r.fid, r.name) for r in df.collect()] == [(7, "a"), (3, "b")]
 
 
 class TestCellBucketing:

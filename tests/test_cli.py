@@ -928,6 +928,14 @@ class TestLayerRecord:
         run_commands(spark, f"-i {src} -rename-layers b -o {out}")
         assert out.read_text() == "a\tb\n1\t2"
 
+    def test_csv_fields_named_like_geometry_survive_export(self, spark,
+                                                          tmp_path):
+        # a CSV import is a table: `n`, `xs` and `ys` are its data fields
+        src, out = tmp_path / "t.csv", tmp_path / "out.csv"
+        src.write_text("id,n,xs,ys\n1,5,a,c\n2,6,b,d\n")
+        run_commands(spark, f"-i {src} -o {out}")
+        assert out.read_text() == "id,n,xs,ys\n1,5,a,c\n2,6,b,d"
+
     def test_rename_layers_swaps_names(self, spark):
         a = spark.createDataFrame([(1,)], "v int")
         b = spark.createDataFrame([(2,)], "v int")

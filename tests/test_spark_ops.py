@@ -315,6 +315,32 @@ def test_cached_pip_join_runs_no_spark_job(spark, bbox):
     assert [r.pid for r in again.collect()] == [r.pid for r in first.collect()] == [1]
 
 
+def test_index_cache_is_held_by_its_context(monkeypatch):
+    """A cached index belongs to the context it was built in: a session on
+    another context misses, even one whose context object reuses the
+    address (the id) of a stopped, freed one."""
+    monkeypatch.setattr(S, "PolygonIndex", lambda *a, **k: object())
+
+    class Context:
+        pass
+
+    class Session:
+        def __init__(self, sc):
+            self.sparkContext = sc
+
+    first = Session(Context())
+    idx = S.polygon_index(first, None, "rid", None, 4, cache_token="ctx")
+    assert S.polygon_index(first, None, "rid", None, 4, cache_token="ctx") is idx
+    old_id = id(first.sparkContext)
+    del first
+    for _ in range(1000):  # CPython hands the freed block out again
+        sc = Context()
+        if id(sc) == old_id:
+            break
+    later = Session(sc)
+    assert S.polygon_index(later, None, "rid", None, 4, cache_token="ctx") is not idx
+
+
 class TestFastSimplify:
     """fast-simplify (mapshaper-simplify-fast.js:3-66) interval thinning."""
 
