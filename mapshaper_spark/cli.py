@@ -41,6 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapshaper_spark import layers as L
 from mapshaper_spark.sources.geojson import GEOMETRY_COLUMNS as _IMPORT_GEOMETRY
 
 # boolean flag words per command (reference option definitions,
@@ -243,6 +244,21 @@ class Layer:
         """The declared kind, else the one the frame's columns show."""
         return self.hint or _geometry_kind(self.df)
 
+    def bounds(self) -> tuple | None:
+        """(xmin, ymin, xmax, ymax) of the layer, None when it has no
+        coordinates: the import's fact, else one aggregate
+        (``layers.bounds``)."""
+        if "bounds" in self.facts:
+            return self.facts["bounds"]
+        return L.bounds(self.extent_frame())
+
+    def extent_frame(self) -> DataFrame:
+        """The frame an extent is read from: a ring layer's x/y columns
+        are data fields (e.g. GeoJSON properties), not coordinates."""
+        if self.hint in ("polygon", "polyline"):
+            return self.df.drop("x", "y", "lon", "lat")
+        return self.df
+
     def with_df(self, df: DataFrame, **changes) -> Layer:
         """This layer holding ``df``: the facts about the old frame go,
         and so does a ring-kind hint the new frame has no rings for
@@ -307,29 +323,6 @@ class Catalog:
         self.order.remove(name)
 
 
-def _probably_latlong(df: DataFrame) -> bool:
-    """internal.probablyDecimalDegreeBounds: bounds within the (slightly
-    padded) lat-long envelope -> assume an unprojected dataset."""
-    try:
-        cols = set(df.columns)
-        if "bbox" in cols:
-            r = df.agg(F.min("bbox.xmin"), F.min("bbox.ymin"),
-                       F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0]
-        elif "rings_x" in cols:
-            fx = F.flatten("rings_x")
-            fy = F.flatten("rings_y")
-            r = df.agg(F.min(F.array_min(fx)), F.min(F.array_min(fy)),
-                       F.max(F.array_max(fx)),
-                       F.max(F.array_max(fy))).collect()[0]
-        else:
-            x, y = _point_cols(df)
-            r = df.agg(F.min(x), F.min(y), F.max(x), F.max(y)).collect()[0]
-        xmin, ymin, xmax, ymax = (float(v) for v in r)
-        return -200 <= xmin and xmax <= 200 and -91 <= ymin and ymax <= 91
-    except Exception:
-        return False
-
-
 def _geometry_kind(df: DataFrame) -> str:
     cols = set(df.columns)
     if "rings_x" in cols:
@@ -339,6 +332,14 @@ def _geometry_kind(df: DataFrame) -> str:
     if {"lon", "lat"} <= cols or {"x", "y"} <= cols:
         return "point"
     return "table"
+
+
+def _no_multipoints(cat: Catalog, c: Command) -> None:
+    """A point layer carries MultiPoint coordinates in its rings arrays;
+    a command that reads rings as polygons cannot take them."""
+    layer = cat.layer()
+    if layer.kind == "point" and "rings_x" in layer.df.columns:
+        raise ValueError(f"-{c.name}: multi-part points are not supported")
 
 
 def _point_cols(df: DataFrame) -> tuple[str, str]:
@@ -805,26 +806,26 @@ def _parse_calc(spec: str) -> dict[str, tuple[str, str]]:
     return out
 
 
-def _resolve_source(cat: Catalog, token: str) -> DataFrame:
+def _resolve_source(cat: Catalog, token: str) -> Layer:
     """A command's source operand: an existing layer name, or a file path
     to auto-import (the reference imports -join/-clip file sources)."""
     if token in cat.layers:
-        return cat.df(token)
+        return cat.layer(token)
     if _layer_name(token) in cat.layers:
-        return cat.df(_layer_name(token))
+        return cat.layer(_layer_name(token))
     if os.path.exists(token):
         saved = cat.target
         _cmd_i(cat, Command("i", values=[token]))
-        df = cat.df()
+        layer = cat.layer()
         cat.target = saved
-        return df
+        return layer
     raise ValueError(f"no layer or file '{token}' (layers: {cat.order})")
 
 
 def _cmd_join(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators import joins as J
     source = _resolve_source(cat, c.values[0] if c.values
-                             else str(c.opt("source")))
+                             else str(c.opt("source"))).df
     keys = c.csv("keys")
     if len(keys) != 2:
         raise ValueError("-join requires keys=target_key,source_key")
@@ -909,6 +910,7 @@ def _cmd_dissolve(cat: Catalog, c: Command) -> None:
     if fields == ["__all__"]:
         df = df.withColumn("__all__", F.lit(1))
     calc = _parse_calc(str(c.opt("calc"))) if c.opt("calc") else None
+    _no_multipoints(cat, c)
     kind = _geometry_kind(df)
     df_o, order_o = _record_order(df)
     attrs = DS.dissolve_attributes(
@@ -996,6 +998,7 @@ def _cmd_clip(cat: Catalog, c: Command, erase: bool = False) -> None:
     from mapshaper_spark.operators import paths as P
     from mapshaper_spark.operators.overlay import clip_polygons, clip_polylines
     df = cat.df()
+    _no_multipoints(cat, c)
     kind = _geometry_kind(df)
     if c.opt("bbox"):
         bbox = [float(v) for v in c.csv("bbox")]
@@ -1008,26 +1011,17 @@ def _cmd_clip(cat: Catalog, c: Command, erase: bool = False) -> None:
         if kind == "point":
             x, y = _point_cols(df)
             cat.replace(P.clip_bbox_points(df, x, y, bbox))
-        elif kind == "polyline":
-            from mapshaper_spark.operators.overlay import _ensure_bbox
-            had_bbox = "bbox" in df.columns
-            out = P.clip_bbox_paths(_ensure_bbox(df), bbox)
-            cat.replace(out if had_bbox else out.drop("bbox"))
         elif kind == "polygon":
             cat.replace(P.clip_polygons_bbox(df, bbox))
-        else:
-            if "bbox" not in df.columns:
-                df = df.withColumn("bbox", F.struct(
-                    F.array_min("xs").alias("xmin"),
-                    F.array_min("ys").alias("ymin"),
-                    F.array_max("xs").alias("xmax"),
-                    F.array_max("ys").alias("ymax")))
-            cat.replace(P.clip_bbox_paths(df, bbox).drop("bbox"))
+        else:  # polyline rings or arc paths
+            had_bbox = "bbox" in df.columns
+            out = P.clip_bbox_paths(L.with_bbox(df), bbox)
+            cat.replace(out if had_bbox else out.drop("bbox"))
         return
-    from mapshaper_spark.operators.overlay import _ensure_bbox
-    clip_layer = _resolve_source(cat, c.values[0])
-    if _geometry_kind(clip_layer) != "polygon":
+    clip_source = _resolve_source(cat, c.values[0])
+    if clip_source.kind != "polygon":
         raise ValueError("-clip/-erase source must be a polygon layer")
+    clip_layer = clip_source.df
     if kind == "point":
         x, y = _point_cols(df)
         cat.replace(P.clip_points(df, x, y, clip_layer,
@@ -1037,7 +1031,7 @@ def _cmd_clip(cat: Catalog, c: Command, erase: bool = False) -> None:
         # semantics, not ring overlay (Issue #192)
         cat.replace(clip_polylines(df, clip_layer, erase=erase))
     else:
-        cat.replace(clip_polygons(_ensure_bbox(df), clip_layer, erase=erase,
+        cat.replace(clip_polygons(L.with_bbox(df), clip_layer, erase=erase,
                                   key=df.columns[0]))
 
 
@@ -1065,9 +1059,7 @@ def _cmd_explode(cat: Catalog, c: Command) -> None:
         if "geometry_type" in out.columns:
             out = out.withColumn("geometry_type", F.lit("Point"))
         if "bbox" in out.columns:
-            out = out.withColumn("bbox", F.struct(
-                F.col(x).alias("xmin"), F.col(y).alias("ymin"),
-                F.col(x).alias("xmax"), F.col(y).alias("ymax")))
+            out = out.withColumn("bbox", L.geometry_bbox(out))
         cat.replace(out)
         return
     # the reference adds no field to exploded records; part_idx is the
@@ -1181,7 +1173,7 @@ def _cmd_proj(cat: Catalog, c: Command) -> None:
     kind = cat.layer().kind
     if kind == "point":
         x, y = _point_cols(df)
-        out = PR.project_points(df, x, y, crs=crs, src=src)
+        out = PR.project_points(df.drop("bbox"), x, y, crs=crs, src=src)
     elif kind == "path":
         out = PR.project_arcs(df, crs=crs, src=src)
     else:
@@ -1233,9 +1225,7 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
         Spherical auto-detection: decimal-degree-looking bounds simplify
         on the 3D sphere unless 'planar' (useSphericalSimplify :51-53).
         The bounds are the layer's import fact when it has one."""
-        b = cat.layer().facts.get("bounds")
-        if b is None:
-            b = SI.arc_bounds(arcs)
+        b = cat.layer().bounds()
         latlong = (b is not None and -181 <= b[0] and -91 <= b[1] and
                    b[2] <= 181 and b[3] <= 91)
         spherical = latlong and not c.flag("planar")
@@ -1322,39 +1312,14 @@ def _cmd_affine(cat: Catalog, c: Command) -> None:
     if c.opt("anchor"):
         anchor = tuple(float(v) for v in c.csv("anchor"))
     else:
-        sel = df.filter(where) if where is not None else df
-        if kind == "point" and "rings_x" not in df.columns:
-            x, y = _point_cols(df)
-            b = sel.agg(F.min(x), F.min(y), F.max(x), F.max(y)).collect()[0]
-        elif kind == "point":
-            # MultiPoint coords ride in the rings arrays alongside scalar
-            # Point rows — bounds must span both
-            x, y = _point_cols(df)
-            b = sel.agg(
-                F.least(F.min(x), F.min(F.array_min(
-                    F.transform("rings_x", F.array_min)))),
-                F.least(F.min(y), F.min(F.array_min(
-                    F.transform("rings_y", F.array_min)))),
-                F.greatest(F.max(x), F.max(F.array_max(
-                    F.transform("rings_x", F.array_max)))),
-                F.greatest(F.max(y), F.max(F.array_max(
-                    F.transform("rings_y", F.array_max))))
-            ).collect()[0]
-        else:
-            b = sel.agg(
-                F.min(F.array_min(F.transform("rings_x", F.array_min))),
-                F.min(F.array_min(F.transform("rings_y", F.array_min))),
-                F.max(F.array_max(F.transform("rings_x", F.array_max))),
-                F.max(F.array_max(F.transform("rings_y", F.array_max)))
-            ).collect()[0]
-        anchor = ((float(b[0]) + float(b[2])) / 2,
-                  (float(b[1]) + float(b[3])) / 2) if b[0] is not None \
-            else (0.0, 0.0)
+        b = cat.layer().bounds() if where is None else \
+            L.bounds(df.filter(where))
+        anchor = ((b[0] + b[2]) / 2, (b[1] + b[3]) / 2) if b else (0.0, 0.0)
     kw = dict(shift=tuple(shift), scale=c.num("scale", 1.0),
               rotate_deg=c.num("rotate", 0.0), anchor=anchor, where=where)
     if kind == "point":
         x, y = _point_cols(df)
-        out = affine(df, x, y, **kw)
+        out = affine(df, x, y, **kw).drop("bbox")
         if "rings_x" in out.columns:  # MultiPoint rows carry ring coords
             out = affine_rings(out, **kw)
         cat.replace(out)
@@ -1389,12 +1354,8 @@ def _cmd_merge_layers(cat: Catalog, c: Command) -> None:
         # lat-lng with projected sources is an error
         is_ll = set()
         for s in sources:
-            ldf = s.df
-            if not ({"x", "rings_x", "xs"} & set(ldf.columns)):
-                continue  # data-only layer: no bounds, no vote
-            try:
-                bb = _layer_bbox(ldf)
-            except (TypeError, ValueError):  # empty layer -> no bounds
+            bb = s.bounds()
+            if bb is None:  # no coordinates: no vote
                 continue
             is_ll.add(bb[0] >= -181 and bb[1] >= -91 and
                       bb[2] <= 181 and bb[3] <= 91)
@@ -1455,11 +1416,12 @@ def _cmd_split_on_grid(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators.grid import split_on_grid
     cols, rows = (int(v) for v in c.values[0].split(","))
     df = cat.df()
+    bbox = cat.layer().bounds()
     if _geometry_kind(df) == "point":
         x, y = _point_cols(df)
-        cat.replace(split_on_grid(df, cols, rows, x=x, y=y))
+        cat.replace(split_on_grid(df, cols, rows, bbox, x=x, y=y))
     else:
-        cat.replace(split_on_grid(df, cols, rows))
+        cat.replace(split_on_grid(df, cols, rows, bbox))
 
 
 def _cmd_target(cat: Catalog, c: Command) -> None:
@@ -1566,6 +1528,10 @@ def _svg_payload(cat: Catalog, names: list[str], c: Command) -> str:
             gt = "polyline" if kind == "polyline" else "polygon"
         layers.append((name, df, gt))
     opts = {}
+    boxes = [b for b in (cat.layers[n].bounds() for n in names) if b]
+    if boxes:
+        opts["bounds"] = (min(b[0] for b in boxes), min(b[1] for b in boxes),
+                          max(b[2] for b in boxes), max(b[3] for b in boxes))
     if c.opt("width"):
         opts["width"] = c.num("width")
     if c.opt("height"):
@@ -1662,7 +1628,12 @@ def _prj_text(layer: Layer) -> str | None:
             return proj4_to_wkt(layer.crs)
         except ValueError:
             return None
-    return proj4_to_wkt("wgs84") if _probably_latlong(layer.df) else None
+    # internal.probablyDecimalDegreeBounds: bounds within the (slightly
+    # padded) lat-long envelope -> assume an unprojected dataset
+    b = layer.bounds()
+    latlong = b is not None and -200 <= b[0] and b[2] <= 200 and \
+        -91 <= b[1] and b[3] <= 91
+    return proj4_to_wkt("wgs84") if latlong else None
 
 
 def _delim_out(cat: Catalog, c: Command, df: DataFrame, fmt: str,
@@ -1806,7 +1777,7 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         if c.opt("precision"):
             kwargs["precision"] = c.num("precision")
         if c.opt("bbox") is True:  # -o bbox flag (geojson-export.js:161)
-            kwargs["bbox"] = True
+            kwargs["bbox"] = layer.bounds()
         if fmt in ("ndjson", "geojson-seq"):
             # scale-safe sink: distributed directory write, one Feature
             # (or record, for attribute tables) per line — the only -o
@@ -1833,7 +1804,7 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         return
     elif fmt == "shp":
         files = dict(zip((".shp", ".shx", ".dbf"), SH.export_shapefile(
-            df, fields=_data_fields(layer, df))))
+            df, layer.kind, fields=_data_fields(layer, df))))
         prj = _prj_text(layer)
         if prj is not None:
             files[".prj"] = prj
@@ -1881,7 +1852,8 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
 def _cmd_info(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators.attributes import layer_info
     cat.info.append({"layer": cat.target,
-                     "rows": layer_info(cat.df(), cat.target or "").collect()})
+                     "rows": layer_info(cat.layer().extent_frame(),
+                                        cat.target or "").collect()})
 
 
 def _record_order(df: DataFrame) -> tuple[DataFrame, str]:
@@ -1913,35 +1885,17 @@ def _cmd_calc(cat: Catalog, c: Command) -> None:
     cat.calc_env.update(result)  # calc results enter later expression scope
 
 
-def _layer_bbox(df: DataFrame) -> list[float]:
-    """Overall [xmin, ymin, xmax, ymax] of a layer, any geometry kind."""
-    kind = _geometry_kind(df)
-    if kind == "point":
-        x, y = _point_cols(df)
-        r = df.agg(F.min(x), F.min(y), F.max(x), F.max(y)).collect()[0]
-        return [float(v) for v in r]
-    if "bbox" in df.columns:
-        r = df.agg(F.min("bbox.xmin"), F.min("bbox.ymin"),
-                   F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0]
-        return [float(v) for v in r]
-    if "rings_x" in df.columns:
-        r = df.agg(
-            F.min(F.array_min(F.transform("rings_x", F.array_min))),
-            F.min(F.array_min(F.transform("rings_y", F.array_min))),
-            F.max(F.array_max(F.transform("rings_x", F.array_max))),
-            F.max(F.array_max(F.transform("rings_y", F.array_max)))).collect()[0]
-        return [float(v) for v in r]
-    r = df.agg(F.min(F.array_min("xs")), F.min(F.array_min("ys")),
-               F.max(F.array_max("xs")), F.max(F.array_max("ys"))).collect()[0]
-    return [float(v) for v in r]
-
-
-def _opt_bbox(cat: Catalog, c: Command) -> list[float]:
-    """bbox= option, defaulting to the target layer's bounds (the
-    reference's 'default is bbox of data')."""
+def _opt_bbox(cat: Catalog, c: Command,
+              layer: Layer | None = None) -> list[float]:
+    """bbox= option, defaulting to the bounds of ``layer``, else of the
+    target layer (the reference's 'default is bbox of data')."""
     if c.opt("bbox"):
         return [float(v) for v in c.csv("bbox")]
-    return _layer_bbox(cat.df())
+    b = (layer or cat.layer()).bounds()
+    if b is None:
+        raise ValueError(f"-{c.name}: the layer has no coordinates; "
+                         "give bbox=")
+    return list(b)
 
 
 def _grid_shape(c: Command) -> tuple[int, int]:
@@ -1994,14 +1948,11 @@ def _cmd_graticule(cat: Catalog, c: Command) -> None:
 
 def _cmd_rectangle(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators.grid import rectangle
-    if c.opt("bbox"):
-        bbox = [float(v) for v in c.csv("bbox")]
-    elif c.opt("source"):
-        bbox = _layer_bbox(_resolve_source(cat, str(c.opt("source"))))
-    elif cat.target:
-        bbox = _layer_bbox(cat.df())
-    else:
+    source = c.opt("source")
+    if not (c.opt("bbox") or source or cat.target):
         raise ValueError("-rectangle needs bbox= or source=")
+    bbox = _opt_bbox(cat, c, _resolve_source(cat, str(source))
+                     if source and not c.opt("bbox") else None)
     if c.opt("offset"):
         off = c.num("offset")
         bbox = [bbox[0] - off, bbox[1] - off, bbox[2] + off, bbox[3] + off]
@@ -2161,20 +2112,12 @@ def _cmd_filter_geom(cat: Catalog, c: Command) -> None:
                .withColumn("rings_y", F.transform("__keep", lambda p: p["ry"]))
                .drop("__keep"))
         if "bbox" in df.columns:
-            out = out.withColumn("bbox", F.struct(
-                F.array_min(F.transform("rings_x", F.array_min)).alias("xmin"),
-                F.array_min(F.transform("rings_y", F.array_min)).alias("ymin"),
-                F.array_max(F.transform("rings_x", F.array_max)).alias("xmax"),
-                F.array_max(F.transform("rings_y", F.array_max)).alias("ymax")))
+            out = out.withColumn("bbox", L.geometry_bbox(out))
         cat.replace(out)
         return
     # single-part path rows (xs/ys): part == feature, bounds test suffices
     had_bbox = "bbox" in df.columns
-    if not had_bbox:
-        df = df.withColumn("bbox", F.struct(
-            F.array_min("xs").alias("xmin"), F.array_min("ys").alias("ymin"),
-            F.array_max("xs").alias("xmax"), F.array_max("ys").alias("ymax")))
-    out = filter_geom_bbox(df, bbox)
+    out = filter_geom_bbox(L.with_bbox(df), bbox)
     cat.replace(out if had_bbox else out.drop("bbox"))
 
 
@@ -2234,15 +2177,15 @@ def _cmd_polygons(cat: Catalog, c: Command) -> None:
 
 
 def _cmd_slice(cat: Catalog, c: Command) -> None:
-    from mapshaper_spark.operators.overlay import _ensure_bbox, slice_polygons
+    from mapshaper_spark.operators.overlay import slice_polygons
     source = _resolve_source(cat, c.values[0] if c.values
                              else str(c.opt("source")))
-    if _geometry_kind(source) != "polygon":
+    if source.kind != "polygon":
         raise ValueError("-slice source must be a polygon layer")
     # the pair join shuffles: tag the record order first, -o emits rows in it
-    df = _order_tagged(_ensure_bbox(cat.df()))
+    df = _order_tagged(L.with_bbox(cat.df()))
     id_field = c.opt("id-field")
-    cat.replace(slice_polygons(df, source,
+    cat.replace(slice_polygons(df, source.df,
                                id_field=str(id_field) if id_field else None))
 
 

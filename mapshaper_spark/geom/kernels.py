@@ -179,19 +179,6 @@ def path_length_planar(xs: np.ndarray, ys: np.ndarray) -> float:
     return float(np.sum(np.sqrt(dx * dx + dy * dy)))
 
 
-def path_length_spherical(xs: np.ndarray, ys: np.ndarray, R: float = 6378137.0) -> float:
-    """Haversine great-circle length (mapshaper-geom.js greatCircleDistance)."""
-    d2r = math.pi / 180.0
-    lam = xs * d2r
-    phi = ys * d2r
-    dlam = np.diff(lam)
-    dphi = np.diff(phi)
-    a = (np.sin(dphi / 2) ** 2 +
-         np.cos(phi[:-1]) * np.cos(phi[1:]) * np.sin(dlam / 2) ** 2)
-    c = 2 * np.arctan2(np.sqrt(a), np.sqrt(1 - a))
-    return float(np.sum(c) * R)
-
-
 # ---------------------------------------------------------------------------
 # Point-to-segment distance (apex formula)
 # ---------------------------------------------------------------------------

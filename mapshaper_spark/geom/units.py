@@ -102,18 +102,3 @@ def convert_area_param(param, crs: str | None) -> float:
     value, units = parse_measure(param)
     k = interval_conversion_factor(units, crs)
     return value * k * k
-
-
-def convert_interval_param(param, crs: str | None,
-                           is_latlong: bool = False) -> float:
-    """convertIntervalParam (mapshaper-units.js:105-115): like
-    convert_distance_param, but latlong coordinates are UNITLESS — a
-    units suffix is an error there ('wgs84 / km / planar',
-    simplify-test.js:18-27)."""
-    o = parse_measure_full(param)
-    if o.get("units") and is_latlong:
-        raise ValueError(
-            "Parameter does not support distance units with latlong datasets")
-    if o.get("areal"):
-        raise ValueError(f"Expected a distance, received an area: {param}")
-    return o["value"] * interval_conversion_factor(o.get("units"), crs)

@@ -20,6 +20,17 @@ tables and ring coordinates is written, and every operator calls them:
   grouped by any path key;
 - ``assemble_rings``: features + arcs -> ``rings_x``/``rings_y``.
 
+The extent helpers are the one place a layer's extent is decided, for
+every kind of frame:
+
+- ``geometry_bbox``: the per-row bbox struct from whatever coordinate
+  columns a frame has (x/y or lon/lat, rings, arc xs/ys);
+- ``row_bbox``: the stored ``bbox`` where set, else ``geometry_bbox``;
+- ``with_bbox``: the frame with a ``bbox`` column (``geometry_bbox`` when
+  it has none);
+- ``bounds_aggs`` / ``bounds``: the four min/max aggregates, and the
+  layer extent as one aggregate (None without coordinates).
+
 The way back, a ring layer to shared-arc topology, is
 ``operators.topology.ring_topology``.
 
@@ -32,9 +43,10 @@ reference test suite.
 
 from __future__ import annotations
 
+import functools
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -194,6 +206,81 @@ def assemble_rings(features: DataFrame, arcs: DataFrame, key: str = "rid") -> Da
         .select(key, F.col("rs.xs").alias("rings_x"), F.col("rs.ys").alias("rings_y"))
     )
     return features.join(per_feature, key)
+
+
+def geometry_bbox(df: DataFrame) -> Column | None:
+    """The per-row ``struct<xmin,ymin,xmax,ymax>`` of every coordinate
+    column ``df`` has: scalar ``x``/``y`` (else ``lon``/``lat``),
+    ``rings_x``/``rings_y`` and arc ``xs``/``ys``. least/greatest skip
+    nulls, so a layer mixing Point rows (x/y) with MultiPoint rows (rings)
+    spans both. None when ``df`` has no coordinate columns."""
+    types = dict(df.dtypes)
+    scalar = next(((x, y) for x, y in (("x", "y"), ("lon", "lat"))
+                   if x in types and y in types), None)
+    carriers = []  # (xmin, ymin, xmax, ymax) per coordinate column pair
+    if scalar:
+        x, y = F.col(scalar[0]), F.col(scalar[1])
+        carriers.append((x, y, x, y))
+    for cx, cy in (("rings_x", "rings_y"), ("xs", "ys")):
+        if types.get(cx, "").startswith("array") and cy in types:
+            ax, ay = ((F.flatten(cx), F.flatten(cy)) if cx == "rings_x"
+                      else (F.col(cx), F.col(cy)))
+            carriers.append((F.array_min(ax), F.array_min(ay),
+                             F.array_max(ax), F.array_max(ay)))
+    if not carriers:
+        return None
+
+    def side(i, pick):
+        cols = [c[i] for c in carriers]
+        return cols[0] if len(cols) == 1 else pick(*cols)
+    return F.struct(side(0, F.least).alias("xmin"),
+                    side(1, F.least).alias("ymin"),
+                    side(2, F.greatest).alias("xmax"),
+                    side(3, F.greatest).alias("ymax"))
+
+
+def row_bbox(df: DataFrame) -> Column | None:
+    """Each row's bbox: the stored ``bbox`` where it is set, else
+    ``geometry_bbox``."""
+    g = geometry_bbox(df)
+    if "bbox" not in df.columns:
+        return g
+    return F.col("bbox") if g is None else F.coalesce("bbox", g)
+
+
+def with_bbox(df: DataFrame) -> DataFrame:
+    """``df`` with a per-row ``bbox`` column: the stored one, else
+    ``geometry_bbox``."""
+    if "bbox" in df.columns:
+        return df
+    bbox = geometry_bbox(df)
+    if bbox is None:
+        raise ValueError("the layer has no coordinates")
+    return df.withColumn("bbox", bbox)
+
+
+def bounds_aggs(df: DataFrame) -> list[Column]:
+    """The four aggregates of a layer's extent (min xmin, min ymin,
+    max xmax, max ymax) over its ``row_bbox``; null literals when it has
+    no coordinates."""
+    b = row_bbox(df)
+    if b is None:
+        return [F.lit(None).cast("double")] * 4
+    return [F.min(b["xmin"]), F.min(b["ymin"]),
+            F.max(b["xmax"]), F.max(b["ymax"])]
+
+
+def bounds(*dfs: DataFrame) -> tuple | None:
+    """(xmin, ymin, xmax, ymax) over every coordinate of the layers
+    ``dfs`` in one aggregate, or None when they have none (no coordinate
+    columns: no job)."""
+    boxes = [df.select(b.alias("bbox")) for df in dfs
+             if (b := row_bbox(df)) is not None]
+    if not boxes:
+        return None
+    u = functools.reduce(DataFrame.unionByName, boxes)
+    row = u.agg(*bounds_aggs(u)).collect()[0]
+    return None if row[0] is None else tuple(float(v) for v in row)
 
 
 def region_mosaic_rings_local(spark: SparkSession, cols: int = 6, rows: int = 4,

@@ -21,6 +21,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapshaper_spark.layers import bounds_aggs
+
 ROW_IDX = "__feature_idx"
 
 
@@ -280,15 +282,8 @@ def layer_info(df, name: str = "[unnamed]"):
         gtype = F.lit("table")
         nulls = F.lit(0).cast("long")
     aggs = [F.count(F.lit(1)).alias("n_features"), nulls.alias("n_null_geoms")]
-    if "bbox" in df.columns:
-        aggs += [F.min("bbox.xmin").alias("xmin"), F.min("bbox.ymin").alias("ymin"),
-                 F.max("bbox.xmax").alias("xmax"), F.max("bbox.ymax").alias("ymax")]
-    elif "x" in df.columns and "y" in df.columns:
-        aggs += [F.min("x").alias("xmin"), F.min("y").alias("ymin"),
-                 F.max("x").alias("xmax"), F.max("y").alias("ymax")]
-    else:
-        aggs += [F.lit(None).cast("double").alias(c)
-                 for c in ("xmin", "ymin", "xmax", "ymax")]
+    aggs += [a.alias(c) for a, c in
+             zip(bounds_aggs(df), ("xmin", "ymin", "xmax", "ymax"))]
     return (df.agg(*aggs)
             .select(F.lit(name).alias("layer"), gtype.alias("geometry_type"),
                     "n_features", "n_null_geoms", "xmin", "ymin", "xmax", "ymax",

@@ -20,6 +20,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapshaper_spark import layers as L
+
 
 def point_grid(spark: SparkSession, cols: int, rows: int,
                bbox: Sequence[float]) -> DataFrame:
@@ -128,20 +130,14 @@ def split_on_grid(df: DataFrame, cols: int, rows: int,
     layers center = bbox centroid (centerX = xmin + (xmax-xmin)/2). When
     ``bbox`` is None the layer bounds are computed (matching the reference,
     which classifies against getLayerBounds)."""
+    if bbox is None:  # an empty layer has no row to classify
+        bbox = L.bounds(df) or (0.0, 0.0, 0.0, 0.0)
     if x is not None:
         cx, cy = F.col(x), F.col(y)
     else:
-        b = F.col("bbox")
+        b = L.row_bbox(df)
         cx = b["xmin"] + (b["xmax"] - b["xmin"]) * F.lit(0.5)
         cy = b["ymin"] + (b["ymax"] - b["ymin"]) * F.lit(0.5)
-    if bbox is None:
-        if x is not None:
-            row = df.agg(F.min(x), F.max(x), F.min(y), F.max(y)).collect()[0]
-            bbox = (row[0], row[2], row[1], row[3])
-        else:
-            row = df.agg(F.min("bbox.xmin"), F.min("bbox.ymin"),
-                         F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0]
-            bbox = tuple(row)
     return df.withColumn(id_field, grid_cell_id(cx, cy, cols, rows, bbox))
 
 

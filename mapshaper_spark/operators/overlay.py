@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapshaper_spark.geom import kernels as K
+from mapshaper_spark.layers import bounds, with_bbox
 
 
 def _cut_rings(rings_a, rings_b):
@@ -158,15 +159,6 @@ def _sub_arcs(rings, cut_points):
             if b > a:
                 out.append((rrx[a:b + 1], rry[a:b + 1]))
     return out
-
-
-def _arc_inside(arc, rings):
-    """Classify a sub-arc by its midpoint vs a ring set (boundary=inside)."""
-    xs, ys = arc
-    k = (len(xs) - 1) // 2
-    mx = (xs[k] + xs[k + 1]) / 2.0
-    my = (ys[k] + ys[k + 1]) / 2.0
-    return bool(K.points_in_polygon(np.array([mx]), np.array([my]), rings)[0])
 
 
 def _arc_pos(arc, rings, diag):
@@ -554,7 +546,7 @@ def _cell_pairs(left: DataFrame, lkey: str, right: DataFrame, rkey: str,
     of two layers with bbox columns. Each side's bbox cover is exploded
     on their union grid (2^res cells per axis), the covers equi-join on
     the cell, and a pair sharing several cells appears once."""
-    gb = _union_bbox(left, right)
+    gb = _grid_bounds(left, right)
 
     def cover(df, k):
         return df.select(k, _bbox_cells_col(gb, res).alias("__cell"))
@@ -579,8 +571,8 @@ def _clip_layer(target: DataFrame, clip: DataFrame, kernel, erase: bool,
     Both sides get a bbox where they lack one; one synthesized on the
     target is dropped again on output."""
     had_bbox = "bbox" in target.columns
-    target = _ensure_bbox(target)
-    clip = _ensure_bbox(clip).select("rings_x", "rings_y", "bbox")
+    target = with_bbox(target)
+    clip = with_bbox(clip).select("rings_x", "rings_y", "bbox")
     out_cols = target.columns
     rows = clip.limit(broadcast_limit + 1).collect()
     if not rows:
@@ -646,28 +638,12 @@ def clip_polygons(target: DataFrame, clip: DataFrame, clip_key: str = None,
                        key or target.columns[0], res, broadcast_limit)
 
 
-def _ensure_bbox(df: DataFrame) -> DataFrame:
-    """Derive a bbox struct column from rings_x/rings_y when absent."""
-    if "bbox" in df.columns:
-        return df
-    return df.withColumn("bbox", F.struct(
-        F.array_min(F.flatten("rings_x")).alias("xmin"),
-        F.array_min(F.flatten("rings_y")).alias("ymin"),
-        F.array_max(F.flatten("rings_x")).alias("xmax"),
-        F.array_max(F.flatten("rings_y")).alias("ymax")))
-
-
-def _union_bbox(a: DataFrame, b: DataFrame):
-    """Combined (xmin, ymin, xmax, ymax) of two feature layers' bboxes."""
-    u = (a.select("bbox").unionByName(b.select("bbox"))
-         .agg(F.min("bbox.xmin"), F.min("bbox.ymin"),
-              F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0])
-    xmin, ymin, xmax, ymax = (float(v) for v in u)
-    if xmax <= xmin:
-        xmax = xmin + 1.0
-    if ymax <= ymin:
-        ymax = ymin + 1.0
-    return (xmin, ymin, xmax, ymax)
+def _grid_bounds(*dfs: DataFrame):
+    """The layers' combined (xmin, ymin, xmax, ymax) for a cell grid over
+    them: a degenerate side widens to 1."""
+    xmin, ymin, xmax, ymax = bounds(*dfs) or (0.0, 0.0, 0.0, 0.0)
+    return (xmin, ymin, xmax if xmax > xmin else xmin + 1.0,
+            ymax if ymax > ymin else ymin + 1.0)
 
 
 # ---------------------------------------------------------------------------
@@ -930,11 +906,9 @@ def mean_segment_len_sq(features: DataFrame) -> float:
     segment length)^2, segments longer than half the layer extent per axis
     excluded (the reference's calcMaxSliverArea bbox-segment exclusion,
     filter-slivers.js:73-88) — one JVM agg, no Python."""
-    b = _ensure_bbox(features).agg(
-        F.min("bbox.xmin"), F.min("bbox.ymin"),
-        F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0]
-    dx_max = (float(b[2]) - float(b[0])) / 2.0
-    dy_max = (float(b[3]) - float(b[1])) / 2.0
+    xmin, ymin, xmax, ymax = bounds(features)
+    dx_max = (xmax - xmin) / 2.0
+    dy_max = (ymax - ymin) / 2.0
     ring = features.select(F.explode(F.arrays_zip(
         F.col("rings_x").alias("xs"), F.col("rings_y").alias("ys"))).alias("r"))
     seg = ring.select(F.col("r.xs").alias("xs"), F.col("r.ys").alias("ys")) \
@@ -979,7 +953,7 @@ def dissolve2(features: DataFrame, group: str,
         gap_threshold = (min_gap_area if min_gap_area is not None
                          else mean_segment_len_sq(features))
 
-    feats = _ensure_bbox(features).withColumn(
+    feats = with_bbox(features).withColumn(
         "__fid", F.xxhash64(group, "rings_x", "rings_y"))
     # size gate: the cluster-decomposition machinery (label-propagation
     # rounds) only pays for itself when groups can be big; a small layer
@@ -1580,7 +1554,7 @@ def _connected_feature_clusters(df: DataFrame, key: str, res: int = 6,
     sized layers (<= small_limit) cluster via driver union-find over the
     collected (key, bbox) rows — the distributed propagation loop costs
     ~2 jobs/round, which dwarfs a 6-feature layer's actual work."""
-    gb = _union_bbox(df, df)
+    gb = _grid_bounds(df)
     small_limit = 100_000
     if df.limit(small_limit + 1).count() <= small_limit:
         import pyarrow as pa
@@ -1693,7 +1667,7 @@ def clean(features: DataFrame, key: str, gap_fill: bool = True,
     Column contract: returns (key, rings_x, rings_y, bbox) plus every other
     non-geometry attribute column of the input, joined back by ``key``
     (matching the reference -clean, which keeps the attribute table)."""
-    features = _ensure_bbox(features)
+    features = with_bbox(features)
     features = features.filter(F.col("rings_x").isNotNull() &
                                (F.size("rings_x") > 0))
     gap_threshold = None
@@ -1746,14 +1720,8 @@ def clean(features: DataFrame, key: str, gap_fill: bool = True,
         two_level = _dissolve2_cells(
             big.select(F.col(key), "__cluster", "rings_x", "rings_y", "bbox"),
             key, gap_threshold, target_per_cell=target_per_cell)
-        two_level = two_level.filter(F.size("rings_x") > 0).select(
-            key, "rings_x", "rings_y",
-            F.struct(
-                F.array_min(F.transform("rings_x", F.array_min)).alias("xmin"),
-                F.array_min(F.transform("rings_y", F.array_min)).alias("ymin"),
-                F.array_max(F.transform("rings_x", F.array_max)).alias("xmax"),
-                F.array_max(F.transform("rings_y", F.array_max)).alias("ymax"),
-            ).alias("bbox"))
+        two_level = with_bbox(two_level.filter(F.size("rings_x") > 0)
+                              .select(key, "rings_x", "rings_y"))
         out = out.unionByName(two_level.select(*keep_cols))
     attr_cols = [c for c in features.columns if c not in keep_cols]
     if attr_cols:
@@ -1896,7 +1864,7 @@ def mosaic(features: DataFrame, key: str = None, res: int = 6,
     Returns (face_id, rings_x, rings_y, area, n_members); face_id is a
     content hash — stable across runs and partitionings."""
     key = key or features.columns[0]
-    features = _ensure_bbox(features)
+    features = with_bbox(features)
     features = features.filter(F.col("rings_x").isNotNull() &
                                (F.size("rings_x") > 0))
     labeled = _sized_clusters(features, key, res)
@@ -1980,8 +1948,8 @@ def slice_polygons(target: DataFrame, source: DataFrame,
     pair's geometry regardless of layer sizes."""
     key = key or target.columns[0]
     id_field = id_field or source.columns[0]
-    target = _ensure_bbox(target)
-    src = _ensure_bbox(source).select(
+    target = with_bbox(target)
+    src = with_bbox(source).select(
         F.col(id_field).cast("string").alias("__sid"),
         "rings_x", "rings_y", "bbox")
     pairs = _cell_pairs(target, key, src, "__sid", res)

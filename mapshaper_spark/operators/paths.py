@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapshaper_spark.geom import kernels as K
+from mapshaper_spark.layers import bounds, with_bbox
 
 
 def ring_areas_col(df: DataFrame, out: str = "ring_areas") -> DataFrame:
@@ -611,9 +612,8 @@ def clip_polygons_bbox(df: DataFrame, bbox: Sequence[float]) -> DataFrame:
     to nothing are dropped. Features wholly inside pass through untouched
     via a pure-JVM bbox predicate, so the Python stage only sees boundary
     features — the same interior-shortcut shape as the PIP join."""
-    from mapshaper_spark.operators.overlay import _ensure_bbox
     had_bbox = "bbox" in df.columns
-    df = _ensure_bbox(df)
+    df = with_bbox(df)
     xmin, ymin, xmax, ymax = bbox
     b = F.col("bbox")
     touches = ((b["xmin"] <= xmax) & (b["xmax"] >= xmin) &
@@ -757,10 +757,9 @@ def calc_max_sliver_area(arcs: DataFrame) -> float:
     shorter than half the dataset extent in each axis (the reference's
     bounding-box-segment exclusion, filter-slivers.js:73-88). Distributed:
     one agg over exploded segments."""
-    b = arcs.agg(F.min("bbox.xmin"), F.min("bbox.ymin"),
-                 F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0]
-    dx_max = (float(b[2]) - float(b[0])) / 2.0
-    dy_max = (float(b[3]) - float(b[1])) / 2.0
+    xmin, ymin, xmax, ymax = bounds(arcs)
+    dx_max = (xmax - xmin) / 2.0
+    dy_max = (ymax - ymin) / 2.0
     n = F.size("xs")
     # <2-vertex arcs have no segments; sequence(2, n) turns DESCENDING for
     # them and element_at(_, 0) is a runtime error

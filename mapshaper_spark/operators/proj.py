@@ -17,6 +17,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapshaper_spark.layers import bounds, geometry_bbox
+
 R = 6378137.0  # spherical mercator radius, matches mapshaper webmercator
 
 
@@ -98,9 +100,7 @@ def project_arcs(arcs: DataFrame, crs: str = "webmercator",
         new_ys = F.transform("ys", lambda v: F.lit(R) * F.log(
             F.tan(F.lit(math.pi / 4.0) + v * F.lit(math.pi / 360.0))))
         out = arcs.withColumn("xs", new_xs).withColumn("ys", new_ys)
-        return out.withColumn("bbox", F.struct(
-            F.array_min("xs").alias("xmin"), F.array_min("ys").alias("ymin"),
-            F.array_max("xs").alias("xmax"), F.array_max("ys").alias("ymax")))
+        return out.withColumn("bbox", geometry_bbox(out))
 
     from typing import Iterator
     import numpy as np
@@ -119,10 +119,9 @@ def project_arcs(arcs: DataFrame, crs: str = "webmercator",
         dy = F.abs(F.element_at("ys", F.col("i")) - F.element_at("ys", F.col("i") - 1))
         stats = seg.agg(F.avg(dx).alias("adx"),
                         F.avg(dy).alias("ady")).collect()[0]
-        b = arcs.agg(F.min("bbox.xmin"), F.min("bbox.ymin"),
-                     F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0]
-        cx = (float(b[0]) + float(b[2])) / 2.0
-        cy = (float(b[1]) + float(b[3])) / 2.0
+        b = bounds(arcs)
+        cx = (b[0] + b[2]) / 2.0
+        cy = (b[1] + b[3]) / 2.0
         ax, ay = tf(np.array([cx]), np.array([cy]))
         bx, by = tf(np.array([cx + float(stats.adx or 0.0)]),
                     np.array([cy + float(stats.ady or 0.0)]))

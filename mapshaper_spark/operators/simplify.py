@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mapshaper_spark import layers as L
 from mapshaper_spark.geom import kernels as K
 
 METHODS = ("visvalingam", "weighted_visvalingam", "dp")
@@ -475,15 +476,6 @@ def simplify_polygons_fast(features: DataFrame, dist: float) -> DataFrame:
 # simplification extent protection (world edges / lock-box)
 # ---------------------------------------------------------------------------
 
-def arc_bounds(arcs: DataFrame):
-    """(xmin, ymin, xmax, ymax) over every vertex of ``arcs``, or None when
-    there is none — one aggregate job. Callers that already know the
-    bounds (a layer fact from import) pass them instead of probing."""
-    b = arcs.agg(F.min(F.array_min("xs")), F.min(F.array_min("ys")),
-                 F.max(F.array_max("xs")), F.max(F.array_max("ys"))).collect()[0]
-    return None if b[0] is None else tuple(b)
-
-
 def limit_simplification_extent(arcs_with_zs: DataFrame, bb, hard_limit: bool,
                                 bounds=None) -> DataFrame:
     """limitSimplificationExtent (mapshaper-simplify.js:123-143): vertices
@@ -492,9 +484,9 @@ def limit_simplification_extent(arcs_with_zs: DataFrame, bb, hard_limit: bool,
     threshold (never removed before the arc's other vertices). Existing
     Infinity locks are never overridden; a no-op when the content stays
     strictly inside ``bb`` (containsBounds early exit). ``bounds``: the
-    content bounds when known, else probed with ``arc_bounds``."""
+    content bounds when known, else probed with ``layers.bounds``."""
     xmin, ymin, xmax, ymax = bb
-    b = arc_bounds(arcs_with_zs) if bounds is None else bounds
+    b = L.bounds(arcs_with_zs) if bounds is None else bounds
     if b is None or (xmin <= b[0] and ymin <= b[1] and
                      xmax >= b[2] and ymax >= b[3]):
         return arcs_with_zs
@@ -532,9 +524,9 @@ def protect_content_edges(arcs_with_zs: DataFrame, bounds=None) -> DataFrame:
     """protectContentEdges (-simplify lock-box, mapshaper-simplify.js:
     113-118): vertices on the dataset's own bounding box are never removed
     (simplify-test.js 'protects a square shape'). ``bounds``: that box when
-    known, else probed with ``arc_bounds``."""
+    known, else probed with ``layers.bounds``."""
     e = 1e-14
-    b = arc_bounds(arcs_with_zs) if bounds is None else bounds
+    b = L.bounds(arcs_with_zs) if bounds is None else bounds
     if b is None:
         return arcs_with_zs
     return limit_simplification_extent(

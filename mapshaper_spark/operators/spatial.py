@@ -229,10 +229,9 @@ class PolygonIndex:
 
     def __init__(self, spark, polys_rings: DataFrame, poly_key: str,
                  bbox: Sequence[float] | None, res: int, persist: bool):
-        from mapshaper_spark.operators.overlay import _ensure_bbox
-        polys = _ensure_bbox(polys_rings)
-        extent = [] if bbox is not None else [
-            F.min("bbox.xmin"), F.min("bbox.ymin"), F.max("bbox.xmax"), F.max("bbox.ymax")]
+        from mapshaper_spark.layers import bounds_aggs, with_bbox
+        polys = with_bbox(polys_rings)
+        extent = [] if bbox is not None else bounds_aggs(polys)
         facts = polys.agg(F.count(F.lit(1)), *extent).collect()[0]
         self.rows = facts[0]
         if bbox is None and facts[1] is None:  # empty polygon side: no pairs

@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapshaper_spark.layers import absolute_arc_id_col, arc_refs, concat_arcs
+from mapshaper_spark.layers import (absolute_arc_id_col, arc_refs,
+                                    concat_arcs, geometry_bbox, with_bbox)
 from mapshaper_spark.plans.scale import ranked_ids
 
 
@@ -255,12 +256,8 @@ def build_topology(paths: DataFrame, path_id: str):
                    F.when(first, F.col("__first.xs")).alias("xs"),
                    F.when(first, F.col("__first.ys")).alias("ys"))
            .localCheckpoint())
-    arcs = occ.filter("first").select(
-        "arc_id", "xs", "ys", F.size("xs").alias("n"),
-        F.struct(F.array_min("xs").alias("xmin"),
-                 F.array_min("ys").alias("ymin"),
-                 F.array_max("xs").alias("xmax"),
-                 F.array_max("ys").alias("ymax")).alias("bbox"))
+    arcs = with_bbox(occ.filter("first").select(
+        "arc_id", "xs", "ys", F.size("xs").alias("n")))
     refs = occ.select(path_id, "arc_seq", "signed")
     return arcs, refs
 
@@ -688,11 +685,7 @@ def snap_paths(df: DataFrame, interval: float = None) -> DataFrame:
            .withColumn("rings_y", F.coalesce("__nry", "rings_y"))
            .drop("__sid", "__nrx", "__nry"))
     if "bbox" in df.columns:
-        out = out.withColumn("bbox", F.struct(
-            F.array_min(F.flatten("rings_x")).alias("xmin"),
-            F.array_min(F.flatten("rings_y")).alias("ymin"),
-            F.array_max(F.flatten("rings_x")).alias("xmax"),
-            F.array_max(F.flatten("rings_y")).alias("ymax")))
+        out = out.withColumn("bbox", geometry_bbox(out))
     return out.select(*df.columns)
 
 
@@ -1055,14 +1048,10 @@ def dissolve_arcs(features: DataFrame, arcs: DataFrame, key: str):
               .withColumn("__fp", F.col("__first.p")))
     arc_tbl = (ranked_ids(firsts, ["__fk", "__fr", "__fp"], "arc_id")
                .drop("__fk", "__fr", "__fp"))
-    new_arcs = arc_tbl.select(
+    new_arcs = with_bbox(arc_tbl.select(
         "arc_id",
         F.col("__geom.xs").alias("xs"), F.col("__geom.ys").alias("ys"),
-        F.size("__geom.xs").alias("n"),
-        F.struct(F.array_min("__geom.xs").alias("xmin"),
-                 F.array_min("__geom.ys").alias("ymin"),
-                 F.array_max("__geom.xs").alias("xmax"),
-                 F.array_max("__geom.ys").alias("ymax")).alias("bbox"))
+        F.size("__geom.xs").alias("n")))
     new_refs = (exploded.join(arc_tbl.select(
                     "cxs", "cys", "arc_id",
                     F.col("__geom.gflip").alias("gflip")), ["cxs", "cys"])
@@ -1255,22 +1244,9 @@ def close_gaps(arcs: DataFrame, tolerance: float, res: int = 6) -> DataFrame:
     remaining = dangles.join(taken_keys, ["arc_id", "which"], "left_anti")
 
     # --- step 3: project remaining dangles onto nearby arc paths ----------
-    gb_row = arcs.agg(F.min(F.array_min("xs")), F.min(F.array_min("ys")),
-                      F.max(F.array_max("xs")), F.max(F.array_max("ys"))).collect()[0]
-    gxmin, gymin, gxmax, gymax = (float(v) for v in gb_row)
-    if gxmax <= gxmin:
-        gxmax = gxmin + 1.0
-    if gymax <= gymin:
-        gymax = gymin + 1.0
-    gb = (gxmin, gymin, gxmax, gymax)
-
-    from mapshaper_spark.operators.overlay import _bbox_cells_col
-
-    arc_cells = (arcs.select(
-        "arc_id",
-        F.struct(F.array_min("xs").alias("xmin"), F.array_min("ys").alias("ymin"),
-                 F.array_max("xs").alias("xmax"), F.array_max("ys").alias("ymax"))
-        .alias("bbox"))
+    from mapshaper_spark.operators.overlay import _bbox_cells_col, _grid_bounds
+    gb = _grid_bounds(arcs)
+    arc_cells = (with_bbox(arcs).select("arc_id", "bbox")
         .withColumn("__cell", _bbox_cells_col(gb, res))
         .select("arc_id", "__cell"))
     # each dangle carries its NEIGHBOR vertex (px, py) — the reference's

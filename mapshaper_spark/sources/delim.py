@@ -216,21 +216,6 @@ def import_delim(spark: SparkSession, path: str, delimiter: str | None = None,
     return df
 
 
-def export_delim(df: DataFrame, path: str, delimiter: str = ",",
-                 single_file: bool = True) -> None:
-    """CSV/TSV export. ``single_file`` (the CLI's ``-o name.csv`` contract —
-    the reference writes one file) collects driver-side and writes one file
-    with one header, preserving row order; pass False for the distributed
-    directory sink at scale (each part file would otherwise carry its own
-    header, so a naive part-concatenation is wrong)."""
-    if single_file:
-        with open(path, "w", newline="") as f:
-            f.write(delim_payload(df, delimiter))
-        return
-    (df.write.mode("overwrite").option("header", True)
-     .option("delimiter", delimiter).csv(path))
-
-
 def delim_payload(df: DataFrame, delimiter: str = ",") -> str:
     """Driver-side CSV/TSV text for a (fixture-scale) layer. Nulls render
     as EMPTY fields, unquoted — the reference writes nothing for null

@@ -345,40 +345,16 @@ def export_ndjson(df: DataFrame, path: str, **kwargs) -> None:
      .write.mode("overwrite").text(path))
 
 
-def export_geojson(df: DataFrame, bbox: bool = False, **kwargs) -> str:
+def export_geojson(df: DataFrame, bbox: Sequence[float] | None = None,
+                   **kwargs) -> str:
     """Driver-side collection assembly (fixture-scale; at scale use
     to_geojson_features + write.text as GeoJSONSeq). A layer with NO
     attribute data exports as a GeometryCollection, matching the
     reference (geojson-export.js exportDatasetAsGeoJSON; Issue #174).
-    ``bbox=True`` adds the collection-level bbox member (opts.bbox,
-    geojson-export.js:161-166)."""
-    head = ""
-    if bbox:
-        import json as _json
-        x, y = kwargs.get("x", "x"), kwargs.get("y", "y")
-        # per-row bounds from whichever coordinate carriers exist (a point
-        # layer can mix scalar-x/y Point rows with rings-borne MultiPoint)
-        xmins, ymins, xmaxs, ymaxs = [], [], [], []
-        if "rings_x" in df.columns:
-            xmins.append(F.array_min(F.transform("rings_x", F.array_min)))
-            ymins.append(F.array_min(F.transform("rings_y", F.array_min)))
-            xmaxs.append(F.array_max(F.transform("rings_x", F.array_max)))
-            ymaxs.append(F.array_max(F.transform("rings_y", F.array_max)))
-        if x in df.columns:
-            xmins.append(F.col(x))
-            ymins.append(F.col(y))
-            xmaxs.append(F.col(x))
-            ymaxs.append(F.col(y))
-
-        def _one(cands, agg):  # least/greatest skip nulls
-            c = cands[0] if len(cands) == 1 else \
-                (F.least(*cands) if agg is F.min else F.greatest(*cands))
-            return agg(c)
-
-        b = df.agg(_one(xmins, F.min), _one(ymins, F.min),
-                   _one(xmaxs, F.max), _one(ymaxs, F.max)).collect()[0]
-        if all(v is not None for v in b):
-            head = '"bbox":' + _json.dumps([float(v) for v in b]) + ","
+    ``bbox``: the layer bounds, written as the collection-level bbox
+    member (opts.bbox, geojson-export.js:161-166)."""
+    head = "" if bbox is None else \
+        '"bbox":' + json.dumps([float(v) for v in bbox]) + ","
     if not kwargs.get("property_cols"):
         rows = to_geojson_features(df, bare_geometry=True, **kwargs).collect()
         geoms = ",".join(r.feature_json for r in rows)

@@ -610,9 +610,13 @@ def write_shp(geoms) -> tuple[bytes, bytes]:
     return shp, shx
 
 
-def export_shapefile(df, geometry: str = "auto", fields=None):
+def export_shapefile(df, kind: str = "polygon", fields=None):
     """Features DataFrame (rings_x/rings_y or x/y + attribute columns) ->
-    (.shp, .shx, .dbf) bytes. ``fields``: the dbf's columns (default: every
+    (.shp, .shx, .dbf) bytes. ``kind``: the layer's geometry kind, which
+    gives the shape type unless a ``shp_type`` column carries the imported
+    one: a point layer is MultiPoint when a feature has several points
+    (the reference's getShapeTypeForLayer), a polyline layer PolyLine,
+    anything else Polygon. ``fields``: the dbf's columns (default: every
     non-geometry column). Fixture-scale sink: collects to the driver (like
     the GeoJSON/TopoJSON sinks — a shapefile is one file)."""
     rows = [r.asDict() for r in df.collect()]
@@ -620,14 +624,23 @@ def export_shapefile(df, geometry: str = "auto", fields=None):
                  "shp_type", "bbox"}
     if fields is None:
         fields = [k for k in df.columns if k not in geom_cols]
+
+    def points(r):  # a point feature's coordinates: MultiPoint rings or x/y
+        if r.get("rings_x"):
+            return [p for rx, ry in zip(r["rings_x"], r["rings_y"])
+                    for p in zip(rx, ry)]
+        return [(r["x"], r["y"])] if r.get("x") is not None else []
+    if kind == "point":
+        default = SHP_MULTIPOINT if any(len(points(r)) > 1 for r in rows) \
+            else SHP_POINT
+    else:
+        default = SHP_POLYLINE if kind == "polyline" else SHP_POLYGON
     geoms = []
     records = []
     for r in rows:
-        if geometry == "point" or (geometry == "auto" and
-                                   r.get("x") is not None and
-                                   not r.get("rings_x")):
-            t = int(r.get("shp_type") or SHP_POINT)
-            g = {"type": t, "points": [(r["x"], r["y"])]}
+        t = int(r.get("shp_type") or default)
+        if BASE_TYPE.get(t, t) in (SHP_POINT, SHP_MULTIPOINT):
+            g = {"type": t, "points": points(r)}
             if t == SHP_POINTZ:
                 g["z"] = [float(r.get("z") or 0.0)]
             geoms.append(g)
@@ -635,7 +648,6 @@ def export_shapefile(df, geometry: str = "auto", fields=None):
             parts = [list(zip(rx, ry))
                      for rx, ry in zip(r.get("rings_x") or [],
                                        r.get("rings_y") or [])]
-            t = int(r.get("shp_type") or SHP_POLYGON)
             g = {"type": t, "parts": parts}
             if t in Z_TYPES and r.get("rings_z"):
                 g["parts_z"] = [list(pz) for pz in r["rings_z"]]

@@ -25,6 +25,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapshaper_spark import layers as L
+
 # svg-common.js propertiesBySymbolType
 _COMMON_PROPS = ("class", "opacity", "stroke", "stroke-width")
 PROPS_BY_SYMBOL = {
@@ -356,45 +358,21 @@ def _esc_py(s: str) -> str:
             .replace(">", "&gt;").replace('"', "&quot;").replace("'", "&apos;"))
 
 
-def _layer_bounds(df: DataFrame, geom_type: str, x: str, y: str):
-    if geom_type in ("polygon", "polyline"):
-        row = df.agg(
-            F.min(F.array_min(F.transform("rings_x", F.array_min))),
-            F.min(F.array_min(F.transform("rings_y", F.array_min))),
-            F.max(F.array_max(F.transform("rings_x", F.array_max))),
-            F.max(F.array_max(F.transform("rings_y", F.array_max)))).collect()[0]
-    elif dict(df.dtypes).get(x, "").startswith("array"):
-        row = df.agg(F.min(F.array_min(x)), F.min(F.array_min(y)),
-                     F.max(F.array_max(x)), F.max(F.array_max(y))).collect()[0]
-    else:
-        row = df.agg(F.min(x), F.min(y), F.max(x), F.max(y)).collect()[0]
-    if any(v is None for v in row):  # empty / all-null layer
-        return None
-    return tuple(float(v) for v in row)
-
-
 def export_svg_document(layers: Sequence[tuple], width: Optional[float] = None,
                         height: Optional[float] = None, margin=None,
                         svg_scale: Optional[float] = None,
                         precision: float = 0.0001, id_prefix: str = "",
                         id_field: Optional[str] = None,
-                        point_symbol: str = "") -> str:
+                        point_symbol: str = "",
+                        bounds: Optional[Sequence[float]] = None) -> str:
     """exportSVG: layers = [(name, df, geom_type)] or
     [(name, df, geom_type, xcol, ycol)]; one '<g>' per layer inside the
-    reference's document template."""
-    bounds = None
-    norm = []
-    for entry in layers:
-        name, df, geom = entry[0], entry[1], entry[2]
-        x, y = (entry[3], entry[4]) if len(entry) > 4 else ("x", "y")
-        b = _layer_bounds(df, geom, x, y)
-        if b is not None:
-            bounds = b if bounds is None else (
-                min(bounds[0], b[0]), min(bounds[1], b[1]),
-                max(bounds[2], b[2]), max(bounds[3], b[3]))
-        norm.append((name, df, geom, x, y))
+    reference's document template. ``bounds``: the layers' combined
+    extent when known, else one aggregate over them."""
+    norm = [tuple(e[:5]) if len(e) > 4 else (*e[:3], "x", "y")
+            for e in layers]
     if bounds is None:
-        bounds = (0.0, 0.0, 0.0, 0.0)
+        bounds = L.bounds(*(e[1] for e in layers)) or (0.0, 0.0, 0.0, 0.0)
     tf = fit_transform(*bounds, width=width, height=height, margin=margin,
                        svg_scale=svg_scale)
     w_px, h_px = tf[4], tf[5]

@@ -22,6 +22,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapshaper_spark.layers import bounds
+
 
 # ---------------------------------------------------------------------------
 # full-fidelity import: Topology -> catalog feature layers
@@ -603,9 +605,7 @@ def export_topojson(arcs: DataFrame, features: DataFrame, key: str,
     ``zs`` column as a third coordinate per point (the reference's
     -o presimplify, /root/reference/src/topojson/topojson-presimplify.js:3-10
     — thresholds quantized like mapbox topojson-simplify expects)."""
-    b = arcs.agg(F.min("bbox.xmin"), F.min("bbox.ymin"),
-                 F.max("bbox.xmax"), F.max("bbox.ymax")).collect()[0]
-    xmin, ymin, xmax, ymax = (float(v) for v in b)
+    xmin, ymin, xmax, ymax = bounds(arcs)
     kx = (xmax - xmin) / (quantization - 1) if xmax > xmin else 1.0
     ky = (ymax - ymin) / (quantization - 1) if ymax > ymin else 1.0
 

@@ -887,12 +887,12 @@ class TestSimplifyRequest:
         -simplify reads them without probing the arcs, while -i precision=
         and -affine drop them, so the shifted layer simplifies like a file
         that was shifted beforehand."""
-        from mapshaper_spark.operators import simplify as SI
+        from mapshaper_spark import layers as L
         _county_grid(tmp_path / "a.json")
         probes = []
-        arc_bounds = SI.arc_bounds
-        monkeypatch.setattr(SI, "arc_bounds",
-                            lambda arcs: probes.append(1) or arc_bounds(arcs))
+        bounds = L.bounds
+        monkeypatch.setattr(L, "bounds",
+                            lambda *dfs: probes.append(1) or bounds(*dfs))
         for opts, probed in (("", 0), ("precision=0.000001", 1),
                              ("-affine shift=5000,0", 1)):
             probes.clear()
@@ -1034,6 +1034,144 @@ def test_slice_writes_target_record_order(spark, tmp_path):
     assert got == sliced(4)
     names = [f["properties"]["name"] for f in json.loads(got)["features"]]
     assert names == sorted(names) and len(names) > 1
+
+
+def _write_geojson(path, geoms):
+    """A FeatureCollection of ``geoms`` with properties k=0.. and g=k%2."""
+    feats = [{"type": "Feature", "properties": {"k": k, "g": k % 2},
+              "geometry": g} for k, g in enumerate(geoms)]
+    with open(path, "w") as f:
+        json.dump({"type": "FeatureCollection", "features": feats}, f)
+
+
+_LINES = [{"type": "LineString", "coordinates": [[0, 0], [1, 1], [2, 0]]},
+          {"type": "LineString", "coordinates": [[0, 2], [3, 2]]}]
+_MULTIPOINTS = [{"type": "Point", "coordinates": [0.0, 0.0]},
+                {"type": "MultiPoint", "coordinates": [[1, 1], [3, 2]]}]
+
+
+class TestLayerExtent:
+    """Every command reads a layer's extent through ``Layer.bounds()``:
+    the import's bounds when it has them, else one aggregate over
+    whatever coordinate columns the frame has."""
+
+    def _info_bounds(self, spark, cmds):
+        row = run_commands(spark, cmds + " -info").info[-1]["rows"][0]
+        return row["xmin"], row["ymin"], row["xmax"], row["ymax"]
+
+    def test_info_bounds_without_stored_bbox(self, spark, tmp_path):
+        src = tmp_path / "a.json"
+        _county_grid(src)
+        run_commands(spark, f"-i {src} -o {tmp_path / 'a.shp'}")
+        want = (-100.0, 30.0, -90.0, 40.0)
+        for cmds in (f"-i {src} -simplify 10%", f"-i {src} -dissolve",
+                     f"-i {tmp_path / 'a.shp'}"):
+            got = self._info_bounds(spark, cmds)
+            assert got == pytest.approx(want), cmds
+
+    def test_split_on_grid_without_stored_bbox(self, spark, tmp_path):
+        src = tmp_path / "a.json"
+        _county_grid(src)
+        run_commands(spark, f"-i {src} -o {tmp_path / 'a.shp'}")
+        for cmds in (f"-i {tmp_path / 'a.shp'}",
+                     f"-i {src} -simplify 10%"):
+            out = tmp_path / "split.json"
+            run_commands(spark, f"{cmds} -split-on-grid 2,1 -o {out}")
+            cells = {f["properties"]["name"][-1]: f["properties"]["__split__"]
+                     for f in _features(out)}  # column of 'county r-c'
+            assert cells == {"0": "r0c0", "1": "r0c0", "2": "r0c1",
+                             "3": "r0c1"}, cmds
+
+    @pytest.mark.parametrize("cmd", ["rectangle", "point-grid 2,2",
+                                     "polygon-grid 2,2"])
+    def test_empty_layer_needs_bbox(self, spark, tmp_path, cmd):
+        src = tmp_path / "a.json"
+        _county_grid(src)
+        with pytest.raises(ValueError, match="no coordinates.*bbox="):
+            run_commands(spark, f"-i {src} -filter 'fid > 99' -{cmd}")
+
+    @pytest.mark.parametrize("out", ["bbox {}.json", "{}.shp", "{}.svg"])
+    def test_export_reads_import_bounds(self, spark, tmp_path, out):
+        """-o bbox, a shapefile's .prj lat-long test and the SVG frame read
+        the import's bounds: exporting a GeoJSON import runs no Spark job
+        (its frame is a local relation)."""
+        src = tmp_path / "a.json"
+        _county_grid(src)
+        out = out.replace("{}", f"{tmp_path}/{{}}")
+        jobs = _warm_request_jobs(spark, f"-i {src} -o {out}")
+        assert jobs["o"] == 0, jobs
+
+    def test_ring_layer_xy_fields_are_data(self, spark, tmp_path):
+        """Fields named x and y of a polygon layer are not coordinates,
+        also once a command has dropped the stored per-row bbox."""
+        src, out = tmp_path / "p.json", tmp_path / "out.json"
+        _write_geojson(src, [{"type": "Polygon", "coordinates": [
+            [[0, 0], [2, 0], [2, 1], [0, 1], [0, 0]]]}])
+        feats = json.loads(src.read_text())
+        feats["features"][0]["properties"].update(x=1000.0, y=-1000.0)
+        src.write_text(json.dumps(feats))
+        run_commands(spark, f"-i {src} -affine shift=0,0 -o bbox {out}")
+        assert json.loads(out.read_text())["bbox"] == [0.0, 0.0, 2.0, 1.0]
+        assert self._info_bounds(spark, f"-i {src} -affine shift=0,0") == \
+            (0.0, 0.0, 2.0, 1.0)
+
+    @pytest.mark.parametrize("multi", [True, False])
+    def test_bbox_member_after_affine(self, spark, tmp_path, multi):
+        """-affine moves a point layer's coordinates, so its stored
+        per-row bbox goes with the import's bounds; a layer mixing Point
+        and MultiPoint rows spans both."""
+        src, out = tmp_path / "m.json", tmp_path / "out.json"
+        _write_geojson(src, _MULTIPOINTS if multi else [
+            {"type": "Point", "coordinates": [0.0, 0.0]},
+            {"type": "Point", "coordinates": [3.0, 2.0]}])
+        run_commands(spark, f"-i {src} -affine shift=1,0 -o bbox {out}")
+        assert json.loads(out.read_text())["bbox"] == [1.0, 0.0, 4.0, 2.0]
+
+
+class TestLayerKindChecks:
+    """Commands that read rings take the layer's declared kind, not the
+    columns its frame happens to carry."""
+
+    def test_linestrings_export_as_polyline_shapefile(self, spark,
+                                                      tmp_path):
+        from mapshaper_spark.sources import shapefile as SH
+        src, out = tmp_path / "lines.json", tmp_path / "out.shp"
+        _write_geojson(src, _LINES)
+        run_commands(spark, f"-i {src} -o {out}")
+        assert {g["type"] for g in SH.read_shp(out.read_bytes())} == \
+            {SH.SHP_POLYLINE}
+        back = tmp_path / "back.json"
+        run_commands(spark, f"-i {out} -o {back}")
+        assert {f["geometry"]["type"] for f in _features(back)} == \
+            {"LineString"}
+
+    def test_multipoints_export_as_multipoint_shapefile(self, spark,
+                                                        tmp_path):
+        from mapshaper_spark.sources import shapefile as SH
+        src, out = tmp_path / "m.json", tmp_path / "out.shp"
+        _write_geojson(src, _MULTIPOINTS)
+        run_commands(spark, f"-i {src} -o {out}")
+        geoms = SH.read_shp(out.read_bytes())
+        assert [g["type"] for g in geoms] == [SH.SHP_MULTIPOINT] * 2
+        assert [g["points"] for g in geoms] == [[(0.0, 0.0)],
+                                               [(1.0, 1.0), (3.0, 2.0)]]
+
+    @pytest.mark.parametrize("cmd", ["clip", "slice"])
+    def test_polyline_source_is_refused(self, spark, tmp_path, cmd):
+        src, lines = tmp_path / "a.json", tmp_path / "lines.json"
+        _county_grid(src)
+        _write_geojson(lines, _LINES)
+        with pytest.raises(ValueError, match="source must be a polygon"):
+            run_commands(spark, f"-i {src} -{cmd} {lines}")
+
+    @pytest.mark.parametrize("cmd", ["dissolve g", "clip {clip}"])
+    def test_multipoints_are_refused(self, spark, tmp_path, cmd):
+        src, clip = tmp_path / "m.json", tmp_path / "clip.json"
+        _write_geojson(src, _MULTIPOINTS)
+        _write_geojson(clip, [{"type": "Polygon", "coordinates": [
+            [[-1, -1], [5, -1], [5, 5], [-1, 5], [-1, -1]]]}])
+        with pytest.raises(ValueError, match="multi-part points"):
+            run_commands(spark, f"-i {src} -{cmd.format(clip=clip)}")
 
 
 class TestDissolveRequest:

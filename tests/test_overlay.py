@@ -654,13 +654,13 @@ class TestDissolve2TwoLevel:
     def test_decomposition_uses_multiple_cells(self, spark):
         # the stress guarantee: a >max_task_features cluster decomposes into
         # a >= 2x2 per-cluster grid, i.e. >1 mosaic kernel task
-        from mapshaper_spark.operators.overlay import (_cluster_grids,
-                                                       _ensure_bbox)
+        from mapshaper_spark.layers import with_bbox
+        from mapshaper_spark.operators.overlay import _cluster_grids
         rows = []
         for i in range(64):
             rows.append(self._rect(i, 0, (i % 8) * 1.0, (i // 8) * 1.0,
                                    (i % 8) * 1.0 + 1.2, (i // 8) * 1.0 + 1.2))
-        df = _ensure_bbox(spark.createDataFrame(
+        df = with_bbox(spark.createDataFrame(
             rows, "fid int, grp int, rings_x array<array<double>>, "
                   "rings_y array<array<double>>")) \
             .withColumn("__cluster", F.lit(0).cast("long"))
