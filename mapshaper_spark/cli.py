@@ -250,14 +250,7 @@ class Layer:
         (``layers.bounds``)."""
         if "bounds" in self.facts:
             return self.facts["bounds"]
-        return L.bounds(self.extent_frame())
-
-    def extent_frame(self) -> DataFrame:
-        """The frame an extent is read from: a ring layer's x/y columns
-        are data fields (e.g. GeoJSON properties), not coordinates."""
-        if self.hint in ("polygon", "polyline"):
-            return self.df.drop("x", "y", "lon", "lat")
-        return self.df
+        return L.bounds(self.df, kind=self.kind)
 
     def with_df(self, df: DataFrame, **changes) -> Layer:
         """This layer holding ``df``: the facts about the old frame go,
@@ -1313,7 +1306,7 @@ def _cmd_affine(cat: Catalog, c: Command) -> None:
         anchor = tuple(float(v) for v in c.csv("anchor"))
     else:
         b = cat.layer().bounds() if where is None else \
-            L.bounds(df.filter(where))
+            L.bounds(df.filter(where), kind=kind)
         anchor = ((b[0] + b[2]) / 2, (b[1] + b[3]) / 2) if b else (0.0, 0.0)
     kw = dict(shift=tuple(shift), scale=c.num("scale", 1.0),
               rotate_deg=c.num("rotate", 0.0), anchor=anchor, where=where)
@@ -1415,13 +1408,14 @@ def _cmd_split(cat: Catalog, c: Command) -> None:
 def _cmd_split_on_grid(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators.grid import split_on_grid
     cols, rows = (int(v) for v in c.values[0].split(","))
-    df = cat.df()
-    bbox = cat.layer().bounds()
+    layer = cat.layer()
+    df = layer.df
+    bbox = layer.bounds() or (0.0, 0.0, 0.0, 0.0)  # empty: no row to place
     if _geometry_kind(df) == "point":
         x, y = _point_cols(df)
         cat.replace(split_on_grid(df, cols, rows, bbox, x=x, y=y))
     else:
-        cat.replace(split_on_grid(df, cols, rows, bbox))
+        cat.replace(split_on_grid(df, cols, rows, bbox, kind=layer.kind))
 
 
 def _cmd_target(cat: Catalog, c: Command) -> None:
@@ -1528,10 +1522,6 @@ def _svg_payload(cat: Catalog, names: list[str], c: Command) -> str:
             gt = "polyline" if kind == "polyline" else "polygon"
         layers.append((name, df, gt))
     opts = {}
-    boxes = [b for b in (cat.layers[n].bounds() for n in names) if b]
-    if boxes:
-        opts["bounds"] = (min(b[0] for b in boxes), min(b[1] for b in boxes),
-                          max(b[2] for b in boxes), max(b[3] for b in boxes))
     if c.opt("width"):
         opts["width"] = c.num("width")
     if c.opt("height"):
@@ -1548,7 +1538,10 @@ def _svg_payload(cat: Catalog, names: list[str], c: Command) -> str:
         opts["id_field"] = str(c.opt("id-field"))
     if c.opt("point-symbol"):
         opts["point_symbol"] = str(c.opt("point-symbol"))
-    return SVG.export_svg_document(layers, **opts)
+    bounds = L.union_bounds(*(cat.layers[n].bounds() for n in names))
+    # no coordinates in any layer: the reference's empty frame
+    return SVG.export_svg_document(layers, bounds or (0.0, 0.0, 0.0, 0.0),
+                                   **opts)
 
 
 def _topojson_payload(cat: Catalog, names: list[str], c: Command) -> str:
@@ -1852,8 +1845,8 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
 def _cmd_info(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators.attributes import layer_info
     cat.info.append({"layer": cat.target,
-                     "rows": layer_info(cat.layer().extent_frame(),
-                                        cat.target or "").collect()})
+                     "rows": layer_info(cat.df(), cat.target or "",
+                                        kind=cat.layer().kind).collect()})
 
 
 def _record_order(df: DataFrame) -> tuple[DataFrame, str]:

@@ -24,12 +24,14 @@ The extent helpers are the one place a layer's extent is decided, for
 every kind of frame:
 
 - ``geometry_bbox``: the per-row bbox struct from whatever coordinate
-  columns a frame has (x/y or lon/lat, rings, arc xs/ys);
-- ``row_bbox``: the stored ``bbox`` where set, else ``geometry_bbox``;
+  columns a frame has (rings, arc xs/ys, and x/y or lon/lat in a point
+  layer: the layer's kind, or the frame's columns, says which);
+- ``row_bbox``: the stored ``bbox`` column, else ``geometry_bbox``;
 - ``with_bbox``: the frame with a ``bbox`` column (``geometry_bbox`` when
   it has none);
 - ``bounds_aggs`` / ``bounds``: the four min/max aggregates, and the
-  layer extent as one aggregate (None without coordinates).
+  layer extent as one aggregate (None without coordinates);
+  ``union_bounds``: the extent of several layers' known bounds.
 
 The way back, a ring layer to shared-arc topology, is
 ``operators.topology.ring_topology``.
@@ -208,25 +210,33 @@ def assemble_rings(features: DataFrame, arcs: DataFrame, key: str = "rid") -> Da
     return features.join(per_feature, key)
 
 
-def geometry_bbox(df: DataFrame) -> Column | None:
+_RING_KINDS = ("polygon", "polyline", "path")
+
+
+def geometry_bbox(df: DataFrame, kind: str | None = None) -> Column | None:
     """The per-row ``struct<xmin,ymin,xmax,ymax>`` of every coordinate
-    column ``df`` has: scalar ``x``/``y`` (else ``lon``/``lat``),
-    ``rings_x``/``rings_y`` and arc ``xs``/``ys``. least/greatest skip
-    nulls, so a layer mixing Point rows (x/y) with MultiPoint rows (rings)
-    spans both. None when ``df`` has no coordinate columns."""
+    column ``df`` has: ``rings_x``/``rings_y``, arc ``xs``/``ys`` and, in
+    a point layer, scalar ``x``/``y`` (else ``lon``/``lat``). In a ring
+    layer (``kind`` in ``_RING_KINDS``; with no ``kind``, a frame with ring
+    or arc columns) x/y are data fields, e.g. a GeoJSON polygon's
+    properties. least/greatest skip nulls, so a point layer mixing Point
+    rows (x/y) with MultiPoint rows (rings) spans both. None when ``df``
+    has no coordinate columns."""
     types = dict(df.dtypes)
-    scalar = next(((x, y) for x, y in (("x", "y"), ("lon", "lat"))
-                   if x in types and y in types), None)
     carriers = []  # (xmin, ymin, xmax, ymax) per coordinate column pair
-    if scalar:
-        x, y = F.col(scalar[0]), F.col(scalar[1])
-        carriers.append((x, y, x, y))
     for cx, cy in (("rings_x", "rings_y"), ("xs", "ys")):
         if types.get(cx, "").startswith("array") and cy in types:
             ax, ay = ((F.flatten(cx), F.flatten(cy)) if cx == "rings_x"
                       else (F.col(cx), F.col(cy)))
             carriers.append((F.array_min(ax), F.array_min(ay),
                              F.array_max(ax), F.array_max(ay)))
+    ring_layer = kind in _RING_KINDS if kind else bool(carriers)
+    scalar = None if ring_layer else next(
+        ((x, y) for x, y in (("x", "y"), ("lon", "lat"))
+         if x in types and y in types), None)
+    if scalar:
+        x, y = F.col(scalar[0]), F.col(scalar[1])
+        carriers.insert(0, (x, y, x, y))
     if not carriers:
         return None
 
@@ -239,48 +249,55 @@ def geometry_bbox(df: DataFrame) -> Column | None:
                     side(3, F.greatest).alias("ymax"))
 
 
-def row_bbox(df: DataFrame) -> Column | None:
-    """Each row's bbox: the stored ``bbox`` where it is set, else
-    ``geometry_bbox``."""
-    g = geometry_bbox(df)
-    if "bbox" not in df.columns:
-        return g
-    return F.col("bbox") if g is None else F.coalesce("bbox", g)
+def row_bbox(df: DataFrame, kind: str | None = None) -> Column | None:
+    """Each row's bbox: the stored ``bbox`` column when the frame has
+    one, else ``geometry_bbox``."""
+    return F.col("bbox") if "bbox" in df.columns else geometry_bbox(df, kind)
 
 
-def with_bbox(df: DataFrame) -> DataFrame:
+def with_bbox(df: DataFrame, kind: str | None = None) -> DataFrame:
     """``df`` with a per-row ``bbox`` column: the stored one, else
     ``geometry_bbox``."""
     if "bbox" in df.columns:
         return df
-    bbox = geometry_bbox(df)
+    bbox = geometry_bbox(df, kind)
     if bbox is None:
         raise ValueError("the layer has no coordinates")
     return df.withColumn("bbox", bbox)
 
 
-def bounds_aggs(df: DataFrame) -> list[Column]:
+def bounds_aggs(df: DataFrame, kind: str | None = None) -> list[Column]:
     """The four aggregates of a layer's extent (min xmin, min ymin,
     max xmax, max ymax) over its ``row_bbox``; null literals when it has
     no coordinates."""
-    b = row_bbox(df)
+    b = row_bbox(df, kind)
     if b is None:
         return [F.lit(None).cast("double")] * 4
     return [F.min(b["xmin"]), F.min(b["ymin"]),
             F.max(b["xmax"]), F.max(b["ymax"])]
 
 
-def bounds(*dfs: DataFrame) -> tuple | None:
+def bounds(*dfs: DataFrame, kind: str | None = None) -> tuple | None:
     """(xmin, ymin, xmax, ymax) over every coordinate of the layers
     ``dfs`` in one aggregate, or None when they have none (no coordinate
     columns: no job)."""
     boxes = [df.select(b.alias("bbox")) for df in dfs
-             if (b := row_bbox(df)) is not None]
+             if (b := row_bbox(df, kind)) is not None]
     if not boxes:
         return None
     u = functools.reduce(DataFrame.unionByName, boxes)
     row = u.agg(*bounds_aggs(u)).collect()[0]
     return None if row[0] is None else tuple(float(v) for v in row)
+
+
+def union_bounds(*boxes: tuple | None) -> tuple | None:
+    """The extent covering ``boxes`` (layer bounds, None for a layer
+    without coordinates), None when none is set."""
+    boxes = [b for b in boxes if b]
+    if not boxes:
+        return None
+    return (min(b[0] for b in boxes), min(b[1] for b in boxes),
+            max(b[2] for b in boxes), max(b[3] for b in boxes))
 
 
 def region_mosaic_rings_local(spark: SparkSession, cols: int = 6, rows: int = 4,

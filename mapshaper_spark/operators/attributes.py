@@ -264,11 +264,12 @@ def filter_remove_empty(df: DataFrame) -> DataFrame:
     return df.filter(F.col("rings_x").isNotNull() & (F.size("rings_x") > 0))
 
 
-def layer_info(df, name: str = "[unnamed]"):
+def layer_info(df, name: str = "[unnamed]", kind: str | None = None):
     """-info analog (/root/reference/src/commands/mapshaper-info.js
     printInfo/getLayerInfo): one summary row per layer — name, inferred
-    geometry type, feature count, null-geometry count, bbox extent and the
-    attribute field list. Pure aggregations (one JVM pass)."""
+    geometry type, feature count, null-geometry count, bbox extent (of a
+    layer of ``kind``, ``layers.bounds_aggs``) and the attribute field
+    list. Pure aggregations (one JVM pass)."""
     geom_cols = {"rings_x", "rings_y", "bbox", "x", "y"}
     fields = [c for c in df.columns if c not in geom_cols]
     if "rings_x" in df.columns:
@@ -283,7 +284,7 @@ def layer_info(df, name: str = "[unnamed]"):
         nulls = F.lit(0).cast("long")
     aggs = [F.count(F.lit(1)).alias("n_features"), nulls.alias("n_null_geoms")]
     aggs += [a.alias(c) for a, c in
-             zip(bounds_aggs(df), ("xmin", "ymin", "xmax", "ymax"))]
+             zip(bounds_aggs(df, kind), ("xmin", "ymin", "xmax", "ymax"))]
     return (df.agg(*aggs)
             .select(F.lit(name).alias("layer"), gtype.alias("geometry_type"),
                     "n_features", "n_null_geoms", "xmin", "ymin", "xmax", "ymax",

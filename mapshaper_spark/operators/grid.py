@@ -123,19 +123,19 @@ def grid_cell_id(cx: F.Column, cy: F.Column, cols: int, rows: int,
 
 
 def split_on_grid(df: DataFrame, cols: int, rows: int,
-                  bbox: Sequence[float] | None = None,
+                  bbox: Sequence[float],
                   x: str = None, y: str = None,
-                  id_field: str = "__split__") -> DataFrame:
-    """Assign grid-cell ids. For point layers center = the point; for path
-    layers center = bbox centroid (centerX = xmin + (xmax-xmin)/2). When
-    ``bbox`` is None the layer bounds are computed (matching the reference,
-    which classifies against getLayerBounds)."""
-    if bbox is None:  # an empty layer has no row to classify
-        bbox = L.bounds(df) or (0.0, 0.0, 0.0, 0.0)
+                  id_field: str = "__split__",
+                  kind: str | None = None) -> DataFrame:
+    """Assign grid-cell ids over the grid on ``bbox`` (the reference
+    classifies against getLayerBounds: pass ``layers.bounds``). For point
+    layers center = the point; for path layers center = bbox centroid
+    (centerX = xmin + (xmax-xmin)/2) of each row's ``layers.row_bbox``
+    for a layer of ``kind``."""
     if x is not None:
         cx, cy = F.col(x), F.col(y)
     else:
-        b = L.row_bbox(df)
+        b = L.row_bbox(df, kind)
         cx = b["xmin"] + (b["xmax"] - b["xmin"]) * F.lit(0.5)
         cy = b["ymin"] + (b["ymax"] - b["ymin"]) * F.lit(0.5)
     return df.withColumn(id_field, grid_cell_id(cx, cy, cols, rows, bbox))

@@ -484,9 +484,10 @@ def limit_simplification_extent(arcs_with_zs: DataFrame, bb, hard_limit: bool,
     threshold (never removed before the arc's other vertices). Existing
     Infinity locks are never overridden; a no-op when the content stays
     strictly inside ``bb`` (containsBounds early exit). ``bounds``: the
-    content bounds when known, else probed with ``layers.bounds``."""
+    content bounds when known, else probed with ``layers.bounds`` over the
+    vertices (an arc's stored bbox may be unset)."""
     xmin, ymin, xmax, ymax = bb
-    b = L.bounds(arcs_with_zs) if bounds is None else bounds
+    b = L.bounds(arcs_with_zs.drop("bbox")) if bounds is None else bounds
     if b is None or (xmin <= b[0] and ymin <= b[1] and
                      xmax >= b[2] and ymax >= b[3]):
         return arcs_with_zs
@@ -524,9 +525,9 @@ def protect_content_edges(arcs_with_zs: DataFrame, bounds=None) -> DataFrame:
     """protectContentEdges (-simplify lock-box, mapshaper-simplify.js:
     113-118): vertices on the dataset's own bounding box are never removed
     (simplify-test.js 'protects a square shape'). ``bounds``: that box when
-    known, else probed with ``layers.bounds``."""
+    known, else probed with ``layers.bounds`` over the vertices."""
     e = 1e-14
-    b = L.bounds(arcs_with_zs) if bounds is None else bounds
+    b = L.bounds(arcs_with_zs.drop("bbox")) if bounds is None else bounds
     if b is None:
         return arcs_with_zs
     return limit_simplification_extent(

@@ -25,8 +25,6 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mapshaper_spark import layers as L
-
 # svg-common.js propertiesBySymbolType
 _COMMON_PROPS = ("class", "opacity", "stroke", "stroke-width")
 PROPS_BY_SYMBOL = {
@@ -358,21 +356,19 @@ def _esc_py(s: str) -> str:
             .replace(">", "&gt;").replace('"', "&quot;").replace("'", "&apos;"))
 
 
-def export_svg_document(layers: Sequence[tuple], width: Optional[float] = None,
+def export_svg_document(layers: Sequence[tuple], bounds: Sequence[float],
+                        width: Optional[float] = None,
                         height: Optional[float] = None, margin=None,
                         svg_scale: Optional[float] = None,
                         precision: float = 0.0001, id_prefix: str = "",
                         id_field: Optional[str] = None,
-                        point_symbol: str = "",
-                        bounds: Optional[Sequence[float]] = None) -> str:
+                        point_symbol: str = "") -> str:
     """exportSVG: layers = [(name, df, geom_type)] or
     [(name, df, geom_type, xcol, ycol)]; one '<g>' per layer inside the
-    reference's document template. ``bounds``: the layers' combined
-    extent when known, else one aggregate over them."""
+    reference's document template, framed on ``bounds``, the layers'
+    combined (xmin, ymin, xmax, ymax)."""
     norm = [tuple(e[:5]) if len(e) > 4 else (*e[:3], "x", "y")
             for e in layers]
-    if bounds is None:
-        bounds = L.bounds(*(e[1] for e in layers)) or (0.0, 0.0, 0.0, 0.0)
     tf = fit_transform(*bounds, width=width, height=height, margin=margin,
                        svg_scale=svg_scale)
     w_px, h_px = tf[4], tf[5]
@@ -388,7 +384,7 @@ def export_svg_document(layers: Sequence[tuple], width: Optional[float] = None,
             f'stroke-linejoin="round">\n{body}\n</svg>')
 
 
-def export_svg(df: DataFrame, name: str = "layer1", geom_type: str = "polygon",
-               **opts) -> str:
+def export_svg(df: DataFrame, bounds: Sequence[float], name: str = "layer1",
+               geom_type: str = "polygon", **opts) -> str:
     """Single-layer convenience wrapper (the original sink surface)."""
-    return export_svg_document([(name, df, geom_type)], **opts)
+    return export_svg_document([(name, df, geom_type)], bounds, **opts)

@@ -892,7 +892,8 @@ class TestSimplifyRequest:
         probes = []
         bounds = L.bounds
         monkeypatch.setattr(L, "bounds",
-                            lambda *dfs: probes.append(1) or bounds(*dfs))
+                            lambda *dfs, **kw: probes.append(1) or
+                            bounds(*dfs, **kw))
         for opts, probed in (("", 0), ("precision=0.000001", 1),
                              ("-affine shift=5000,0", 1)):
             probes.clear()
@@ -1101,19 +1102,30 @@ class TestLayerExtent:
         jobs = _warm_request_jobs(spark, f"-i {src} -o {out}")
         assert jobs["o"] == 0, jobs
 
-    def test_ring_layer_xy_fields_are_data(self, spark, tmp_path):
-        """Fields named x and y of a polygon layer are not coordinates,
-        also once a command has dropped the stored per-row bbox."""
-        src, out = tmp_path / "p.json", tmp_path / "out.json"
-        _write_geojson(src, [{"type": "Polygon", "coordinates": [
-            [[0, 0], [2, 0], [2, 1], [0, 1], [0, 0]]]}])
-        feats = json.loads(src.read_text())
-        feats["features"][0]["properties"].update(x=1000.0, y=-1000.0)
-        src.write_text(json.dumps(feats))
-        run_commands(spark, f"-i {src} -affine shift=0,0 -o bbox {out}")
-        assert json.loads(out.read_text())["bbox"] == [0.0, 0.0, 2.0, 1.0]
+    @pytest.mark.parametrize("xy", [(1000.0, -1000.0), ("a", "b")])
+    def test_ring_layer_xy_fields_are_data(self, spark, tmp_path, xy):
+        """Fields named x and y of a polygon layer are not coordinates in
+        any extent reader, with or without a stored per-row bbox: numeric
+        ones stay out of it, string ones do not break it."""
+        src, out = tmp_path / "a.json", tmp_path / "out.json"
+        _county_grid(src)
+        doc = json.loads(src.read_text())
+        for f in doc["features"]:
+            f["properties"].update(x=xy[0], y=xy[1])
+        src.write_text(json.dumps(doc))
+        want = [-100.0, 30.0, -90.0, 40.0]
+        for cmds in ("-affine shift=0,0", "-affine shift=0,0 -clean"):
+            run_commands(spark, f"-i {src} {cmds} -o bbox {out}")
+            assert json.loads(out.read_text())["bbox"] == \
+                pytest.approx(want), cmds
         assert self._info_bounds(spark, f"-i {src} -affine shift=0,0") == \
-            (0.0, 0.0, 2.0, 1.0)
+            pytest.approx(want)
+        for cmds in (f"-i {src}", f"-i {src} -simplify 10%"):
+            run_commands(spark, f"{cmds} -split-on-grid 2,1 -o {out}")
+            cells = {f["properties"]["name"][-1]: f["properties"]["__split__"]
+                     for f in _features(out)}
+            assert cells == {"0": "r0c0", "1": "r0c0", "2": "r0c1",
+                             "3": "r0c1"}, cmds
 
     @pytest.mark.parametrize("multi", [True, False])
     def test_bbox_member_after_affine(self, spark, tmp_path, multi):

@@ -14,6 +14,7 @@ its mocha assertions serve as executable goldens):
 import pytest
 from pyspark.sql import functions as F
 
+from mapshaper_spark import layers as L
 from mapshaper_spark.operators import attributes as A
 from mapshaper_spark.operators import dissolve as D
 from mapshaper_spark.operators import joins as J
@@ -289,7 +290,7 @@ class TestSplitOnGridParity:
         # -> cell "r0c0"
         from mapshaper_spark.operators import grid as G2
         pts = spark.createDataFrame([(1, 1.0, 1.0)], "pid int, x double, y double")
-        out = G2.split_on_grid(pts, 3, 3, bbox=None, x="x", y="y",
+        out = G2.split_on_grid(pts, 3, 3, bbox=L.bounds(pts), x="x", y="y",
                                id_field="cell_id").collect()
         assert out[0].cell_id == "r0c0"
 
@@ -299,7 +300,7 @@ class TestSplitOnGridParity:
         pts = spark.createDataFrame([(1, 0.0, 0.0), (2, 1.0, 1.0)],
                                     "pid int, x double, y double")
         out = {r.pid: r.cell_id for r in
-               G2.split_on_grid(pts, 2, 2, bbox=None, x="x", y="y",
+               G2.split_on_grid(pts, 2, 2, bbox=L.bounds(pts), x="x", y="y",
                                 id_field="cell_id").collect()}
         assert out == {1: "r0c0", 2: "r1c1"}
 

@@ -201,7 +201,7 @@ class TestSvg:
         # deeper structural assertions live in tests/test_svg_export.py
         from mapshaper_spark.sources import svg as SVG
         polys = L.region_mosaic_rings_local(spark, 2, 1, (0.0, 0.0, 2.0, 1.0))
-        doc = SVG.export_svg(polys)
+        doc = SVG.export_svg(polys, L.bounds(polys))
         assert doc.startswith('<?xml version="1.0"?>')
         assert doc.count("<path") == 2
         # 2:1 content at default width 800 / margin 1 -> 401px tall

@@ -7,6 +7,7 @@ src/svg/geojson-to-svg.js and src/svg/mapshaper-svg.js.
 
 import pytest
 
+from mapshaper_spark import layers as L
 from mapshaper_spark.sources import svg as SVG
 
 
@@ -49,11 +50,11 @@ class TestPixelTransform:
 
 class TestSvgDocument:
     def _squares(self, spark):
-        from mapshaper_spark import layers as L
         return L.region_mosaic_rings_local(spark, 2, 1, (0.0, 0.0, 2.0, 1.0))
 
     def test_document_shell_and_paths(self, spark):
-        doc = SVG.export_svg(self._squares(spark))
+        df = self._squares(spark)
+        doc = SVG.export_svg(df, L.bounds(df))
         assert doc.startswith('<?xml version="1.0"?>')
         # default width 800, margin 1 -> content 798px wide, height 399+2
         assert 'width="800" height="401" viewBox="0 0 800 401"' in doc
@@ -65,7 +66,8 @@ class TestSvgDocument:
 
     def test_polyline_layer_defaults(self, spark):
         df = self._squares(spark)
-        doc = SVG.export_svg(df, name="lines", geom_type="polyline")
+        doc = SVG.export_svg(df, L.bounds(df), name="lines",
+                             geom_type="polyline")
         # getEmptyLayerForSVG: line layers get fill=none stroke=black
         assert '<g id="lines" fill="none" stroke="black" stroke-width="1">' in doc
         assert " Z" not in doc  # polylines don't close
@@ -76,7 +78,7 @@ class TestSvgDocument:
               .withColumn("fill", F.lit("#bb9"))
               .withColumn("opacity", F.lit(0.50))
               .withColumn("stroke", F.lit(None).cast("string")))
-        doc = SVG.export_svg(df)
+        doc = SVG.export_svg(df, L.bounds(df))
         # numbers JS-stringified (0.50 -> 0.5); null styles omitted
         assert 'fill="#bb9" opacity="0.5"' in doc
         assert "stroke=" not in doc.replace("stroke-line", "")
@@ -87,7 +89,8 @@ class TestSvgDocument:
             [("A", [0.0, 1.0], [0.0, 1.0])],
             "FID string, xs array<double>, ys array<double>")
         doc = SVG.export_svg_document(
-            [("dataset", df, "point", "xs", "ys")], id_prefix="points-")
+            [("dataset", df, "point", "xs", "ys")], L.bounds(df),
+            id_prefix="points-")
         assert '<g id="points-dataset">' in doc
         assert '<g id="points-A">' in doc
         assert doc.count("<circle cx=") == 2
@@ -97,7 +100,8 @@ class TestSvgDocument:
     def test_single_point_is_bare_circle_with_id(self, spark):
         df = spark.createDataFrame([("B", 3.0, 4.0)],
                                    "FID string, x double, y double")
-        doc = SVG.export_svg_document([("pts", df, "point", "x", "y")])
+        doc = SVG.export_svg_document([("pts", df, "point", "x", "y")],
+                                       L.bounds(df))
         assert '<circle cx="' in doc
         assert 'id="B"' in doc
         assert "<g id=\"pts\">" in doc
@@ -107,13 +111,15 @@ class TestSvgDocument:
         df = (spark.createDataFrame([(3.0, 4.0)], "x double, y double")
               .withColumn("r", F.lit(5))
               .withColumn("fill", F.lit("red")))
-        doc = SVG.export_svg_document([("pts", df, "point", "x", "y")])
+        doc = SVG.export_svg_document([("pts", df, "point", "x", "y")],
+                                       L.bounds(df))
         assert ' r="5"' in doc and 'fill="red"' in doc
 
     def test_label_text_element(self, spark):
         df = spark.createDataFrame([(1.0, 2.0, "hello & <bye>")],
                                    ["x", "y", "label-text"])
-        doc = SVG.export_svg_document([("lbl", df, "point", "x", "y")])
+        doc = SVG.export_svg_document([("lbl", df, "point", "x", "y")],
+                                       L.bounds(df))
         # label layers get font defaults on the <g>
         assert 'font-family="sans-serif" font-size="12" text-anchor="middle"' in doc
         assert ">hello &amp; &lt;bye&gt;</text>" in doc
@@ -121,12 +127,14 @@ class TestSvgDocument:
     def test_multiline_label_tspans(self, spark):
         df = spark.createDataFrame([(1.0, 2.0, "line1\nline2")],
                                    ["x", "y", "label-text"])
-        doc = SVG.export_svg_document([("lbl", df, "point", "x", "y")])
+        doc = SVG.export_svg_document([("lbl", df, "point", "x", "y")],
+                                       L.bounds(df))
         assert ">line1<tspan" in doc
         assert 'dy="1.1em">line2</tspan></text>' in doc
 
     def test_xml_escaping_in_ids(self, spark):
         df = spark.createDataFrame([('a"<b>', 1.0, 2.0)],
                                    "FID string, x double, y double")
-        doc = SVG.export_svg_document([("pts", df, "point", "x", "y")])
+        doc = SVG.export_svg_document([("pts", df, "point", "x", "y")],
+                                       L.bounds(df))
         assert 'id="a&quot;&lt;b&gt;"' in doc
