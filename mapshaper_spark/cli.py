@@ -224,7 +224,9 @@ class Layer:
     one from its source (``with_df``), or merges several
     (``_merged_layer``)."""
     df: DataFrame
-    hint: str | None = None  # the kind an importer or command declared
+    # point, polyline, polygon, path (arc rows: xs/ys) or table, declared
+    # where the frame enters the catalog or changes shape
+    kind: str
     format: str | None = None  # input format, which a pathless -o mirrors
     delim: str | None = None  # sniffed input delimiter (input_delimiter)
     crs: str | None = None  # proj4
@@ -239,11 +241,6 @@ class Layer:
     # ``bounds``); a value holding another frame starts without them
     facts: dict = field(default_factory=dict)
 
-    @property
-    def kind(self) -> str:
-        """The declared kind, else the one the frame's columns show."""
-        return self.hint or _geometry_kind(self.df)
-
     def bounds(self) -> tuple | None:
         """(xmin, ymin, xmax, ymax) of the layer, None when it has no
         coordinates: the import's fact, else one aggregate
@@ -253,14 +250,9 @@ class Layer:
         return L.bounds(self.df, kind=self.kind)
 
     def with_df(self, df: DataFrame, **changes) -> Layer:
-        """This layer holding ``df``: the facts about the old frame go,
-        and so does a ring-kind hint the new frame has no rings for
-        (-lines turns a polygon layer into arcs)."""
-        hint = changes.pop("hint", self.hint)
-        if hint in ("polygon", "polyline") and "rings_x" not in df.columns:
-            hint = None
-        return dataclasses.replace(self, df=df, hint=hint, facts={},
-                                   **changes)
+        """This layer holding ``df``, with the metadata ``changes`` (a new
+        geometry passes ``kind=``); the facts about the old frame go."""
+        return dataclasses.replace(self, df=df, facts={}, **changes)
 
 
 @dataclass
@@ -275,14 +267,12 @@ class Catalog:
     calc_env: dict[str, object] = field(default_factory=dict)
     flags: set = field(default_factory=set)  # -quiet/-verbose/-debug
 
-    def add(self, name: str, layer: Layer | DataFrame,
-            make_target: bool = True) -> str:
+    def add(self, name: str, layer: Layer, make_target: bool = True) -> str:
         base, k = name, 2
         while name in self.layers:
             name = f"{base}{k}"
             k += 1
-        self.layers[name] = layer if isinstance(layer, Layer) \
-            else Layer(layer)
+        self.layers[name] = layer
         self.order.append(name)
         if make_target:
             self.target = name
@@ -317,6 +307,8 @@ class Catalog:
 
 
 def _geometry_kind(df: DataFrame) -> str:
+    """The kind a frame's columns show, for a frame that comes without
+    one (``run_commands(layers=...)``, a parquet ``-i``)."""
     cols = set(df.columns)
     if "rings_x" in cols:
         return "polygon"
@@ -327,12 +319,24 @@ def _geometry_kind(df: DataFrame) -> str:
     return "table"
 
 
+def _multipoints(layer: Layer) -> bool:
+    """A point layer carries MultiPoint coordinates in its rings arrays."""
+    return layer.kind == "point" and "rings_x" in layer.df.columns
+
+
 def _no_multipoints(cat: Catalog, c: Command) -> None:
-    """A point layer carries MultiPoint coordinates in its rings arrays;
-    a command that reads rings as polygons cannot take them."""
-    layer = cat.layer()
-    if layer.kind == "point" and "rings_x" in layer.df.columns:
+    """A command that reads rings as polygons cannot take MultiPoints."""
+    if _multipoints(cat.layer()):
         raise ValueError(f"-{c.name}: multi-part points are not supported")
+
+
+def _need_kind(cat: Catalog, c: Command, *kinds: str) -> str:
+    """The target layer's kind, which must be one of ``kinds``."""
+    kind = cat.layer().kind
+    if kind not in kinds:
+        raise ValueError(f"-{c.name}: a {kind} layer is not supported "
+                         f"(needs {'/'.join(kinds)})")
+    return kind
 
 
 def _point_cols(df: DataFrame) -> tuple[str, str]:
@@ -377,17 +381,15 @@ _GEOJSON_KINDS = {"Point": "point", "MultiPoint": "point",
 # import keeps only its kind's of the importer's geometry columns
 # (_IMPORT_GEOMETRY), and none of a layer's is ever a data field
 _GEOMETRY_COLUMNS = {
-    "point": ("x", "y", "rings_x", "rings_y", "geometry_type", "bbox",
-              "shp_type"),
+    "point": ("x", "y", "lon", "lat", "rings_x", "rings_y", "geometry_type",
+              "bbox", "shp_type"),
     "polyline": ("rings_x", "rings_y", "geometry_type", "bbox", "shp_type",
                  "parts"),
     "polygon": ("rings_x", "rings_y", "geometry_type", "bbox", "shp_type",
                 "parts"),
+    "path": ("xs", "ys", "n", "bbox"),
     "table": (),
 }
-# a layer of no known kind (derived frames, mixed kinds) skips them all
-_ANY_GEOMETRY = ("rings_x", "rings_y", "bbox", "xs", "ys", "n",
-                 "geometry_type", "properties", "shp_type", "parts")
 
 
 def _kind_columns(gtypes: set) -> set:
@@ -413,28 +415,37 @@ def _property_artifacts(keys, gtypes: set) -> set:
     return clash
 
 
-def _kind_layer(df: DataFrame, gtypes: set,
-                props: set = frozenset()) -> tuple[DataFrame, str | None]:
-    """A GeoJSON-imported layer whose geometry types (null geometries
-    left out) are ``gtypes`` -> (the layer without the import's geometry
-    columns its kind does not use, its kind hint). ``props``: property
-    columns named like such a column, which stay. No types: a data-only
-    table (no x/y artifact columns, commands-test.js 'converts geojson to
-    tsv'); types of several kinds: all geometry columns, no hint."""
-    kinds = {_GEOJSON_KINDS[t] for t in gtypes}
-    used = _kind_columns(gtypes)
-    drop = [c for c in _IMPORT_GEOMETRY
-            if c in df.columns and c not in used and c not in props]
-    hint = "table" if not kinds else kinds.pop() if len(kinds) == 1 else None
-    return df.drop(*drop), hint
+def _geojson_layers(df: DataFrame, gtypes: set,
+                    props: set) -> list[tuple[DataFrame, str]]:
+    """(frame, kind) per layer of a GeoJSON import of geometry types
+    ``gtypes``: one per kind, plus the null geometries of a mixed
+    collection (the reference's divideFeaturesByType,
+    mapshaper-dataset-utils.js; target-test.js:57-73). Each drops the
+    import geometry columns its kind does not use, but not ``props``;
+    no types is a table (commands-test.js 'converts geojson to tsv')."""
+    if len({_GEOJSON_KINDS[t] for t in gtypes - {"null"}}) < 2:
+        parts = [(df, gtypes)]
+    else:
+        groups = ({t for t in gtypes if _GEOJSON_KINDS.get(t) == kind}
+                  for kind in ("point", "polyline", "polygon", None))
+        parts = [(df.filter(F.col("geometry_type").isin(*types)), types)
+                 for types in groups if types]
+    out = []
+    for sub, types in parts:
+        types = types - {"null"}
+        keep = _kind_columns(types) | props
+        kind = _GEOJSON_KINDS[next(iter(types))] if types else "table"
+        out.append((sub.drop(*[c for c in _IMPORT_GEOMETRY
+                               if c in sub.columns and c not in keep]), kind))
+    return out
 
 
-def _input_format(path: str, hint: str | None) -> str | None:
+def _input_format(path: str, kind: str) -> str | None:
     """The format a pathless -o mirrors (the reference derives the output
     format from the imported file): geojson CONTENT in a .json file
     round-trips as geojson; only a JSON array of records is format=json."""
     ext = os.path.splitext(path)[1].lstrip(".").lower()
-    if ext == "json" and hint != "table":
+    if ext == "json" and kind != "table":
         ext = "geojson"
     return ext if ext in ("json", "geojson", "csv", "tsv", "shp",
                           "topojson") else None
@@ -461,11 +472,11 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
             # property columns are extracted JVM-side (get_json_object)
             df = GJ.import_ndjson(cat.spark, path)
             gtypes = {r[0] for r in df.select("geometry_type")
-                      .distinct().collect()} - {"null"}
+                      .distinct().collect()}
             df, keys = _flatten_props_sampled(df)
-            df, hint = _kind_layer(df, gtypes,
-                                   _property_artifacts(keys, gtypes))
-            found.append((name, Layer(df, hint=hint, auto_fid=True)))
+            props = _property_artifacts(keys, gtypes - {"null"})
+            found += [(name, Layer(sub, kind, auto_fid=True))
+                      for sub, kind in _geojson_layers(df, gtypes, props)]
         elif ext in (".json", ".geojson", ".topojson"):
             # utf-8-sig: the reference's readFile trims a BOM before
             # parsing (test/encodings-test.js 'trims BOM')
@@ -482,7 +493,7 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                     # frame has a column — exports skip auto fids
                     pdf_.insert(0, "fid", range(len(pdf_)))
                 found.append((name, Layer(
-                    cat.spark.createDataFrame(pdf_), hint="table",
+                    cat.spark.createDataFrame(pdf_), "table",
                     format=_input_format(path, "table"),
                     auto_fid=no_fields)))
             elif obj.get("type") == "Topology" or "objects" in obj:
@@ -494,7 +505,7 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                 for obj_name, tdf, tkind, _ids in \
                         TJ.import_topojson_layers(cat.spark, obj):
                     found.append((obj_name, Layer(
-                        tdf, hint=tkind, format="topojson",
+                        tdf, tkind or "table", format="topojson",
                         json_crs=obj.get("crs"), auto_fid=True)))
             else:
                 table, fid_is_data = GJ.geojson_table(obj)
@@ -506,30 +517,14 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                 for prop in props:  # the geometry column comes first
                     table = table.remove_column(
                         table.column_names.index(prop))
-                df = cat.spark.createDataFrame(table)
-                kinds = {_GEOJSON_KINDS[t] for t in gtypes - {"null"}}
-                if len(kinds) < 2:
-                    parts = [(df, gtypes - {"null"})]
-                else:
-                    # mixed-type collection: one layer per geometry kind
-                    # (the reference's divideFeaturesByType,
-                    # src/geojson/geojson-import.js; target-test.js:57-73);
-                    # null-geometry features form their own data-only
-                    # layer (divideFeaturesByType keeps geoType=null
-                    # records with no shapes, mapshaper-dataset-utils.js)
-                    groups = ({t for t in gtypes
-                               if _GEOJSON_KINDS.get(t) == kname}
-                              for kname in ("point", "polyline", "polygon",
-                                            None))
-                    parts = [(df.filter(F.col("geometry_type").isin(*types)),
-                              types - {"null"}) for types in groups if types]
-                for sub, types in parts:
-                    sub, hint = _kind_layer(sub, types, props)
-                    facts = {"bounds": GJ.table_bounds(table)} \
-                        if len(parts) == 1 and "bbox" not in props else {}
-                    found.append((name, Layer(
-                        sub, hint=hint, format=_input_format(path, hint),
-                        auto_fid=not fid_is_data, facts=facts)))
+                parts = _geojson_layers(cat.spark.createDataFrame(table),
+                                        gtypes, props)
+                facts = {"bounds": GJ.table_bounds(table)} \
+                    if len(parts) == 1 and "bbox" not in props else {}
+                found += [(name, Layer(
+                    sub, kind, format=_input_format(path, kind),
+                    auto_fid=not fid_is_data, facts=facts))
+                    for sub, kind in parts]
         elif ext == ".shp":
             shp = open(path, "rb").read()
             stem = os.path.splitext(path)[0]
@@ -544,15 +539,14 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
             df = SH.import_shapefile(cat.spark, shp, dbf, encoding=enc)
             import struct as _struct
             base_type = SH.BASE_TYPE.get(_struct.unpack("<i", shp[32:36])[0])
-            hint = None
+            kind = {SH.SHP_POINT: "point", SH.SHP_MULTIPOINT: "point",
+                    SH.SHP_POLYLINE: "polyline"}.get(base_type, "polygon")
+            # the columns of the kind: a Point file has no rings, a
+            # MultiPoint file both, like a GeoJSON MultiPoint import
             if base_type == SH.SHP_POINT:
                 df = df.drop("rings_x", "rings_y")
-                hint = "point"
-            else:
-                if base_type == SH.SHP_POLYLINE:
-                    hint = "polyline"
-                df = df.drop(*[col for col in ("x", "y")
-                               if col in df.columns])
+            elif kind != "point":
+                df = df.drop("x", "y")
             wkt = p4 = None
             prj_path = stem + ".prj"
             if os.path.exists(prj_path):
@@ -564,7 +558,7 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                     pass  # keep the WKT for re-export
             # a record number, not a dbf field, is our own fid
             found.append((name, Layer(
-                df, hint=hint, format="shp", prj=wkt, crs=p4,
+                df, kind, format="shp", prj=wkt, crs=p4,
                 auto_fid=dbf is None or
                 "fid" not in SH.dbf_field_names(dbf))))
         elif ext in (".csv", ".tsv", ".txt"):
@@ -595,11 +589,12 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
                                  field_types=ftypes)
             # a delimited file is a data table whatever its column
             # names: an `n` or `xs` field is data, not geometry
-            found.append((name, Layer(df, hint="table",
-                                      format=_input_format(path, None),
+            found.append((name, Layer(df, "table",
+                                      format=_input_format(path, "table"),
                                       delim=delim)))
         elif ext == ".parquet":
-            found.append((name, Layer(cat.spark.read.parquet(path))))
+            df = cat.spark.read.parquet(path)
+            found.append((name, Layer(df, _geometry_kind(df))))
         else:
             raise ValueError(f"-i: unsupported input format '{ext}'")
     # -i snap / auto-snap / snap-interval= (path-import.js:16-22): snap
@@ -626,25 +621,24 @@ def _cmd_i(cat: Catalog, c: Command) -> None:
         # mapshaper-rounding.js:10-15; commands-test.js 'import GeoJSON
         # points with rounding on import')
         _prec = c.num("precision")
-        found = [(n, lyr.with_df(_round_layer_coords(lyr.df, _prec)))
+        found = [(n, lyr.with_df(_round_layer_coords(lyr, _prec)))
                  for n, lyr in found]
     # multi-file behavior
     if c.flag("merge-files") and len(found) > 1:
-        from mapshaper_spark.operators.attributes import merge_layers
-        sources = [lyr for _n, lyr in found]
-        cat.add(str(c.opt("name", found[0][0])), _merged_layer(
-            sources, merge_layers([s.df for s in sources], force=True)))
+        cat.add(str(c.opt("name", found[0][0])),
+                _merged_layer([lyr for _n, lyr in found], force=True))
     else:
         for name, lyr in found:
             cat.add(str(c.opt("name", name)), lyr)
 
 
-def _round_layer_coords(df: DataFrame, precision: float) -> DataFrame:
-    """Round every coordinate of a layer (scalar x/y and ring arrays) with
-    the reference rounding function; a stale bbox is dropped so downstream
-    consumers re-derive it from the rounded rings."""
+def _round_layer_coords(layer: Layer, precision: float) -> DataFrame:
+    """Round every coordinate of a layer (a point layer's x/y, and ring
+    arrays) with the reference rounding function; a stale bbox is dropped
+    so downstream consumers re-derive it from the rounded rings."""
     from mapshaper_spark.operators.attributes import round_coords
-    for col in ("x", "y"):
+    df = layer.df
+    for col in ("x", "y") if layer.kind == "point" else ():
         if col in df.columns:
             df = df.withColumn(col, round_coords(F.col(col), precision))
     for col in ("rings_x", "rings_y"):
@@ -652,10 +646,7 @@ def _round_layer_coords(df: DataFrame, precision: float) -> DataFrame:
             df = df.withColumn(col, F.transform(
                 col, lambda r: F.transform(
                     r, lambda v: round_coords(v, precision))))
-    if "bbox" in df.columns and ("rings_x" in df.columns or
-                                 "x" in df.columns):
-        df = df.drop("bbox")
-    return df
+    return df if layer.kind == "table" else df.drop("bbox")
 
 
 def _flatten_props_sampled(df: DataFrame) -> tuple[DataFrame, list]:
@@ -715,7 +706,7 @@ def _cmd_filter_fields(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators import attributes as AT
     fields = [s for v in c.values for s in v.split(",")]
     df = cat.df()
-    geom = [g for g in ("rings_x", "rings_y", "bbox", "xs", "ys", "n")
+    geom = [g for g in _GEOMETRY_COLUMNS[cat.layer().kind]
             if g in df.columns and g not in fields]
     cat.replace(AT.filter_fields(df, fields + geom))
 
@@ -817,8 +808,9 @@ def _resolve_source(cat: Catalog, token: str) -> Layer:
 
 def _cmd_join(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators import joins as J
-    source = _resolve_source(cat, c.values[0] if c.values
-                             else str(c.opt("source"))).df
+    source_layer = _resolve_source(cat, c.values[0] if c.values
+                                   else str(c.opt("source")))
+    source = source_layer.df
     keys = c.csv("keys")
     if len(keys) != 2:
         raise ValueError("-join requires keys=target_key,source_key")
@@ -873,10 +865,12 @@ def _cmd_join(cat: Catalog, c: Command) -> None:
         out = _drop_exact(out, "joins")
     if c.flag("unjoined"):
         cat.add(cat.target + "_unjoined",
-                J.join_unjoined(target, source, tuple(keys)), make_target=False)
+                Layer(J.join_unjoined(target, source, tuple(keys)),
+                      source_layer.kind), make_target=False)
     if c.flag("unmatched"):
         cat.add(cat.target + "_unmatched",
-                J.join_unmatched(target, source, tuple(keys)), make_target=False)
+                Layer(J.join_unmatched(target, source, tuple(keys)),
+                      cat.layer().kind), make_target=False)
     cat.replace(out)
 
 
@@ -904,12 +898,12 @@ def _cmd_dissolve(cat: Catalog, c: Command) -> None:
         df = df.withColumn("__all__", F.lit(1))
     calc = _parse_calc(str(c.opt("calc"))) if c.opt("calc") else None
     _no_multipoints(cat, c)
-    kind = _geometry_kind(df)
+    kind = cat.layer().kind
     df_o, order_o = _record_order(df)
     attrs = DS.dissolve_attributes(
         df_o, fields, sum_fields=c.csv("sum-fields"),
         copy_fields=c.csv("copy-fields"), calc=calc, order_col=order_o)
-    if kind == "polygon":
+    if kind in ("polygon", "polyline"):
         from mapshaper_spark.operators.topology import ring_topology
         field = fields[0]
         topo = ring_topology(df, field)
@@ -920,8 +914,8 @@ def _cmd_dissolve(cat: Catalog, c: Command) -> None:
     elif kind == "point":
         x, y = _point_cols(df)
         out = DS.dissolve_points(df, fields, x, y)
-    else:
-        out = attrs
+    else:  # a table, or arcs: the attributes alone
+        out, kind = attrs, "table"
     # the reference emits dissolved groups in first-encounter record order
     # (aggregateDataRecords walks the classifier's insertion order); pin it
     # with the min original position per group
@@ -932,9 +926,10 @@ def _cmd_dissolve(cat: Catalog, c: Command) -> None:
     if "__all__" in out.columns:  # synthetic whole-layer key, not a field
         out = out.drop("__all__")
     if plus:
-        cat.add(str(c.opt("name", "dissolve")), cat.layer().with_df(out))
+        cat.add(str(c.opt("name", "dissolve")),
+                cat.layer().with_df(out, kind=kind))
     else:
-        cat.replace(out)
+        cat.replace(out, kind=kind)
 
 
 def _min_gap_area(cat: Catalog, c: Command) -> float | None:
@@ -972,9 +967,10 @@ def _cmd_dissolve2(cat: Catalog, c: Command) -> None:
     if fields == ["__all__"]:
         out = out.drop("__all__")
     if "+" in c.values:
-        cat.add(str(c.opt("name")) if c.opt("name") else "dissolve2", out)
+        cat.add(str(c.opt("name")) if c.opt("name") else "dissolve2",
+                cat.layer().with_df(out, kind="polygon"))
     else:
-        cat.replace(out)
+        cat.replace(out, kind="polygon")
         if c.opt("name"):
             cat.rename({cat.target: str(c.opt("name"))})
 
@@ -992,7 +988,7 @@ def _cmd_clip(cat: Catalog, c: Command, erase: bool = False) -> None:
     from mapshaper_spark.operators.overlay import clip_polygons, clip_polylines
     df = cat.df()
     _no_multipoints(cat, c)
-    kind = _geometry_kind(df)
+    kind = _need_kind(cat, c, "point", "polyline", "polygon", "path")
     if c.opt("bbox"):
         bbox = [float(v) for v in c.csv("bbox")]
         if len(bbox) != 4 or bbox[2] <= bbox[0] or bbox[3] <= bbox[1]:
@@ -1000,7 +996,6 @@ def _cmd_clip(cat: Catalog, c: Command, erase: bool = False) -> None:
             raise ValueError(f"-clip: invalid bbox {bbox}")
         if erase:
             raise ValueError("-erase bbox= not supported; use a clip layer")
-        kind = cat.layer().kind
         if kind == "point":
             x, y = _point_cols(df)
             cat.replace(P.clip_bbox_points(df, x, y, bbox))
@@ -1019,7 +1014,7 @@ def _cmd_clip(cat: Catalog, c: Command, erase: bool = False) -> None:
         x, y = _point_cols(df)
         cat.replace(P.clip_points(df, x, y, clip_layer,
                                   clip_layer.columns[0], erase=erase))
-    elif kind == "path" or cat.layer().kind == "polyline":
+    elif kind in ("path", "polyline"):
         # a rings-frame flagged polyline clips with midpoint-enclosure
         # semantics, not ring overlay (Issue #192)
         cat.replace(clip_polylines(df, clip_layer, erase=erase))
@@ -1032,10 +1027,13 @@ def _cmd_explode(cat: Catalog, c: Command) -> None:
     """-explode (mapshaper-explode.js): one feature per part. Point layers
     split each MultiPoint into one Point per coordinate, copying the record
     (explode.test.js:6-20); ring layers go through the hole-preserving
-    part grouping in paths.explode."""
+    part grouping in paths.explode. Single Points, arc rows and data
+    records are one part each already, and stay as they are."""
     from mapshaper_spark.operators.paths import explode
-    df = cat.df()
-    if cat.layer().kind == "point" and "rings_x" in df.columns:
+    layer, df = cat.layer(), cat.df()
+    if layer.kind in ("point", "path", "table") and not _multipoints(layer):
+        return
+    if layer.kind == "point":
         # multipoint coords ride in the rings arrays; single points may mix
         # in as scalar x/y rows — normalize both to one row per coordinate
         has_rings = F.col("rings_x").isNotNull() & (F.size("rings_x") > 0)
@@ -1075,18 +1073,19 @@ def _cmd_filter_slivers(cat: Catalog, c: Command) -> None:
 def _cmd_lines(cat: Catalog, c: Command, inner_only: bool = False) -> None:
     from mapshaper_spark.operators import dissolve as DS
     from mapshaper_spark.operators.topology import ring_topology
+    kind = _need_kind(cat, c, "polygon", "polyline")
     df = cat.df()
-    group = c.values[0] if c.values else df.columns[0]
-    if "parts" in df.columns:  # already in arc-topology form
-        cat.replace(DS.innerlines(df, group) if inner_only
-                    else DS.lines(df, group))
-        return
+    # no field: the first non-geometry column keys the features
+    group = c.values[0] if c.values else next(
+        (col for col in df.columns if col not in _GEOMETRY_COLUMNS[kind]),
+        df.columns[0])
     topo = ring_topology(df, group)
     feats = topo.features.withColumnRenamed(topo.fid, group)
     classified = (DS.innerlines(feats, group) if inner_only
                   else DS.lines(feats, group))
     cat.replace(classified.join(
-        topo.arcs.select(F.col("arc_id").alias("aid"), "xs", "ys"), "aid"))
+        topo.arcs.select(F.col("arc_id").alias("aid"), "xs", "ys"), "aid"),
+        kind="path")
 
 
 def _cmd_points(cat: Catalog, c: Command) -> None:
@@ -1111,20 +1110,20 @@ def _cmd_points(cat: Catalog, c: Command) -> None:
     else:  # centroid default, matching -points with no options
         out = P.points_from_centroids(df)
         xy = ("cx", "cy")
-    # -points REPLACES the geometry with points (points.js): the source
-    # rings must not ride along, and coords normalize to x/y
+    # -points REPLACES the geometry with points (points.js): the source's
+    # geometry columns must not ride along, and coords normalize to x/y
     if xy is not None:
         out = out.withColumnRenamed(xy[0], "x").withColumnRenamed(xy[1], "y")
-    drop = [g for g in ("rings_x", "rings_y", "bbox", "xs", "ys", "n")
-            if g in out.columns]
+    drop = [g for g in _GEOMETRY_COLUMNS[cat.layer().kind]
+            if g in out.columns and g not in {"x", "y"} | keepers]
     if drop:
         out = out.drop(*drop)
     if "+" in c.values:
         # '+': add as a NEW layer (keep the source), reference no_replace
         cat.add(str(c.opt("name")) if c.opt("name") else "points",
-                cat.layer().with_df(out, hint="point", coord_data=keepers))
+                cat.layer().with_df(out, kind="point", coord_data=keepers))
     else:
-        cat.replace(out, hint="point", coord_data=keepers)
+        cat.replace(out, kind="point", coord_data=keepers)
         if c.opt("name"):
             cat.rename({cat.target: str(c.opt("name"))})
 
@@ -1253,7 +1252,7 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
         with_z = with_z.localCheckpoint()
         return with_z, SI.threshold_for_pct(with_z, p)
 
-    if _geometry_kind(df) == "path":
+    if _need_kind(cat, c, "polygon", "polyline", "path") == "path":
         # polyline layers: each row IS an arc — threshold directly, no
         # shared-arc topology needed (the reference's polyline path)
         arcs = df.withColumn(
@@ -1261,8 +1260,6 @@ def _cmd_simplify(cat: Catalog, c: Command) -> None:
         with_z, zlimit = _threshold(arcs)
         cat.replace(SI.apply_zlimit(with_z, zlimit).drop("zs"))
         return
-    if _geometry_kind(df) != "polygon":
-        raise ValueError("-simplify needs a polygon or polyline layer")
     key = df.columns[0]
     topo = ring_topology(df, key)
     # compute_thresholds fills zs in place (schema = input schema)
@@ -1295,8 +1292,6 @@ def _cmd_affine(cat: Catalog, c: Command) -> None:
     (getAffineAnchor, affine-test.js:55-67)."""
     from mapshaper_spark.operators.attributes import affine, affine_rings
     df = cat.df()
-    # the import hint beats the column heuristic: a point layer with
-    # MultiPoint rows carries rings columns and would read as "polygon"
     kind = cat.layer().kind
     shift = [float(v) for v in c.csv("shift")] or [0.0, 0.0]
     where = None
@@ -1313,7 +1308,7 @@ def _cmd_affine(cat: Catalog, c: Command) -> None:
     if kind == "point":
         x, y = _point_cols(df)
         out = affine(df, x, y, **kw).drop("bbox")
-        if "rings_x" in out.columns:  # MultiPoint rows carry ring coords
+        if _multipoints(cat.layer()):
             out = affine_rings(out, **kw)
         cat.replace(out)
     else:
@@ -1325,7 +1320,6 @@ def _cmd_merge_layers(cat: Catalog, c: Command) -> None:
     selects the source layers (default: every layer), the merged layer
     REPLACES them in the catalog (merge-layers-test.js:35-48), name= names
     it (default: first source's name)."""
-    from mapshaper_spark.operators.attributes import merge_layers
     tgt = c.opt("target")
     names = list(cat.order) if tgt is None or str(tgt) == "*" \
         else [s.strip() for s in str(tgt).split(",")]
@@ -1333,7 +1327,7 @@ def _cmd_merge_layers(cat: Catalog, c: Command) -> None:
     if missing:
         raise ValueError(f"-merge-layers: no layer {missing} (have {cat.order})")
     sources = [cat.layers[n] for n in names]
-    merged = merge_layers([s.df for s in sources], force=c.flag("force"))
+    merged = _merged_layer(sources, force=c.flag("force"))
     # mixing projected with unprojected inputs is an error like the
     # reference's
     crss = {s.crs for s in sources if s.crs}
@@ -1358,22 +1352,29 @@ def _cmd_merge_layers(cat: Catalog, c: Command) -> None:
     pos = cat.order.index(names[0])
     for n in names:  # sources are consumed by the merge
         cat.drop(n)
-    cat.add(str(c.opt("name") or c.opt("target-name") or names[0]),
-            _merged_layer(sources, merged))
+    cat.add(str(c.opt("name") or c.opt("target-name") or names[0]), merged)
     cat.order.insert(pos, cat.order.pop())
 
 
-def _merged_layer(sources: list[Layer], df: DataFrame) -> Layer:
-    """The value of the layer ``df`` merged from ``sources``: the kind,
-    format, delimiter, CRS and TopoJSON crs that the sources declaring one
-    agree on; the first source .prj (Issue #166: preserved through
-    combine-files + -merge-layers, whichever input carried it); a fid that
-    is the import's only when it is every source's."""
+def _merged_layer(sources: list[Layer], force: bool) -> Layer:
+    """The layer merged from ``sources`` (``force`` pads missing fields):
+    their one geometry kind (tables fit any, mapshaper-merge-layers.js:
+    25-32); the format, delimiter, CRS and TopoJSON crs that the sources
+    declaring one agree on; the first source .prj (Issue #166: preserved
+    through combine-files + -merge-layers, whichever input carried it); a
+    fid that is the import's only when it is every source's."""
+    from mapshaper_spark.operators.attributes import merge_layers
+    kinds = {s.kind for s in sources} - {"table"}
+    if len(kinds) > 1:
+        raise ValueError("incompatible geometry types: "
+                         + ", ".join(sorted(kinds)))
+
     def agreed(values):
         declared = {v for v in values if v is not None}
         return declared.pop() if len(declared) == 1 else None
     with_prj = [s for s in sources if s.prj is not None]
-    return Layer(df, hint=agreed(s.hint for s in sources),
+    return Layer(merge_layers([s.df for s in sources], force=force),
+                 kinds.pop() if kinds else "table",
                  format=agreed(s.format for s in sources),
                  delim=agreed(s.delim for s in sources),
                  crs=agreed(s.crs for s in sources),
@@ -1408,14 +1409,14 @@ def _cmd_split(cat: Catalog, c: Command) -> None:
 def _cmd_split_on_grid(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators.grid import split_on_grid
     cols, rows = (int(v) for v in c.values[0].split(","))
+    kind = _need_kind(cat, c, "point", "polyline", "polygon", "path")
     layer = cat.layer()
-    df = layer.df
     bbox = layer.bounds() or (0.0, 0.0, 0.0, 0.0)  # empty: no row to place
-    if _geometry_kind(df) == "point":
-        x, y = _point_cols(df)
-        cat.replace(split_on_grid(df, cols, rows, bbox, x=x, y=y))
-    else:
-        cat.replace(split_on_grid(df, cols, rows, bbox, kind=layer.kind))
+    # single points are placed by their coordinates, others by bbox centers
+    x, y = _point_cols(layer.df) if kind == "point" and \
+        not _multipoints(layer) else (None, None)
+    cat.replace(split_on_grid(layer.df, cols, rows, bbox, x=x, y=y,
+                              kind=kind))
 
 
 def _cmd_target(cat: Catalog, c: Command) -> None:
@@ -1426,11 +1427,9 @@ def _cmd_target(cat: Catalog, c: Command) -> None:
     val = c.values[0] if c.values else None
     want = str(c.opt("type")) if c.opt("type") else None
     cands = list(cat.order)
-    if want:
-        def _kind(n):
-            k = cat.layers[n].kind
-            return "polyline" if k == "path" else k
-        cands = [n for n in cands if _kind(n) == want]
+    if want:  # arc rows are polylines too
+        cands = [n for n in cands if want == cat.layers[n].kind or
+                 (want, cat.layers[n].kind) == ("polyline", "path")]
     if val is not None:
         if val in cat.layers:
             cands = [n for n in cands if n == val]
@@ -1496,11 +1495,11 @@ def _svg_payload(cat: Catalog, names: list[str], c: Command) -> str:
     from mapshaper_spark.sources import svg as SVG
     layers = []
     for name in names:
-        df = _in_record_order(cat.df(name))
-        kind = cat.layers[name].kind
+        layer = cat.layers[name]
+        df, kind = _in_record_order(layer.df), layer.kind
         if kind == "point":
             px, py = _point_cols(df)
-            if "rings_x" in df.columns:
+            if _multipoints(layer):
                 # MultiPoint shapes carry their points in the rings arrays;
                 # Point rows fall back to the scalar x/y columns
                 has_rings = (F.col("rings_x").isNotNull()
@@ -1514,13 +1513,9 @@ def _svg_payload(cat: Catalog, names: list[str], c: Command) -> str:
                 px, py = "__pxs", "__pys"
             layers.append((name, df, "point", px, py))
             continue
-        if kind == "path":
-            df = (df.withColumn("rings_x", F.array("xs"))
-                    .withColumn("rings_y", F.array("ys")))
-            gt = "polyline"
-        else:
-            gt = "polyline" if kind == "polyline" else "polygon"
-        layers.append((name, df, gt))
+        df, kind = _ring_frame(df, kind)
+        layers.append((name, df,
+                       "polyline" if kind == "polyline" else "polygon"))
     opts = {}
     if c.opt("width"):
         opts["width"] = c.num("width")
@@ -1553,13 +1548,10 @@ def _topojson_payload(cat: Catalog, names: list[str], c: Command) -> str:
     for name in names:
         layer = cat.layers[name]
         df = _in_record_order(layer.df)
-        kind = layer.kind
-        if kind == "path":  # arc frames: xs/ys -> single-ring polyline
-            df = (df.withColumn("rings_x", F.array("xs"))
-                    .withColumn("rings_y", F.array("ys")))
-            kind = "polyline"
+        props = _data_fields(layer, df)
+        df, kind = _ring_frame(df, layer.kind)
         layers.append({"name": name, "df": df, "kind": kind,
-                       "props": _data_fields(layer, df)})
+                       "props": props})
     opts: dict = {}
     if c.opt("quantization") is not None:
         opts["quantization"] = int(c.num("quantization"))
@@ -1588,19 +1580,22 @@ def _topojson_payload(cat: Catalog, names: list[str], c: Command) -> str:
     return json.dumps(TJ.export_topology_doc(layers, opts))
 
 
+def _ring_frame(df: DataFrame, kind: str) -> tuple[DataFrame, str]:
+    """A ``path`` frame as the one-ring polyline rows exporters read."""
+    if kind != "path":
+        return df, kind
+    return (df.withColumn("rings_x", F.array("xs"))
+            .withColumn("rings_y", F.array("ys")), "polyline")
+
+
 def _data_fields(layer: Layer, df: DataFrame) -> list[str]:
-    """The DATA TABLE columns of ``df``, the frame ``layer`` exports:
-    geometry carriers and import artifacts are not data fields (the
-    reference keeps geometry separate from the table; Issue #174), nor are
-    synthetic point coordinates or a fid this importer minted. A layer of
-    no declared kind skips every geometry column name."""
-    skip = set(_GEOMETRY_COLUMNS.get(layer.hint, _ANY_GEOMETRY))
-    if layer.hint != "table" and {"xs", "ys"} <= set(df.columns):
-        # an arc frame's geometry
-        skip |= {"xs", "ys", "n", "bbox"}
-    if layer.kind == "point":
-        skip |= {"lon", "lat", "x", "y"}
-    skip -= layer.coord_data
+    """The DATA TABLE columns of ``df``, the frame ``layer`` exports: the
+    geometry columns of the layer's kind are not data fields (the
+    reference keeps geometry separate from the table; Issue #174) unless
+    they are coordinate-named data fields, nor are the record order and a
+    fid this importer minted."""
+    skip = set(_GEOMETRY_COLUMNS[layer.kind]) - layer.coord_data
+    skip.add(_ORDER_COL)
     if layer.auto_fid:
         skip.add("fid")
     return [col for col in df.columns if col not in skip]
@@ -1726,17 +1721,16 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         cat.target = saved
         return
     layer = cat.layer()
-    df = layer.df
-    kind0 = _geometry_kind(df)
+    df, kind = layer.df, layer.kind
     path = c.values[0] if c.values else None
     fmt = str(c.opt("format", "")) or (
         os.path.splitext(path)[1].lstrip(".").lower() if path
-        else layer.format or ("csv" if kind0 == "table" else "geojson"))
+        else layer.format or ("csv" if kind == "table" else "geojson"))
     if fmt == "shapefile":  # the reference's format name for shp output
         fmt = "shp"
     df = _in_record_order(df, one_task=fmt not in ("ndjson", "geojson-seq"))
     if fmt == "json" and (str(c.opt("format", "")) == "json"
-                          or kind0 == "table"):
+                          or kind == "table"):
         # records-json: an EXPLICIT format=json exports the data table of
         # ANY layer (the reference drops geometry — json-table-test.js:
         # 28-50 exports a point layer's records without coordinates); a
@@ -1753,19 +1747,14 @@ def _cmd_o(cat: Catalog, c: Command) -> None:
         _delim_out(cat, c, df, fmt, None)
         return
     if fmt in ("json", "geojson", "ndjson", "geojson-seq"):
-        kind = layer.kind
         props = _data_fields(layer, df)
         kwargs = {"property_cols": props}
+        df, kind = _ring_frame(df, kind)
         if kind == "point":
             px, py = _point_cols(df)
-            gt = "MultiPoint" if "rings_x" in df.columns else "Point"
+            gt = "MultiPoint" if _multipoints(layer) else "Point"
             kwargs.update(geometry_type=gt, x=px, y=py)
         elif kind == "polyline":
-            kwargs.update(geometry_type="LineString")
-        elif kind == "path":
-            # arc frames carry xs/ys; LineString rendering reads ring arrays
-            df = df.withColumn("rings_x", F.array("xs")) \
-                   .withColumn("rings_y", F.array("ys"))
             kwargs.update(geometry_type="LineString")
         if c.opt("precision"):
             kwargs["precision"] = c.num("precision")
@@ -1913,7 +1902,7 @@ def _cmd_point_grid(cat: Catalog, c: Command) -> None:
     else:
         cols, rows = _grid_shape(c)
         out = G.point_grid(cat.spark, cols, rows, bbox)
-    cat.add(str(c.opt("name", "grid")), out)
+    cat.add(str(c.opt("name", "grid")), Layer(out, "point"))
 
 
 def _cmd_polygon_grid(cat: Catalog, c: Command) -> None:
@@ -1922,7 +1911,8 @@ def _cmd_polygon_grid(cat: Catalog, c: Command) -> None:
     if bbox is None:
         raise ValueError("-polygon-grid needs bbox= or an existing layer")
     cols, rows = _grid_shape(c)
-    cat.add(str(c.opt("name", "grid")), G.polygon_grid(cat.spark, cols, rows, bbox))
+    cat.add(str(c.opt("name", "grid")),
+            Layer(G.polygon_grid(cat.spark, cols, rows, bbox), "polygon"))
 
 
 def _cmd_graticule(cat: Catalog, c: Command) -> None:
@@ -1936,7 +1926,7 @@ def _cmd_graticule(cat: Catalog, c: Command) -> None:
             "+proj=longlat" not in crs:
         from mapshaper_spark.operators import proj as PR
         g = PR.project_arcs(g, crs=crs, src="wgs84")
-    cat.add("graticule", Layer(g, crs=crs))
+    cat.add("graticule", Layer(g, "path", crs=crs))
 
 
 def _cmd_rectangle(cat: Catalog, c: Command) -> None:
@@ -1951,18 +1941,17 @@ def _cmd_rectangle(cat: Catalog, c: Command) -> None:
         bbox = [bbox[0] - off, bbox[1] - off, bbox[2] + off, bbox[3] + off]
     # the rectangle's id is synthetic, not a data field
     cat.add(str(c.opt("name", "rectangle")),
-            Layer(rectangle(cat.spark, bbox), auto_fid=True))
+            Layer(rectangle(cat.spark, bbox), "polygon", auto_fid=True))
 
 
 def _cmd_shape(cat: Catalog, c: Command) -> None:
-    from mapshaper_spark.operators.grid import shape
+    from mapshaper_spark.operators.grid import shape_layer
     coords = [float(v) for v in c.csv("coordinates")]
     offsets = [float(v) for v in c.csv("offsets")]
-    out = shape(cat.spark, coords, offsets, closed=c.flag("closed"),
-                name=str(c.opt("name", "shape")))
-    polyline = out.limit(1).collect()[0]["geometry_type"] == "polyline"
-    cat.add(str(c.opt("name", "shape")),
-            Layer(out, hint="polyline" if polyline else None))
+    out, kind = shape_layer(cat.spark, coords, offsets,
+                            closed=c.flag("closed"),
+                            name=str(c.opt("name", "shape")))
+    cat.add(str(c.opt("name", "shape")), Layer(out, kind))
 
 
 def _cmd_subdivide(cat: Catalog, c: Command) -> None:
@@ -1971,9 +1960,9 @@ def _cmd_subdivide(cat: Catalog, c: Command) -> None:
     (arbitrary JS conditions are the documented expression-surface
     deviation)."""
     from mapshaper_spark.operators.grid import subdivide
+    _need_kind(cat, c, "point")
+    _no_multipoints(cat, c)
     df = cat.df()
-    if _geometry_kind(df) != "point":
-        raise ValueError("-subdivide CLI v1 supports point layers")
     x, y = _point_cols(df)
     cat.replace(subdivide(df, x, y, expression=c.values[0],
                           name=cat.target))
@@ -1988,9 +1977,10 @@ def _cmd_cluster(cat: Catalog, c: Command) -> None:
     reference rejects non-polygon layers outright."""
     from mapshaper_spark.operators.cluster import (agglomerative_cluster,
                                                    cluster_points)
+    kind = _need_kind(cat, c, "point", "polygon", "polyline")
+    _no_multipoints(cat, c)
     df = cat.df()
     id_field = str(c.opt("id-field", "cluster"))
-    kind = _geometry_kind(df)
     pct_raw = c.opt("pct")
     if pct_raw is None:
         pct = None
@@ -2046,19 +2036,23 @@ def _cmd_drop(cat: Catalog, c: Command) -> None:
     """-drop: no args = delete the target layer; fields= deletes columns
     ('*' = all attribute fields); geometry deletes the geometry columns
     (mapshaper-drop.js:5-28)."""
-    geom_cols = {"rings_x", "rings_y", "bbox", "xs", "ys", "n",
-                 "lon", "lat", "x", "y"}
-    df = cat.df() if cat.target else None
-    if c.flag("geometry") and df is not None:
-        cat.replace(df.drop(*[g for g in geom_cols if g in df.columns]))
+    layer = cat.layer() if cat.target else None
+    if c.flag("geometry") and layer is not None:
+        df = layer.df.drop(*[g for g in _GEOMETRY_COLUMNS[layer.kind]
+                             if g in layer.df.columns and
+                             g not in layer.coord_data])
+        cat.replace(df, kind="table")
         return
-    if c.opt("fields") and df is not None:
+    if c.opt("fields") and layer is not None:
+        df = layer.df
         want = c.csv("fields")
         if want == ["*"]:
-            drop = [col for col in df.columns if col not in geom_cols]
+            # coordinate-named data fields stay, as coordinates only
+            drop = [f for f in _data_fields(layer, df)
+                    if f not in layer.coord_data]
+            cat.replace(df.drop(*drop), coord_data=frozenset())
         else:
-            drop = [f for f in want if f in df.columns]
-        cat.replace(df.drop(*drop))
+            cat.replace(df.drop(*[f for f in want if f in df.columns]))
         return
     # delete the target layer(s); target= selects by name, '*' = all
     tgt = c.opt("target")
@@ -2086,11 +2080,12 @@ def _cmd_filter_geom(cat: Catalog, c: Command) -> None:
     from mapshaper_spark.operators.spatial import filter_geom_bbox
     bbox = [float(v) for v in c.csv("bbox")]
     df = cat.df()
-    if _geometry_kind(df) == "point":
+    kind = _need_kind(cat, c, "point", "polyline", "polygon", "path")
+    if kind == "point" and not _multipoints(cat.layer()):
         x, y = _point_cols(df)
         cat.replace(filter_geom_bbox(df, bbox, x=x, y=y))
         return
-    if "rings_x" in df.columns:
+    if kind != "path":  # rings: polygons, polylines or MultiPoints
         xmin, ymin, xmax, ymax = bbox
         zipped = F.arrays_zip(F.col("rings_x").alias("rx"),
                               F.col("rings_y").alias("ry"))
@@ -2129,15 +2124,12 @@ def _cmd_polygons(cat: Catalog, c: Command) -> None:
         build_topology, close_gaps, find_segment_intersections,
         insert_cut_points, polygons_from_lines)
     df = cat.df()
-    if "xs" not in df.columns and "rings_x" in df.columns:
-        # multi-part polyline layer (e.g. imported MultiLineString):
-        # explode parts into per-path rows
+    if _need_kind(cat, c, "path", "polyline", "polygon") != "path":
+        # ring layer (e.g. imported MultiLineString): one row per part
         df = (df.select(F.explode(F.arrays_zip(
             F.col("rings_x").alias("xs"), F.col("rings_y").alias("ys")))
             .alias("__p"))
             .select(F.col("__p.xs").alias("xs"), F.col("__p.ys").alias("ys")))
-    if "xs" not in df.columns:
-        raise ValueError("-polygons needs a polyline layer (xs/ys)")
     tol = None
     if c.opt("gap-tolerance"):
         tol = c.num("gap-tolerance")
@@ -2166,7 +2158,7 @@ def _cmd_polygons(cat: Catalog, c: Command) -> None:
         F.array("xs").alias("rings_x"), F.array("ys").alias("rings_y"),
         "area")
     # the layer is polygons now, and its face ids are synthetic too
-    cat.replace(out, hint=None, auto_fid=True)
+    cat.replace(out, kind="polygon", auto_fid=True)
 
 
 def _cmd_slice(cat: Catalog, c: Command) -> None:
@@ -2275,9 +2267,8 @@ def _cmd_inspect(cat: Catalog, c: Command) -> None:
                                     "Select one feature for details"})
         return
     row = rows[0].asDict()
-    geom_cols = {"rings_x", "rings_y", "xs", "ys", "bbox", "ring_areas"}
-    kind = cat.layer().kind
-    geo: dict[str, object] = {"type": kind}
+    layer = cat.layer()
+    geo: dict[str, object] = {"type": layer.kind}
     if row.get("rings_x") is not None:
         # getPolygonInfo parity: cw/ccw ring counts + planar area
         # (mapshaper-inspect.js getShapeInfo)
@@ -2290,10 +2281,9 @@ def _cmd_inspect(cat: Catalog, c: Command) -> None:
         geo["rings_ccw"] = sum(1 for a in areas if a < 0)
         geo["planar_area"] = float(sum(areas))
     elif row.get("xs") is not None:
-        geo["points" if kind == "point" else "parts"] = len(row["xs"])
-    cat.info.append({"layer": cat.target, "geometry": geo,
-                     "attributes": {k: v for k, v in row.items()
-                                    if k not in geom_cols}})
+        geo["parts"] = len(row["xs"])
+    cat.info.append({"layer": cat.target, "geometry": geo, "attributes": {
+        k: row[k] for k in _data_fields(layer, df)}})
 
 
 def _cmd_projections(cat: Catalog, c: Command) -> None:
@@ -2522,7 +2512,7 @@ def run_commands(spark: SparkSession, command_str: str,
     cat = Catalog(spark)
     if layers:
         for name, df in layers.items():
-            cat.add(name, df)
+            cat.add(name, Layer(df, _geometry_kind(df)))
         cat.target = next(iter(layers))
         for cmd in parse_commands(command_str):
             dispatch_command(cat, cmd)

@@ -221,7 +221,9 @@ def geometry_bbox(df: DataFrame, kind: str | None = None) -> Column | None:
     or arc columns) x/y are data fields, e.g. a GeoJSON polygon's
     properties. least/greatest skip nulls, so a point layer mixing Point
     rows (x/y) with MultiPoint rows (rings) spans both. None when ``df``
-    has no coordinate columns."""
+    has no coordinate columns or is a ``table`` layer."""
+    if kind == "table":
+        return None
     types = dict(df.dtypes)
     carriers = []  # (xmin, ymin, xmax, ymax) per coordinate column pair
     for cx, cy in (("rings_x", "rings_y"), ("xs", "ys")):

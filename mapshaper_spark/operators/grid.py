@@ -297,13 +297,18 @@ def split_by_field(df: DataFrame, field: str) -> dict[str, DataFrame]:
     return {str(v): df.filter(F.col(field) == F.lit(v)) for v in values}
 
 
-def shape(spark: SparkSession, coordinates: Sequence[float],
-          offsets: Sequence[float] = (), closed: bool = False,
-          name: str = "shape") -> DataFrame:
+def shape(*args, **kwargs) -> DataFrame:
+    """``shape_layer``'s frame."""
+    return shape_layer(*args, **kwargs)[0]
+
+
+def shape_layer(spark: SparkSession, coordinates: Sequence[float],
+                offsets: Sequence[float] = (), closed: bool = False,
+                name: str = "shape") -> tuple[DataFrame, str]:
     """-shape (mapshaper-shape.js:3-37): freehand polygon/polyline from a
-    flat coordinate list + optional relative offsets. A path whose first
-    and last points coincide — or closed=True — becomes a polygon ring;
-    otherwise a polyline."""
+    flat coordinate list + optional relative offsets -> (frame, kind). A
+    path whose first and last points coincide — or closed=True — becomes
+    a polygon ring; otherwise a polyline."""
     # one seed point + offsets is legal (shape-test.js: '-shape
     # coordinates=10,10 offsets=0,10,...'); only a path that stays a
     # single point is an error
@@ -323,9 +328,10 @@ def shape(spark: SparkSession, coordinates: Sequence[float],
         is_ring = True
     xs = [p[0] for p in pts]
     ys = [p[1] for p in pts]
+    kind = "polygon" if is_ring else "polyline"
     return spark.createDataFrame(
-        [(name, "polygon" if is_ring else "polyline", [xs], [ys],
+        [(name, kind, [xs], [ys],
           {"xmin": min(xs), "ymin": min(ys), "xmax": max(xs), "ymax": max(ys)})],
         "name string, geometry_type string, rings_x array<array<double>>, "
         "rings_y array<array<double>>, "
-        "bbox struct<xmin:double,ymin:double,xmax:double,ymax:double>")
+        "bbox struct<xmin:double,ymin:double,xmax:double,ymax:double>"), kind

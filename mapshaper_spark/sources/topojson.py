@@ -92,7 +92,8 @@ def import_topojson_layers(spark: SparkSession, topo: dict | str):
     """Topology -> list of (object_name, features_df, kind, id_seen).
 
     The feature DataFrames use the catalog shape of the GeoJSON importer:
-    (fid, geometry_type, rings_x, rings_y[, x, y]) + typed property
+    (fid, geometry_type, rings_x, rings_y[, x, y]; fid alone in a
+    data-only layer) + typed property
     columns; feature ``id`` lands in the reference's default id field FID
     (GeoJSON.ID_FIELD, geojson-common.js:6). Geometry decode follows
     topojson-import.js: delta+transform arcs, polygon rings rewound
@@ -194,9 +195,9 @@ def import_topojson_layers(spark: SparkSession, topo: dict | str):
             if not sel:
                 continue
             recs = [f[5] for f in sel]
-            pdf = _pd.DataFrame({
-                "fid": range(len(sel)),
-                "geometry_type": [f[0] for f in sel]})
+            pdf = _pd.DataFrame({"fid": range(len(sel))})
+            if kind is not None:  # a data-only layer has no geometry
+                pdf["geometry_type"] = [f[0] for f in sel]
             if kind == "point":
                 if any(f[0] == "MultiPoint" for f in sel):
                     pdf["rings_x"] = [f[1] or None for f in sel]

@@ -13,7 +13,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mapshaper_spark.cli import (Catalog, dispatch_command, parse_commands,
+from mapshaper_spark.cli import (Catalog, Layer, _geometry_kind,
+                                  dispatch_command, parse_commands,
                                   run_commands)
 
 REF = "/root/reference/test/test_data"
@@ -415,8 +416,8 @@ class TestRound3Commands:
         cat = run_commands(spark, "-drop geometry", layers={"s": states})
         assert "rings_x" not in cat.df().columns
         cat = Catalog(spark)
-        cat.add("a", states)
-        cat.add("b", states.select("fid"))
+        cat.add("a", Layer(states, "polygon"))
+        cat.add("b", Layer(states.select("fid"), "table"))
         run_commands  # keep flake quiet
         from mapshaper_spark.cli import COMMANDS, Command
         COMMANDS["drop"](cat, Command("drop"))
@@ -1399,3 +1400,137 @@ class TestDataFill:
         feats = _features(out)
         assert [f["properties"]["name"] for f in feats] == names
         assert all(f["properties"]["state"] in ("A", "B") for f in feats)
+
+
+_MULTIPOINTS_ONLY = [{"type": "MultiPoint", "coordinates": [[0, 0], [1, 1]]},
+                     {"type": "MultiPoint", "coordinates": [[2, 0], [3, 1]]}]
+_POINTS = [{"type": "Point", "coordinates": [0.0, 0.0]},
+           {"type": "Point", "coordinates": [3.0, 2.0]},
+           {"type": "Point", "coordinates": [1.0, 5.0]}]
+_SQUARE = {"type": "Polygon",
+           "coordinates": [[[0, 0], [0, 1], [1, 1], [1, 0], [0, 0]]]}
+
+
+class TestDeclaredKinds:
+    """Each layer's kind is declared where its frame enters the catalog or
+    changes shape; no command guesses it from column names."""
+
+    @pytest.mark.parametrize("cmds, kind", [
+        ("-lines", "path"), ("-innerlines", "path"), ("-points", "point"),
+        ("-points inner", "point"), ("-lines -polygons", "polygon"),
+        ("-rectangle", "polygon"), ("-polygon-grid 3,3", "polygon"),
+        ("-point-grid 3,3", "point"), ("-graticule", "path"),
+        ("-drop geometry", "table"), ("-dissolve", "polygon"),
+        ("-dissolve2", "polygon"),
+        ("-shape coordinates=0,0,1,1,2,0", "polyline"),
+        ("-shape coordinates=0,0,1,1,2,0 closed", "polygon")])
+    def test_declared_kind_matches_the_frame(self, spark, tmp_path, cmds,
+                                             kind):
+        """The declared kind is the one the output frame's columns show
+        (fixtures without coordinate-named data fields); the columns
+        cannot tell a polyline from a polygon, the declaration can."""
+        src = tmp_path / "a.json"
+        _county_grid(src, n=2)
+        layer = run_commands(spark, f"-i {src} {cmds}").layer()
+        assert layer.kind == kind
+        assert _geometry_kind(layer.df) == \
+            ("polygon" if kind == "polyline" else kind)
+
+    def test_multipoint_shapefile_is_a_point_layer(self, spark, tmp_path):
+        src, shp, out = (tmp_path / "mp.json", tmp_path / "mp.shp",
+                         tmp_path / "out.json")
+        _write_geojson(src, _MULTIPOINTS_ONLY)
+        run_commands(spark, f"-i {src} -o {shp}")
+        with pytest.raises(ValueError, match="multi-part points"):
+            run_commands(spark, f"-i {shp} -dissolve g -o {out}")
+        run_commands(spark, f"-i {shp} -o {out}")
+        assert [f["geometry"] for f in _features(out)] == [
+            {"type": "MultiPoint", "coordinates": [[0.0, 0.0], [1.0, 1.0]]},
+            {"type": "MultiPoint", "coordinates": [[2.0, 0.0], [3.0, 1.0]]}]
+
+    def test_explode_leaves_single_points(self, spark, tmp_path):
+        src, want, got = (tmp_path / "p.json", tmp_path / "want.json",
+                          tmp_path / "got.json")
+        _write_geojson(src, _POINTS)
+        run_commands(spark, f"-i {src} -o {want}")
+        run_commands(spark, f"-i {src} -explode -o {got}")
+        assert got.read_text() == want.read_text()
+
+    def test_frame_fields_named_like_geometry_are_data(self, spark,
+                                                       tmp_path):
+        """A point frame handed to run_commands keeps its n and parts
+        fields as properties."""
+        out = tmp_path / "out.json"
+        df = spark.createDataFrame([(0.0, 1.0, 5, "p")],
+                                   "x double, y double, n int, parts string")
+        run_commands(spark, f"-o {out}", layers={"p": df})
+        assert _features(out) == [{
+            "type": "Feature", "properties": {"n": 5, "parts": "p"},
+            "geometry": {"type": "Point", "coordinates": [0.0, 1.0]}}]
+
+    def test_csv_xy_are_data_fields(self, spark, tmp_path):
+        """A CSV's x and y are fields: -o .json writes its records, and
+        -drop geometry keeps them."""
+        src, out = tmp_path / "pts.csv", tmp_path / "out.json"
+        src.write_text("id,x,y\nA,0,1\nB,4,2\n")
+        run_commands(spark, f"-i {src} -o {out}")
+        assert json.loads(out.read_text()) == [
+            {"id": "A", "x": 0, "y": 1}, {"id": "B", "x": 4, "y": 2}]
+        run_commands(spark, f"-i {src} -drop geometry -o {tmp_path}/o.csv")
+        assert (tmp_path / "o.csv").read_text() == "id,x,y\nA,0,1\nB,4,2"
+
+    @pytest.mark.parametrize("cmd", [
+        "split-on-grid 2,2", "filter-geom bbox=0,0,1,1",
+        "subdivide 'count() > 1'", "cluster count=1"])
+    def test_csv_xy_are_not_points(self, spark, tmp_path, cmd):
+        src = tmp_path / "pts.csv"
+        src.write_text("id,g,x,y\n1,a,0,0\n2,a,1,1\n3,b,4,2\n")
+        with pytest.raises(ValueError, match="a table layer"):
+            run_commands(spark, f"-i {src} -{cmd}")
+        run_commands(spark, f"-i {src} -dissolve g -o {tmp_path}/o.csv")
+        assert (tmp_path / "o.csv").read_text() == "g\na\nb"
+
+    def test_polygon_xy_properties_are_fields(self, spark, tmp_path):
+        src, out = tmp_path / "a.json", tmp_path / "out.json"
+        _county_grid(src, n=1)
+        _with_properties(src, [{"name": "a", "x": 7, "y": 8}])
+        run_commands(spark, f"-i {src} -drop geometry -o {out}")
+        assert json.loads(out.read_text()) == [{"name": "a", "x": 7, "y": 8}]
+        run_commands(spark, f"-i {src} -drop fields=* -o {out}")
+        assert json.loads(out.read_text())["type"] == "GeometryCollection"
+
+    def test_mixed_ndjson_imports_one_layer_per_kind(self, spark, tmp_path):
+        feats = [{"type": "Feature", "properties": {"k": 0},
+                  "geometry": {"type": "Point", "coordinates": [5.0, 5.0]}},
+                 {"type": "Feature", "properties": {"k": 1},
+                  "geometry": _SQUARE}]
+        (tmp_path / "m.json").write_text(json.dumps(
+            {"type": "FeatureCollection", "features": feats}))
+        (tmp_path / "m.ndjson").write_text(
+            "".join(json.dumps(f) + "\n" for f in feats))
+        got = {}
+        for ext in ("json", "ndjson"):
+            cat = run_commands(spark, f"-i {tmp_path}/m.{ext} -o target=* "
+                                      f"{tmp_path}/{ext}-out.json")
+            got[ext] = ([cat.layers[n].kind for n in cat.order],
+                        [_features(tmp_path / f"{ext}-out{i}.json")
+                         for i in ("", "2")])
+        assert got["ndjson"] == got["json"]
+        assert got["json"][0] == ["point", "polygon"]
+
+    def test_merge_of_points_and_polygons_is_refused(self, spark, tmp_path):
+        pts, poly = tmp_path / "pts.json", tmp_path / "poly.json"
+        _write_geojson(pts, _POINTS)
+        _write_geojson(poly, [_SQUARE])
+        with pytest.raises(ValueError, match="incompatible geometry types"):
+            run_commands(spark, f"-i {pts} {poly} combine-files "
+                                "-merge-layers force")
+
+    def test_lines_of_a_dissolved_layer(self, spark, tmp_path):
+        """-lines after -dissolve builds the dissolved layer's arcs."""
+        src, out = tmp_path / "a.json", tmp_path / "out.json"
+        _county_grid(src, n=2)
+        run_commands(spark, f"-i {src} -dissolve -lines -o {out}")
+        feats = _features(out)
+        assert feats and {f["geometry"]["type"] for f in feats} == \
+            {"LineString"}
